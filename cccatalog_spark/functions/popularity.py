@@ -17,8 +17,9 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def percentile_disc(value: Column, p: float) -> Column:
-    """Exact discrete percentile as an aggregate expression.
+def percentile_disc(value: Column, p: float | Column) -> Column:
+    """Exact discrete percentile as an aggregate expression; ``p`` may
+    itself be an aggregate column (a per-group percentile).
 
     ``sort_array(collect_list(v))[ceil(p*n)-1]`` — matches PostgreSQL
     ``percentile_disc(p) WITHIN GROUP (ORDER BY v)`` and DuckDB

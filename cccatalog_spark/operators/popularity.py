@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cccatalog_spark.functions.popularity import (
+    percentile_disc,
     popularity_constant,
     standardized_popularity,
     zero_guard,
@@ -43,12 +44,13 @@ def popularity_constants(
         .where(F.col("_metric").isNotNull())
         .join(F.broadcast(metrics), on=group_col, how="inner")
     )
-    vals = F.sort_array(F.collect_list("_metric"))
     p = F.first("percentile")
-    idx = F.greatest(F.ceil(p * F.size(vals)).cast("int"), F.lit(1))
     return (
         tagged.groupBy(group_col)
-        .agg(p.alias("percentile"), F.element_at(vals, idx).alias("raw_value"))
+        .agg(
+            p.alias("percentile"),
+            percentile_disc(F.col("_metric"), p).alias("raw_value"),
+        )
         .withColumn("value", zero_guard(F.col("raw_value")))
         .withColumn(
             "constant", popularity_constant(F.col("value"), F.col("percentile"))

@@ -1723,6 +1723,7 @@ def q45_stream_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import _parse_datatype_string
 
+    from cccatalog_spark.sources.tsv import TSV_WIRE_OPTIONS
     from cccatalog_spark.streaming.loader import (
         ParquetUpsertTable,
         start_tsv_upsert_stream,
@@ -1753,8 +1754,7 @@ def q45_stream_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
         stage = os.path.join(base, f"stage{i}")
         (
             b.coalesce(1)
-            .write.option("sep", "\t")
-            .option("nullValue", "\\N")
+            .write.options(**TSV_WIRE_OPTIONS)
             .mode("overwrite")
             .csv(stage)
         )
@@ -2784,6 +2784,7 @@ def q65_bucketed_stream_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from pyspark.sql.types import _parse_datatype_string
 
+    from cccatalog_spark.sources.tsv import TSV_WIRE_OPTIONS
     from cccatalog_spark.streaming.loader import (
         BucketedUpsertTable,
         stage_eligible_files,
@@ -2815,8 +2816,7 @@ def q65_bucketed_stream_loader(spark: SparkSession, sf_dir: str) -> DataFrame:
         tmp = os.path.join(base, f"stage{i}")
         (
             b.coalesce(1)
-            .write.option("sep", "\t")
-            .option("nullValue", "\\N")
+            .write.options(**TSV_WIRE_OPTIONS)
             .mode("overwrite")
             .csv(tmp)
         )

@@ -22,6 +22,29 @@ from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# SQL confs the engine's results depend on. get_spark() builds them in;
+# sources/tables.ensure_session_confs sets them on any other session.
+SEMANTIC_CONFS = {
+    # parquet/oracle timestamps are naive; any other TZ shifts
+    # collected instants vs the DuckDB oracle
+    "spark.sql.session.timeZone": "UTC",
+    # right-side wins on duplicate map keys — matches PostgreSQL jsonb
+    # `||` semantics the merge operator reproduces
+    # (reference: util/loader/sql.py:194-204); the default EXCEPTION
+    # would throw on key conflicts
+    "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
+    # InferFiltersFromGenerate clones the generator's child expression
+    # into an inferred `size(e)>0 AND isnotnull(e)` filter, which then
+    # pushes below any repartition — for explode-of-expensive-expression
+    # (shingles, tokenizers) that evaluates the whole tree up to 3x, two
+    # of them at pre-fan-out parallelism (measured 0.8s -> 6s on the
+    # q91 shingle explode). The inferred filter only pays off when
+    # generator inputs are mostly empty, which none of our plans are.
+    "spark.sql.optimizer.excludedRules": (
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+    ),
+}
+
 
 def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
@@ -34,12 +57,7 @@ def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # right-side wins on duplicate map keys — matches PostgreSQL
-        # jsonb `||` semantics the merge operator reproduces
-        # (reference: util/loader/sql.py:194-204)
-        .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
         .config("spark.ui.enabled", "false")
         # reliable checkpoint() files (operators/dedup._truncate_lineage
         # when a checkpoint dir is configured) are never deleted by
@@ -48,12 +66,7 @@ def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> Spa
         # conf: must be set at session build, not per-query)
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # see sources/tables.ensure_session_confs — stops the optimizer
-        # duplicating expensive generator children into inferred filters
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
+        .config(map=SEMANTIC_CONFS)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -14,6 +14,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cccatalog_spark.session import SEMANTIC_CONFS
+
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized reader
@@ -30,11 +32,7 @@ _NANOS_TS_COLS = {"events": ["ts"]}
 _CPU_HEAVY_TABLES = {"documents", "embeddings"}
 
 
-def fan_out(
-    df: DataFrame,
-    min_parts: int | None = None,
-    known_parts: int | None = None,
-) -> DataFrame:
+def fan_out(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Repartition a narrow DataFrame up to the session's parallelism.
 
     A parquet scan can never be split finer than a row group, so small
@@ -44,17 +42,10 @@ def fan_out(
     No-op when the input already has enough partitions — i.e. at real
     scale this never adds a shuffle. The explicit partition count also
     stops AQE from coalescing the exchange back down.
-
-    ``known_parts``: the caller's already-known scan partition count.
-    The ``df.rdd.getNumPartitions()`` probe builds the full RDD
-    conversion of the plan (~0.2 s of driver work); callers that load
-    the same file repeatedly (``load_table``) pass the memoized count
-    instead so the probe runs once per (session, file).
     """
     spark = df.sparkSession
     target = min_parts or spark.sparkContext.defaultParallelism
-    n = known_parts if known_parts is not None else df.rdd.getNumPartitions()
-    if n >= target:
+    if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
 
@@ -70,39 +61,16 @@ def ensure_session_confs(spark: SparkSession) -> None:
     """Dynamic SQL confs the engine's semantics rely on, applied to
     whatever session the caller hands us (the correctness driver builds
     its own vanilla session — we cannot assume get_spark() ran):
-
-    - UTC session timezone: parquet/oracle timestamps are naive;
-      any other TZ shifts collected instants vs the DuckDB oracle.
-    - LAST_WIN map keys: PostgreSQL jsonb ``||`` right-bias for the
-      merge operators (default EXCEPTION would throw on key conflicts).
-    - nanosAsLong: lets the events table load (converted below).
+    ``session.SEMANTIC_CONFS`` plus nanosAsLong, which lets the events
+    table load (converted below).
     """
     if spark in _CONFED_SESSIONS:
         return
     _CONFED_SESSIONS.add(spark)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
+    for k, v in SEMANTIC_CONFS.items():
+        spark.conf.set(k, v)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # InferFiltersFromGenerate clones the generator's child expression
-    # into an inferred `size(e)>0 AND isnotnull(e)` filter, which then
-    # pushes below any repartition — for explode-of-expensive-expression
-    # (shingles, tokenizers) that evaluates the whole tree up to 3x, two
-    # of them at pre-fan-out parallelism (measured 0.8s -> 6s on the
-    # q91 shingle explode). The inferred filter only pays off when
-    # generator inputs are mostly empty, which none of our plans are.
-    spark.conf.set(
-        "spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-    )
 
-
-# scan-partition-count memo for fan_out's probe: (app id, file path) →
-# partition count.  Planning METADATA only (never rows or results, the
-# same class as Spark's own per-session file-listing cache): the split
-# count of one immutable file under fixed session confs is a constant,
-# and re-deriving it via df.rdd costs ~0.2 s of driver work per
-# load_table call — paid hundreds of times per bench run without this.
-_SCAN_PARTS: dict[tuple[str, str], int] = {}
 
 # analyzed-relation memo (round-8 verdict item "next round" 3):
 # (app id, file path) → the loaded DataFrame. A DataFrame is an
@@ -135,11 +103,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 F.expr(f"CAST(timestamp_micros(`{c}` div 1000) AS TIMESTAMP_NTZ)"),
             )
     if name in _CPU_HEAVY_TABLES:
-        n = _SCAN_PARTS.get(memo_key)
-        if n is None:
-            n = df.rdd.getNumPartitions()
-            _SCAN_PARTS[memo_key] = n
-        df = fan_out(df, known_parts=n)
+        df = fan_out(df)
     if len(_TABLE_DFS) > 512:
         # stale sessions' plans are useless (appId never recurs) —
         # keep only the live app's entries

@@ -4,7 +4,7 @@ The reference's wire format is a tab-separated file with ``\\N`` nulls,
 't'/'f' booleans, and JSON strings for object/array columns
 (common/storage/image.py:340-354). Loading tolerates malformed rows:
 Postgres COPY failures trigger a delete-line-and-retry loop capped at
-``max_rows_to_skip=10`` (util/loader/sql.py:97-125).
+10 skipped rows (util/loader/sql.py:97-125).
 
 Spark-first replacement: one PERMISSIVE csv read with a corrupt-record
 column. Malformed rows land in a quarantine frame instead of a
@@ -23,6 +23,9 @@ from cccatalog_spark.schemas import IMAGE_TSV_RAW
 
 CORRUPT_COL = "_corrupt_record"
 
+# the wire encoding every TSV reader and writer shares (S6/S7)
+TSV_WIRE_OPTIONS = {"sep": "\t", "nullValue": "\\N"}
+
 
 def read_tsv(
     spark: SparkSession,
@@ -35,8 +38,7 @@ def read_tsv(
         list(schema.fields) + [T.StructField(CORRUPT_COL, T.StringType())]
     )
     return (
-        spark.read.option("sep", "\t")
-        .option("nullValue", "\\N")
+        spark.read.options(**TSV_WIRE_OPTIONS)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .schema(full)
@@ -44,13 +46,11 @@ def read_tsv(
     )
 
 
-def split_quarantine(
-    df: DataFrame, max_rows_to_skip: int | None = 10
-) -> tuple[DataFrame, DataFrame]:
-    """(clean, quarantined). ``max_rows_to_skip`` mirrors the reference
-    loader's tolerance cap (sql.py:97-125): if more rows are malformed
-    the whole batch should be failed by the caller — we surface the
-    count instead of raising inside the plan."""
+def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(clean, quarantined). Callers enforce the reference loader's
+    tolerance cap (sql.py:97-125) by comparing ``bad.count()`` to 10:
+    past it the whole batch fails — the count is surfaced instead of
+    raising inside the plan."""
     # Spark refuses corrupt-record-only queries straight off a raw CSV
     # scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — the parsed batch must be
     # materialized first. Micro-batches are small by construction
@@ -68,8 +68,7 @@ def write_tsv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     strings by the caller (see normalize.serialize_image_tsv)."""
     (
         df.write.mode(mode)
-        .option("sep", "\t")
-        .option("nullValue", "\\N")
+        .options(**TSV_WIRE_OPTIONS)
         .option("emptyValue", "")
         .csv(path)
     )

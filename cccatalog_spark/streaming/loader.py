@@ -17,9 +17,15 @@ Reference mechanics → Spark mapping:
   → the epoch_id foreachBatch already provides; MERGE idempotence makes
   at-least-once delivery safe.
 
-The managed table is plain parquet with an atomic directory-swap
-commit (write to ``<path>.staging-<epoch>``, then rename) — the
-no-Delta MERGE materialization strategy from SURVEY §4.3.1.
+The managed table is plain parquet committed by one protocol
+(``ParquetUpsertTable.merge_batch``: merge into
+``<path>.staging-<epoch>``, check the writer lease, swap the staging
+output in) — the no-Delta MERGE materialization strategy from SURVEY
+§4.3.1. Three layouts run it: the whole snapshot
+(:class:`ParquetUpsertTable`), key-hash buckets of which a batch
+rewrites only those it touches (:class:`BucketedUpsertTable`), and
+the snapshot with archived versions for time travel
+(:class:`VersionedUpsertTable`).
 """
 
 from __future__ import annotations
@@ -33,6 +39,8 @@ from collections.abc import Callable, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from cccatalog_spark.sources.tsv import TSV_WIRE_OPTIONS
 
 
 class StaleWriterError(RuntimeError):
@@ -86,11 +94,11 @@ class WriterLease:
 class ParquetUpsertTable:
     """A keyed parquet table that commits merged snapshots atomically.
 
-    At 100 TB the swap unit would be key-range/provider partitions
-    (rewrite only partitions containing matched keys — the micro-batch
-    is small, so few partitions rewrite); locally the whole snapshot
-    swaps. Delta Lake's MERGE INTO is the drop-in upgrade where
-    available.
+    :meth:`merge_batch` is the commit protocol of every layout; a
+    layout overrides only ``_target`` (what to read), ``_write`` (how
+    staging is laid out) and ``_swap`` (how staging replaces the
+    table). This one swaps the whole snapshot. Delta Lake's MERGE INTO
+    is the drop-in upgrade where available.
     """
 
     def __init__(
@@ -115,22 +123,30 @@ class ParquetUpsertTable:
     def merge_batch(self, batch: DataFrame, epoch_id: int) -> None:
         from cccatalog_spark.operators.merge import merge_upsert
 
-        target = self.read()
-        merged = merge_upsert(target, batch, self.key)
+        merged = merge_upsert(self._target(batch), batch, self.key)
         staging = f"{self.path}.staging-{epoch_id}"
-        merged.write.mode("overwrite").parquet(staging)
+        self._write(merged, staging)
         self.lease.check()  # fence: a superseded writer must not swap
-        if os.path.isdir(self.path):
-            shutil.rmtree(self.path)
-        os.replace(staging, self.path)
+        self._swap(staging)
         # additive schema evolution: a batch-only column flows through
         # merge_upsert (NULL for pre-existing rows) and must survive
         # subsequent read()s — the pinned schema exists to type EMPTY
         # tables, not to freeze the width (tests/test_schema_evolution.py)
         self.schema = merged.schema
 
+    def _target(self, batch: DataFrame) -> DataFrame:
+        return self.read()
 
-class BucketedUpsertTable:
+    def _write(self, merged: DataFrame, staging: str) -> None:
+        merged.write.mode("overwrite").parquet(staging)
+
+    def _swap(self, staging: str) -> None:
+        if os.path.isdir(self.path):
+            shutil.rmtree(self.path)
+        os.replace(staging, self.path)
+
+
+class BucketedUpsertTable(ParquetUpsertTable):
     """Key-hash-bucketed parquet table where a micro-batch MERGE
     rewrites ONLY the buckets containing incoming keys.
 
@@ -150,21 +166,9 @@ class BucketedUpsertTable:
 
     BUCKET_COL = "_bucket"
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        path: str,
-        key: Sequence[str],
-        schema: T.StructType,
-        num_buckets: int = 64,
-    ) -> None:
-        self.spark = spark
-        self.path = path
-        self.key = list(key)
-        self.schema = schema
+    def __init__(self, *args, num_buckets: int = 64, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
         self.num_buckets = num_buckets
-        self.lease = WriterLease(path)
-        self.lease.acquire()
 
     def _bucket_of(self, df: DataFrame) -> DataFrame:
         from pyspark.sql import functions as F
@@ -204,43 +208,38 @@ class BucketedUpsertTable:
             .drop(self.BUCKET_COL)
         )
 
-    def merge_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        from cccatalog_spark.operators.merge import merge_upsert
-
+    def _target(self, batch: DataFrame) -> DataFrame:
         # the affected-bucket set is tiny by construction (≤num_buckets
         # ints) — the one collect() here is a partition-pruning plan
         # decision, not data movement
-        affected = sorted(
-            r[self.BUCKET_COL]
+        affected = [
+            r[0]
             for r in self._bucket_of(batch)
             .select(self.BUCKET_COL)
             .distinct()
             .collect()
-        )
-        if not affected:
-            return
-        target = self.read(affected)
-        merged = merge_upsert(target, batch, self.key)
-        staging = f"{self.path}.staging-{epoch_id}"
+        ]
+        return self.read(affected)
+
+    def _write(self, merged: DataFrame, staging: str) -> None:
         (
             self._bucket_of(merged)
             .write.mode("overwrite")
             .partitionBy(self.BUCKET_COL)
             .parquet(staging)
         )
-        self.lease.check()  # fence: a superseded writer must not swap
+
+    def _swap(self, staging: str) -> None:
         os.makedirs(self.path, exist_ok=True)
-        for b in affected:
-            src = os.path.join(staging, f"{self.BUCKET_COL}={b}")
-            dst = os.path.join(self.path, f"{self.BUCKET_COL}={b}")
-            if not os.path.isdir(src):
-                # merge of a batch whose rows all nulled out cannot
-                # happen (keys are non-null by A5 dedup), but guard
+        # staging holds exactly the buckets the batch touched
+        for d in os.listdir(staging):
+            if not d.startswith(f"{self.BUCKET_COL}="):
                 continue
+            dst = os.path.join(self.path, d)
             if os.path.isdir(dst):
                 shutil.rmtree(dst)
-            os.replace(src, dst)
-        shutil.rmtree(staging, ignore_errors=True)
+            os.replace(os.path.join(staging, d), dst)
+        shutil.rmtree(staging)
 
 
 def stage_eligible_files(
@@ -299,19 +298,18 @@ def start_tsv_upsert_stream(
     *,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     available_now: bool = True,
-    max_files_per_trigger: int = 1,
 ):
     """Watch a directory of TSVs, upserting each micro-batch into the
     table. Returns the StreamingQuery (caller awaits termination).
 
-    ``available_now=True`` drains the current backlog then stops — the
-    deterministic test/batch form; ``False`` runs continuously like the
-    reference's minutely DAG.
+    Each micro-batch reads at most one file, as the reference stages
+    at most one file per run. ``available_now=True`` drains the current
+    backlog then stops — the deterministic test/batch form; ``False``
+    runs continuously like the reference's minutely DAG.
     """
     raw = (
-        spark.readStream.option("sep", "\t")
-        .option("nullValue", "\\N")
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
+        spark.readStream.options(**TSV_WIRE_OPTIONS)
+        .option("maxFilesPerTrigger", "1")
         .schema(wire_schema)
         .csv(watch_dir)
     )
@@ -374,20 +372,11 @@ class VersionedUpsertTable(ParquetUpsertTable):
                     continue
         return sorted(out)
 
-    def merge_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        from cccatalog_spark.operators.merge import merge_upsert
-
-        target = self.read()
-        had_table = os.path.isdir(self.path)
-        merged = merge_upsert(target, batch, self.key)
-        staging = f"{self.path}.staging-{epoch_id}"
-        merged.write.mode("overwrite").parquet(staging)
-        self.lease.check()
-        if had_table:
+    def _swap(self, staging: str) -> None:
+        if os.path.isdir(self.path):
             vs = self.versions()
             os.replace(self.path, self._vpath(vs[-1] + 1 if vs else 0))
         os.replace(staging, self.path)
-        self.schema = merged.schema
         self.vacuum()
 
     def read_version(self, v: int) -> DataFrame:

@@ -9,11 +9,16 @@ from __future__ import annotations
 import os
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cccatalog_spark.operators.merge import merge_upsert
-from cccatalog_spark.streaming.loader import ParquetUpsertTable
+from cccatalog_spark.streaming.loader import (
+    BucketedUpsertTable,
+    ParquetUpsertTable,
+    VersionedUpsertTable,
+)
 
 
 def test_merge_upsert_batch_only_column_null_backfill(spark):
@@ -28,12 +33,25 @@ def test_merge_upsert_batch_only_column_null_backfill(spark):
     assert got == {1: ("a", None), 2: ("b2", "fr"), 3: ("c", "de")}
 
 
-def test_upsert_table_evolves_and_preserves_new_column(spark):
+# every layout runs the same commit protocol, so every layout must
+# carry an evolved column through later narrow batches
+@pytest.mark.parametrize(
+    "make_table",
+    [
+        pytest.param(ParquetUpsertTable, id="ParquetUpsertTable"),
+        pytest.param(
+            lambda *a: BucketedUpsertTable(*a, num_buckets=4),
+            id="BucketedUpsertTable",
+        ),
+        pytest.param(VersionedUpsertTable, id="VersionedUpsertTable"),
+    ],
+)
+def test_upsert_table_evolves_and_preserves_new_column(spark, make_table):
     tmp = os.path.join(tempfile.mkdtemp(prefix="ccc_evo_"), "t")
     schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("val", T.StringType())]
     )
-    table = ParquetUpsertTable(spark, tmp, ["id"], schema)
+    table = make_table(spark, tmp, ["id"], schema)
 
     table.merge_batch(
         spark.createDataFrame([(1, "a"), (2, "b")], schema), epoch_id=0

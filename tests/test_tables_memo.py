@@ -1,10 +1,10 @@
-"""Round-8 optimization internals of sources/tables.py: the
-scan-partition probe memo and the once-per-session conf guard.
+"""Optimization internals of sources/tables.py: the analyzed-relation
+memo and the once-per-session conf guard.
 
 Both are planning-metadata memos (never rows or results); these tests
-pin (a) the memo actually captures, (b) a memoized load produces the
-same fanned-out frame as the probing load, and (c) the conf guard
-leaves the session confs exactly as ensure_session_confs pins them.
+pin (a) repeated loads return the same memoized plan, (b) fan_out keeps
+every row, and (c) the conf guard leaves the session confs exactly as
+ensure_session_confs pins them.
 """
 
 from pyspark.sql import functions as F
@@ -12,29 +12,6 @@ from pyspark.sql import functions as F
 from cccatalog_spark.sources import tables as T
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_scan_parts_memo_captures_and_reuses(spark):
-    key = (
-        spark.sparkContext.applicationId,
-        f"{SF}/documents.parquet",
-    )
-    T._SCAN_PARTS.pop(key, None)
-    T._TABLE_DFS.pop(key, None)
-    a = T.load_table(spark, SF, "documents")
-    assert key in T._SCAN_PARTS  # first load probed and memoized
-    probed = T._SCAN_PARTS[key]
-    # poison the memo to prove a fresh build READS it (no re-probe);
-    # the relation memo must be dropped too or the build is skipped
-    T._SCAN_PARTS[key] = 10**6  # "plenty of partitions" -> no fan-out
-    T._TABLE_DFS.pop(key, None)
-    b = T.load_table(spark, SF, "documents")
-    assert "Repartition" not in b._jdf.queryExecution().logical().toString()
-    T._SCAN_PARTS[key] = probed
-    T._TABLE_DFS.pop(key, None)
-    c = T.load_table(spark, SF, "documents")
-    # same rows either way
-    assert a.count() == b.count() == c.count()
 
 
 def test_table_df_memo_returns_same_plan(spark):
@@ -69,10 +46,4 @@ def test_ensure_session_confs_idempotent(spark):
 
 def test_fan_out_known_parts_matches_probe(spark):
     df = spark.range(0, 100, 1, 2).select(F.col("id"))
-    via_probe = T.fan_out(df)
-    via_known = T.fan_out(df, known_parts=2)
-    assert (
-        via_probe.rdd.getNumPartitions()
-        == via_known.rdd.getNumPartitions()
-    )
-    assert sorted(r["id"] for r in via_known.collect()) == list(range(100))
+    assert sorted(r["id"] for r in T.fan_out(df).collect()) == list(range(100))
