@@ -6,8 +6,8 @@ The reference resolves a creativecommons.org URL to a canonical
 common/licenses/constants.py) and, in the crawl scrapers, a regex over
 the URL path (providers/commoncrawl/Provider.py:181-209).
 
-Here the regex path is a pure column expression; the pair→URL reverse
-map is a broadcast-joinable literal DataFrame (tiny dimension).
+Here the regex path and the pair→URL reverse map are both pure
+column expressions.
 Network-effectful URL canonicalization (redirect following,
 urls.py:55-80 in the reference) is ingestion-side only and deliberately
 NOT part of the engine (SURVEY §4.3.4).
@@ -15,7 +15,7 @@ NOT part of the engine (SURVEY §4.3.4).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # /(licenses|publicdomain)/<license>/<version>/ — Provider.py:181-209
@@ -79,9 +79,3 @@ def resolve_license_pair(lic: Column, version: Column) -> Column:
         F.format_number(F.trim(version).cast("double"), 1)
     )
     return F.struct(lic_n.alias("license"), ver_n.alias("license_version"))
-
-
-def license_pair_table(spark: SparkSession) -> DataFrame:
-    """The tiny license dimension as a broadcastable DataFrame."""
-    rows = [(lic,) for lic in KNOWN_LICENSES]
-    return spark.createDataFrame(rows, "license string")

@@ -112,20 +112,6 @@ def sanitize_json_text(text: str | None) -> str | None:
     )
 
 
-def sanitize_json_col(c: Column) -> Column:
-    """Arrow-batched wrapper: one pandas UDF over the JSON string
-    column. Python is unavoidable here — the document's schema (and
-    depth) is unknown, so no from_json/transform composition can visit
-    every leaf; batching keeps it off the per-row slow path."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _udf(s: pd.Series) -> pd.Series:
-        return s.map(sanitize_json_text)
-
-    return _udf(c)
-
-
 def sanitize_meta_map_text(text: str | None) -> dict | None:
     """JSON text → leaf-sanitized flat ``map<string,string>`` value.
 

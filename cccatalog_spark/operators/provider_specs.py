@@ -39,8 +39,6 @@ from pyspark.sql import types as T
 from cccatalog_spark.functions.licenses import license_from_path
 from cccatalog_spark.schemas import IMAGE_TSV_RAW
 
-RAW_COLS = [f.name for f in IMAGE_TSV_RAW.fields]
-
 
 @dataclass
 class ProviderSpec:
@@ -88,7 +86,7 @@ def apply_spec(records: DataFrame, spec: ProviderSpec, json_col: str = "json") -
     else:
         rec = F.col("_r")
     out = []
-    for name in RAW_COLS:
+    for name in IMAGE_TSV_RAW.fieldNames():
         if name == "provider":
             out.append(F.lit(spec.provider).alias(name))
         elif name in spec.columns:

@@ -12,13 +12,21 @@ Column-algebra field mappings.  ``apply_cc_spec`` is the shared engine:
     pages(url, html) ─capture UDF─> _caps ─[explode group]─>
       per-column expressions ─required-field filter─> IMAGE_TSV_RAW
 
+A spec only maps captures to columns.  Its rows flow into
+operators/normalize.normalize_image_batch, the one place strings are
+cleaned (sanitize, char limits, license canonicalization) for every
+provider — the reference's split: scripts normalize, the store cleans
+(image.py:131-235).  A spec names its license anchor's href as
+``license_url`` (the ``ImageStore.add_item(license_url=…)`` contract);
+``apply_cc_spec`` resolves it once into ``license`` and
+``license_version`` (functions/licenses.license_from_path —
+Provider.py:183-209).
+
 Scale shape: the capture UDF is Arrow-batched and per-row independent
 (the only Python in the pipeline); field mapping, license resolution
-(functions/licenses.license_from_path — Provider.py:183-209), sanitize
-(functions/sanitize — Provider.py:222-236), and the drop-row guards
-(the scrapers' ``return None`` / ``continue`` paths) are all
-whole-stage-codegen Column expressions.  No shuffle anywhere — a
-100 TB crawl maps partition-parallel into TSV rows.
+and the drop-row guards (the scrapers' ``return None`` / ``continue``
+paths) are all whole-stage-codegen Column expressions.  No shuffle
+anywhere — a 100 TB crawl maps partition-parallel into TSV rows.
 
 Multi-image pages (Behance project modules, ScienceMuseum carousels,
 IHA sliders, CAPL/SVGSilh card lists, DigitaltMuseum/FloraOn/
@@ -40,7 +48,6 @@ from cccatalog_spark.functions.licenses import license_from_path
 from cccatalog_spark.functions.sanitize import sanitize_string
 from cccatalog_spark.schemas import IMAGE_TSV_RAW
 
-RAW_COLS = [f.name for f in IMAGE_TSV_RAW.fields]
 
 def _empty() -> Column:
     # built lazily: module import must not require an active session
@@ -98,13 +105,16 @@ class CCScraperSpec:
     provider: str
     domain: str                      # '{domain}{path}' absolutization
     rules: list[Rule]
+    # IMAGE_TSV_RAW column → raw capture expression (normalize
+    # sanitizes); "license_url" is the license anchor's href, resolved
+    # by apply_cc_spec into license + license_version
     columns: dict[str, Callable[[Caps], Column]]
     group: str | None = None         # groups key to explode (multi-image)
     group_fallback: str | None = None  # exploded when group is empty
+    # columns that must be non-blank, else the row is dropped
     require: tuple[str, ...] = ("license", "url")
-    row_filter: Callable[[Caps], Column] | None = None
+    row_filter: Callable[[Caps], Column] | None = None  # False → dropped
     watermarked: str = "f"
-    ref: str = ""
 
 
 def cc_license(href: Column) -> Column:
@@ -130,15 +140,22 @@ def tags_json(arr: Column) -> Column:
     )
 
 
+def _has_text(v: Column) -> Column:
+    """Non-null and not blank once normalize sanitizes it: some
+    character besides whitespace and backspace (sanitize_string drops
+    both)."""
+    return v.isNotNull() & v.rlike(r"[^\s\x08]")
+
+
 def meta_json(**pairs: Column) -> Column:
-    """metaData dict → JSON string, null-valued keys stripped, null
-    when empty (formatOutput emits \\N for an empty dict)."""
+    """metaData dict → JSON string, null and blank values stripped,
+    null when empty (formatOutput emits \\N for an empty dict)."""
     keys, vals = zip(*sorted(pairs.items()))
     m = F.map_filter(
         F.map_from_arrays(
             F.array(*[F.lit(k) for k in keys]), F.array(*vals)
         ),
-        lambda k, v: v.isNotNull() & (v != ""),
+        lambda k, v: _has_text(v),
     )
     return F.when(F.size(F.map_keys(m)) > 0, F.to_json(m))
 
@@ -162,6 +179,14 @@ def _nonempty(c: Column) -> Column:
     return F.when(c.isNotNull() & (F.trim(c) != ""), c)
 
 
+def _dim_or_zero(v: Column) -> Column:
+    """int(float(v)) as a string, '0' when unparseable (the McCord and
+    WoRMS scrapers' bug-fix fallback)."""
+    return F.coalesce(
+        F.floor(v.cast("double")).cast("int").cast("string"), F.lit("0")
+    )
+
+
 def apply_cc_spec(
     pages: DataFrame,
     spec: CCScraperSpec,
@@ -171,7 +196,8 @@ def apply_cc_spec(
     """(url, html) pages → IMAGE_TSV_RAW string rows for one site.
 
     One capture-UDF pass per page; optional group explode (generate,
-    no shuffle); per-column Column expressions; required-field filter
+    no shuffle); per-column Column expressions, with ``license_url``
+    resolved once by :func:`cc_license`; required-field filter
     implementing the scrapers' drop paths.
     """
     df = pages.withColumn(
@@ -188,14 +214,20 @@ def apply_cc_spec(
         df = df.withColumn("_g", F.explode(arr))
         item = F.col("_g")
     c = Caps(F.col("_caps"), F.col(url_col), item)
+    lic = (
+        cc_license(spec.columns["license_url"](c))
+        if "license_url" in spec.columns else None
+    )
     out = []
-    for name in RAW_COLS:
+    for name in IMAGE_TSV_RAW.fieldNames():
         if name == "provider":
             expr = F.lit(spec.provider)
         elif name == "source":
             expr = F.lit("commoncrawl")
         elif name == "watermarked":
             expr = F.lit(spec.watermarked)
+        elif lic is not None and name in ("license", "license_version"):
+            expr = lic[name]
         elif name in spec.columns:
             expr = spec.columns[name](c)
         else:
@@ -236,26 +268,24 @@ def deviantart_spec(domain: str = "https://www.deviantart.com") -> CCScraperSpec
         Rule("fid", "div", {"class": "dev-page-view view-mode-normal"},
              get="gmi-deviationid"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     return CCScraperSpec(
         provider="deviantart",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: c.first("og_image"),
             "width": lambda c: c.first("og_w"),
             "height": lambda c: c.first("og_h"),
-            "title": lambda c: sanitize_string(c.first("og_title")),
-            "creator": lambda c: sanitize_string(c.first("creator")),
+            "title": lambda c: c.first("og_title"),
+            "creator": lambda c: c.first("creator"),
             "creator_url": lambda c: c.first("creator_url"),
             "foreign_landing_url": lambda c: F.coalesce(
                 c.first("og_url"), c.url
             ),
             "foreign_identifier": lambda c: _nonempty(c.first("fid")),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(c.first("desc"))
+                description=c.first("desc")
             ),
         },
         require=("license", "url", "foreign_identifier"),
@@ -264,7 +294,6 @@ def deviantart_spec(domain: str = "https://www.deviantart.com") -> CCScraperSpec
             c.first("og_image").contains("main/logo/card_black_large.png"),
             F.lit(False),
         ),
-        ref="providers/commoncrawl/DeviantArt.py:48-117",
     )
 
 
@@ -292,7 +321,6 @@ def animaldiversityweb_spec(
         Rule("kw", "li", {"class": None}, within="kw_ul", get="text",
              multi=True),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
 
     def _meta(c: Caps) -> Column:
         # h3/p alternating pairs → map (conditions_of_use dropped,
@@ -316,10 +344,10 @@ def animaldiversityweb_spec(
         ).otherwise(F.array().cast("array<struct<k:string,v:string>>"))
         m = F.map_from_entries(pairs)
         base = F.create_map(
-            F.lit("image_alt_text"), sanitize_string(c.g1("img", "alt"))
+            F.lit("image_alt_text"), c.g1("img", "alt")
         )
         merged = F.map_filter(
-            F.map_concat(base, m), lambda k, v: v.isNotNull() & (v != "")
+            F.map_concat(base, m), lambda k, v: _has_text(v)
         )
         return F.when(F.size(F.map_keys(merged)) > 0, F.to_json(merged))
 
@@ -328,8 +356,7 @@ def animaldiversityweb_spec(
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: _absolutize(domain, c.g1("img", "src")),
             "foreign_identifier": lambda c: _absolutize(
                 domain, c.g1("img", "src")
@@ -348,7 +375,6 @@ def animaldiversityweb_spec(
                 )
             ),
         },
-        ref="providers/commoncrawl/AnimalDiversityWeb.py:61-186",
     )
 
 
@@ -377,27 +403,25 @@ def behance_spec(domain: str = "https://www.behance.net") -> CCScraperSpec:
         Rule("img", "img", {"src": True}, within="modules", get=["src"],
              multi=True),
     ]
-    lic = lambda c: cc_license(  # noqa: E731
-        F.coalesce(c.first("lic_a_old"), c.first("lic_a_new"))
-    )
     return CCScraperSpec(
         provider="behance",
         domain=domain,
         rules=rules,
         group="img",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: F.coalesce(
+                c.first("lic_a_old"), c.first("lic_a_new")
+            ),
             "url": lambda c: c.gi("img.src"),
             "foreign_identifier": lambda c: c.gi("img.src"),
-            "title": lambda c: sanitize_string(c.first("og_title")),
+            "title": lambda c: c.first("og_title"),
             "foreign_landing_url": lambda c: F.coalesce(
                 c.first("og_url"), c.url
             ),
-            "creator": lambda c: sanitize_string(c.first("og_owners")),
+            "creator": lambda c: c.first("og_owners"),
             "tags": lambda c: tags_json(c.all("tags")),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(c.first("og_desc")),
+                description=c.first("og_desc"),
                 set=F.coalesce(c.first("og_url"), c.url),
             ),
         },
@@ -405,7 +429,6 @@ def behance_spec(domain: str = "https://www.behance.net") -> CCScraperSpec:
         row_filter=lambda c: ~F.coalesce(
             c.gi("img.src").contains("img/site/blank.png"), F.lit(False)
         ),
-        ref="providers/commoncrawl/Behance.py:50-191",
     )
 
 
@@ -433,7 +456,6 @@ def capl_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
         Rule("line_lang", "span", within="line", get="lang"),
         Rule("line_text", "span", within="line", get="text"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     url_ = lambda c: F.regexp_replace(  # noqa: E731
         c.first("img_href"), r"(/m/)|(/s/)", "/l/"
     )
@@ -442,15 +464,14 @@ def capl_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
         en = F.filter(
             c.groups("line"), lambda m: m["line_lang"] == "en"
         )
-        return sanitize_string(F.try_element_at(en, F.lit(1))["line_text"])
+        return F.try_element_at(en, F.lit(1))["line_text"]
 
     return CCScraperSpec(
         provider="capl",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": url_,
             "thumbnail": lambda c: F.replace(
                 url_(c), F.lit("/l/"), F.lit("/m/")
@@ -463,7 +484,6 @@ def capl_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
             "title": _title,
         },
         require=("license", "url", "title"),
-        ref="providers/commoncrawl/CAPL.py:42-125",
     )
 
 
@@ -496,7 +516,6 @@ def capl_grid_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
         Rule("t_langs", "span", within="line", get="lang", multi=True),
         Rule("t_texts", "span", within="line", get="text", multi=True),
     ]
-    lic = lambda c: cc_license(c.gi("i_lic"))  # noqa: E731
     url_ = lambda c: F.concat(  # noqa: E731  (CAPL.py:160-162)
         F.lit(domain + "/"),
         F.regexp_replace(c.gi("i_img"), r"(/m/)|(/s/)", "/l/"),
@@ -519,7 +538,7 @@ def capl_grid_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
             c.gi_all("t_langs").alias("lg"), c.gi_all("t_texts").alias("tx")
         )
         en = F.filter(pairs, lambda p: p["lg"] == "en")
-        return sanitize_string(F.try_element_at(en, F.lit(1))["tx"])
+        return F.try_element_at(en, F.lit(1))["tx"]
 
     return CCScraperSpec(
         provider="capl",
@@ -527,8 +546,7 @@ def capl_grid_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
         rules=rules,
         group="item",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.gi("i_lic"),
             "url": url_,
             "thumbnail": lambda c: F.replace(
                 url_(c), F.lit("/l/"), F.lit("/m/")
@@ -539,7 +557,6 @@ def capl_grid_spec(domain: str = "http://capl.washjeff.edu") -> CCScraperSpec:
             "title": _title,
         },
         require=("license", "url", "title"),
-        ref="providers/commoncrawl/CAPL.py:128-205",
     )
 
 
@@ -580,9 +597,6 @@ def digitaltmuseum_spec(
         Rule("mdsec_items", "li", within="mdsec", get="text_raw",
              multi=True),
     ]
-    lic = lambda c: cc_license(  # noqa: E731
-        F.coalesce(c.gi("item_lic"), c.gi("item_lic2"))
-    )
 
     def _article_meta(c: Caps) -> Column:
         secs = F.filter(
@@ -608,30 +622,27 @@ def digitaltmuseum_spec(
                         F.lit(" "),
                         F.lit("_"),
                     ).alias("k"),
-                    sanitize_string(
-                        F.try_element_at(F.split(it, r"\s{2,}"), F.lit(2))
-                    ).alias("v"),
+                    F.try_element_at(F.split(it, r"\s{2,}"), F.lit(2))
+                    .alias("v"),
                 ),
             ),
             lambda p: p["k"].isNotNull() & (p["k"] != "")
-            & p["v"].isNotNull() & (p["v"] != ""),
+            & _has_text(p["v"]),
         )
         return F.map_from_entries(kv)
 
     def _meta(c: Caps) -> Column:
         base = F.create_map(
             F.lit("description"),
-            sanitize_string(
-                F.replace(c.first("lead_p"), F.lit("Expand text"), F.lit(""))
-            ),
+            F.replace(c.first("lead_p"), F.lit("Expand text"), F.lit("")),
             F.lit("image_alt_text"),
-            sanitize_string(c.gi("item_img.alt")),
+            c.gi("item_img.alt"),
             F.lit("set"),
             F.coalesce(c.first("og_url"), c.url),
         )
         merged = F.map_filter(
             F.map_concat(_article_meta(c), base),
-            lambda k, v: v.isNotNull() & (v != ""),
+            lambda k, v: _has_text(v),
         )
         return F.when(F.size(F.map_keys(merged)) > 0, F.to_json(merged))
 
@@ -641,21 +652,21 @@ def digitaltmuseum_spec(
         rules=rules,
         group="item",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: F.coalesce(
+                c.gi("item_lic"), c.gi("item_lic2")
+            ),
             "url": lambda c: c.gi("item_img.src"),
             "foreign_identifier": lambda c: c.gi("item_img.src"),
             "foreign_landing_url": lambda c: _absolutize(
                 domain, c.gi("item_a")
             ),
-            "title": lambda c: sanitize_string(c.first("title_h1")),
+            "title": lambda c: c.first("title_h1"),
             # 'Fotograf: Name' → Name (DigitaltMuseum.py:147-151)
-            "creator": lambda c: sanitize_string(
-                F.try_element_at(F.split(c.gi("credit"), ":"), F.lit(2))
+            "creator": lambda c: F.try_element_at(
+                F.split(c.gi("credit"), ":"), F.lit(2)
             ),
             "meta_data": _meta,
         },
-        ref="providers/commoncrawl/DigitaltMuseum.py:50-166",
     )
 
 
@@ -688,15 +699,13 @@ def eol_spec(domain: str = "https://eol.org") -> CCScraperSpec:
         Rule("copy", "div", {"class": "copy"}, within="overview",
              get="text"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     landing = lambda c: F.coalesce(c.first("og_url"), c.url)  # noqa: E731
     return CCScraperSpec(
         provider="eol",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: c.first("media_a"),
             "foreign_landing_url": landing,
             "foreign_identifier": lambda c: _foreign_id_from_url(
@@ -708,14 +717,13 @@ def eol_spec(domain: str = "https://eol.org") -> CCScraperSpec:
             ),
             "tags": lambda c: tags_json(F.split(c.first("kw"), ",")),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(
-                    F.try_element_at(F.split(c.first("copy"), r"\."), F.lit(1))
+                description=F.try_element_at(
+                    F.split(c.first("copy"), r"\."), F.lit(1)
                 ),
-                rights_holder=sanitize_string(c.first("rights")),
+                rights_holder=c.first("rights"),
             ),
         },
         require=("license", "url", "foreign_identifier"),
-        ref="providers/commoncrawl/EOL.py:62-170",
     )
 
 
@@ -739,15 +747,13 @@ def floraon_spec(domain: str = "https://flora-on.pt") -> CCScraperSpec:
              get="value"),
         Rule("especie", "span", {"class": "especie"}, get="text"),
     ]
-    lic = lambda c: cc_license(c.gi("p_lic"))  # noqa: E731
     return CCScraperSpec(
         provider="floraon",
         domain=domain,
         rules=rules,
         group="photo",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.gi("p_lic"),
             # FloraOn.py:69: '{domain}/{src}'
             "url": lambda c: F.concat(
                 F.lit(domain + "/"), c.gi("p_img.src")
@@ -761,11 +767,10 @@ def floraon_spec(domain: str = "https://flora-on.pt") -> CCScraperSpec:
             "title": lambda c: F.lower(F.trim(c.first("especie"))),
             "foreign_landing_url": lambda c: c.url,
             "meta_data": lambda c: meta_json(
-                image_alt_text=sanitize_string(c.gi("p_img.alt"))
+                image_alt_text=c.gi("p_img.alt")
             ),
         },
         watermarked="t",
-        ref="providers/commoncrawl/FloraOn.py:44-121",
     )
 
 
@@ -798,7 +803,6 @@ def geographorguk_spec(
         Rule("canonical", "link", {"rel": "canonical", "href": True},
              get="href"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     landing = lambda c: F.coalesce(c.first("canonical"), c.url)  # noqa: E731
 
     def _meta(c: Caps) -> Column:
@@ -807,7 +811,7 @@ def geographorguk_spec(
             latitude=F.when(both, c.first("lat")),
             longitude=F.when(both, c.first("lon")),
             date_taken=c.first("exif"),
-            description=sanitize_string(c.first("desc")),
+            description=c.first("desc"),
         )
 
     return CCScraperSpec(
@@ -815,13 +819,12 @@ def geographorguk_spec(
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: c.g1("img", "src"),
             "width": lambda c: c.g1("img", "width"),
             "height": lambda c: c.g1("img", "height"),
-            "title": lambda c: sanitize_string(c.first("title")),
-            "creator": lambda c: sanitize_string(c.first("author")),
+            "title": lambda c: c.first("title"),
+            "creator": lambda c: c.first("author"),
             "creator_url": lambda c: _absolutize(
                 domain, c.first("author_href")
             ),
@@ -833,7 +836,6 @@ def geographorguk_spec(
             "meta_data": _meta,
         },
         require=("license", "url", "foreign_identifier"),
-        ref="providers/commoncrawl/GeographOrgUK.py:50-140",
     )
 
 
@@ -862,31 +864,28 @@ def iha_spec(domain: str = "https://www.iha.com") -> CCScraperSpec:
         Rule("og_url", "meta", {"property": "og:url"}, get="content"),
         Rule("kw", "meta", {"name": "keywords"}, get="content"),
     ]
-    lic = lambda c: cc_license(c.gi("s_lic"))  # noqa: E731
     return CCScraperSpec(
         provider="iha",
         domain=domain,
         rules=rules,
         group="slide",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.gi("s_lic"),
             "url": lambda c: F.trim(c.gi("s_about")),
             "foreign_identifier": lambda c: F.trim(c.gi("s_about")),
             "thumbnail": lambda c: c.gi("s_img.src"),
             "width": lambda c: c.gi("s_img.width"),
             "height": lambda c: c.gi("s_img.height"),
-            "title": lambda c: sanitize_string(c.gi("s_img.title")),
+            "title": lambda c: c.gi("s_img.title"),
             "foreign_landing_url": lambda c: F.coalesce(
                 c.first("og_url"), c.url
             ),
             "meta_data": lambda c: meta_json(
-                image_alt_text=sanitize_string(c.gi("s_img.alt")),
+                image_alt_text=c.gi("s_img.alt"),
                 tags=c.first("kw"),
             ),
         },
         watermarked="t",
-        ref="providers/commoncrawl/IHA.py:52-118",
     )
 
 
@@ -915,45 +914,39 @@ def mccordmuseum_spec(
              within="etq", get="text"),
         Rule("desc", "div", {"id": "descriptions"}, get="text"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     url_ = lambda c: _absolutize(domain, c.g1("img", "src"))  # noqa: E731
-    dim = lambda v: F.coalesce(  # noqa: E731  ('0' bug-fix fallback)
-        F.floor(v.cast("double")).cast("int").cast("string"), F.lit("0")
-    )
     return CCScraperSpec(
         provider="mccordmuseum",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": url_,
             "thumbnail": lambda c: F.replace(
                 url_(c), F.lit("/ObjView/"), F.lit("/ListView/")
             ),
-            "width": lambda c: dim(c.g1("img", "width")),
-            "height": lambda c: dim(c.g1("img", "height")),
+            "width": lambda c: _dim_or_zero(c.g1("img", "width")),
+            "height": lambda c: _dim_or_zero(c.g1("img", "height")),
             "foreign_landing_url": lambda c: c.url,
             # 'ID | Title' (McCordMuseum.py:117-127)
-            "title": lambda c: sanitize_string(
-                F.try_element_at(F.split(c.first("h1"), r"\|"), F.lit(2))
+            "title": lambda c: F.try_element_at(
+                F.split(c.first("h1"), r"\|"), F.lit(2)
             ),
             "foreign_identifier": lambda c: _nonempty(
                 F.trim(F.try_element_at(F.split(c.first("h1"), r"\|"), F.lit(1)))
             ),
             "tags": lambda c: tags_json(c.all("tags")),
             # 'Name (dates)' → Name (McCordMuseum.py:140-144)
-            "creator": lambda c: sanitize_string(
-                F.try_element_at(F.split(c.first("artist"), r" \("), F.lit(1))
+            "creator": lambda c: F.try_element_at(
+                F.split(c.first("artist"), r" \("), F.lit(1)
             ),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(c.first("desc")),
-                image_alt_text=sanitize_string(c.g1("img", "alt")),
+                description=c.first("desc"),
+                image_alt_text=c.g1("img", "alt"),
             ),
         },
         require=("license", "url", "foreign_identifier"),
         watermarked="t",
-        ref="providers/commoncrawl/McCordMuseum.py:62-163",
     )
 
 
@@ -983,14 +976,12 @@ def museumvictoria_spec(
         Rule("summary", "div", {"class": "summary"}, get=None),
         Rule("summary_p", "p", within="summary", get="text"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     return CCScraperSpec(
         provider="museumvictoria",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: c.first("og_image"),
             "thumbnail": lambda c: F.when(
                 c.first("og_image").contains("-medium."),
@@ -1001,21 +992,18 @@ def museumvictoria_spec(
             ),
             "width": lambda c: c.first("og_w"),
             "height": lambda c: c.first("og_h"),
-            "title": lambda c: sanitize_string(c.first("og_title")),
+            "title": lambda c: c.first("og_title"),
             # 'Photographer: X' / 'Artist: X' → X
-            "creator": lambda c: sanitize_string(
-                F.regexp_replace(
-                    c.first("creators"), r"^(Photographer|Artist):\s*", ""
-                )
+            "creator": lambda c: F.regexp_replace(
+                c.first("creators"), r"^(Photographer|Artist):\s*", ""
             ),
             "foreign_landing_url": lambda c: c.url,
             "foreign_identifier": lambda c: _foreign_id_from_url(c.url),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(c.first("summary_p"))
+                description=c.first("summary_p")
             ),
         },
         require=("license", "url", "foreign_identifier"),
-        ref="providers/commoncrawl/MuseumVictoria.py:58-194",
     )
 
 
@@ -1039,7 +1027,6 @@ def museumvictoria_gallery_spec(
         # (MuseumVictoria.py:160-176)
         Rule("t", "img", within="thumb", get=["src", "alt"]),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     thumb = lambda c: _absolutize(domain, c.gi("t.src"))  # noqa: E731
     url_ = lambda c: F.replace(  # noqa: E731
         thumb(c), F.lit("-thumbnail"), F.lit("-medium")
@@ -1050,18 +1037,16 @@ def museumvictoria_gallery_spec(
         rules=rules,
         group="thumb",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "thumbnail": thumb,
             "url": url_,
             "foreign_identifier": url_,
-            "title": lambda c: sanitize_string(c.first("og_title")),
+            "title": lambda c: c.first("og_title"),
             "foreign_landing_url": lambda c: c.url,
             "meta_data": lambda c: meta_json(
-                image_alt_text=sanitize_string(c.gi("t.alt"))
+                image_alt_text=c.gi("t.alt")
             ),
         },
-        ref="providers/commoncrawl/MuseumVictoria.py:156-183",
     )
 
 
@@ -1117,6 +1102,11 @@ def sciencemuseum_spec(
         )
     )
 
+    # 'unknown' makers are dropped (ScienceMuseum.py:90-92)
+    known = lambda c: (  # noqa: E731
+        F.lower(sanitize_string(c.first("maker_a"))) != "unknown"
+    )
+
     def _meta(c: Caps) -> Column:
         # dt/dd pairs from every record-details dl (one pair per dl)
         details = F.filter(
@@ -1132,11 +1122,11 @@ def sciencemuseum_spec(
                         ":+$",
                         "",
                     ).alias("k"),
-                    sanitize_string(m["det_dd"]).alias("v"),
+                    m["det_dd"].alias("v"),
                 ),
             ),
             lambda p: p["k"].isNotNull() & (p["k"] != "")
-            & p["v"].isNotNull() & (p["v"] != ""),
+            & _has_text(p["v"]),
         )
         # 'Made: 1832 in London' -> date/geography (the reference
         # strips the labels then splits on the substring 'in')
@@ -1148,7 +1138,7 @@ def sciencemuseum_spec(
         parts = F.split(made, "in")
         two = F.size(parts) > 1
         base = F.create_map(
-            F.lit("description"), sanitize_string(c.first("og_desc")),
+            F.lit("description"), c.first("og_desc"),
             F.lit("date"),
             F.when(two, F.trim(F.try_element_at(parts, F.lit(1)))),
             F.lit("geography"),
@@ -1156,7 +1146,7 @@ def sciencemuseum_spec(
         )
         merged = F.map_filter(
             F.map_concat(F.map_from_entries(details), base),
-            lambda k, v: v.isNotNull() & (v != ""),
+            lambda k, v: _has_text(v),
         )
         return F.when(F.size(F.map_keys(merged)) > 0, F.to_json(merged))
 
@@ -1173,18 +1163,11 @@ def sciencemuseum_spec(
             "foreign_landing_url": lambda c: F.coalesce(
                 c.first("og_url"), c.url
             ),
-            "title": lambda c: sanitize_string(c.first("og_title")),
-            "creator": lambda c: F.when(
-                F.lower(sanitize_string(c.first("maker_a"))) != "unknown",
-                sanitize_string(c.first("maker_a")),
-            ),
-            "creator_url": lambda c: F.when(
-                F.lower(sanitize_string(c.first("maker_a"))) != "unknown",
-                c.first("maker_href"),
-            ),
+            "title": lambda c: c.first("og_title"),
+            "creator": lambda c: F.when(known(c), c.first("maker_a")),
+            "creator_url": lambda c: F.when(known(c), c.first("maker_href")),
             "meta_data": _meta,
         },
-        ref="providers/commoncrawl/ScienceMuseum.py:53-147",
     )
 
 
@@ -1210,7 +1193,6 @@ def svgsilh_spec(domain: str = "https://svgsilh.com") -> CCScraperSpec:
         Rule("og_desc", "meta", {"property": "og:description"},
              get="content"),
     ]
-    lic = lambda c: cc_license(c.gi("c_lic"))  # noqa: E731
     # asset domain = og:image up to '/png' (SVGSilh.py:74-76)
     dom = lambda c: F.try_element_at(  # noqa: E731
         F.split(c.first("og_image"), "/png"), F.lit(1)
@@ -1224,8 +1206,7 @@ def svgsilh_spec(domain: str = "https://svgsilh.com") -> CCScraperSpec:
         rules=rules,
         group="card",
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.gi("c_lic"),
             "url": url_,
             "foreign_identifier": url_,
             "foreign_landing_url": lambda c: F.concat(
@@ -1233,14 +1214,12 @@ def svgsilh_spec(domain: str = "https://svgsilh.com") -> CCScraperSpec:
             ),
             "tags": lambda c: tags_json(c.gi_all("c_tags")),
             # 'Cat Silhouette - Free vector (...)' → 'Cat Silhouette'
-            "title": lambda c: sanitize_string(
-                F.try_element_at(
-                    F.split(
-                        F.try_element_at(F.split(c.first("og_desc"), " - "), F.lit(1)),
-                        r"\(",
-                    ),
-                    F.lit(1),
-                )
+            "title": lambda c: F.try_element_at(
+                F.split(
+                    F.try_element_at(F.split(c.first("og_desc"), " - "), F.lit(1)),
+                    r"\(",
+                ),
+                F.lit(1),
             ),
             "meta_data": lambda c: meta_json(
                 svg=F.concat(dom(c), c.gi("c_img"))
@@ -1248,7 +1227,6 @@ def svgsilh_spec(domain: str = "https://svgsilh.com") -> CCScraperSpec:
         },
         # cc0 cards only (SVGSilh.py:63-65)
         row_filter=lambda c: cc_license(c.gi("c_lic"))["license"] == "cc0",
-        ref="providers/commoncrawl/SVGSilh.py:44-114",
     )
 
 
@@ -1272,7 +1250,6 @@ def thorvaldsensmuseum_spec(
              within="artists_scope", get="href"),
         Rule("artists_scope", "div", {"class": "artists"}, get=None),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
     url_ = lambda c: c.first("lic_about")  # noqa: E731
 
     def _dim(attr: str):
@@ -1289,21 +1266,19 @@ def thorvaldsensmuseum_spec(
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": url_,
             "thumbnail": lambda c: F.replace(
                 url_(c), F.lit("/large/"), F.lit("/small/")
             ),
             "width": _dim("width"),
             "height": _dim("height"),
-            "title": lambda c: sanitize_string(_dim("alt")(c)),
+            "title": _dim("alt"),
             "foreign_landing_url": lambda c: c.url,
             "foreign_identifier": url_,
-            "creator": lambda c: sanitize_string(c.first("artists")),
+            "creator": lambda c: c.first("artists"),
             "creator_url": lambda c: c.first("artist_a"),
         },
-        ref="providers/commoncrawl/ThorvaldsensMuseum.py:47-101",
     )
 
 
@@ -1342,27 +1317,19 @@ def worms_spec(
              {"class": "photogallery_caption photogallery_text"},
              within="authspan", get="text"),
     ]
-    lic = lambda c: cc_license(c.first("lic"))  # noqa: E731
-    dim = lambda v: F.coalesce(  # noqa: E731  ('0' bug-fix fallback)
-        F.floor(sanitize_string(v).cast("double")).cast("int").cast(
-            "string"
-        ),
-        F.lit("0"),
-    )
     return CCScraperSpec(
         provider="worms",
         domain=domain,
         rules=rules,
         columns={
-            "license": lambda c: lic(c)["license"],
-            "license_version": lambda c: lic(c)["license_version"],
+            "license_url": lambda c: c.first("lic"),
             "url": lambda c: c.g1("img", "src"),
             "thumbnail": lambda c: F.replace(
                 c.g1("img", "src"), F.lit("resized"), F.lit("thumbs")
             ),
-            "width": lambda c: dim(c.g1("img", "width")),
-            "height": lambda c: dim(c.g1("img", "height")),
-            "title": lambda c: sanitize_string(c.g1("img", "title")),
+            "width": lambda c: _dim_or_zero(c.g1("img", "width")),
+            "height": lambda c: _dim_or_zero(c.g1("img", "height")),
+            "title": lambda c: c.g1("img", "title"),
             "foreign_landing_url": lambda c: F.coalesce(
                 c.first("share"), c.url
             ),
@@ -1370,19 +1337,18 @@ def worms_spec(
             "foreign_identifier": lambda c: _nonempty(
                 F.parse_url(c.first("share"), F.lit("QUERY"), F.lit("pic"))
             ),
-            "creator": lambda c: sanitize_string(
-                F.coalesce(c.first("auth_a"), c.first("auth_text"))
+            "creator": lambda c: F.coalesce(
+                c.first("auth_a"), c.first("auth_text")
             ),
             "creator_url": lambda c: F.when(
                 c.first("auth_a").isNotNull(), c.first("auth_a_href")
             ),
             "meta_data": lambda c: meta_json(
-                description=sanitize_string(c.first("desc"))
+                description=c.first("desc")
             ),
         },
         # WoRMS.py:66: only image-detail pages carry a verifiable license
         row_filter=lambda c: c.url.contains("p=image"),
-        ref="providers/commoncrawl/WoRMS.py:46-160",
     )
 
 

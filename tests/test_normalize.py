@@ -16,11 +16,9 @@ from cccatalog_spark.operators.normalize import (
 from cccatalog_spark.schemas import IMAGE_TSV_RAW
 from cccatalog_spark.sources.tsv import read_tsv, split_quarantine, write_tsv
 
-RAW_COLS = [f.name for f in IMAGE_TSV_RAW.fields]
-
 
 def _raw_row(**overrides):
-    base = {c: None for c in RAW_COLS}
+    base = {c: None for c in IMAGE_TSV_RAW.fieldNames()}
     base.update(
         foreign_identifier="fid1",
         foreign_landing_url="https://example.org/land/1",
@@ -30,7 +28,7 @@ def _raw_row(**overrides):
         provider="prov",
     )
     base.update(overrides)
-    return tuple(base[c] for c in RAW_COLS)
+    return tuple(base[c] for c in IMAGE_TSV_RAW.fieldNames())
 
 
 def _raw_df(spark, rows):

@@ -11,10 +11,16 @@ import pytest
 
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
 
+from cccatalog_spark.operators.normalize import (
+    normalize_image_batch,
+    split_rejected,
+)
+from cccatalog_spark.operators.provider_specs import flickr_spec
 from cccatalog_spark.operators.provider_specs_cc import (
     CC_SCRAPERS,
     apply_cc_spec,
 )
+from cccatalog_spark.pipelines import ingest_provider_batch
 
 
 def _run(spark, spec, url, html):
@@ -28,6 +34,13 @@ def _run(spark, spec, url, html):
             "watermarked", "provider", "source", "ingestion_type",
         }
     return rows
+
+
+def _clean(spark, spec, url, html):
+    """Rows after normalize_image_batch — where strings get sanitized."""
+    df = spark.createDataFrame([(url, html)], "url string, html string")
+    good, _ = split_rejected(normalize_image_batch(apply_cc_spec(df, spec)))
+    return good.collect()
 
 
 def test_registry_covers_all_fifteen_reference_scrapers():
@@ -56,14 +69,15 @@ def test_deviantart_full_row(spark):
     piece</div>
     <div class="dev-page-view view-mode-normal" gmi-deviationid="987"></div>
     </body></html>"""
-    (row,) = _run(
-        spark, CC_SCRAPERS["deviantart"](), "https://x.test/page", html
-    )
+    spec = CC_SCRAPERS["deviantart"]()
+    (row,) = _run(spark, spec, "https://x.test/page", html)
     assert row["license"] == "by-nc-sa"
     assert row["license_version"] == "3.0"
     assert row["url"] == "https://images.da.net/art.jpg"
     assert row["width"] == "800" and row["height"] == "600"
-    assert row["title"] == "My 'Art'"
+    assert row["title"] == 'My "Art"'
+    (clean,) = _clean(spark, spec, "https://x.test/page", html)
+    assert clean["title"] == "My 'Art'"
     assert row["creator"] == "Bob"
     assert row["creator_url"] == "https://bob.deviantart.com"
     assert row["foreign_landing_url"] == (
@@ -161,6 +175,30 @@ def test_behance_explodes_project_modules(spark):
     assert meta["description"] == "posters"
 
 
+def test_backslash_escaped_once_like_api_providers(spark):
+    """Specs only map captures; normalize_image_batch is the one place
+    strings are sanitized, so a CC title escapes a backslash exactly
+    once — the same bytes a flickr record with that title gets."""
+    html = r"""
+    <div id="project-block-copyright">
+      <a href="https://creativecommons.org/licenses/by/4.0/">cc</a></div>
+    <meta property="og:title" content="a\b c">
+    <meta property="og:description" content="x\y">
+    <div id="project-modules"><img src="https://mir.behance.net/a.png">
+    </div>"""
+    (cc,) = _clean(spark, CC_SCRAPERS["behance"](), "https://x/p", html)
+    record = json.dumps({
+        "id": "1", "owner": "o", "title": "a\\b c", "license": "4",
+        "url_m": "https://f/1.jpg",
+    })
+    flickr, _ = ingest_provider_batch(
+        spark.createDataFrame([(record,)], "json string"), flickr_spec()
+    )
+    (fl,) = flickr.collect()
+    assert cc["title"] == fl["title"] == "a\\\\b c"
+    assert cc["meta_data"]["description"] == "x\\\\y"
+
+
 def test_capl_single_image(spark):
     html = """
     <div class="singleimage">
@@ -203,9 +241,8 @@ def test_digitaltmuseum_items(spark):
       <img src="https://dms.dimu.org/image/2">
     </li>
     </ul>"""
-    rows = _run(
-        spark, CC_SCRAPERS["digitaltmuseum"](), "https://x/p", html
-    )
+    spec = CC_SCRAPERS["digitaltmuseum"]()
+    rows = _run(spark, spec, "https://x/p", html)
     # second item has no license → dropped (DigitaltMuseum.py:117-119)
     assert len(rows) == 1
     r = rows[0]
@@ -213,9 +250,12 @@ def test_digitaltmuseum_items(spark):
     assert r["url"] == "https://dms.dimu.org/image/1?dimension=800x800"
     assert r["foreign_landing_url"] == "https://digitaltmuseum.org/media/1"
     assert r["title"] == "Old Boat"
-    assert r["creator"] == "Nils Olsen"
+    assert r["creator"] == " Nils Olsen"
+    (clean,) = _clean(spark, spec, "https://x/p", html)
+    assert clean["creator"] == "Nils Olsen"
     meta = json.loads(r["meta_data"])
-    assert meta["description"] == "A boat."
+    assert meta["description"] == "A boat. "
+    assert clean["meta_data"]["description"] == "A boat."
     assert meta["image_alt_text"] == "boat"
     assert meta["set"] == "https://digitaltmuseum.org/a/55"
 
@@ -355,14 +395,17 @@ def test_mccordmuseum_title_id_split(spark):
       <a href="search.php?tablename=artist&id=3">James Duncan (1806-1881)
       </a></div>
     <div id="descriptions">Oil on canvas.</div>"""
-    (row,) = _run(spark, CC_SCRAPERS["mccordmuseum"](), "https://x/p", html)
+    spec = CC_SCRAPERS["mccordmuseum"]()
+    (row,) = _run(spark, spec, "https://x/p", html)
     assert row["license"] == "by-nc-nd" and row["license_version"] == "2.5"
     assert row["url"] == "http://www.mccord-museum.qc.ca/ObjView/m990.jpg"
     assert row["thumbnail"] == (
         "http://www.mccord-museum.qc.ca/ListView/m990.jpg"
     )
     assert row["width"] == "531" and row["height"] == "768"
-    assert row["title"] == "Winter Scene"
+    assert row["title"] == " Winter Scene"
+    (clean,) = _clean(spark, spec, "https://x/p", html)
+    assert clean["title"] == "Winter Scene"
     assert row["foreign_identifier"] == "M990.772.1"
     assert row["creator"] == "James Duncan"
     assert row["watermarked"] == "t"
