@@ -1,6 +1,13 @@
-"""cccatalog_spark — a PySpark-native analytics engine with the query and
-data-processing capabilities of cc-archive/cccatalog (reference at
-/root/reference), re-expressed Spark-first.
+"""cccatalog_spark — the Creative Commons catalog of cc-archive/cccatalog,
+re-expressed Spark-first.
+
+The product is the catalog: Common Crawl extraction, provider
+ingestion, load/merge and popularity. Its surface is the catalog
+functions in ``pipelines`` (``ingest_provider_batch``,
+``load_and_merge``, ``refresh_image_view``, ``cc_scrape``), the
+minutely loader in ``streaming.loader`` and the catalog queries
+(``plans.queries.CATALOG_QUERIES``); README "Product surface" has the
+list. The other operators and queries are not on any catalog path.
 
 Layers (see SURVEY.md §7.0):
 

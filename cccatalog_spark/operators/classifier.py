@@ -24,10 +24,9 @@ driver-side data:
   (dim+1)-row FRAME (bias at bucket -1), broadcast into each
   iteration's margin join; per iteration exactly two exchanges: the
   per-doc margin aggregate and the per-bucket gradient aggregate.
-  Fixed iteration count, lineage truncated per round (the PageRank
-  discipline in operators/graph.py), so the plan does not grow with
-  epochs. The corpus-sized frames are scanned once per iteration and
-  persisted across them.
+  Fixed iteration count, lineage truncated per round, so the plan
+  does not grow with epochs. The corpus-sized frames are scanned once
+  per iteration and persisted across them.
 
 Determinism contract: all counts are exact integers, so every
 log-probability is ln() of the same rational in both engines; the
@@ -291,9 +290,8 @@ def decision_stump(
     The corpus collapses to the per-distinct-value (count, positives)
     catalog in ONE map-side-combinable aggregate; every candidate
     threshold's left/right contingency then comes from cumulative
-    sums over that value-domain-bounded catalog (the q256 sanction
-    class), and the argmax is a (rounded gain DESC, threshold ASC)
-    TakeOrdered — no per-threshold scan, no iteration.
+    sums over that value-domain-bounded catalog, and the argmax is a
+    (rounded gain DESC, threshold ASC) TakeOrdered — no per-threshold scan, no iteration.
 
     Returns ONE row: ``(threshold, gain, parent_entropy, n_left,
     pos_left, n_right, pos_right)``; entropies in nats, floats

@@ -1,16 +1,14 @@
 """Clustering-agreement metrics from one contingency table: adjusted
 Rand index and normalized mutual information.
 
-Where B-cubed (operators/ml_metrics.bcubed) grades a clustering
-against per-item gold labels, ARI/NMI compare two PARTITIONS — the
-question a dedup pipeline asks when it changes a threshold or swaps
-MinHash for SimHash: "how much did the clustering actually move?"
-(Hubert & Arabie 1985 for ARI's chance correction; Strehl & Ghosh
-2002 for NMI.)
+ARI/NMI compare two PARTITIONS — the question a dedup pipeline asks
+when it changes a threshold or swaps MinHash for SimHash: "how much
+did the clustering actually move?" (Hubert & Arabie 1985 for ARI's
+chance correction; Strehl & Ghosh 2002 for NMI.)
 
 Everything reduces to the (a, b) cell-count contingency — ONE
 map-side-combinable groupBy — followed by window sums over that
-cell catalog (the bcubed plan shape):
+cell catalog:
 
   ARI = (Σ_ij C(n_ij,2) − E) / (½(Σ_i C(a_i,2) + Σ_j C(b_j,2)) − E),
         E = Σ_i C(a_i,2) · Σ_j C(b_j,2) / C(n,2)

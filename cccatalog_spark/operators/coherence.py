@@ -116,8 +116,7 @@ def umass_coherence(
     nt = top.groupBy("grp").agg(F.count("*").cast("long").alias("n_terms"))
     # Materialize the per-group catalog, then release the cached
     # intermediates — a long-lived session would otherwise accumulate
-    # base/top/inc in the block store on every call (round-6 advice;
-    # the bradley_terry/eigenvector_centrality discipline).
+    # base/top/inc in the block store on every call.
     from cccatalog_spark.operators.dedup import _truncate_lineage
 
     result = _truncate_lineage(

@@ -26,7 +26,7 @@ a literal) plus ONE TakeOrderedAndProject(1) argmax. Total work is
 k·|corpus| distance evaluations with k bounded-scalar collects (the
 bounded-catalog discipline: the selected set IS the k-row output).
 The running frame is persisted and lineage-truncated each round like
-the other iterative operators (pagerank, lloyd), so round r never
+the other iterative operators (lloyd), so round r never
 recomputes rounds 0..r-1.
 
 Reference anchor: no counterpart in the reference (SURVEY §2

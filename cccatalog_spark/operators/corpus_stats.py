@@ -531,7 +531,7 @@ def emd_1d(
 
     Scale shape: the corpus collapses to per-distinct-value counts in
     ONE aggregate; the CDF-gap sum is a cumsum window over the
-    DISTINCT-value catalog (value-domain-bounded, the q256 contract).
+    DISTINCT-value catalog (value-domain-bounded).
     Null values excluded (no ordering across engines).
     """
     x = F.col(value_col).cast("double")

@@ -115,10 +115,9 @@ def krippendorff_alpha_nominal(
     round_to: int = 6,
 ) -> DataFrame:
     """Krippendorff's alpha for nominal data (Krippendorff 2004) —
-    the agreement coefficient that, unlike Cohen's kappa
-    (operators/ml_metrics.py), handles ANY number of raters and
-    missing ratings, so it is the one to report for real annotation
-    projects where coverage is ragged.
+    the agreement coefficient that, unlike Cohen's kappa, handles ANY
+    number of raters and missing ratings, so it is the one to report
+    for real annotation projects where coverage is ragged.
 
     One row: ``(n_items, n_pairable_values, d_o, d_e, alpha)`` with
     ``alpha = 1 − D_o/D_e`` over the coincidence matrix (each
@@ -216,7 +215,7 @@ def fleiss_kappa(
 ) -> DataFrame:
     """Fleiss' kappa (Fleiss 1971) — chance-corrected agreement for a
     FIXED number of raters per item with nominal categories, the
-    multi-rater generalization Cohen's kappa (q215) can't provide
+    multi-rater generalization Cohen's kappa can't provide
     (rater identity is irrelevant to the statistic — only per-item
     category counts enter, so the input is simply one row per
     (item, assigned category) rating):

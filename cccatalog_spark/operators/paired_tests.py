@@ -1,15 +1,14 @@
 """Paired / ordered categorical hypothesis tests over corpus gates.
 
-The eval counterpart of the per-group tests in ``experiments.py``:
 McNemar for "did swapping filter A for filter B actually change which
 documents survive" (paired binary raters on the SAME rows),
 Cochran-Armitage for "does the keep-rate trend with an ordered dose",
 and Friedman for "do k treatments rank consistently across blocks".
 
-House conventions (mirrors ``chi_square``/``kruskal_wallis``): emit
-the test statistic, not a p-value (no incomplete-gamma in either
-engine); every float output rounded by the caller; all aggregates are
-one map-side-combinable groupBy — no per-row Python anywhere.
+House conventions: emit the test statistic, not a p-value (no
+incomplete-gamma in either engine); every float output rounded by the
+caller; all aggregates are one map-side-combinable groupBy — no
+per-row Python anywhere.
 
 Reference parity: the reference has no hypothesis-test surface
 (validation there is row-count assertions, cc-archive/cccatalog

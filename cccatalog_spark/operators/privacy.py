@@ -134,8 +134,7 @@ def t_closeness_audit(
 
     over the m observed sensitive values in order (q = group
     proportions, p = global proportions; the inner sum is the
-    cumulative-histogram gap, the closed form of ordered EMD — same
-    algebra as operators/experiments' exact 1-D EMD). k-anonymity
+    cumulative-histogram gap, the closed form of ordered EMD). k-anonymity
     (above) says "the group is big enough"; t-closeness says "knowing
     the group doesn't shift your belief about the sensitive value" —
     the homogeneity-attack guard. Callers bucket continuous sensitive

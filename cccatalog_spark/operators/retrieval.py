@@ -583,82 +583,6 @@ def rbo_overlap(
     )
 
 
-def textrank_keywords(
-    docs: DataFrame,
-    text_col: str,
-    iterations: int = 5,
-    damping: float = 0.85,
-    min_len: int = 4,
-) -> DataFrame:
-    """Corpus-level TextRank keyword scores (Mihalcea & Tarau,
-    EMNLP'04): PageRank over the word-adjacency graph — a word is a
-    keyword if it keeps company with other keywords, the unsupervised
-    upgrade over raw frequency that tf-idf can't provide when there
-    is no "other corpus" to contrast against.
-
-    Graph spec (deterministic, no POS tagger): tokens lowercased,
-    kept iff ``^[a-z]{min_len,}$``; edges are ADJACENT pairs in the
-    filtered sequence (the standard implementation shortcut for a
-    window of 2), undirected, distinct over the corpus, unweighted.
-
-    Returns ``(word, rank)`` for every graph node, rank rounded 8.
-
-    Scale shape: the edge build is one explode of per-doc bigram
-    arrays (transform over the token array — no self-join, no
-    window) + one distinct; the graph is |vocab|-sized, orders of
-    magnitude smaller than the corpus, and the fixed-round PageRank
-    on it follows operators/graph.pagerank's per-round single-shuffle
-    discipline.
-    """
-    from cccatalog_spark.operators.graph import pagerank
-
-    ft = F.filter(
-        F.transform(TX.tokens(F.col(text_col)), lambda t: F.lower(t)),
-        lambda t: t.rlike("^[a-z]{%d,}$" % int(min_len)),
-    )
-    # the filtered token array is MATERIALIZED as a column before the
-    # pair lambda: higher-order-function lambdas get no common-
-    # subexpression elimination, so an inline ``ft`` would re-run
-    # tokenize+filter per element_at per pair position (the q264
-    # lesson; guide §1.2 per-task work)
-    ftc = F.col("_ft")
-    # F.sequence counts DOWN for sequence(1, 0) — same guard as
-    # functions/text.shingles: short docs get an explicit empty array
-    pairs = F.when(
-        F.size(ftc) >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size(ftc) - 1),
-            lambda i: F.array(
-                F.element_at(ftc, i), F.element_at(ftc, i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<array<string>>"))
-    ed = (
-        docs.select(ft.alias("_ft"))
-        .select(F.explode(pairs).alias("p"))
-        .select(
-            F.element_at("p", 1).alias("a"),
-            F.element_at("p", 2).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-    )
-    und = ed.select(
-        F.col("a").alias("src"), F.col("b").alias("dst")
-    ).unionAll(ed.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-    if und.isEmpty():  # bounded probe; pagerank divides by |V|
-        return docs.sparkSession.createDataFrame(
-            [], "word string, rank double"
-        )
-    r = pagerank(und, iterations=iterations, damping=damping)
-    return r.select(
-        F.col("node").alias("word"), F.round("r", 8).alias("rank")
-    )
-
-
 def query_likelihood_topk(
     docs: DataFrame,
     text_col: str,

@@ -23,8 +23,7 @@ pair-count aggregate is map-side combinable. Pairs sharded by
 negative-sampling trainers.
 
 Reference anchor: no counterpart in the reference (SURVEY §2
-extension layer); companion to operators/graph.random_walks (whose
-walk "sentences" feed exactly this operator).
+extension layer).
 """
 
 from __future__ import annotations

@@ -118,7 +118,7 @@ def winsorized_stats(
     Returns ``(group, n, lo, hi, mean_w, std_w, trimmed_mean,
     n_trimmed)``, floats rounded 6.
 
-    Scale shape: the distinct-value-catalog discipline (q296/q297) —
+    Scale shape: the distinct-value-catalog discipline —
     quantiles come from a (group, value, cnt) catalog aggregate plus
     ONE window over that catalog (partitioned by group, |catalog|
     rows, never the corpus), bounds re-attach by broadcast, and the
@@ -423,8 +423,7 @@ def jarque_bera(df: DataFrame, value_col: str) -> DataFrame:
     """Jarque-Bera normality test (Jarque & Bera 1980): one row
     ``(n, skewness, kurtosis, jb)`` with JB = n/6·(S² + (K−3)²/4) from
     the first four central moments — the distribution-shape audit
-    beside q296's two-sample KS (normality is what parametric
-    downstream tests silently assume).
+    (normality is what parametric downstream tests silently assume).
 
     Moments come from explicit Σx..Σx⁴ raw sums (one pass, map-side
     combinable), expanded to central moments in column algebra — both

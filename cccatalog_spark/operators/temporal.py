@@ -279,7 +279,7 @@ def cusum_changepoints(
 
     Scale: the input is a per-period aggregate (the caller collapses
     raw rows first), so every window here runs over the PERIOD catalog
-    — value-domain-bounded, the q256/q266 sanction class.
+    — value-domain-bounded, the q266 sanction class.
     """
     stats = daily.agg(
         F.avg(value_col).alias("_mu"),
@@ -602,7 +602,7 @@ def mann_kendall_trend(
 
     Two-sided p from the Abramowitz-Stegun 26.2.17 polynomial for the
     normal tail — explicit algebra, so the SQL oracle reproduces it
-    term-for-term (same discipline as q296's KS p).
+    term-for-term.
 
     Returns one row ``(n, s, var_s, z, p_value, trend)`` where trend
     ∈ {'increasing','decreasing','no_trend'} at α=0.05.
@@ -1219,8 +1219,8 @@ def markov_hitting_time(
 
     The recursion h⁰ ≡ 0;  hᵗ(s) = 1 + Σ_s' P(s,s')·hᵗ⁻¹(s') with
     h(target) ≡ 0, unrolled ``horizon`` times — the truncated
-    Neumann series of (I−Q)⁻¹𝟙, exactly replayable in SQL (same
-    unrolled-CTE discipline as pagerank's oracle).  A successor with
+    Neumann series of (I−Q)⁻¹𝟙, exactly replayable in SQL (one
+    materialized CTE per round).  A successor with
     no outgoing transitions (a non-target absorbing sink) never
     reaches the target, so its truncated value is the elapsed bound
     itself: hᵗ(sink) = t, NOT 0 — coalescing it to 0 would score the

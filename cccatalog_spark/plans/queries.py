@@ -48,7 +48,7 @@ def query(name: str, oracle: str | None = None):
 
 # ---------------------------------------------------------------------------
 # q01 — pricing summary (TPC-H Q1 shape; SURVEY A6/A12 agg family).
-# Flagship: scan-heavy group-agg, fully codegen'd, partial agg map-side.
+# Scan-heavy group-agg, fully codegen'd, partial agg map-side.
 # ---------------------------------------------------------------------------
 @query(
     "q01_pricing_summary",
@@ -3611,7 +3611,7 @@ def q76_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q77 — the flagship corpus pipeline end-to-end (pipelines.
+# q77 — the corpus pipeline end-to-end (pipelines.
 # corpus_pipeline): Gopher quality filter → blocked-levenshtein near-dup
 # pairs → connected-components clustering → canonical survivor → PII
 # scrub → per-language token totals. The oracle reassembles every stage
@@ -4074,35 +4074,56 @@ def q82_repetition_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Driver ordering.  The driver's correctness gate reads the first 50
-# ``queries()`` entries in insertion order.  Rounds 1-7 drove 266
-# distinct queries green (r7: 50/50 first-pass); the round-8 window
-# continues burning down the never-driver-checked backlog: the 45
-# oldest such queries in inventory order (q266-q311, skipping the
-# already-green q268), 4 sentinels (core agg/merge/dedup/stream
-# paths; q67 rotates out after four green rounds), and q423 — the
-# round-7 STAGED CLIP-retrieval leg promoted per verdict item 3 with
-# an immediate window seat.  Every displaced query stays defined and
-# oracle-paired (checked by tools/check_oracle.py across all entries
-# and committed as CORRECTNESS_LOCAL_r{N}.json).
+# The product: queries that run the catalog's own code (merge, normalize,
+# provider and Common Crawl specs, licenses, popularity, the loader).
 # ---------------------------------------------------------------------------
-DRIVER_WINDOW: list[str] = [
-    "q01_pricing_summary",
+CATALOG_QUERIES: list[str] = [
     "q04_merge_upsert",
-    "q25_minhash_lsh",
+    "q05_merge_overwrite",
+    "q06_replay_collapse",
+    "q08_percentile_disc",
+    "q09_popularity_constants",
+    "q10_standardized_popularity",
+    "q16_license_extract",
+    "q17_sanitize",
+    "q18_url_normalize",
+    "q34_computed_key_join",
+    "q38_cc_link_extract",
+    "q39_sub_provider_update",
+    "q40_image_normalize",
+    "q41_expiration_mark",
     "q45_stream_loader",
+    "q48_cc_tags_merge",
+    "q51_provider_ingest",
+    "q58_smithsonian_ingest",
+    "q63_europeana_ingest",
+    "q65_bucketed_stream_loader",
+    "q67_wikimedia_continue_merge",
+    "q69_jdbc_upsert_roundtrip",
+    "q73_html_extract",
+    "q74_wat_pipeline",
+    "q157_time_travel_cdf",
+    "q173_wat_manifest",
+    "q204_cc_scraper_specs",
+    "q205_cc_scrape_router",
+]
+
+# The driver's correctness gate reads the first 50 ``queries()`` entries,
+# so the catalog queries lead and the other checked queries follow.
+DRIVER_WINDOW: list[str] = [
+    *CATALOG_QUERIES,
+    "q01_pricing_summary",
+    "q25_minhash_lsh",
     "q423_clip_media_retrieval",
     "q266_emd_drift",
     "q267_salted_join",
     "q269_dbscan",
-    "q270_multi_source_bfs",
     "q271_product_quantization",
     "q272_min_k_prob",
     "q273_ccnet_ppl_buckets",
     "q274_ccnet_mix",
     "q275_split_leakage",
     "q276_wilson_gate",
-    "q277_deepwalk_pairs",
     "q278_touch_attribution",
     "q279_overlap_stitch",
     "q280_bitext_margin",
@@ -4113,30 +4134,6 @@ DRIVER_WINDOW: list[str] = [
     "q285_contrastive_pairs",
     "q286_rouge_l_pairs",
     "q287_kaplan_meier",
-    "q288_cusum_changepoint",
-    "q289_theil_sen",
-    "q290_graph_report",
-    "q291_isotonic_calibration",
-    "q292_brier_decomposition",
-    "q293_cumulative_gains",
-    "q294_rbo_ann_agreement",
-    "q295_ips_offpolicy",
-    "q296_ks_test",
-    "q297_effect_sizes",
-    "q298_srm_check",
-    "q299_link_prediction",
-    "q300_t_closeness",
-    "q301_ngram_novelty",
-    "q302_seasonal_decompose",
-    "q303_jackknife_ratio",
-    "q304_permutation_test",
-    "q305_harmonic_centrality",
-    "q306_textrank",
-    "q307_winsorized_stats",
-    "q308_spearman",
-    "q309_kendall_tau",
-    "q310_mann_kendall",
-    "q311_hyperball_harmonic",
 ]
 
 
@@ -4755,71 +4752,6 @@ def q95_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q96_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.kmeans_assign(e, "embedding", "vec_id", n_seeds=8)
-
-
-# ---------------------------------------------------------------------------
-# q97 — PageRank (operators/graph.py) over the supplier→customer
-# fulfilment graph (edges from lineitem⋈orders), 5 fixed power
-# iterations, d=0.85, simplified dangling handling. The oracle unrolls
-# the identical recurrence as chained CTEs — iterative distributed
-# graph analytics under an exact-value check, like q71/q83 for
-# connected components. Top-20 by rounded rank.
-# ---------------------------------------------------------------------------
-def _pagerank_oracle_sql(iterations: int = 5) -> str:
-    ctes = [
-        """edges AS (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""",
-        """nodes AS (
-        SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
-        "n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM nodes)",
-        """outdeg AS (
-        SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY src)""",
-        """r0 AS (
-        SELECT node, (SELECT CAST(1.0 AS DOUBLE) / nn FROM n) AS r
-        FROM nodes)""",
-    ]
-    for t in range(1, iterations + 1):
-        ctes.append(
-            f"""r{t} AS (
-        SELECT nodes.node,
-               (SELECT (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn
-                FROM n)
-               + CAST(0.85 AS DOUBLE) * coalesce(s.m, CAST(0 AS DOUBLE)) AS r
-        FROM nodes LEFT JOIN (
-            SELECT e.dst AS node, sum(p.r / o.deg) AS m
-            FROM edges e
-            JOIN r{t - 1} p ON e.src = p.node
-            JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s USING (node))"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT node, round(r, 8) AS rank
-    FROM r{iterations}
-    ORDER BY round(r, 8) DESC, node LIMIT 20"""
-    )
-
-
-@query("q97_pagerank", oracle=_pagerank_oracle_sql(5))
-def q97_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import pagerank
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    r = pagerank(edges, iterations=5, damping=0.85)
-    return (
-        r.select("node", F.round("r", 8).alias("rank"))
-        .orderBy(F.desc("rank"), F.asc("node"))
-        .limit(20)
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -6479,58 +6411,6 @@ def q130_interleave_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return interleave_shuffle(d, "doc_id", "source", seed="42")
 
 
-# ---------------------------------------------------------------------------
-# q131 — triangle counting (operators/graph.triangle_count) over the
-# token co-occurrence graph: edges = token pairs present together in
-# >= 25% of documents (scale-invariant threshold), canonical a<b.
-# Wedge join + closing-edge join + per-node rollup.
-# ---------------------------------------------------------------------------
-@query(
-    "q131_triangle_count",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM t),
-    p AS (SELECT DISTINCT doc_id, unnest(toks) AS term FROM t),
-    e AS (SELECT a.term AS src, b.term AS dst
-          FROM p a JOIN p b ON a.doc_id = b.doc_id AND a.term < b.term, n
-          GROUP BY 1, 2, n.n_docs
-          HAVING count(*) >= 0.25 * n.n_docs),
-    tri AS (SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
-            FROM e e1
-            JOIN e e2 ON e1.dst = e2.src
-            JOIN e e3 ON e3.src = e1.src AND e3.dst = e2.dst)
-    SELECT node, CAST(count(*) AS BIGINT) AS n_triangles
-    FROM (SELECT a AS node FROM tri
-          UNION ALL SELECT b FROM tri
-          UNION ALL SELECT c FROM tri)
-    GROUP BY 1
-    """,
-)
-def q131_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import triangle_count
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.transform(TX.tokens(F.col("text")), lambda t: F.lower(t))
-    present = d.select(
-        F.col("doc_id").alias("__doc"),
-        F.explode(F.array_distinct(toks)).alias("term"),
-    )
-    n_docs = d.select(F.count("*").cast("double").alias("n_docs"))
-    a = present.select("__doc", F.col("term").alias("src"))
-    b = present.select("__doc", F.col("term").alias("dst"))
-    edges = (
-        a.join(b, "__doc")
-        .where(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("co"))
-        .crossJoin(F.broadcast(n_docs))
-        .where(F.col("co") >= 0.25 * F.col("n_docs"))
-        .select("src", "dst")
-    )
-    return triangle_count(edges)
-
-
 def all_queries() -> dict[str, QueryFn]:
     return _driver_order(QUERIES)
 
@@ -7321,81 +7201,6 @@ def q145_cluster_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cluster_id",
         _SPLITS,
         salt="csplit:",
-    )
-
-
-# ---------------------------------------------------------------------------
-# q146 — HITS hubs/authorities (operators/graph.hits) over the q131
-# token co-occurrence graph (directed a<b), 3 L1-normalized power
-# iterations, collect-free (normalization scalar cross-broadcast).
-# Oracle: the same 3 iterations unrolled as CTE stages.
-# ---------------------------------------------------------------------------
-def _q146_oracle(iterations: int = 3) -> str:
-    head = f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM t),
-    p AS (SELECT DISTINCT doc_id, unnest(toks) AS term FROM t),
-    e AS MATERIALIZED (SELECT a.term AS src, b.term AS dst
-          FROM p a JOIN p b ON a.doc_id = b.doc_id AND a.term < b.term, n
-          GROUP BY 1, 2, n.n_docs
-          HAVING count(*) >= 0.25 * n.n_docs),
-    nodes AS MATERIALIZED (SELECT src AS node FROM e
-                           UNION SELECT dst FROM e),
-    h0 AS (SELECT node, 1.0 AS h FROM nodes)"""
-    # each round reads the previous h twice (edge join + scalar sum);
-    # MATERIALIZED stops DuckDB re-inlining the whole chain per
-    # reference (the q398/q239 exponential-inlining lesson)
-    body = ""
-    for i in range(1, iterations + 1):
-        body += f""",
-    a{i}r AS MATERIALIZED (SELECT e.dst AS node, sum(h{i - 1}.h) AS a
-              FROM e JOIN h{i - 1} ON h{i - 1}.node = e.src GROUP BY 1),
-    a{i} AS MATERIALIZED (SELECT n.node,
-                    coalesce(a{i}r.a, 0.0) / (SELECT sum(a) FROM a{i}r)
-                      AS a
-             FROM nodes n LEFT JOIN a{i}r USING (node)),
-    h{i}r AS MATERIALIZED (SELECT e.src AS node, sum(a{i}.a) AS h
-              FROM e JOIN a{i} ON a{i}.node = e.dst GROUP BY 1),
-    h{i} AS MATERIALIZED (SELECT n.node,
-                    coalesce(h{i}r.h, 0.0) / (SELECT sum(h) FROM h{i}r)
-                      AS h
-             FROM nodes n LEFT JOIN h{i}r USING (node))"""
-    tail = f"""
-    SELECT n.node, round(h{iterations}.h, 6) AS hub,
-           round(a{iterations}.a, 6) AS authority
-    FROM nodes n
-    JOIN h{iterations} ON h{iterations}.node = n.node
-    JOIN a{iterations} ON a{iterations}.node = n.node"""
-    return head + body + tail
-
-
-@query("q146_hits", oracle=_q146_oracle(3))
-def q146_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import hits
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.transform(TX.tokens(F.col("text")), lambda t: F.lower(t))
-    present = d.select(
-        F.col("doc_id").alias("__doc"),
-        F.explode(F.array_distinct(toks)).alias("term"),
-    )
-    n_docs = d.select(F.count("*").cast("double").alias("n_docs"))
-    a, b = present.select("__doc", F.col("term").alias("src")), present.select(
-        "__doc", F.col("term").alias("dst")
-    )
-    edges = (
-        a.join(b, "__doc")
-        .where(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("co"))
-        .crossJoin(F.broadcast(n_docs))
-        .where(F.col("co") >= 0.25 * F.col("n_docs"))
-        .select("src", "dst")
-    )
-    return hits(edges, iterations=3).select(
-        "node", F.round("hub", 6).alias("hub"),
-        F.round("authority", 6).alias("authority"),
     )
 
 
@@ -8371,146 +8176,6 @@ def q162_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q163-q165 — model-evaluation metrics (operators/ml_metrics): ROC AUC
-# by the Mann-Whitney average-rank identity, expected calibration
-# error over 10 bins, and a multi-class precision/recall/F1 report —
-# all exact relational algebra over a derandomized scored frame
-# (score = md5-uniform blended with the binary label, so the metrics
-# are non-trivial AND reproducible in SQL).
-# ---------------------------------------------------------------------------
-_SCORE_SQL = """
-    (( ('0x' || substring(md5('p:' || CAST(vec_id AS VARCHAR)), 1,
-                          12))::BIGINT + 1.0) / 281474976710656.0
-     + CAST(label % 2 AS DOUBLE)) / 2.0
-"""
-
-
-def _score_col():
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("p:"), F.col("vec_id").cast("string"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("double")
-        + F.lit(1.0)
-    ) / F.lit(281474976710656.0)
-    return (u + (F.col("label") % 2).cast("double")) / 2.0
-
-
-@query(
-    "q163_auc",
-    oracle=f"""
-    WITH s AS (SELECT vec_id, label % 2 AS y, {_SCORE_SQL} AS p
-               FROM embeddings),
-    r AS (SELECT y,
-                 rank() OVER (ORDER BY p)
-                 + (count(*) OVER (PARTITION BY p) - 1) / 2.0 AS r
-          FROM s)
-    SELECT CAST(sum(y) AS BIGINT) AS n_pos,
-           CAST(sum(1 - y) AS BIGINT) AS n_neg,
-           round((sum(CASE WHEN y = 1 THEN r END)
-                  - sum(y) * (sum(y) + 1) / 2.0)
-                 / (sum(y) * sum(1 - y)), 6) AS auc
-    FROM r
-    """,
-)
-def q163_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import auc
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        (F.col("label") % 2).alias("y"),
-        _score_col().alias("p"),
-    )
-    return auc(emb, "p", "y").select(
-        "n_pos", "n_neg", F.round("auc", 6).alias("auc")
-    )
-
-
-@query(
-    "q164_calibration_ece",
-    oracle=f"""
-    WITH s AS (SELECT label % 2 AS y, {_SCORE_SQL} AS p FROM embeddings),
-    b AS (SELECT least(CAST(floor(p * 10) AS INT), 9) AS bin,
-                 count(*) AS n, avg(p) AS conf, avg(CAST(y AS DOUBLE)) AS acc
-          FROM s GROUP BY 1),
-    t AS (SELECT CAST(sum(n) AS DOUBLE) AS total FROM b)
-    SELECT CAST(max(t.total) AS BIGINT) AS n,
-           round(sum(b.n / t.total * abs(b.acc - b.conf)), 6) AS ece
-    FROM b, t
-    """,
-)
-def q164_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import ece
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") % 2).alias("y"), _score_col().alias("p")
-    )
-    return ece(emb, "p", "y", n_bins=10).select(
-        "n", F.round("ece", 6).alias("ece")
-    )
-
-
-@query(
-    "q165_classification_report",
-    oracle="""
-    WITH s AS (SELECT label AS y,
-                      CASE WHEN vec_id % 3 = 0 THEN (label + 1) % 8
-                           ELSE label END AS yhat
-               FROM embeddings),
-    pl AS (SELECT y, count(*) AS support,
-                  sum(CASE WHEN yhat = y THEN 1 ELSE 0 END) AS tp
-           FROM s GROUP BY 1),
-    pp AS (SELECT yhat, count(*) AS n_pred FROM s GROUP BY 1),
-    j AS (SELECT coalesce(pl.y, pp.yhat) AS class,
-                 coalesce(pl.tp, 0) AS tp,
-                 coalesce(pp.n_pred, 0) - coalesce(pl.tp, 0) AS fp,
-                 coalesce(pl.support, 0) - coalesce(pl.tp, 0) AS fn
-          FROM pl FULL OUTER JOIN pp ON pl.y = pp.yhat)
-    SELECT class, CAST(tp AS BIGINT) AS tp, CAST(fp AS BIGINT) AS fp,
-           CAST(fn AS BIGINT) AS fn,
-           round(CASE WHEN tp + fp > 0
-                      THEN tp / CAST(tp + fp AS DOUBLE) ELSE 0 END, 6)
-             AS precision,
-           round(CASE WHEN tp + fn > 0
-                      THEN tp / CAST(tp + fn AS DOUBLE) ELSE 0 END, 6)
-             AS recall,
-           round(CASE WHEN (CASE WHEN tp + fp > 0
-                                 THEN tp / CAST(tp + fp AS DOUBLE)
-                                 ELSE 0 END)
-                         + (CASE WHEN tp + fn > 0
-                                 THEN tp / CAST(tp + fn AS DOUBLE)
-                                 ELSE 0 END) > 0
-                      THEN 2 * (tp / CAST(tp + fp AS DOUBLE))
-                             * (tp / CAST(tp + fn AS DOUBLE))
-                           / ((tp / CAST(tp + fp AS DOUBLE))
-                              + (tp / CAST(tp + fn AS DOUBLE)))
-                      ELSE 0 END, 6) AS f1
-    FROM j
-    """,
-)
-def q165_classification_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import classification_report
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("label").alias("y"),
-        F.when(
-            F.col("vec_id") % 3 == 0, (F.col("label") + 1) % 8
-        ).otherwise(F.col("label")).alias("yhat"),
-    )
-    return classification_report(emb, "yhat", "y").select(
-        "class", "tp", "fp", "fn",
-        F.round("precision", 6).alias("precision"),
-        F.round("recall", 6).alias("recall"),
-        F.round("f1", 6).alias("f1"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # q166 — CDC apply (operators/cdc.apply_changes): replay a change feed
 # onto a snapshot; the exact inverse of q104's snapshot_diff
 # (roundtrip property pinned in tests). Feed = the q157 scenario's
@@ -8944,66 +8609,6 @@ def q173_wat_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q174 — precision/recall threshold sweep (operators/ml_metrics.
-# pr_curve): 9 operating points from ONE aggregate pass (3 conditional
-# sums per threshold, no row×threshold explode), over the q163 scored
-# frame.
-# ---------------------------------------------------------------------------
-_PR_THRESH = [round(0.1 * i, 1) for i in range(1, 10)]
-
-
-def _q174_oracle() -> str:
-    parts = []
-    for t in _PR_THRESH:
-        parts.append(f"""
-    SELECT CAST({t} AS DOUBLE) AS threshold,
-           CAST(sum(CASE WHEN p >= {t} AND y = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS tp,
-           CAST(sum(CASE WHEN p >= {t} AND y = 0 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fp,
-           CAST(sum(CASE WHEN p < {t} AND y = 1 THEN 1 ELSE 0 END)
-                AS BIGINT) AS fn
-    FROM s""")
-    u = "\n    UNION ALL".join(parts)
-    return f"""
-    WITH s AS (SELECT label % 2 AS y, {_SCORE_SQL} AS p FROM embeddings),
-    m AS ({u})
-    SELECT threshold, tp, fp, fn,
-           round(CASE WHEN tp + fp > 0 THEN tp / CAST(tp + fp AS DOUBLE)
-                      ELSE 0 END, 6) AS precision,
-           round(CASE WHEN tp + fn > 0 THEN tp / CAST(tp + fn AS DOUBLE)
-                      ELSE 0 END, 6) AS recall,
-           round(CASE WHEN (CASE WHEN tp + fp > 0
-                                 THEN tp / CAST(tp + fp AS DOUBLE) ELSE 0 END)
-                        + (CASE WHEN tp + fn > 0
-                                THEN tp / CAST(tp + fn AS DOUBLE) ELSE 0 END)
-                        > 0
-                      THEN 2 * (tp / CAST(tp + fp AS DOUBLE))
-                             * (tp / CAST(tp + fn AS DOUBLE))
-                           / ((tp / CAST(tp + fp AS DOUBLE))
-                              + (tp / CAST(tp + fn AS DOUBLE)))
-                      ELSE 0 END, 6) AS f1
-    FROM m
-    """
-
-
-@query("q174_pr_curve", oracle=_q174_oracle())
-def q174_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import pr_curve
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") % 2).alias("y"), _score_col().alias("p")
-    )
-    out = pr_curve(emb, "p", "y", _PR_THRESH)
-    return out.select(
-        "threshold", "tp", "fp", "fn",
-        F.round("precision", 6).alias("precision"),
-        F.round("recall", 6).alias("recall"),
-        F.round("f1", 6).alias("f1"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # q175 — chi-square independence audit (source × lang): the
 # data-audit gate for "is language balanced across sources" —
 # contingency counts + expected frequencies + the chi² statistic and
@@ -9288,7 +8893,7 @@ def q180_rollup_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
 # for every node of a synthetic forest (parent(n) = n div 7, roots
 # n < 7) — the hierarchy-walk capability (category trees, org charts,
 # BOM rollups) exercised through the SQL surface itself; the manual
-# iterate-and-checkpoint loops (q71/q83/q97/q146) remain the
+# iterate-and-checkpoint loops (q71/q83) remain the
 # bounded-round form for cyclic graphs.
 # ---------------------------------------------------------------------------
 @query(
@@ -9662,8 +9267,8 @@ def q188_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q189/q190 — PCA by power iteration (operators/features.
 # pca_power_component / pca_project): the distributed half is the one
 # d²/2-key covariance shuffle (q148); every later frame is a bounded
-# d- or d²-row catalog, normalized via 1-row cross-broadcast (HITS
-# pattern), no collect, no sign flip (identical arithmetic both
+# d- or d²-row catalog, normalized via 1-row cross-broadcast, no
+# collect, no sign flip (identical arithmetic both
 # engines). The oracle unrolls the 3 deterministic iterations from
 # v0 = 1/√64 and the same Rayleigh-quotient eigenvalue.
 # ---------------------------------------------------------------------------
@@ -10245,80 +9850,6 @@ def q198_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q199 — triangle counting / clustering coefficients (operators/graph.
-# triangle_counts) over the part co-purchase graph (parts sharing an
-# order). Compact-forward degree orientation bounds wedge generation
-# at Σ outdeg² ≤ m^1.5 — hub-proof — and finds each triangle exactly
-# once; the oracle replays the identical orientation and joins.
-# Top-20 nodes by (triangles, node).
-# ---------------------------------------------------------------------------
-@query(
-    "q199_triangle_count",
-    oracle="""
-    WITH e AS (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      WHERE a.l_orderkey % 8 = 0),
-    deg AS (SELECT node, count(*) AS degree FROM (
-              SELECT u AS node FROM e UNION ALL SELECT v AS node FROM e)
-            GROUP BY 1),
-    ed AS (SELECT e.u, e.v, du.degree AS du, dv.degree AS dv
-           FROM e JOIN deg du ON e.u = du.node
-                  JOIN deg dv ON e.v = dv.node),
-    o AS (SELECT CASE WHEN (du < dv) OR (du = dv AND u < v)
-                      THEN u ELSE v END AS src,
-                 CASE WHEN (du < dv) OR (du = dv AND u < v)
-                      THEN v ELSE u END AS dst,
-                 CASE WHEN (du < dv) OR (du = dv AND u < v)
-                      THEN dv ELSE du END AS ddst
-          FROM ed),
-    w AS (SELECT o1.src AS a, o1.dst AS b, o2.dst AS c
-          FROM o o1 JOIN o o2 ON o1.src = o2.src
-           AND ((o1.ddst < o2.ddst)
-                OR (o1.ddst = o2.ddst AND o1.dst < o2.dst))),
-    t AS (SELECT a, b, c FROM w JOIN o ON w.b = o.src AND w.c = o.dst),
-    pn AS (SELECT node, count(*) AS triangles FROM (
-             SELECT a AS node FROM t UNION ALL
-             SELECT b AS node FROM t UNION ALL
-             SELECT c AS node FROM t)
-           GROUP BY 1)
-    SELECT deg.node, CAST(deg.degree AS BIGINT) AS degree,
-           CAST(coalesce(pn.triangles, 0) AS BIGINT) AS triangles,
-           CASE WHEN deg.degree >= 2
-                THEN round(2.0 * coalesce(pn.triangles, 0)
-                           / (deg.degree * (deg.degree - 1)), 6)
-                ELSE CAST(0.0 AS DOUBLE) END AS clustering
-    FROM deg LEFT JOIN pn USING (node)
-    ORDER BY triangles DESC, node ASC
-    LIMIT 20
-    """,
-)
-def q199_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import triangle_counts
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") % 8 == 0)  # deterministic 1/8 scope:
-        # keeps the co-purchase graph sparse enough that wedges stay
-        # data-proportional at every sf (the full graph is 91%-dense
-        # co-occurrence noise, not analysis signal)
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-    )
-    out = triangle_counts(edges, "u", "v")
-    return out.orderBy(F.desc("triangles"), F.asc("node")).limit(20)
-
-
-# ---------------------------------------------------------------------------
 # q200 — per-user event-type Markov transitions: lag-1 bigram counts
 # over each user's time-ordered stream, row-normalized into transition
 # probabilities — the sequence-modeling statistic (what follows what)
@@ -10874,276 +10405,6 @@ def q207_logreg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q208 — k-core decomposition (operators/graph.k_core) over the q199
-# part co-purchase graph: peel degree<4 nodes to the fixed point, the
-# link-graph curation cut that strips pendant chains before the
-# heavier PageRank/triangle passes. The engine loops to convergence
-# (scalar below-k count); the oracle unrolls 8 peel rounds — peeling
-# is monotone, so once both reach the fixed point the extra rounds
-# are no-ops and the results are identical.
-# ---------------------------------------------------------------------------
-def _q208_oracle(k: int = 4, rounds: int = 8) -> str:
-    # MATERIALIZED: each round references its predecessor twice (via
-    # the degree filter and the edge prune); inlined CTEs would
-    # re-evaluate the chain exponentially
-    head = """
-    WITH e0 AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      WHERE a.l_orderkey % 8 = 0)"""
-    steps = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        steps.append(f""",
-    d{i} AS (SELECT u, count(*) AS c FROM e{p} GROUP BY 1),
-    k{i} AS MATERIALIZED (SELECT u FROM d{i} WHERE c >= {k}),
-    e{i} AS MATERIALIZED (SELECT e.u, e.v FROM e{p} e
-             JOIN k{i} a ON e.u = a.u JOIN k{i} b ON e.v = b.u)""")
-    tail = f"""
-    SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
-    FROM e{rounds} GROUP BY 1
-    """
-    return head + "".join(steps) + tail
-
-
-@query("q208_k_core", oracle=_q208_oracle())
-def q208_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import k_core
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") % 8 == 0)  # q199's sparse scope
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-    )
-    return k_core(edges, 4)
-
-
-# ---------------------------------------------------------------------------
-# q209 — label-propagation communities (operators/graph.
-# label_propagation) over the q199 part co-purchase graph: 4
-# synchronous rounds of adopt-the-most-frequent-neighbor-label with a
-# min-label tie-break — the per-community sampling-cap grouping that
-# splits weakly-bridged clusters where connected components (q71)
-# over-merges. Deterministic by construction (synchronous + fixed
-# rounds + min tie-break), so the oracle is an exact unrolled replay.
-# ---------------------------------------------------------------------------
-def _q209_oracle(rounds: int = 4) -> str:
-    head = """
-    WITH e0 AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
-      WHERE a.l_orderkey % 8 = 0),
-    l0 AS MATERIALIZED (SELECT DISTINCT u AS node, u AS label FROM e0)"""
-    steps = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        steps.append(f""",
-    m{i} AS (SELECT e.u, l.label, count(*) AS c
-             FROM e0 e JOIN l{p} l ON e.v = l.node GROUP BY 1, 2),
-    l{i} AS MATERIALIZED (
-      SELECT u AS node, label FROM (
-        SELECT u, label,
-               row_number() OVER (PARTITION BY u
-                                  ORDER BY c DESC, label ASC) AS rn
-        FROM m{i}) WHERE rn = 1)""")
-    tail = f"""
-    SELECT CAST(node AS BIGINT) AS node, CAST(label AS BIGINT) AS label
-    FROM l{rounds}
-    """
-    return head + "".join(steps) + tail
-
-
-@query("q209_label_propagation", oracle=_q209_oracle())
-def q209_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import label_propagation
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") % 8 == 0)  # q199's sparse scope
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-    )
-    labels = label_propagation(edges, rounds=4)
-    return labels.select(
-        F.col("node").cast("long").alias("node"),
-        F.col("label").cast("long").alias("label"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# q210 — k-truss (operators/graph.k_truss) over the q199 part
-# co-purchase graph: drop edges in fewer than k-2 = 3 triangles to the
-# fixed point — the edge-level sharpening of q208's node peel (pairwise
-# link rings without closing triangles survive a degree cut but not a
-# truss cut). Engine loops to convergence (per-round edge count
-# scalar); the oracle unrolls 6 peel rounds (measured fixed point: 4
-# at sf0.01, 3 at sf0.1) — peeling is monotone, so the extra rounds
-# are no-ops — then recomputes support within the final edge set,
-# exactly what the engine's converged round reports.
-# ---------------------------------------------------------------------------
-def _q210_oracle(k: int = 5, rounds: int = 6) -> str:
-    head = """
-    WITH e0 AS MATERIALIZED (
-      SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
-      FROM lineitem a JOIN lineitem b
-        ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-      WHERE a.l_orderkey % 8 = 0)"""
-    steps = []
-    for i in range(1, rounds + 1):
-        p = i - 1
-        steps.append(f""",
-    t{i} AS (SELECT ab.u AS a, ab.v AS b, bc.v AS c
-             FROM e{p} ab JOIN e{p} bc ON ab.v = bc.u
-             JOIN e{p} ac ON ac.u = ab.u AND ac.v = bc.v),
-    s{i} AS (SELECT u, v, count(*) AS s FROM (
-               SELECT a AS u, b AS v FROM t{i}
-               UNION ALL SELECT b, c FROM t{i}
-               UNION ALL SELECT a, c FROM t{i}) GROUP BY 1, 2),
-    e{i} AS MATERIALIZED (SELECT e.u, e.v FROM e{p} e
-             JOIN s{i} s ON e.u = s.u AND e.v = s.v
-             WHERE s.s >= {k - 2})""")
-    n = rounds
-    tail = f""",
-    tf AS (SELECT ab.u AS a, ab.v AS b, bc.v AS c
-           FROM e{n} ab JOIN e{n} bc ON ab.v = bc.u
-           JOIN e{n} ac ON ac.u = ab.u AND ac.v = bc.v),
-    sf AS (SELECT u, v, count(*) AS s FROM (
-             SELECT a AS u, b AS v FROM tf
-             UNION ALL SELECT b, c FROM tf
-             UNION ALL SELECT a, c FROM tf) GROUP BY 1, 2)
-    SELECT e.u, e.v, CAST(s.s AS BIGINT) AS support
-    FROM e{n} e JOIN sf s ON e.u = s.u AND e.v = s.v
-    """
-    return head + "".join(steps) + tail
-
-
-@query("q210_k_truss", oracle=_q210_oracle())
-def q210_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import k_truss
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(F.col("l_orderkey") % 8 == 0)  # q199's sparse scope
-        .select("l_orderkey", "l_partkey")
-    )
-    a = li.alias("a")
-    b = li.alias("b")
-    edges = a.join(
-        b,
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")),
-    ).select(
-        F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
-    )
-    truss = k_truss(edges, 5)
-    return truss.select(
-        "u", "v", F.col("support").cast("long").alias("support")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q211 — personalized PageRank (operators/graph.personalized_pagerank)
-# over the q97 supplier→customer fulfilment graph, seeded on the
-# suppliers with l_suppkey % 25 = 0: teleport mass returns only to the
-# seed whitelist, so ranks decay with link distance from it — the
-# TrustRank-style "expand a trusted domain set" curation step. Same
-# unrolled-recurrence oracle discipline as q97.
-# ---------------------------------------------------------------------------
-def _q211_oracle(iterations: int = 5) -> str:
-    ctes = [
-        """edges AS (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""",
-        """nodes AS (
-        SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
-        """seeds AS (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS node
-        FROM lineitem WHERE l_suppkey % 25 = 0)""",
-        "ns AS (SELECT CAST(count(*) AS DOUBLE) AS s FROM seeds)",
-        """outdeg AS (
-        SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY src)""",
-        """base AS (
-        SELECT n.node,
-               CASE WHEN sd.node IS NOT NULL THEN
-                 (SELECT (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / s
-                  FROM ns)
-               ELSE CAST(0 AS DOUBLE) END AS b
-        FROM nodes n LEFT JOIN seeds sd ON n.node = sd.node)""",
-        """r0 AS (
-        SELECT node, b / (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) AS r
-        FROM base)""",
-    ]
-    for t in range(1, iterations + 1):
-        ctes.append(
-            f"""r{t} AS (
-        SELECT base.node,
-               base.b + CAST(0.85 AS DOUBLE)
-                        * coalesce(s.m, CAST(0 AS DOUBLE)) AS r
-        FROM base LEFT JOIN (
-            SELECT e.dst AS node, sum(p.r / o.deg) AS m
-            FROM edges e
-            JOIN r{t - 1} p ON e.src = p.node
-            JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s ON base.node = s.node)"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT node, round(r, 8) AS rank
-    FROM r{iterations}
-    WHERE round(r, 8) > 0
-    ORDER BY round(r, 8) DESC, node LIMIT 20"""
-    )
-
-
-@query("q211_personalized_pagerank", oracle=_q211_oracle())
-def q211_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import personalized_pagerank
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    seeds = (
-        li.where(F.col("l_suppkey") % 25 == 0)
-        .select(
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("node")
-        )
-        .distinct()
-    )
-    r = personalized_pagerank(edges, seeds, iterations=5, damping=0.85)
-    return (
-        r.select("node", F.round("r", 8).alias("rank"))
-        .where(F.col("rank") > 0)
-        .orderBy(F.desc("rank"), F.asc("node"))
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
 # q212 — Unicode NFC normalization + invisible-character strip
 # (functions/text.unicode_normalize / strip_invisibles): the mojibake
 # repair pass that must run before exact dedup or shingling (composed
@@ -11265,135 +10526,6 @@ def q213_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return line_dedup(
         d.select("doc_id", raw.alias("raw")), "raw", "doc_id"
     )
-
-
-# ---------------------------------------------------------------------------
-# q214 — per-pair smoothed sentence BLEU (operators/ml_metrics.
-# bleu_scores): the n-gram-overlap eval for distillation/translation
-# pairs and a near-verbatim contamination signal. Candidate = each
-# doc's first 20 tokens; reference = first 20 tokens after dropping
-# every 6th (deterministic paraphrase-ish degradation), so scores
-# spread across (0,1) and clipping/brevity both exercise. Oracle
-# replays gram counting for n=1..4, Lin-Och add-one smoothing, and the
-# brevity penalty in SQL.
-# ---------------------------------------------------------------------------
-@query(
-    "q214_bleu_pairs",
-    oracle=f"""
-    WITH base AS (
-      SELECT doc_id,
-             list_slice(toks, 1, 20) AS ct,
-             list_slice(list_filter(toks, (x, i) -> i % 6 <> 0), 1, 20)
-               AS rt
-      FROM (SELECT doc_id, {_TOKS} AS toks FROM documents)),
-    grid AS (SELECT doc_id, len(ct) AS cand_len, len(rt) AS ref_len, n
-             FROM base, unnest([1, 2, 3, 4]) t(n)),
-    cg AS (SELECT doc_id, n,
-                  array_to_string(list_slice(ct, i, i + n - 1), ' ')
-                    AS gram,
-                  count(*) AS c
-           FROM base, unnest([1, 2, 3, 4]) t(n),
-                unnest(generate_series(1, len(ct) - n + 1)) s(i)
-           GROUP BY 1, 2, 3),
-    rg AS (SELECT doc_id, n,
-                  array_to_string(list_slice(rt, i, i + n - 1), ' ')
-                    AS gram,
-                  count(*) AS c
-           FROM base, unnest([1, 2, 3, 4]) t(n),
-                unnest(generate_series(1, len(rt) - n + 1)) s(i)
-           GROUP BY 1, 2, 3),
-    cl AS (SELECT cg.doc_id, cg.n,
-                  sum(least(cg.c, coalesce(rg.c, 0))) AS clip,
-                  sum(cg.c) AS tot
-           FROM cg LEFT JOIN rg
-             ON cg.doc_id = rg.doc_id AND cg.n = rg.n
-                AND cg.gram = rg.gram
-           GROUP BY 1, 2),
-    pn AS (SELECT grid.doc_id, grid.cand_len, grid.ref_len,
-                  (coalesce(clip, 0) + 1.0) / (coalesce(tot, 0) + 1.0)
-                    AS p
-           FROM grid LEFT JOIN cl
-             ON grid.doc_id = cl.doc_id AND grid.n = cl.n)
-    SELECT doc_id, CAST(cand_len AS INT) AS cand_len,
-           CAST(ref_len AS INT) AS ref_len,
-           round(CASE WHEN cand_len > 0
-                      THEN exp(least(0.0,
-                               1.0 - ref_len * 1.0 / cand_len))
-                           * exp(avg(ln(p)))
-                      ELSE 0.0 END, 6) AS bleu
-    FROM pn GROUP BY doc_id, cand_len, ref_len
-    """,
-)
-def q214_bleu_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import bleu_scores
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = TX.tokens(F.col("text"))
-    pairs = d.select(
-        "doc_id",
-        F.array_join(F.slice(toks, 1, 20), " ").alias("cand"),
-        F.array_join(
-            F.slice(
-                F.filter(toks, lambda x, i: (i + 1) % 6 != 0), 1, 20
-            ),
-            " ",
-        ).alias("ref"),
-    )
-    return bleu_scores(pairs, "doc_id", "cand", "ref")
-
-
-# ---------------------------------------------------------------------------
-# q215 — Cohen's kappa between the stored `lang` labels and the n-gram
-# lang_id prediction (operators/ml_metrics.cohens_kappa): the
-# chance-corrected agreement gate for the language classifier — raw
-# accuracy is inflated by the en-heavy marginal; kappa subtracts it.
-# Oracle replays q23's lang-id CASE and the marginal-product chance
-# term in SQL.
-# ---------------------------------------------------------------------------
-@query(
-    "q215_lang_kappa",
-    oracle=f"""
-    WITH t AS (SELECT lang, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    s AS (
-        SELECT lang,
-            len(list_filter(toks, x -> list_contains(['der','die','das','und','ist'], x))) AS s_de,
-            len(list_filter(toks, x -> list_contains(['the','and','of','is','was'], x)))  AS s_en,
-            len(list_filter(toks, x -> list_contains(['el','la','los','las','es'], x)))   AS s_es,
-            len(list_filter(toks, x -> list_contains(['le','la','les','est','et'], x)))   AS s_fr,
-            len(list_filter(toks, x -> list_contains(['de5','shi4','le5','zai4','he2'], x))) AS s_zh
-        FROM t),
-    p AS (
-        SELECT lang,
-           CASE WHEN greatest(s_de, s_en, s_es, s_fr, s_zh) = 0 THEN 'und'
-                WHEN s_de >= s_en AND s_de >= s_es AND s_de >= s_fr AND s_de >= s_zh THEN 'de'
-                WHEN s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'
-                WHEN s_es >= s_fr AND s_es >= s_zh THEN 'es'
-                WHEN s_fr >= s_zh THEN 'fr'
-                ELSE 'zh' END AS pred
-        FROM s),
-    tot AS (SELECT count(*) AS n,
-                   sum(CASE WHEN lang = pred THEN 1 ELSE 0 END) AS ag
-            FROM p),
-    ma AS (SELECT lang AS c, count(*) AS na FROM p GROUP BY 1),
-    mb AS (SELECT pred AS c, count(*) AS nb FROM p GROUP BY 1),
-    pe AS (SELECT coalesce(sum(na * 1.0 * nb), 0.0) AS pn
-           FROM ma JOIN mb USING (c))
-    SELECT n, round(ag * 1.0 / n, 6) AS po,
-           round(pn / (n * 1.0 * n), 6) AS pe,
-           round(CASE WHEN pn / (n * 1.0 * n) < 1.0
-                      THEN (ag * 1.0 / n - pn / (n * 1.0 * n))
-                           / (1.0 - pn / (n * 1.0 * n))
-                      ELSE 1.0 END, 6) AS kappa
-    FROM tot, pe
-    """,
-)
-def q215_lang_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import cohens_kappa
-
-    d = load_table(spark, sf_dir, "documents")
-    scored = d.select("lang", TX.lang_id(F.col("text")).alias("pred"))
-    return cohens_kappa(scored, "lang", "pred")
 
 
 # ---------------------------------------------------------------------------
@@ -12363,58 +11495,6 @@ def q233_stratified_exact_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q234 — DeepWalk walk-corpus generation (operators/graph.
-# random_walks, Perozzi KDD'14): one md5-derandomized 4-node walk per
-# node of a synthetic 200-node order graph — the training-data step
-# that turns a link graph into "sentences". The choice arithmetic
-# (md5-prefix mod outdeg vs dst-rank) replays byte-for-byte in
-# DuckDB, so the oracle unrolls the three steps as CTEs.
-# ---------------------------------------------------------------------------
-def _q234_oracle(walk_len: int = 4) -> str:
-    parts = [
-        "WITH e AS (SELECT DISTINCT o_custkey % 200 AS s,"
-        " o_orderkey % 200 AS d FROM orders)",
-        "adj AS (SELECT s, d, row_number() OVER"
-        " (PARTITION BY s ORDER BY d) - 1 AS idx FROM e)",
-        "degs AS (SELECT s, count(*) AS deg FROM e GROUP BY 1)",
-        "n AS (SELECT DISTINCT node FROM"
-        " (SELECT s AS node FROM e UNION SELECT d FROM e))",
-        "w0 AS (SELECT node AS start, node AS cur,"
-        " CAST(node AS VARCHAR) AS path FROM n)",
-    ]
-    for t in range(1, walk_len):
-        parts.append(
-            f"""w{t} AS (SELECT w.start, a.d AS cur,
-           CASE WHEN a.d IS NULL THEN w.path
-                ELSE w.path || '->' || CAST(a.d AS VARCHAR) END AS path
-       FROM w{t-1} w
-       LEFT JOIN degs g ON g.s = w.cur
-       LEFT JOIN adj a ON a.s = w.cur AND a.idx =
-         ('0x' || substring(md5('walk:' || CAST(w.start AS VARCHAR)
-            || ':{t}:' || CAST(w.cur AS VARCHAR)), 1, 8))::BIGINT
-           % g.deg)"""
-        )
-    return (
-        ",\n    ".join(parts)
-        + f"\n    SELECT start, path,"
-        f" CAST(len(string_split(path, '->')) AS INT) AS n_steps"
-        f" FROM w{walk_len-1}"
-    )
-
-
-@query("q234_random_walks", oracle=_q234_oracle())
-def q234_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import random_walks
-
-    o = load_table(spark, sf_dir, "orders")
-    edges = o.select(
-        (F.col("o_custkey") % 200).alias("src"),
-        (F.col("o_orderkey") % 200).alias("dst"),
-    )
-    return random_walks(edges, walk_len=4)
-
-
-# ---------------------------------------------------------------------------
 # q235 — population stability index (operators/corpus_stats.
 # population_stability_index): score-distribution drift between the
 # even-id reference half and the odd-id current half shifted by +40
@@ -12637,101 +11717,6 @@ def q238_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q239 — Bradley–Terry preference ranking (operators/preferences.
-# bradley_terry, Hunter 2004 MM): 8 synthetic "models" with true
-# strengths i+1 compared once per order (winner md5-derandomized in
-# proportion to true strength), 5 MM rounds — the aggregation step
-# for pairwise preference data before DPO/RLHF or leaderboards. The
-# oracle unrolls the MM recurrence as CTEs.
-# ---------------------------------------------------------------------------
-def _q239_oracle(iterations: int = 5) -> str:
-    # every round references the previous round's pi TWICE (both join
-    # endpoints) plus a scalar-sum subquery — without MATERIALIZED,
-    # DuckDB inlines the whole chain ~3^r times (the q398 eigenvector
-    # lesson; measured 614 s -> sub-second at sf0.001)
-    parts = [
-        """WITH cmp AS MATERIALIZED (
-      SELECT CASE WHEN hwin THEN a ELSE b END AS w,
-             CASE WHEN hwin THEN b ELSE a END AS l
-      FROM (SELECT a, b,
-              ('0x' || substring(md5('bt:'
-                 || CAST(o_orderkey AS VARCHAR)), 1, 8))::BIGINT
-                % (a + b + 2) < a + 1 AS hwin
-            FROM (SELECT o_orderkey,
-                    CAST(o_custkey % 8 AS BIGINT) AS a,
-                    CAST((o_custkey % 8 + 1 + o_orderkey % 7) % 8
-                         AS BIGINT) AS b
-                  FROM orders)))""",
-        "wins AS MATERIALIZED (SELECT w AS item,"
-        " CAST(count(*) AS DOUBLE) AS wins FROM cmp GROUP BY 1)",
-        "und AS MATERIALIZED (SELECT least(w, l) AS x,"
-        " greatest(w, l) AS y,"
-        " CAST(count(*) AS DOUBLE) AS n FROM cmp GROUP BY 1, 2)",
-        "pr AS MATERIALIZED (SELECT x AS i, y AS j, n FROM und"
-        " UNION ALL SELECT y, x, n FROM und)",
-        "it AS MATERIALIZED (SELECT DISTINCT i AS item FROM pr)",
-        "ni AS (SELECT CAST(count(*) AS DOUBLE) AS c FROM it)",
-        "p0 AS MATERIALIZED (SELECT item, 1.0 / c AS pi FROM it, ni)",
-    ]
-    for r in range(1, iterations + 1):
-        parts.append(
-            f"d{r} AS MATERIALIZED"
-            f" (SELECT pr.i, sum(pr.n / (a.pi + b.pi)) AS den"
-            f" FROM pr JOIN p{r-1} a ON pr.i = a.item"
-            f" JOIN p{r-1} b ON pr.j = b.item GROUP BY 1)"
-        )
-        parts.append(
-            f"r{r} AS MATERIALIZED"
-            f" (SELECT it.item, coalesce(w.wins, 0) / d.den AS raw"
-            f" FROM it JOIN d{r} d ON it.item = d.i"
-            f" LEFT JOIN wins w ON it.item = w.item)"
-        )
-        parts.append(
-            f"p{r} AS MATERIALIZED"
-            f" (SELECT item, raw / (SELECT sum(raw) FROM r{r})"
-            f" AS pi FROM r{r})"
-        )
-    return (
-        ",\n    ".join(parts)
-        + f"\n    SELECT item, round(pi, 6) AS pi FROM p{iterations}"
-    )
-
-
-@query("q239_bradley_terry", oracle=_q239_oracle())
-def q239_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.preferences import bradley_terry
-
-    o = load_table(spark, sf_dir, "orders")
-    a = (F.col("o_custkey") % 8).cast("long")
-    b = ((F.col("o_custkey") % 8 + 1 + F.col("o_orderkey") % 7) % 8).cast(
-        "long"
-    )
-    hwin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("bt:"), F.col("o_orderkey").cast("string")
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % (a + b + 2)
-        < a + 1
-    )
-    cmp = o.select(
-        F.when(hwin, a).otherwise(b).alias("winner"),
-        F.when(hwin, b).otherwise(a).alias("loser"),
-    )
-    fit = bradley_terry(cmp, iterations=5)
-    return fit.select("item", F.round("pi", 6).alias("pi"))
-
-
-# ---------------------------------------------------------------------------
 # q240 — Dawid–Skene crowd-label aggregation (operators/labeling.
 # dawid_skene_binary, 1979): five synthetic annotators of reliability
 # 0.55..0.95 label every doc's parity; 2 EM rounds learn per-worker
@@ -12865,7 +11850,7 @@ def q241_glove_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 # krippendorff_alpha_nominal): agreement over the q240 synthetic
 # annotator pool with ragged coverage (worker w skips doc_id % 5 = w
 # items) — the any-raters/missing-data coefficient Cohen's kappa
-# (q215) cannot express. Oracle replays the coincidence matrix.
+# cannot express. Oracle replays the coincidence matrix.
 # ---------------------------------------------------------------------------
 @query(
     "q242_krippendorff_alpha",
@@ -13169,142 +12154,6 @@ def q245_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("prec"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# q246 — temperature-scaling calibration fit (operators/ml_metrics.
-# fit_temperature, Guo ICML'17): labels sampled (md5-derandomized) at
-# true temperature 2 from synthetic logits; one corpus pass evaluates
-# the whole candidate grid and TakeOrdered(1) picks the NLL argmin —
-# q164's ECE diagnosis paired with its standard treatment.
-# ---------------------------------------------------------------------------
-_CAL_TEMPS = [round(0.25 * i, 2) for i in range(1, 17)]
-
-
-@query(
-    "q246_temperature_fit",
-    oracle=f"""
-    WITH d AS (SELECT
-        (doc_id % 21 - 10) / CAST(2.5 AS DOUBLE) AS x,
-        CASE WHEN ('0x' || substring(md5('cal:'
-               || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-             / CAST(4503599627370496.0 AS DOUBLE)
-             < 1 / (1 + exp(-((doc_id % 21 - 10)
-                              / CAST(2.5 AS DOUBLE)) / 2))
-             THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END AS y
-      FROM documents),
-    e AS (SELECT x, y, t FROM d,
-          unnest([{", ".join(f"CAST({t} AS DOUBLE)" for t in _CAL_TEMPS)}])
-            u(t)),
-    n AS (SELECT t,
-            -avg(y * ln(1 / (1 + exp(-x / t)))
-                 + (1 - y) * ln(1 - 1 / (1 + exp(-x / t)))) AS nll
-          FROM e GROUP BY 1)
-    SELECT t AS temperature, round(nll, 6) AS nll
-    FROM n ORDER BY nll, t LIMIT 1
-    """,
-)
-def q246_temperature_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import fit_temperature
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    x = (F.col("doc_id") % 21 - 10) / 2.5
-    frac = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(F.lit("cal:"), F.col("doc_id").cast("string"))
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(1 << 52))
-    )
-    obs = d.select(
-        x.alias("logit"),
-        (frac < 1.0 / (1.0 + F.exp(-x / 2))).cast("double").alias("y"),
-    )
-    return fit_temperature(obs, "logit", "y", temps=_CAL_TEMPS)
-
-
-# ---------------------------------------------------------------------------
-# q247 — split-conformal threshold (operators/ml_metrics.
-# conformal_threshold): the ceil((n+1)(1−α))-th smallest
-# nonconformity score at α=0.1 over document lengths — the
-# distribution-free coverage guarantee for a filter cut. Exact k-th
-# smallest via the quantile-refinement machinery; oracle ranks
-# directly.
-# ---------------------------------------------------------------------------
-@query(
-    "q247_conformal_threshold",
-    oracle="""
-    WITH v AS (SELECT CAST(n_chars AS DOUBLE) AS v FROM documents
-               WHERE n_chars IS NOT NULL),
-    n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM v),
-    k AS (SELECT least(CAST(ceil((n + 1) * CAST(0.9 AS DOUBLE))
-                       AS BIGINT), n) AS k, n FROM n),
-    r AS (SELECT v, row_number() OVER (ORDER BY v) AS rn FROM v)
-    SELECT CAST(0.1 AS DOUBLE) AS alpha, k.n AS n, k.k AS k,
-           round(r.v, 6) AS qhat
-    FROM r, k WHERE r.rn = k.k
-    """,
-)
-def q247_conformal_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import conformal_threshold
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("double").alias("score")
-    )
-    return conformal_threshold(d, "score", alpha=0.1)
-
-
-# ---------------------------------------------------------------------------
-# q248 — group-fairness release audit (operators/ml_metrics.
-# group_fairness_report): per-language confusion rates of a synthetic
-# filter decision with corpus-wide disparity gaps on every row — the
-# "does the filter suppress one language disproportionately?" check
-# run before shipping a trained quality classifier.
-# ---------------------------------------------------------------------------
-@query(
-    "q248_fairness_gaps",
-    oracle="""
-    WITH d AS (SELECT lang, doc_id % 3 = 0 AS y,
-                      doc_id % 5 < 2 AS yh FROM documents),
-    g AS (SELECT lang AS grp, count(*) AS n,
-                 sum(CASE WHEN yh THEN 1 ELSE 0 END) AS np,
-                 sum(CASE WHEN y AND yh THEN 1 ELSE 0 END) AS tp,
-                 sum(CASE WHEN y THEN 1 ELSE 0 END) AS p,
-                 sum(CASE WHEN NOT y AND yh THEN 1 ELSE 0 END) AS fp,
-                 sum(CASE WHEN NOT y THEN 1 ELSE 0 END) AS neg
-          FROM d GROUP BY 1),
-    r AS (SELECT grp, n,
-                 CAST(np AS DOUBLE) / n AS pos_rate,
-                 CASE WHEN p > 0 THEN CAST(tp AS DOUBLE) / p END AS tpr,
-                 CASE WHEN neg > 0 THEN CAST(fp AS DOUBLE) / neg END
-                   AS fpr
-          FROM g),
-    gp AS (SELECT max(pos_rate) - min(pos_rate) AS prg,
-                  max(tpr) - min(tpr) AS tg,
-                  max(fpr) - min(fpr) AS fg FROM r)
-    SELECT grp AS lang, n, round(pos_rate, 6) AS pos_rate,
-           round(tpr, 6) AS tpr, round(fpr, 6) AS fpr,
-           round(prg, 6) AS pos_rate_gap, round(tg, 6) AS tpr_gap,
-           round(fg, 6) AS fpr_gap
-    FROM r, gp
-    """,
-)
-def q248_fairness_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import group_fairness_report
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "lang",
-        (F.col("doc_id") % 3 == 0).alias("y"),
-        (F.col("doc_id") % 5 < 2).alias("yh"),
-    )
-    return group_fairness_report(d, "lang", "y", "yh")
 
 
 # ---------------------------------------------------------------------------
@@ -14480,56 +13329,6 @@ def q269_dbscan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q270 — multi-source BFS hop distances (operators/graph.
-# multi_source_bfs): nearest-seed distance over the undirected
-# supplier-customer fulfilment graph from 3 seed suppliers — the
-# TrustRank-style propagation feature beside PageRank/HITS/CC.
-# Oracle: WITH RECURSIVE bounded-depth reachability + min.
-# ---------------------------------------------------------------------------
-@query(
-    "q270_multi_source_bfs",
-    oracle="""
-    WITH RECURSIVE ed AS (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    und AS (SELECT src AS n, dst AS nbr FROM ed
-            UNION SELECT dst, src FROM ed),
-    seeds(node) AS (VALUES ('S1'), ('S5'), ('S9')),
-    reach(node, d) AS (
-        SELECT node, 0 FROM seeds
-        UNION
-        SELECT und.nbr, reach.d + 1
-        FROM reach JOIN und ON und.n = reach.node
-        WHERE reach.d < 4)
-    SELECT node, CAST(min(d) AS INT) AS dist
-    FROM reach GROUP BY 1
-    """,
-)
-def q270_multi_source_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import multi_source_bfs
-
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
-    out = multi_source_bfs(
-        edges, ["S1", "S5", "S9"], max_hops=4
-    )
-    return out.select("node", F.col("dist").cast("int").alias("dist"))
-
-
-# ---------------------------------------------------------------------------
 # q271 — product quantization (operators/similarity.pq_encode, Jégou
 # TPAMI'11): m=2 subspaces x k=4 deterministic codebooks over the
 # 64-dim embeddings; per-vector code + squared reconstruction error.
@@ -14881,41 +13680,6 @@ def q276_wilson_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wilson_gate(
         d, "source", "is_defect", z=1.96, max_rate=0.1
     )
-
-
-# ---------------------------------------------------------------------------
-# q277 — DeepWalk skip-gram pairs (operators/graph.deepwalk_pairs,
-# Perozzi KDD'14): q234's md5-derandomized walk corpus fed through a
-# window-2 skip-gram pair generator — the node-embedding training-data
-# step. One (walk, position) equi-join on the walk id (constant ≤2w
-# fan-out per position) + the pair aggregate.
-# ---------------------------------------------------------------------------
-def _q277_oracle() -> str:
-    return f"""
-    WITH walks AS ({_q234_oracle()}),
-    seq AS (SELECT start,
-                   unnest(string_split(path, '->')) AS node,
-                   generate_subscripts(string_split(path, '->'), 1) AS pos
-            FROM walks),
-    p AS (SELECT a.node AS center, b.node AS context
-          FROM seq a JOIN seq b
-            ON a.start = b.start AND a.pos <> b.pos
-               AND abs(a.pos - b.pos) <= 2)
-    SELECT center, context, CAST(count(*) AS BIGINT) AS n_pairs
-    FROM p GROUP BY 1, 2
-    """
-
-
-@query("q277_deepwalk_pairs", oracle=_q277_oracle())
-def q277_deepwalk_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import deepwalk_pairs
-
-    o = load_table(spark, sf_dir, "orders")
-    edges = o.select(
-        (F.col("o_custkey") % 200).alias("src"),
-        (F.col("o_orderkey") % 200).alias("dst"),
-    )
-    return deepwalk_pairs(edges, walk_len=4, window=2)
 
 
 # ---------------------------------------------------------------------------
@@ -15620,193 +14384,6 @@ def q289_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q290 — graph health report (operators/graph.graph_report): density,
-# reciprocity, and Newman degree assortativity (full-degree,
-# symmetrized sums) over the q234 directed customer->order graph —
-# the summary card shipped before anyone runs PageRank. Explicit sum
-# formulas, no corr(); reverse-edge semi-join keyed by the pair.
-# ---------------------------------------------------------------------------
-@query(
-    "q290_graph_report",
-    oracle="""
-    WITH e AS (SELECT DISTINCT o_custkey % 200 AS s,
-                      o_orderkey % 200 AS d
-               FROM orders
-               WHERE o_custkey % 200 <> o_orderkey % 200),
-    nn AS (SELECT CAST(count(*) AS BIGINT) AS n_nodes FROM
-           (SELECT s AS n FROM e UNION SELECT d FROM e)),
-    md AS (SELECT CAST(count(*) AS BIGINT) AS n_edges_directed FROM e),
-    rc AS (SELECT CAST(count(*) AS BIGINT) AS nrecip
-           FROM e WHERE EXISTS (SELECT 1 FROM e r
-                                WHERE r.s = e.d AND r.d = e.s)),
-    u AS (SELECT DISTINCT least(s, d) AS u, greatest(s, d) AS v FROM e),
-    mu AS (SELECT CAST(count(*) AS BIGINT) AS n_edges_undirected FROM u),
-    dg AS (SELECT node, CAST(count(*) AS DOUBLE) AS deg FROM
-           (SELECT u AS node FROM u UNION ALL SELECT v FROM u)
-           GROUP BY 1),
-    ends AS (SELECT a.deg AS ju, b.deg AS jv
-             FROM u JOIN dg a ON a.node = u.u
-                    JOIN dg b ON b.node = u.v),
-    s AS (SELECT CAST(count(*) AS DOUBLE) AS m,
-                 sum(ju * jv) AS sjk,
-                 sum(ju + jv) AS sj2x,
-                 sum(ju * ju + jv * jv) AS sq2x
-          FROM ends)
-    SELECT nn.n_nodes, md.n_edges_directed, mu.n_edges_undirected,
-           round(md.n_edges_directed
-                 / (CAST(nn.n_nodes AS DOUBLE) * (nn.n_nodes - 1)), 6)
-               AS density,
-           round(rc.nrecip / CAST(md.n_edges_directed AS DOUBLE), 6)
-               AS reciprocity,
-           round(CASE WHEN s.sq2x / (2.0 * s.m)
-                           - (s.sj2x / (2.0 * s.m))
-                             * (s.sj2x / (2.0 * s.m)) > 0
-                      THEN (s.sjk / s.m
-                            - (s.sj2x / (2.0 * s.m))
-                              * (s.sj2x / (2.0 * s.m)))
-                           / (s.sq2x / (2.0 * s.m)
-                              - (s.sj2x / (2.0 * s.m))
-                                * (s.sj2x / (2.0 * s.m)))
-                 END, 6) AS assortativity
-    FROM nn, md, rc, mu, s
-    """,
-)
-def q290_graph_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import graph_report
-
-    o = load_table(spark, sf_dir, "orders")
-    edges = o.select(
-        (F.col("o_custkey") % 200).alias("src"),
-        (F.col("o_orderkey") % 200).alias("dst"),
-    )
-    return graph_report(edges)
-
-
-# ---------------------------------------------------------------------------
-# q291 — isotonic (PAV) calibration curve (operators/ml_metrics.
-# isotonic_calibration, Robertson'88 minimax form): iso(i) =
-# max_{j<=i} min_{k>=i} mean(y over bins j..k) — the sequential
-# pooling algorithm as pure relational algebra over the 20-bin
-# catalog (catalog³ fold). Interval means are integer-sum ratios, so
-# both engines compare identical doubles.
-# ---------------------------------------------------------------------------
-@query(
-    "q291_isotonic_calibration",
-    oracle=f"""
-    WITH s AS (SELECT label % 2 AS y, {_SCORE_SQL} AS p FROM embeddings),
-    b AS (SELECT least(CAST(floor(p * 20) AS INT), 19) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(y) AS BIGINT) AS sy,
-                 sum(p) AS sp
-          FROM s GROUP BY 1),
-    pr AS (SELECT a.bin AS j, c.bin AS k FROM b a JOIN b c
-           ON a.bin <= c.bin),
-    m AS (SELECT pr.j, pr.k,
-                 CAST(sum(b.sy) AS DOUBLE) / CAST(sum(b.n) AS DOUBLE)
-                     AS mean
-          FROM pr JOIN b ON b.bin BETWEEN pr.j AND pr.k
-          GROUP BY 1, 2),
-    mn AS (SELECT i.bin AS i, m.j, min(m.mean) AS mn
-           FROM m JOIN b i ON m.j <= i.bin AND m.k >= i.bin
-           GROUP BY 1, 2),
-    iso AS (SELECT i, max(mn) AS iso FROM mn GROUP BY 1)
-    SELECT b.bin, b.n,
-           round(b.sp / b.n, 6) AS mean_score,
-           round(CAST(b.sy AS DOUBLE) / b.n, 6) AS raw_acc,
-           round(iso.iso, 6) AS iso_acc
-    FROM b JOIN iso ON iso.i = b.bin
-    """,
-)
-def q291_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import isotonic_calibration
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") % 2).alias("y"), _score_col().alias("p")
-    )
-    return isotonic_calibration(emb, "p", "y", n_bins=20)
-
-
-# ---------------------------------------------------------------------------
-# q292 — Brier score decomposition (operators/ml_metrics.
-# brier_decomposition, Murphy 1973): reliability / resolution /
-# uncertainty over 10 forecast bins beside the raw Brier — ECE's
-# (q164) variance-aware sibling. One corpus aggregate + one bin
-# rollup + a 1-row fold.
-# ---------------------------------------------------------------------------
-@query(
-    "q292_brier_decomposition",
-    oracle=f"""
-    WITH s AS (SELECT CAST(label % 2 AS DOUBLE) AS y, {_SCORE_SQL} AS p
-               FROM embeddings),
-    g AS (SELECT CAST(count(*) AS DOUBLE) AS nn, avg(y) AS ybar,
-                 avg((p - y) * (p - y)) AS brier
-          FROM s),
-    b AS (SELECT least(CAST(floor(p * 10) AS INT), 9) AS bin,
-                 CAST(count(*) AS DOUBLE) AS n,
-                 avg(p) AS conf, avg(y) AS acc
-          FROM s GROUP BY 1)
-    SELECT CAST(max(g.nn) AS BIGINT) AS n,
-           round(max(g.brier), 6) AS brier,
-           round(sum(b.n / g.nn * (b.conf - b.acc) * (b.conf - b.acc)),
-                 6) AS reliability,
-           round(sum(b.n / g.nn * (b.acc - g.ybar) * (b.acc - g.ybar)),
-                 6) AS resolution,
-           round(max(g.ybar * (1.0 - g.ybar)), 6) AS uncertainty
-    FROM b, g
-    """,
-)
-def q292_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import brier_decomposition
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") % 2).alias("y"), _score_col().alias("p")
-    )
-    return brier_decomposition(emb, "p", "y", n_bins=10)
-
-
-# ---------------------------------------------------------------------------
-# q293 — cumulative gains / lift chart (operators/ml_metrics.
-# cumulative_gains): positives captured per descending score bin —
-# the filter-threshold picker beside AUC. Score-VALUE bins, never a
-# global row ntile; cums run over the 10-bin catalog.
-# ---------------------------------------------------------------------------
-@query(
-    "q293_cumulative_gains",
-    oracle=f"""
-    WITH s AS (SELECT label % 2 AS y, {_SCORE_SQL} AS p FROM embeddings),
-    b AS (SELECT least(CAST(floor(p * 10) AS INT), 9) AS bin,
-                 CAST(count(*) AS BIGINT) AS n,
-                 CAST(sum(y) AS BIGINT) AS n_pos
-          FROM s GROUP BY 1),
-    g AS (SELECT CAST(sum(n) AS DOUBLE) AS nn,
-                 CAST(sum(n_pos) AS DOUBLE) AS np
-          FROM b),
-    c AS (SELECT b.bin, b.n, b.n_pos, g.nn, g.np,
-                 sum(b.n) OVER (ORDER BY b.bin DESC
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS cn,
-                 sum(b.n_pos) OVER (ORDER BY b.bin DESC
-                                    ROWS BETWEEN UNBOUNDED PRECEDING
-                                    AND CURRENT ROW) AS cp
-          FROM b, g)
-    SELECT bin, n, n_pos,
-           round(cn / nn, 6) AS cum_frac_rows,
-           round(CASE WHEN np > 0 THEN cp / np END, 6) AS gain,
-           round(CASE WHEN np > 0 THEN (cp / np) / (cn / nn) END, 6)
-               AS lift
-    FROM c
-    """,
-)
-def q293_cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import cumulative_gains
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        (F.col("label") % 2).alias("y"), _score_col().alias("p")
-    )
-    return cumulative_gains(emb, "p", "y", n_bins=10)
-
-
-# ---------------------------------------------------------------------------
 # q294 — rank-biased overlap of exact vs LSH ANN rankings
 # (operators/retrieval.rbo_overlap, Webber TOIS'10): the
 # top-weighted agreement between q26's exact top-10 and q47's
@@ -16090,65 +14667,6 @@ def q298_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q299 — link prediction (operators/graph.link_prediction_scores):
-# common-neighbors / Jaccard / Adamic-Adar over the part∈order
-# bipartite membership frame — candidate pairs generated per
-# container (Σ deg² work, basket-bounded), never items². Top-20 by
-# Adamic-Adar.
-# ---------------------------------------------------------------------------
-@query(
-    "q299_link_prediction",
-    oracle="""
-    WITH m AS (SELECT DISTINCT l_orderkey AS c, l_partkey AS i
-               FROM lineitem),
-    deg AS (SELECT c, count(*) AS d FROM m GROUP BY 1),
-    idg AS (SELECT i, count(*) AS di FROM m GROUP BY 1),
-    p AS (SELECT a.i AS id_a, b.i AS id_b,
-                 count(*) AS common,
-                 sum(1.0 / ln(deg.d)) AS aa
-          FROM m a
-          JOIN m b ON a.c = b.c AND a.i < b.i
-          JOIN deg ON deg.c = a.c
-          WHERE deg.d >= 2
-          GROUP BY 1, 2
-          HAVING count(*) >= 2)
-    SELECT p.id_a, p.id_b, p.common,
-           round(CAST(p.common AS DOUBLE)
-                 / (da.di + db.di - p.common), 6) AS jaccard,
-           round(p.aa, 6) AS adamic_adar
-    FROM p
-    JOIN idg da ON da.i = p.id_a
-    JOIN idg db ON db.i = p.id_b
-    ORDER BY round(p.aa, 6) DESC, p.id_a, p.id_b
-    LIMIT 20
-    """,
-)
-def q299_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import link_prediction_scores
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        F.col("l_partkey").alias("item"),
-        F.col("l_orderkey").alias("container"),
-    )
-    s = link_prediction_scores(
-        li, "item", "container", min_common=2
-    )
-    return (
-        s.select(
-            "id_a",
-            "id_b",
-            "common",
-            F.round("jaccard", 6).alias("jaccard"),
-            F.round("adamic_adar", 6).alias("adamic_adar"),
-        )
-        .orderBy(
-            F.desc(F.round("adamic_adar", 6)), F.asc("id_a"), F.asc("id_b")
-        )
-        .limit(20)
-    )
-
-
-# ---------------------------------------------------------------------------
 # q300 — t-closeness audit (operators/privacy.t_closeness_audit):
 # per (lang, source) group, normalized ordered-EMD gap between the
 # group's n_chars-bucket distribution and the global one — the
@@ -16390,126 +14908,6 @@ def q304_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q305 — h-truncated harmonic centrality (operators/graph.
-# harmonic_centrality, Boldi-Vigna 2014) over one month of the
-# fulfilment graph at h=2 (the O(V·ball) pair frame is the exact
-# price of the definition — measured 395 s on the FULL sf0.1 graph
-# vs 54 s for q311's sketch; the slice keeps the exact form bench-
-# sized): bounded all-pairs BFS carrying the source on each
-# frontier row; the O(V·ball) pair frame is the exact price of the
-# truncated definition (HyperBall's HLL counters are the documented
-# full-web swap). Top-20.
-# ---------------------------------------------------------------------------
-@query(
-    "q305_harmonic_centrality",
-    oracle="""
-    WITH ed AS (SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS a,
-                                'C' || CAST(o_custkey AS VARCHAR) AS b
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                WHERE l_shipdate >= DATE '1995-03-01'
-                  AND l_shipdate < DATE '1995-04-01'),
-    und AS (SELECT a AS n, b AS m FROM ed UNION SELECT b, a FROM ed),
-    d2 AS (SELECT DISTINCT u1.n, u2.m
-           FROM und u1 JOIN und u2 ON u1.m = u2.n
-           WHERE u1.n <> u2.m),
-    d2o AS (SELECT n, m FROM d2 EXCEPT SELECT n, m FROM und),
-    h1 AS (SELECT n, CAST(count(*) AS BIGINT) AS c1 FROM und GROUP BY 1),
-    h2 AS (SELECT n, CAST(count(*) AS BIGINT) AS c2 FROM d2o GROUP BY 1)
-    SELECT h1.n AS node, h1.c1 + coalesce(h2.c2, 0) AS n_reached,
-           round(h1.c1 + CAST(0.5 AS DOUBLE) * coalesce(h2.c2, 0), 6)
-               AS harmonic
-    FROM h1 LEFT JOIN h2 USING (n)
-    ORDER BY 3 DESC, 1 LIMIT 20
-    """,
-)
-def q305_harmonic_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import harmonic_centrality
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    h = harmonic_centrality(edges, max_hops=2)
-    return h.orderBy(F.desc("harmonic"), F.asc("node")).limit(20)
-
-
-# ---------------------------------------------------------------------------
-# q306 — TextRank keywords (operators/retrieval.textrank_keywords,
-# Mihalcea-Tarau 2004): PageRank over the corpus word-adjacency
-# graph (lowercased ≥4-letter tokens, window 2, undirected
-# unweighted). The oracle unrolls the identical 5-iteration
-# recurrence over the identically-specified edge CTE. Top-20 words.
-# ---------------------------------------------------------------------------
-def _textrank_oracle_sql(iterations: int = 5) -> str:
-    toks = _TOKS
-    edge_ctes = [
-        """t AS (
-        SELECT list_filter(list_transform(%s, x -> lower(x)),
-                           x -> regexp_matches(x, '^[a-z]{4,}$')) AS ft
-        FROM documents)""" % toks,
-        """bp AS (
-        SELECT list_transform(range(1, len(ft)),
-                              i -> [ft[i], ft[i + 1]]) AS ps
-        FROM t WHERE len(ft) >= 2)""",
-        "pr AS (SELECT unnest(ps) AS p FROM bp)",
-        """e0 AS (SELECT p[1] AS a, p[2] AS b FROM pr
-        WHERE p[1] <> p[2])""",
-        """ed AS (SELECT DISTINCT least(a, b) AS a, greatest(a, b) AS b
-        FROM e0)""",
-        """edges AS (SELECT a AS src, b AS dst FROM ed
-        UNION ALL SELECT b, a FROM ed)""",
-        """nodes AS (
-        SELECT src AS node FROM edges UNION SELECT dst FROM edges)""",
-        "n AS (SELECT CAST(count(*) AS DOUBLE) AS nn FROM nodes)",
-        """outdeg AS (
-        SELECT src, CAST(count(*) AS DOUBLE) AS deg FROM edges GROUP BY src)""",
-        """r0 AS (
-        SELECT node, (SELECT CAST(1.0 AS DOUBLE) / nn FROM n) AS r
-        FROM nodes)""",
-    ]
-    for t in range(1, iterations + 1):
-        edge_ctes.append(
-            f"""r{t} AS (
-        SELECT nodes.node,
-               (SELECT (CAST(1.0 AS DOUBLE) - CAST(0.85 AS DOUBLE)) / nn
-                FROM n)
-               + CAST(0.85 AS DOUBLE) * coalesce(s.m, CAST(0 AS DOUBLE)) AS r
-        FROM nodes LEFT JOIN (
-            SELECT e.dst AS node, sum(p.r / o.deg) AS m
-            FROM edges e
-            JOIN r{t - 1} p ON e.src = p.node
-            JOIN outdeg o ON e.src = o.src
-            GROUP BY e.dst) s USING (node))"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(edge_ctes)
-        + f"""
-    SELECT node AS word, round(r, 8) AS rank
-    FROM r{iterations}
-    ORDER BY round(r, 8) DESC, node LIMIT 20"""
-    )
-
-
-@query("q306_textrank", oracle=_textrank_oracle_sql(5))
-def q306_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import textrank_keywords
-
-    d = load_table(spark, sf_dir, "documents").select("text")
-    r = textrank_keywords(d, "text", iterations=5, min_len=4)
-    return r.orderBy(F.desc("rank"), F.asc("word")).limit(20)
-
-
-# ---------------------------------------------------------------------------
 # q307 — winsorized + trimmed robust moments (operators/stats.
 # winsorized_stats): per-language n_chars clamped/trimmed at the
 # exact disc [p5, p95] — quantiles from the distinct-value catalog
@@ -16720,93 +15118,6 @@ def q310_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q311 — HyperBall harmonic centrality (operators/graph.
-# hyperball_harmonic, Boldi-Vigna WSDM'14): q305's exact truncated
-# harmonic swapped for per-node 256-register HLL ball sketches —
-# state bounded at |V|·256 FOREVER, the form that exists at full web
-# scale. md5-derandomized registers ⇒ the oracle replays the
-# IDENTICAL estimates, so even the approximation has a hard value
-# gate. Top-20.
-# ---------------------------------------------------------------------------
-def _hyperball_oracle_sql(max_hops: int = 2) -> str:
-    est = (
-        "SELECT node, round(CASE WHEN CAST({a!r} AS DOUBLE)"
-        " / (CAST(256 - n_used AS DOUBLE) + zu)"
-        " <= CAST(640.0 AS DOUBLE) AND n_used < 256"
-        " THEN CAST(256.0 AS DOUBLE)"
-        " * ln(CAST(256.0 AS DOUBLE) / CAST(256 - n_used AS DOUBLE))"
-        " ELSE CAST({a!r} AS DOUBLE)"
-        " / (CAST(256 - n_used AS DOUBLE) + zu) END, 4) AS e"
-        " FROM (SELECT node, CAST(count(*) AS INTEGER) AS n_used,"
-        " sum(power(CAST(2.0 AS DOUBLE), -mr)) AS zu"
-        " FROM {reg} GROUP BY 1)"
-    )
-    ctes = [
-        """ed AS (SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS a,
-                                 'C' || CAST(o_custkey AS VARCHAR) AS b
-                 FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                 WHERE l_shipdate >= DATE '1995-03-01'
-                   AND l_shipdate < DATE '1995-04-01')""",
-        "und AS (SELECT a AS n, b AS m FROM ed UNION SELECT b, a FROM ed)",
-        "nodes AS (SELECT DISTINCT n AS node FROM und)",
-        "hx0 AS (SELECT node, md5(CAST(node AS VARCHAR)) AS hx FROM nodes)",
-        f"hh AS (SELECT node, {_KMV_FOLD} AS h FROM hx0)",
-        """r0 AS (SELECT node, h % 256 AS j,
-                 CASE WHEN h // 256 = 0 THEN 53
-                      ELSE CAST(round(log2((h // 256) & (-(h // 256))))
-                           AS INTEGER) + 1 END AS mr
-          FROM hh)""",
-        "e0 AS (" + est.format(a=_HLLC, reg="r0") + ")",
-    ]
-    for t in range(1, max_hops + 1):
-        ctes.append(
-            f"""r{t} AS (SELECT node, j, max(mr) AS mr FROM (
-            SELECT u.n AS node, r.j, r.mr
-            FROM und u JOIN r{t - 1} r ON r.node = u.m
-            UNION ALL SELECT node, j, mr FROM r{t - 1}) GROUP BY 1, 2)"""
-        )
-        ctes.append(f"e{t} AS (" + est.format(a=_HLLC, reg=f"r{t}") + ")")
-    inc = " + ".join(
-        f"greatest(e{t}.e - e{t - 1}.e, CAST(0.0 AS DOUBLE)) / {t}.0"
-        for t in range(1, max_hops + 1)
-    )
-    joins = " ".join(
-        f"JOIN e{t} ON e{t}.node = e0.node"
-        for t in range(1, max_hops + 1)
-    )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT e0.node, e{max_hops}.e AS ball_est,
-           round({inc}, 5) AS harmonic_hll
-    FROM e0 {joins}
-    ORDER BY round({inc}, 5) DESC, e0.node LIMIT 20"""
-    )
-
-
-@query("q311_hyperball_harmonic", oracle=_hyperball_oracle_sql(2))
-def q311_hyperball_harmonic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import hyperball_harmonic
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    h = hyperball_harmonic(edges, max_hops=2)
-    return h.orderBy(F.desc("harmonic_hll"), F.asc("node")).limit(20)
-
-
-# ---------------------------------------------------------------------------
 # q312 — source-concentration report (operators/corpus_stats.
 # concentration_report): top-1 share, HHI, entropy, effective source
 # count (exp H), group-level Gini — the mix-governance card. One
@@ -16849,7 +15160,7 @@ def q312_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q23's lang_id on the full text, and lang_id on the first half of
 # the tokens (the "does the prediction survive truncation"
 # consistency panel). Chance-corrected multi-rater agreement that
-# Cohen's kappa (q215) can't express.
+# Cohen's kappa can't express.
 # ---------------------------------------------------------------------------
 def _langid_case_sql(toks: str) -> str:
     def sc(markers: str) -> str:
@@ -18276,82 +16587,6 @@ def q336_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q337 — Luby's maximal independent set (operators/graph.
-# maximal_independent_set, STOC'85): a conflict-free node set over
-# the month-slice fulfilment graph — md5-derandomized priorities
-# make the classic randomized distributed algorithm deterministic,
-# repartition-stable, and exactly SQL-replayable round by round.
-# ---------------------------------------------------------------------------
-def _mis_oracle_sql(rounds: int = 6) -> str:
-    u01 = (
-        "(CAST(('0x' || substring(md5('mis:{r}:' "
-        "|| CAST(node AS VARCHAR)), 1, 12)) AS BIGINT) "
-        "+ CAST(0.5 AS DOUBLE)) / CAST(281474976710656.0 AS DOUBLE)"
-    )
-    ctes = [
-        """ed AS MATERIALIZED (
-            SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS a,
-                            'C' || CAST(o_custkey AS VARCHAR) AS b
-            FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-            WHERE l_shipdate >= DATE '1995-03-01'
-              AND l_shipdate < DATE '1995-04-01')""",
-        "und AS MATERIALIZED (SELECT a AS n, b AS m FROM ed"
-        " UNION SELECT b, a FROM ed)",
-        "u0 AS MATERIALIZED (SELECT DISTINCT n AS node FROM und)",
-    ]
-    for r in range(rounds):
-        pr = u01.format(r=r)
-        ctes.append(
-            f"p{r} AS MATERIALIZED (SELECT node, {pr} AS p FROM u{r})"
-        )
-        ctes.append(
-            f"""mx{r} AS (SELECT e.n AS node, max(pm.p) AS mx
-            FROM und e JOIN p{r} pm ON pm.node = e.m GROUP BY 1)"""
-        )
-        ctes.append(
-            f"""c{r} AS MATERIALIZED (SELECT p{r}.node FROM p{r}
-            LEFT JOIN mx{r} USING (node)
-            WHERE mx IS NULL OR p > mx)"""
-        )
-        ctes.append(
-            f"""x{r} AS (SELECT DISTINCT e.m AS node
-            FROM und e JOIN c{r} c ON c.node = e.n)"""
-        )
-        ctes.append(
-            f"""u{r + 1} AS MATERIALIZED (SELECT node FROM u{r}
-            EXCEPT SELECT node FROM
-            (SELECT node FROM c{r} UNION SELECT node FROM x{r}))"""
-        )
-    sel = "\n    UNION ALL ".join(
-        f"SELECT node, {r} AS round FROM c{r}" for r in range(rounds)
-    )
-    return (
-        "WITH " + ",\n    ".join(ctes)
-        + f"\n    SELECT node, round FROM ({sel}) ORDER BY node"
-    )
-
-
-@query("q337_luby_mis", oracle=_mis_oracle_sql(6))
-def q337_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import maximal_independent_set
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    return maximal_independent_set(edges, max_rounds=6).orderBy("node")
-
-
-# ---------------------------------------------------------------------------
 # q338 — label-noise suspects (composite: operators/classifier
 # nb_train/nb_score + an argmax window): documents whose metadata
 # language the full-corpus NB model confidently contradicts — the
@@ -18748,72 +16983,6 @@ def q342_data_card(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("dup_pair_rate"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# q343 — partition modularity (operators/graph.modularity,
-# Newman-Girvan 2004): price the fulfilment graph's supplier/customer
-# split — bipartite anti-community structure scores NEGATIVE by
-# construction, pinning the metric's sign behavior on a partition
-# whose truth is known. Two label joins + one community aggregate.
-# ---------------------------------------------------------------------------
-@query(
-    "q343_modularity",
-    oracle="""
-    WITH ed AS (SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS s,
-                                'C' || CAST(o_custkey AS VARCHAR) AS c
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                WHERE l_shipdate >= DATE '1995-03-01'
-                  AND l_shipdate < DATE '1995-04-01'),
-    e AS (SELECT DISTINCT least(s, c) AS a, greatest(s, c) AS b
-          FROM ed WHERE s <> c),
-    lab AS (SELECT node, substring(node, 1, 1) AS l
-            FROM (SELECT s AS node FROM ed UNION SELECT c FROM ed)),
-    j AS (SELECT la.l AS la, lb.l AS lb
-          FROM e JOIN lab la ON la.node = e.a
-                 JOIN lab lb ON lb.node = e.b),
-    m AS (SELECT CAST(count(*) AS DOUBLE) AS m FROM j),
-    deg AS (SELECT l, CAST(count(*) AS DOUBLE) AS d
-            FROM (SELECT la AS l FROM j UNION ALL SELECT lb FROM j)
-            GROUP BY 1),
-    intra AS (SELECT la AS l, CAST(count(*) AS DOUBLE) AS e
-              FROM j WHERE la = lb GROUP BY 1),
-    per AS (SELECT deg.l, deg.d, coalesce(intra.e, 0.0) AS e, m.m
-            FROM deg LEFT JOIN intra USING (l), m),
-    nn AS (SELECT CAST(count(DISTINCT node) AS BIGINT) AS n_nodes
-           FROM lab)
-    SELECT nn.n_nodes,
-           CAST(max(per.m) AS BIGINT) AS n_edges,
-           CAST(count(*) AS BIGINT) AS n_communities,
-           round(sum(per.e / per.m
-                     - (per.d / (2.0 * per.m))
-                       * (per.d / (2.0 * per.m))), 6) AS q
-    FROM per, nn GROUP BY nn.n_nodes
-    """,
-)
-def q343_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import modularity
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("label", F.substring("node", 1, 1))
-    )
-    return modularity(edges, nodes)
 
 
 # ---------------------------------------------------------------------------
@@ -19360,180 +17529,6 @@ def q353_jaro_winkler_pairs(
 
 
 # ---------------------------------------------------------------------------
-# q354 — degree assortativity (operators/graph.degree_assortativity,
-# Newman 2002): do high-degree suppliers trade with high-degree
-# customers? Pearson correlation of endpoint degrees over the
-# March-1995 supplier–customer graph; every sum is an exact integer
-# so the coefficient is bit-deterministic in both engines.
-# ---------------------------------------------------------------------------
-@query(
-    "q354_assortativity",
-    oracle="""
-    WITH ed AS (SELECT DISTINCT
-                    'S' || CAST(l_suppkey AS VARCHAR) AS a,
-                    'C' || CAST(o_custkey AS VARCHAR) AS b
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                WHERE l_shipdate >= TIMESTAMP '1995-03-01'
-                  AND l_shipdate < TIMESTAMP '1995-04-01'),
-    bt AS (SELECT a, b FROM ed UNION ALL SELECT b, a FROM ed),
-    deg AS (SELECT a, count(*) AS deg FROM bt GROUP BY 1),
-    j AS (SELECT da.deg AS dx, db.deg AS dy
-          FROM bt JOIN deg da ON bt.a = da.a
-                  JOIN deg db ON bt.b = db.a),
-    agg AS (SELECT count(*) AS n, sum(dx) AS sx, sum(dy) AS sy,
-                   sum(dx * dy) AS sxy, sum(dx * dx) AS sxx,
-                   sum(dy * dy) AS syy
-            FROM j)
-    SELECT CAST(n AS BIGINT) AS n_edges,
-           round(CASE WHEN n * sxx - sx * sx > 0
-                       AND n * syy - sy * sy > 0
-                      THEN (n * sxy - sx * sy)
-                           / sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                           / sqrt(CAST(n * syy - sy * sy AS DOUBLE))
-                 END, 6) AS r
-    FROM agg
-    """,
-)
-def q354_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import degree_assortativity
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-            "src"
-        ),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-            "dst"
-        ),
-    )
-    return degree_assortativity(edges)
-
-
-# ---------------------------------------------------------------------------
-# q355 — strongly connected components (operators/graph.
-# strongly_connected_components, FW-BW-Trim coloring family): a
-# cyclic directed trade graph — C→S "ordered from" edges plus S→C
-# same-nation "local return" edges over March-1995 participants in
-# nations 0–4 — condensed to (scc, size). The oracle computes the
-# ground truth by recursive transitive closure + mutual-reachability
-# grouping; the Spark side runs trim (singleton peeling) + forward
-# min-label coloring + backward pivot marking, all equi-joins with
-# per-round lineage truncation.
-# ---------------------------------------------------------------------------
-@query(
-    "q355_scc",
-    oracle="""
-    WITH RECURSIVE fwd AS (
-        SELECT DISTINCT 'C' || CAST(o_custkey AS VARCHAR) AS s,
-                        'S' || CAST(l_suppkey AS VARCHAR) AS d,
-                        o_custkey AS ck, l_suppkey AS sk
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        WHERE l_shipdate >= TIMESTAMP '1995-03-01'
-          AND l_shipdate < TIMESTAMP '1995-04-01'
-          AND c_nationkey < 5 AND s_nationkey < 5),
-    cs AS (SELECT DISTINCT ck FROM fwd),
-    ss AS (SELECT DISTINCT sk FROM fwd),
-    bwd AS (SELECT DISTINCT
-                'S' || CAST(s_suppkey AS VARCHAR) AS s,
-                'C' || CAST(c_custkey AS VARCHAR) AS d
-            FROM supplier
-            JOIN customer ON s_nationkey = c_nationkey
-            JOIN ss ON s_suppkey = ss.sk
-            JOIN cs ON c_custkey = cs.ck),
-    e AS (SELECT s, d FROM (SELECT s, d FROM fwd
-                            UNION SELECT s, d FROM bwd)
-          WHERE s <> d),
-    nodes AS (SELECT s AS v FROM e UNION SELECT d FROM e),
-    r AS (SELECT s AS a, d AS b FROM e
-          UNION
-          SELECT r.a, e.d FROM r JOIN e ON r.b = e.s),
-    m AS (SELECT r1.a AS v, r1.b AS w
-          FROM r r1 JOIN r r2 ON r1.a = r2.b AND r1.b = r2.a),
-    lab AS (SELECT nodes.v,
-                   least(nodes.v, coalesce(min(m.w), nodes.v)) AS scc
-            FROM nodes LEFT JOIN m ON nodes.v = m.v
-            GROUP BY nodes.v)
-    SELECT scc, CAST(count(*) AS BIGINT) AS size
-    FROM lab GROUP BY 1 ORDER BY 1
-    """,
-)
-def q355_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import (
-        strongly_connected_components,
-    )
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    c = load_table(spark, sf_dir, "customer").where(
-        F.col("c_nationkey") < 5
-    )
-    s = load_table(spark, sf_dir, "supplier").where(
-        F.col("s_nationkey") < 5
-    )
-    fwd = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_suppkey").alias("sk"),
-        )
-        .distinct()
-    )
-    cs = fwd.select("ck").distinct()
-    ss = fwd.select("sk").distinct()
-    bwd = (
-        s.join(F.broadcast(ss), F.col("s_suppkey") == F.col("sk"))
-        .join(
-            c.select("c_custkey", "c_nationkey"),
-            F.col("s_nationkey") == F.col("c_nationkey"),
-        )
-        .join(F.broadcast(cs), F.col("c_custkey") == F.col("ck"))
-        .select(
-            F.concat(
-                F.lit("S"), F.col("s_suppkey").cast("string")
-            ).alias("src"),
-            F.concat(
-                F.lit("C"), F.col("c_custkey").cast("string")
-            ).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.select(
-        F.concat(F.lit("C"), F.col("ck").cast("string")).alias("src"),
-        F.concat(F.lit("S"), F.col("sk").cast("string")).alias("dst"),
-    ).unionAll(bwd)
-    lab = strongly_connected_components(edges)
-    return (
-        lab.groupBy("scc")
-        .agg(F.count("*").cast("long").alias("size"))
-        .orderBy("scc")
-    )
-
-
-# ---------------------------------------------------------------------------
 # q356 — Cochran-Mantel-Haenszel pooled odds ratio (operators/
 # experiments.cmh_odds, MH 1959): priority→failure association
 # controlled for market segment — the Simpson's-paradox-proof
@@ -19784,87 +17779,6 @@ def q359_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return burrows_delta(d, "source", "text", top_k=40)
-
-
-# ---------------------------------------------------------------------------
-# q360 — GNN-style feature propagation (operators/graph.
-# feature_propagation, GraphSAGE/GCN mean layer): two rounds of
-# neighbor-mean smoothing of account balances over the March-1995
-# supplier–customer graph. One join + one aggregate per round — the
-# full-batch message-passing shape.
-# ---------------------------------------------------------------------------
-@query(
-    "q360_feature_propagation",
-    oracle="""
-    WITH ed AS (SELECT DISTINCT
-                    'S' || CAST(l_suppkey AS VARCHAR) AS a,
-                    'C' || CAST(o_custkey AS VARCHAR) AS b
-                FROM lineitem JOIN orders ON l_orderkey = o_orderkey
-                WHERE l_shipdate >= TIMESTAMP '1995-03-01'
-                  AND l_shipdate < TIMESTAMP '1995-04-01'),
-    und AS (SELECT a AS n, b AS nbr FROM ed
-            UNION SELECT b, a FROM ed),
-    deg AS (SELECT n, count(*) AS degree FROM und GROUP BY 1),
-    h0 AS (SELECT 'C' || CAST(c_custkey AS VARCHAR) AS n,
-                  round(c_acctbal * 100.0) AS h
-           FROM customer
-           UNION ALL
-           SELECT 'S' || CAST(s_suppkey AS VARCHAR),
-                  round(s_acctbal * 100.0)
-           FROM supplier),
-    h1 AS (SELECT und.n, avg(h0.h) AS h
-           FROM und JOIN h0 ON und.nbr = h0.n GROUP BY 1),
-    h2 AS (SELECT und.n, avg(h1.h) AS h
-           FROM und JOIN h1 ON und.nbr = h1.n GROUP BY 1)
-    SELECT deg.n AS node, CAST(deg.degree AS BIGINT) AS degree,
-           round(f0.h, 2) AS h0, round(h2.h, 2) AS h_out
-    FROM deg LEFT JOIN h0 f0 ON deg.n = f0.n
-             LEFT JOIN h2 ON deg.n = h2.n
-    """,
-)
-def q360_feature_propagation(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from cccatalog_spark.operators.graph import feature_propagation
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-            "src"
-        ),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-            "dst"
-        ),
-    )
-    # cents: integer-valued features make round 1's neighbor mean
-    # exact (integer-sum / count) in BOTH engines; round-2 association
-    # noise then sits ~1e-10 below the coarse round(2) boundary —
-    # the fix for a measured one-row h_out boundary flip at round(6)
-    c = load_table(spark, sf_dir, "customer").select(
-        F.concat(F.lit("C"), F.col("c_custkey").cast("string")).alias(
-            "node"
-        ),
-        F.round(F.col("c_acctbal") * 100.0).alias("h"),
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        F.concat(F.lit("S"), F.col("s_suppkey").cast("string")).alias(
-            "node"
-        ),
-        F.round(F.col("s_acctbal") * 100.0).alias("h"),
-    )
-    return feature_propagation(
-        edges, c.unionAll(s), "node", "h", rounds=2, round_digits=2
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -20204,107 +18118,6 @@ def q367_path_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q368 — dyad census / reciprocity (operators/graph.dyad_census,
-# Holland-Leinhardt): mutual vs asymmetric node pairs of the cyclic
-# trade graph — the directionality fingerprint beside q354's
-# assortativity. ONE canonical-pair aggregate.
-# ---------------------------------------------------------------------------
-@query(
-    "q368_dyad_census",
-    oracle="""
-    WITH fwd AS (
-        SELECT DISTINCT 'C' || CAST(o_custkey AS VARCHAR) AS s,
-                        'S' || CAST(l_suppkey AS VARCHAR) AS d,
-                        o_custkey AS ck, l_suppkey AS sk
-        FROM lineitem
-        JOIN orders ON l_orderkey = o_orderkey
-        JOIN customer ON o_custkey = c_custkey
-        JOIN supplier ON l_suppkey = s_suppkey
-        WHERE l_shipdate >= TIMESTAMP '1995-03-01'
-          AND l_shipdate < TIMESTAMP '1995-04-01'
-          AND c_nationkey < 5 AND s_nationkey < 5),
-    cs AS (SELECT DISTINCT ck FROM fwd),
-    ss AS (SELECT DISTINCT sk FROM fwd),
-    bwd AS (SELECT DISTINCT
-                'S' || CAST(s_suppkey AS VARCHAR) AS s,
-                'C' || CAST(c_custkey AS VARCHAR) AS d
-            FROM supplier
-            JOIN customer ON s_nationkey = c_nationkey
-            JOIN ss ON s_suppkey = ss.sk
-            JOIN cs ON c_custkey = cs.ck),
-    e AS (SELECT s, d FROM (SELECT s, d FROM fwd
-                            UNION SELECT s, d FROM bwd)
-          WHERE s <> d),
-    dy AS (SELECT least(s, d) AS a, greatest(s, d) AS b,
-                  count(*) AS dirs
-           FROM e GROUP BY 1, 2)
-    SELECT CAST(sum(dirs) AS BIGINT) AS n_edges,
-           CAST(sum(CASE WHEN dirs = 2 THEN 1 ELSE 0 END) AS BIGINT)
-               AS mutual_dyads,
-           CAST(sum(CASE WHEN dirs = 1 THEN 1 ELSE 0 END) AS BIGINT)
-               AS asym_dyads,
-           round(2.0 * sum(CASE WHEN dirs = 2 THEN 1 ELSE 0 END)
-                 / sum(dirs), 6) AS reciprocity
-    FROM dy
-    """,
-)
-def q368_dyad_census(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.graph import dyad_census
-
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .where(
-            (F.col("l_shipdate") >= F.lit("1995-03-01"))
-            & (F.col("l_shipdate") < F.lit("1995-04-01"))
-        )
-        .select("l_orderkey", "l_suppkey")
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    c = load_table(spark, sf_dir, "customer").where(
-        F.col("c_nationkey") < 5
-    )
-    s = load_table(spark, sf_dir, "supplier").where(
-        F.col("s_nationkey") < 5
-    )
-    fwd = (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select(
-            F.col("o_custkey").alias("ck"),
-            F.col("l_suppkey").alias("sk"),
-        )
-        .distinct()
-    )
-    cs = fwd.select("ck").distinct()
-    ss = fwd.select("sk").distinct()
-    bwd = (
-        s.join(F.broadcast(ss), F.col("s_suppkey") == F.col("sk"))
-        .join(
-            c.select("c_custkey", "c_nationkey"),
-            F.col("s_nationkey") == F.col("c_nationkey"),
-        )
-        .join(F.broadcast(cs), F.col("c_custkey") == F.col("ck"))
-        .select(
-            F.concat(
-                F.lit("S"), F.col("s_suppkey").cast("string")
-            ).alias("src"),
-            F.concat(
-                F.lit("C"), F.col("c_custkey").cast("string")
-            ).alias("dst"),
-        )
-        .distinct()
-    )
-    edges = fwd.select(
-        F.concat(F.lit("C"), F.col("ck").cast("string")).alias("src"),
-        F.concat(F.lit("S"), F.col("sk").cast("string")).alias("dst"),
-    ).unionAll(bwd)
-    return dyad_census(edges)
-
-
-# ---------------------------------------------------------------------------
 # q369 — Kruskal-Wallis H (operators/experiments.kruskal_wallis, KW
 # 1952): the k-group nonparametric twin of q345's ANOVA with
 # mid-ranks + tie correction — heavy ties by construction on the
@@ -20602,76 +18415,6 @@ def q373_fd_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q374 — B-cubed clustering scorecard (operators/ml_metrics.bcubed;
-# Bagga & Baldwin 1998, Amigó et al. 2009) over a nearest-seed
-# assignment: the acceptance gate for a dedup/entity-resolution run
-# against gold labels. The (cluster, gold) contingency makes the
-# per-item metric one group-count + two window sums; the assignment
-# is a k-row broadcast with struct-min argmin (l2_distance is
-# bit-identical to DuckDB list_distance, so the argmin is exact).
-# ---------------------------------------------------------------------------
-@query(
-    "q374_bcubed_eval",
-    oracle="""
-    WITH seeds AS (SELECT vec_id AS seed_id, embedding AS sv
-                   FROM embeddings WHERE vec_id < 8),
-    scored AS (SELECT e.vec_id, e.label, s.seed_id,
-                      list_distance(e.embedding::DOUBLE[],
-                                    s.sv::DOUBLE[]) AS d
-               FROM embeddings e, seeds s),
-    best AS (SELECT vec_id, label, seed_id FROM (
-                 SELECT *, row_number() OVER (PARTITION BY vec_id
-                            ORDER BY d ASC, seed_id ASC) AS rn
-                 FROM scored) WHERE rn = 1),
-    cell AS (SELECT seed_id AS cl, label AS g, count(*) AS m
-             FROM best GROUP BY 1, 2),
-    x AS (SELECT *, sum(m) OVER (PARTITION BY cl) AS cs,
-                 sum(m) OVER (PARTITION BY g) AS gs
-          FROM cell),
-    a AS (SELECT sum(m) AS n, count(DISTINCT cl) AS n_clusters,
-                 count(DISTINCT g) AS n_classes,
-                 sum(CAST(m AS DOUBLE) * m / cs) AS sp,
-                 sum(CAST(m AS DOUBLE) * m / gs) AS sr
-          FROM x)
-    SELECT CAST(n AS BIGINT) AS n,
-           CAST(n_clusters AS BIGINT) AS n_clusters,
-           CAST(n_classes AS BIGINT) AS n_classes,
-           round(sp / n, 6) AS bcubed_precision,
-           round(sr / n, 6) AS bcubed_recall,
-           round(2 * (sp / n) * (sr / n) / (sp / n + sr / n), 6)
-               AS bcubed_f1
-    FROM a
-    """,
-)
-def q374_bcubed_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import bcubed
-    from cccatalog_spark.operators.similarity import l2_distance
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    seeds = emb.where(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("seed_id"),
-        F.col("embedding").alias("_sv"),
-    )
-    best = (
-        emb.crossJoin(F.broadcast(seeds))
-        .select(
-            "vec_id",
-            "label",
-            F.struct(
-                l2_distance(F.col("embedding"), F.col("_sv")).alias(
-                    "d"
-                ),
-                F.col("seed_id"),
-            ).alias("_cand"),
-        )
-        .groupBy("vec_id", "label")
-        .agg(F.min("_cand").alias("_best"))
-        .select("vec_id", "label", F.col("_best.seed_id").alias("cluster"))
-    )
-    return bcubed(best, "cluster", "label")
-
-
-# ---------------------------------------------------------------------------
 # q375 — Soundex phonetic blocking (operators/phonetic.soundex_code /
 # soundex_blocked_pairs): linkage candidates over the distinct
 # word catalog of part names — words that sound alike, verified
@@ -20914,126 +18657,6 @@ def q379_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q380 — risk-coverage / AURC selective-prediction scorecard
-# (operators/ml_metrics.risk_coverage; Geifman & El-Yaniv 2017 +
-# E-AURC): the acceptance gate for "auto-accept the model's top X%".
-# Confidence is the q163 md5-blended score (reproducible in SQL);
-# the running risk is one ordered window over the scored EVAL
-# catalog (the q163 sanction class), optimal AURC in closed form.
-# ---------------------------------------------------------------------------
-@query(
-    "q380_risk_coverage",
-    oracle=f"""
-    WITH p AS (SELECT vec_id, {_SCORE_SQL} AS conf,
-                      (({_SCORE_SQL} >= 0.5) = (label % 2 = 1))
-                          AS correct
-               FROM embeddings),
-    r AS (SELECT conf, correct,
-                 row_number() OVER w AS i,
-                 sum(CASE WHEN correct THEN 0 ELSE 1 END) OVER
-                     (w ROWS BETWEEN UNBOUNDED PRECEDING
-                      AND CURRENT ROW) AS ce,
-                 count(*) OVER () AS nn
-          FROM p
-          WINDOW w AS (ORDER BY conf DESC, vec_id ASC)),
-    a AS (SELECT count(*) AS n,
-                 sum(CASE WHEN correct THEN 0 ELSE 1 END) AS ne,
-                 avg(ce / CAST(i AS DOUBLE)) AS aurc,
-                 min(CASE WHEN i >= ceil(CAST(0.5 AS DOUBLE) * nn)
-                          THEN ROW(i, ce / CAST(i AS DOUBLE)) END) AS r50,
-                 min(CASE WHEN i >= ceil(CAST(0.8 AS DOUBLE) * nn)
-                          THEN ROW(i, ce / CAST(i AS DOUBLE)) END) AS r80,
-                 min(CASE WHEN i >= nn
-                          THEN ROW(i, ce / CAST(i AS DOUBLE)) END) AS r100
-          FROM r),
-    o AS (SELECT avg(greatest(CAST(0.0 AS DOUBLE),
-                     (i - (nn - (SELECT ne FROM a)))
-                     / CAST(i AS DOUBLE))) AS opt
-          FROM r)
-    SELECT CAST(n AS BIGINT) AS n, CAST(ne AS BIGINT) AS n_errors,
-           round(aurc, 6) AS aurc,
-           round(aurc - o.opt, 6) AS e_aurc,
-           round(r50[2], 6) AS risk_at_50,
-           round(r80[2], 6) AS risk_at_80,
-           round(r100[2], 6) AS risk_at_100
-    FROM a, o
-    """,
-)
-def q380_risk_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ml_metrics import risk_coverage
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    scored = emb.select(
-        "vec_id",
-        _score_col().alias("conf"),
-        (
-            (_score_col() >= 0.5) == (F.col("label") % 2 == 1)
-        ).alias("correct"),
-    )
-    return risk_coverage(scored, "conf", "correct", "vec_id")
-
-
-# ---------------------------------------------------------------------------
-# q381 — sampled harmonic centrality (operators/graph.
-# harmonic_centrality; Boldi-Vigna 2014, Eppstein-Wang pivot
-# sampling): Σ 1/d over a deterministic seed set within a hop budget,
-# on the supplier-customer fulfilment graph (q270's edges). k BFS
-# waves share one frontier-only frame keyed by (seed, node).
-# ---------------------------------------------------------------------------
-@query(
-    "q381_sampled_harmonic",
-    oracle="""
-    WITH RECURSIVE ed AS (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
-    und AS (SELECT src AS n, dst AS nbr FROM ed
-            UNION SELECT dst, src FROM ed),
-    seeds(seed) AS (VALUES ('S1'), ('S5'), ('S9'), ('S13')),
-    reach(seed, node, d) AS (
-        SELECT seed, seed, 0 FROM seeds
-        UNION
-        SELECT reach.seed, und.nbr, reach.d + 1
-        FROM reach JOIN und ON und.n = reach.node
-        WHERE reach.d < 3),
-    md AS (SELECT seed, node, min(d) AS d FROM reach GROUP BY 1, 2)
-    SELECT node,
-           CAST(count(*) FILTER (d > 0) AS BIGINT) AS n_reached,
-           round(sum(CASE WHEN d > 0 THEN 1.0 / d END), 6) AS harmonic
-    FROM md GROUP BY 1 HAVING count(*) FILTER (d > 0) > 0
-    """,
-)
-def q381_sampled_harmonic(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from cccatalog_spark.operators.graph import (
-        sampled_harmonic_centrality,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_custkey"
-    )
-    edges = (
-        li.join(o, li["l_orderkey"] == o["o_orderkey"])
-        .select(
-            F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias(
-                "src"
-            ),
-            F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias(
-                "dst"
-            ),
-        )
-        .distinct()
-    )
-    return sampled_harmonic_centrality(
-        edges, ["S1", "S5", "S9", "S13"], max_hops=3
-    )
-
-
-# ---------------------------------------------------------------------------
 # q382 — Simpson's-paradox audit (operators/experiments.
 # simpson_paradox_audit): per-market-segment urgent-vs-slow order
 # failure rates next to the pooled rate, flagged where the stratum
@@ -21141,7 +18764,7 @@ def q383_alignment_uniformity(
 # Holte 1993): best single info-gain threshold on document length for
 # "is this English" — the feature-triage weak learner. The corpus
 # collapses to the distinct-value catalog in ONE aggregate; candidate
-# splits are cumulative sums over that catalog (q256 contract);
+# splits are cumulative sums over that catalog;
 # argmax on the ROUNDED gain with a threshold tiebreak.
 # ---------------------------------------------------------------------------
 @query(
@@ -21395,9 +19018,9 @@ def q388_banned_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q389 — ARI / NMI clustering agreement (operators/cluster_eval.
 # clustering_agreement; Hubert-Arabie 1985, Strehl-Ghosh 2002):
-# q374's nearest-seed assignment validated against gold labels with
+# a nearest-seed assignment validated against gold labels with
 # the chance-corrected pair index and normalized mutual information —
-# the "did the clustering actually move" scorecard beside B-cubed.
+# the "did the clustering actually move" scorecard.
 # ONE contingency groupBy + window sums over the cell catalog; pair
 # counts exact integers, divisions last.
 # ---------------------------------------------------------------------------
@@ -21888,77 +19511,6 @@ def q397_linear_cka(spark: SparkSession, sf_dir: str) -> DataFrame:
     return linear_cka(emb, "x", "y", 64, 16).select("n", "cka")
 
 
-def _eigencent_oracle_sql(iterations: int = 6) -> str:
-    """Unrolled shifted-power-iteration oracle (CTE-per-round like
-    _pagerank_oracle_sql).  Every round CTE is MATERIALIZED: the
-    oracle engine inlines CTEs by default, and each round references
-    its predecessor twice (self + neighbor-sum), so un-materialized
-    unrolling expands the base scan 4^t-fold and exhausts file
-    handles.  The L1 normalizer is a windowed sum so each round body
-    is referenced exactly once."""
-    ctes = [
-        """e0 AS MATERIALIZED (
-        SELECT DISTINCT 'S' || CAST(l_suppkey AS VARCHAR) AS src,
-                        'C' || CAST(o_custkey AS VARCHAR) AS dst
-        FROM lineitem JOIN orders ON l_orderkey = o_orderkey)""",
-        """edges AS MATERIALIZED (
-        SELECT src, dst FROM e0 UNION SELECT dst, src FROM e0)""",
-        "nodes AS MATERIALIZED (SELECT DISTINCT src AS node FROM edges)",
-        """r0 AS MATERIALIZED (
-        SELECT node, CAST(1.0 AS DOUBLE) / (count(*) OVER ()) AS r
-        FROM nodes)""",
-    ]
-    for t in range(1, iterations + 1):
-        ctes.append(
-            f"""r{t} AS MATERIALIZED (
-        SELECT node, y / sum(y) OVER () AS r FROM (
-            SELECT p.node, p.r + coalesce(s.m, CAST(0.0 AS DOUBLE)) AS y
-            FROM r{t - 1} p LEFT JOIN (
-                SELECT e.dst AS node, sum(p2.r) AS m
-                FROM edges e JOIN r{t - 1} p2 ON e.src = p2.node
-                GROUP BY e.dst) s ON s.node = p.node))"""
-        )
-    return (
-        "WITH "
-        + ",\n    ".join(ctes)
-        + f"""
-    SELECT node, round(r, 8) AS rank
-    FROM r{iterations}
-    ORDER BY round(r, 8) DESC, node LIMIT 20"""
-    )
-
-
-# ---------------------------------------------------------------------------
-# q398 — eigenvector centrality (operators/graph.
-# eigenvector_centrality): shifted power iteration x ← (x + A·x)/‖·‖₁
-# over the symmetrized supplier-customer co-order graph — the
-# influence ranking beside q97's PageRank (no damping, no out-degree
-# normalization: hubs weigh by neighbor SCORE, not share). 6 fixed
-# rounds, L1 normalizer a 1-row broadcast, lineage truncated per
-# round.
-# ---------------------------------------------------------------------------
-@query("q398_eigenvector_centrality", oracle=_eigencent_oracle_sql(6))
-def q398_eigenvector_centrality(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from cccatalog_spark.operators.graph import eigenvector_centrality
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    edges = li.join(o, F.col("l_orderkey") == F.col("o_orderkey")).select(
-        F.concat(F.lit("S"), F.col("l_suppkey").cast("string")).alias("src"),
-        F.concat(F.lit("C"), F.col("o_custkey").cast("string")).alias("dst"),
-    )
-    r = eigenvector_centrality(edges, iterations=6)
-    return (
-        r.select("node", F.round("r", 8).alias("rank"))
-        .orderBy(F.desc("rank"), F.asc("node"))
-        .limit(20)
-    )
-
-
 # ---------------------------------------------------------------------------
 # q399 — Page-Hinkley drift detection (operators/temporal.
 # page_hinkley): per-user mean-shift monitor over purchase values —
@@ -22372,72 +19924,6 @@ def q407_borda_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         for c in ("s1", "s2", "s3")
     ]
     return borda_fuse(rankings, "doc_id", list_len=50, k=20)
-
-
-# ---------------------------------------------------------------------------
-# q408 — Kendall's W concordance (operators/preferences.kendalls_w,
-# tie-corrected): do the three quality rankers of q407 agree at all?
-# The multi-ranker generalization of q309's pairwise Kendall tau.
-# Per-ranker rank windows (partitioned), two catalog aggregates.
-# ---------------------------------------------------------------------------
-@query(
-    "q408_kendalls_w",
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, CAST(n_chars AS DOUBLE) AS s1,
-               CAST(len(regexp_extract_all(text, {_BPE_RE_SQL})) AS DOUBLE)
-                   AS s2,
-               CASE WHEN len({_TOKS}) > 0
-                    THEN len(list_distinct({_TOKS})) * 1.0 / len({_TOKS})
-                    ELSE 0.0 END AS s3
-        FROM documents),
-    melt AS (SELECT doc_id, 'r1' AS rk, s1 AS v FROM base
-             UNION ALL SELECT doc_id, 'r2', s2 FROM base
-             UNION ALL SELECT doc_id, 'r3', s3 FROM base),
-    rk AS (SELECT doc_id, rk,
-                  rank() OVER (PARTITION BY rk ORDER BY v)
-                  + (count(*) OVER (PARTITION BY rk, v) - 1) / 2.0 AS r,
-                  v
-           FROM melt),
-    pi AS (SELECT doc_id, sum(r) AS ri, count(*) AS m FROM rk GROUP BY 1),
-    tie AS (SELECT coalesce(sum(pow(t, 3) - t), 0.0) AS tsum FROM (
-                SELECT CAST(count(*) AS DOUBLE) AS t
-                FROM rk GROUP BY rk.rk, rk.v)),
-    agg AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                   CAST(max(m) AS DOUBLE) AS m,
-                   sum(ri * ri) AS r2
-            FROM pi)
-    SELECT CAST(n AS BIGINT) AS n_items, CAST(m AS BIGINT) AS m_rankers,
-           round(CASE WHEN m * m * (pow(n, 3) - n) - m * tsum > 0
-                 THEN (12.0 * r2 - 3.0 * m * m * n * pow(n + 1, 2))
-                      / (m * m * (pow(n, 3) - n) - m * tsum) END, 6) AS w
-    FROM agg, tie
-    """,
-)
-def q408_kendalls_w(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.functions.text import bpe_token_count, tokens
-    from cccatalog_spark.operators.preferences import kendalls_w
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    base = d.select(
-        "doc_id",
-        F.col("n_chars").cast("double").alias("s1"),
-        bpe_token_count(F.col("text")).cast("double").alias("s2"),
-        F.when(
-            F.size(toks) > 0,
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("s3"),
-    )
-    melted = base.select(
-        "doc_id",
-        F.expr(
-            "stack(3, 'r1', s1, 'r2', s2, 'r3', s3) as (rk, v)"
-        ),
-    )
-    return kendalls_w(melted, "doc_id", "rk", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -22936,7 +20422,7 @@ def q417_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _hitting_time_oracle_sql(horizon: int = 8) -> str:
     """Unrolled truncated-Neumann hitting-time oracle (materialized
-    CTE per round, the pagerank-oracle discipline)."""
+    CTE per round)."""
     ctes = [
         """tr AS MATERIALIZED (
         SELECT s, s2, CAST(count(*) AS DOUBLE) AS c FROM (
@@ -22999,7 +20485,7 @@ def q418_hitting_time(spark: SparkSession, sf_dir: str) -> DataFrame:
 # langid_profile.rank_profile_langid_eval): train top-20 trigram rank
 # profiles on even doc_ids, classify odd ones by out-of-place
 # distance, report per-lang accuracy — the trainable lang-ID eval
-# beside q23's fixed heuristic and q215's annotator kappa. Profiles
+# beside q23's fixed heuristic. Profiles
 # are catalog windows; scoring is ≤(k·|langs|) rows per test doc.
 # ---------------------------------------------------------------------------
 @query(

@@ -46,6 +46,15 @@ SEMANTIC_CONFS = {
 }
 
 
+def default_driver_memory() -> str:
+    """Half the host's physical memory, capped at 48g: the heap
+    ``get_spark`` asks for when ``SPARK_GRAFT_DRIVER_MEM`` is unset. A
+    fixed 48g exceeds a small host's RAM, and the kernel's OOM killer
+    then takes the JVM down once the heap grows into it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys // 2 // 2**20)}m"
+
+
 def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> SparkSession:
     cpus = cpus or DEFAULT_CPUS
     builder = (
@@ -56,7 +65,10 @@ def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> Spa
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # reliable checkpoint() files (operators/dedup._truncate_lineage

@@ -81,9 +81,18 @@ def ensure_session_confs(spark: SparkSession) -> None:
 # file. Keyed by applicationId so a new session can never false-hit;
 # every action on the returned frame still scans the parquet input.
 _TABLE_DFS: dict[tuple[str, str], DataFrame] = {}
+_TABLE_MEMO_CAP = 512
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``<sf_dir>/<name>.parquet`` as a DataFrame, memoized per app.
+
+    Assumes the input is immutable for the life of the application:
+    the memo pins the file listing and schema resolved at the first
+    load, so a path overwritten or appended later in the same app is
+    served stale (or fails on a missing file). Write new data to a new
+    path instead.
+    """
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     memo_key = (spark.sparkContext.applicationId, path)
@@ -104,12 +113,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             )
     if name in _CPU_HEAVY_TABLES:
         df = fan_out(df)
-    if len(_TABLE_DFS) > 512:
+    if len(_TABLE_DFS) >= _TABLE_MEMO_CAP:
         # stale sessions' plans are useless (appId never recurs) —
-        # keep only the live app's entries
+        # drop them first, then the live app's oldest loads
         app = memo_key[0]
         for k in [k for k in _TABLE_DFS if k[0] != app]:
             del _TABLE_DFS[k]
+        while len(_TABLE_DFS) >= _TABLE_MEMO_CAP:
+            del _TABLE_DFS[next(iter(_TABLE_DFS))]
     _TABLE_DFS[memo_key] = df
     return df
 

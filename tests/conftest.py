@@ -24,10 +24,9 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     from cccatalog_spark.session import get_spark
 
-    # get_spark's 48g default heap is larger than a small host's RAM:
-    # G1 keeps growing the heap instead of collecting, and the kernel's
-    # OOM killer takes the JVM down partway through the suite. sf0.001
-    # fits easily in a few GB.
+    # sf0.001 fits easily in a few GB; a heap near get_spark's default
+    # (half the host's RAM) lets G1 keep growing instead of collecting,
+    # leaving little room for the Python workers beside it.
     os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "4g")
     spark = get_spark("cccatalog-tests", cpus=8)
     yield spark

@@ -1,5 +1,4 @@
-"""DBSCAN (operators/density.py) and multi-source BFS
-(operators/graph.multi_source_bfs)."""
+"""DBSCAN (operators/density.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ import pytest
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
 
 from cccatalog_spark.operators.density import dbscan_2d
-from cccatalog_spark.operators.graph import multi_source_bfs
 
 
 def test_dbscan_two_blobs_and_noise(spark):
@@ -50,64 +48,4 @@ def test_dbscan_border_attaches_to_core_cluster(spark):
     assert out[4]["n_nbrs"] == 1
 
 
-def test_multi_source_bfs_layers(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("x", "y")],
-        "src string, dst string",
-    )
-    out = {
-        r["node"]: r["dist"]
-        for r in multi_source_bfs(edges, ["a", "x"], max_hops=2).collect()
-    }
-    assert out == {"a": 0, "x": 0, "b": 1, "y": 1, "c": 2}
     # d is 3 hops away -> absent at max_hops=2
-
-
-def test_multi_source_bfs_undirected_and_min(spark):
-    edges = spark.createDataFrame(
-        [("hub", "a"), ("b", "hub")], "src string, dst string"
-    )
-    out = {
-        r["node"]: r["dist"]
-        for r in multi_source_bfs(edges, ["a"], max_hops=3).collect()
-    }
-    # edges traverse both directions; hub reached at 1, b at 2
-    assert out == {"a": 0, "hub": 1, "b": 2}
-
-
-def test_multi_source_bfs_frontier_only_bound(spark):
-    # Line graph a-b-c-d-e seeded at 'a': the frontier each round is
-    # EXACTLY one node, and the probe pins that round r joins only
-    # |frontier_r| rows against the edge list — not the accumulated
-    # reached set (the canonical BFS work bound the verdict asked to
-    # pin). An accumulated-dist join would show 1, 2, 3, 4 here.
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")],
-        "src string, dst string",
-    )
-    probe: list[int] = []
-    out = {
-        r["node"]: r["dist"]
-        for r in multi_source_bfs(
-            edges, ["a"], max_hops=4, _frontier_probe=probe
-        ).collect()
-    }
-    assert out == {"a": 0, "b": 1, "c": 2, "d": 3, "e": 4}
-    assert probe == [1, 1, 1, 1]
-
-
-def test_multi_source_bfs_frontier_drains(spark):
-    # Once every reachable node is settled the frontier is empty and
-    # later rounds join zero rows — extra hops cost (near) nothing.
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c")], "src string, dst string"
-    )
-    probe: list[int] = []
-    out = {
-        r["node"]: r["dist"]
-        for r in multi_source_bfs(
-            edges, ["a"], max_hops=4, _frontier_probe=probe
-        ).collect()
-    }
-    assert out == {"a": 0, "b": 1, "c": 1}
-    assert probe == [1, 2, 0, 0]

@@ -1,10 +1,14 @@
 """The driver's correctness gate reads only the first 50 ``queries()``
 entries in insertion order.  Pin the window so a refactor can't silently
-push a composite operator query out of the hard driver signal."""
+push a catalog query out of the hard driver signal."""
 
 from __future__ import annotations
 
+import os
+import re
+
 from cccatalog_spark.plans.queries import (
+    CATALOG_QUERIES,
     DRIVER_WINDOW,
     all_oracles,
     all_queries,
@@ -16,6 +20,15 @@ def test_window_is_exactly_fifty_known_queries():
     assert len(DRIVER_WINDOW) == 50
     assert len(set(DRIVER_WINDOW)) == 50
     assert list(qs)[:50] == DRIVER_WINDOW
+
+
+def test_catalog_queries_lead_and_match_readme():
+    readme = os.path.join(os.path.dirname(os.path.dirname(__file__)), "README.md")
+    surface = open(readme).read().split("## Product surface", 1)[1]
+    surface = surface.split("\n## ", 1)[0]
+    named = list(dict.fromkeys(re.findall(r"\bq\d+_\w+", surface)))
+    assert named == CATALOG_QUERIES
+    assert list(all_queries())[: len(CATALOG_QUERIES)] == CATALOG_QUERIES
 
 
 def test_every_window_query_is_oracle_paired():
@@ -34,9 +47,9 @@ def test_oracles_follow_query_order():
 def test_full_inventory_counts():
     qs = all_queries()
     oracles = all_oracles()
-    # 423 = the frozen 422 + q423 (the round-7 STAGED CLIP retrieval
-    # leg, promoted per the round-7 verdict with a driver-window seat)
-    assert len(qs) == 423
+    # 383 = 423 less the 40 queries of the removed graph, ml_metrics
+    # and preferences families (q306 TextRank among them)
+    assert len(qs) == 383
     # every query is oracle-paired (q47/q50 gained literal-plane /
     # deterministic-quantizer oracles in round 3)
     assert sorted(set(qs) - set(oracles)) == []

@@ -1,70 +1,8 @@
-"""harmonic_centrality (operators/graph.py), textrank_keywords
-(operators/retrieval.py), winsorized_stats (operators/stats.py)."""
+"""winsorized_stats (operators/stats.py)."""
 
 from __future__ import annotations
 
-from cccatalog_spark.operators.graph import harmonic_centrality
-from cccatalog_spark.operators.retrieval import textrank_keywords
 from cccatalog_spark.operators.stats import winsorized_stats
-
-
-def test_harmonic_path_graph(spark):
-    # path a-b-c-d, h=2:
-    # a: b@1, c@2          -> 1.5 ; b: a@1, c@1, d@2 -> 2.5
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
-    )
-    out = {r["node"]: r for r in harmonic_centrality(edges, max_hops=2).collect()}
-    assert out["a"]["harmonic"] == 1.5 and out["a"]["n_reached"] == 2
-    assert out["b"]["harmonic"] == 2.5 and out["b"]["n_reached"] == 3
-    assert out["d"]["harmonic"] == 1.5
-
-
-def test_harmonic_disconnected_and_h1(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("x", "y")], "src string, dst string"
-    )
-    out = {r["node"]: r for r in harmonic_centrality(edges, max_hops=3).collect()}
-    # components never see each other; h=3 changes nothing on a pair
-    assert out["a"]["harmonic"] == 1.0
-    assert out["x"]["n_reached"] == 1
-
-
-def test_harmonic_triangle_no_double_count(spark):
-    # triangle: every node reaches the other two at dist 1 only
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], "src string, dst string"
-    )
-    out = harmonic_centrality(edges, max_hops=2).collect()
-    assert all(r["harmonic"] == 2.0 and r["n_reached"] == 2 for r in out)
-
-
-def test_textrank_hub_word_wins(spark):
-    # "data" is adjacent to 4 distinct words; every other word only
-    # ever neighbors "data"
-    docs = spark.createDataFrame(
-        [
-            ("data quality",),
-            ("data pipeline",),
-            ("data matters",),
-            ("data scales",),
-        ],
-        "text string",
-    )
-    out = textrank_keywords(docs, "text", iterations=5).collect()
-    ranks = {r["word"]: r["rank"] for r in out}
-    top = max(ranks, key=ranks.get)
-    assert top == "data"
-    # short tokens filtered out entirely
-    assert all(len(w) >= 4 for w in ranks)
-
-
-def test_textrank_short_and_nonalpha_filtered(spark):
-    docs = spark.createDataFrame(
-        [("a b c 123 x9y zz",), ("lonely",)], "text string"
-    )
-    # no surviving adjacency pairs -> empty graph
-    assert textrank_keywords(docs, "text").count() == 0
 
 
 def test_winsorized_stats_hand_computed(spark):

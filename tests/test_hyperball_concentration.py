@@ -1,47 +1,10 @@
-"""hyperball_harmonic (operators/graph.py) and concentration_report
-(operators/corpus_stats.py)."""
+"""concentration_report (operators/corpus_stats.py)."""
 
 from __future__ import annotations
 
 import math
 
 from cccatalog_spark.operators.corpus_stats import concentration_report
-from cccatalog_spark.operators.graph import (
-    harmonic_centrality,
-    hyperball_harmonic,
-)
-
-
-def test_hyperball_tracks_exact_on_small_graph(spark):
-    # star: hub h + 6 leaves. Exact truncated harmonic at h=2:
-    # hub = 6; leaf = 1 + 5*(1/2) = 3.5. At tiny cardinalities the
-    # HLL linear-counting branch is near-exact, so the sketch ranking
-    # must match the exact one.
-    edges = spark.createDataFrame(
-        [("h", f"l{i}") for i in range(6)], "src string, dst string"
-    )
-    hb = {r["node"]: r for r in hyperball_harmonic(edges, max_hops=2).collect()}
-    ex = {r["node"]: r for r in harmonic_centrality(edges, max_hops=2).collect()}
-    assert set(hb) == set(ex)
-    top_hb = max(hb.values(), key=lambda r: r["harmonic_hll"])["node"]
-    assert top_hb == "h"
-    # sketch estimate of the hub's 2-ball ~ 7 nodes (itself + 6)
-    assert abs(hb["h"]["ball_est"] - 7.0) < 1.0
-    # leaves all get the same sketch value by symmetry of ball SIZES
-    leaf_vals = {hb[f"l{i}"]["ball_est"] for i in range(6)}
-    assert all(abs(v - 7.0) < 1.0 for v in leaf_vals)
-
-
-def test_hyperball_monotone_nonnegative(spark):
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d"), ("d", "e")],
-        "src string, dst string",
-    )
-    out = hyperball_harmonic(edges, max_hops=3).collect()
-    assert all(r["harmonic_hll"] >= 0.0 for r in out)
-    # middle of the path dominates the ends
-    d = {r["node"]: r["harmonic_hll"] for r in out}
-    assert d["c"] >= d["a"] and d["c"] >= d["e"]
 
 
 def test_concentration_uniform_mix(spark):

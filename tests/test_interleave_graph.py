@@ -1,13 +1,10 @@
 """Deterministic corpus interleave (operators/sampling.
-interleave_shuffle) and exact triangle counting (operators/graph.
-triangle_count) against brute-force models."""
+interleave_shuffle) against brute-force models."""
 
 from __future__ import annotations
 
 import hashlib
-from itertools import combinations
 
-from cccatalog_spark.operators.graph import triangle_count
 from cccatalog_spark.operators.sampling import interleave_shuffle
 
 
@@ -62,67 +59,3 @@ def test_interleave_unbalanced_sources_keep_order_with_gaps(spark):
     assert a_slots == [1, 3, 5]   # rank(a)=1, stride 2
     assert b_slots[0] in (2, 4, 6)  # single b row somewhere on stride 2
     assert len({r["slot"] for r in out.values()}) == 4  # all distinct
-
-
-def _edges(spark, pairs):
-    return spark.createDataFrame(
-        [(a, b) for a, b in pairs], "src string, dst string"
-    )
-
-
-def test_triangle_count_known_graphs(spark):
-    # K4 on a,b,c,d: 4 triangles, each node in exactly 3
-    k4 = list(combinations("abcd", 2))
-    got = {r["node"]: r["n_triangles"]
-           for r in triangle_count(_edges(spark, k4)).collect()}
-    assert got == {"a": 3, "b": 3, "c": 3, "d": 3}
-
-    # square w-x-y-z without diagonals: zero triangles -> empty result
-    square = [("w", "x"), ("x", "y"), ("w", "z"), ("y", "z")]
-    assert triangle_count(_edges(spark, square)).count() == 0
-
-
-def test_triangle_count_matches_brute_force(spark):
-    import random
-
-    rng = random.Random(3)
-    nodes = [f"n{i:02d}" for i in range(12)]
-    pairs = sorted(
-        {tuple(sorted(rng.sample(nodes, 2))) for _ in range(40)}
-    )
-    want = {}
-    es = set(pairs)
-    for a, b, c in combinations(nodes, 3):
-        if (a, b) in es and (b, c) in es and (a, c) in es:
-            for v in (a, b, c):
-                want[v] = want.get(v, 0) + 1
-    got = {r["node"]: r["n_triangles"]
-           for r in triangle_count(_edges(spark, pairs)).collect()}
-    assert got == want
-
-
-def test_hits_matches_numpy_power_iteration(spark):
-    import numpy as np
-
-    from cccatalog_spark.operators.graph import hits
-
-    edges = [("a", "b"), ("a", "c"), ("b", "c"), ("d", "c"), ("c", "e")]
-    nodes = sorted({x for e in edges for x in e})
-    idx = {n: i for i, n in enumerate(nodes)}
-    A = np.zeros((len(nodes), len(nodes)))
-    for s, d in edges:
-        A[idx[s], idx[d]] = 1.0
-    h = np.ones(len(nodes))
-    for _ in range(3):
-        a = A.T @ h
-        a = a / a.sum()
-        h = A @ a
-        h = h / h.sum()
-    df = spark.createDataFrame(edges, "src string, dst string")
-    got = {r["node"]: (r["hub"], r["authority"]) for r in hits(df, iterations=3).collect()}
-    for n in nodes:
-        assert abs(got[n][0] - h[idx[n]]) < 1e-9, n
-        assert abs(got[n][1] - a[idx[n]]) < 1e-9, n
-    # sanity: c is the dominant authority, a the dominant hub
-    assert max(nodes, key=lambda n: got[n][1]) == "c"
-    assert max(nodes, key=lambda n: got[n][0]) == "a"

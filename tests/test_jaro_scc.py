@@ -1,5 +1,4 @@
-"""Round-6: Jaro-Winkler parity + blocked pairs; SCC correctness on
-hand graphs; degree assortativity closed forms."""
+"""Round-6: Jaro-Winkler parity + blocked pairs."""
 
 from __future__ import annotations
 
@@ -82,105 +81,6 @@ def test_jw_pairs_blocked(spark):
 # --------------------------------------------------------------------------
 
 
-def _scc_sets(spark, edges):
-    from cccatalog_spark.operators.graph import (
-        strongly_connected_components,
-    )
-
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    rows = strongly_connected_components(df).collect()
-    comp: dict = {}
-    for r in rows:
-        comp.setdefault(r["scc"], set()).add(r["node"])
-    return comp
-
-
-def test_scc_two_cycles_and_bridge(spark):
-    # cycle {a,b,c}, cycle {x,y}, bridge c->x (one direction only)
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "a"),
-        ("x", "y"), ("y", "x"),
-        ("c", "x"),
-    ]
-    comp = _scc_sets(spark, edges)
-    assert comp["a"] == {"a", "b", "c"}
-    assert comp["x"] == {"x", "y"}
-    assert set(comp) == {"a", "x"}
-
-
-def test_scc_dag_all_singletons(spark):
-    # pure chain: trim must resolve everything (no coloring rounds)
-    edges = [("1", "2"), ("2", "3"), ("3", "4")]
-    comp = _scc_sets(spark, edges)
-    assert all(v == {k} for k, v in comp.items())
-    assert set(comp) == {"1", "2", "3", "4"}
-
-
-def test_scc_nested_structure(spark):
-    # big cycle with an appendage chain into a small cycle
-    edges = [
-        ("p", "q"), ("q", "r"), ("r", "s"), ("s", "p"),  # 4-cycle
-        ("s", "t"), ("t", "u"),                          # chain out
-        ("u", "v"), ("v", "u"),                          # 2-cycle
-    ]
-    comp = _scc_sets(spark, edges)
-    assert comp["p"] == {"p", "q", "r", "s"}
-    assert comp["u"] == {"u", "v"}
-    assert comp["t"] == {"t"}
-
-
-def test_scc_self_loops_and_dups_ignored(spark):
-    edges = [("a", "a"), ("a", "b"), ("a", "b"), ("b", "a")]
-    comp = _scc_sets(spark, edges)
-    assert comp == {"a": {"a", "b"}}
-
-
 # --------------------------------------------------------------------------
 # assortativity
 # --------------------------------------------------------------------------
-
-
-def test_assortativity_star_is_minus_one(spark):
-    from cccatalog_spark.operators.graph import degree_assortativity
-
-    df = spark.createDataFrame(
-        [("h", "a"), ("h", "b"), ("h", "c")], ["src", "dst"]
-    )
-    out = degree_assortativity(df).collect()[0]
-    assert out["n_edges"] == 6
-    assert out["r"] == pytest.approx(-1.0, abs=1e-9)
-
-
-def test_assortativity_regular_graph_undefined(spark):
-    from cccatalog_spark.operators.graph import degree_assortativity
-
-    # 3-cycle: every degree 2 -> zero variance -> NULL
-    df = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "a")], ["src", "dst"]
-    )
-    out = degree_assortativity(df).collect()[0]
-    assert out["r"] is None
-
-
-def test_assortativity_matches_numpy(spark):
-    import numpy as np
-
-    from cccatalog_spark.operators.graph import degree_assortativity
-
-    edges = [
-        ("a", "b"), ("b", "c"), ("c", "d"), ("d", "a"),
-        ("a", "c"), ("e", "a"),
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = degree_assortativity(df).collect()[0]
-
-    deg: dict = {}
-    for u, v in edges:
-        deg[u] = deg.get(u, 0) + 1
-        deg[v] = deg.get(v, 0) + 1
-    xs, ys = [], []
-    for u, v in edges:
-        xs += [deg[u], deg[v]]
-        ys += [deg[v], deg[u]]
-    r = np.corrcoef(xs, ys)[0, 1]
-    assert out["r"] == pytest.approx(r, abs=1e-6)

@@ -1,63 +1,10 @@
-"""link_prediction_scores (operators/graph.py), t_closeness_audit
-(operators/privacy.py), ngram_novelty (operators/corpus_stats.py)."""
+"""t_closeness_audit (operators/privacy.py), ngram_novelty
+(operators/corpus_stats.py)."""
 
 from __future__ import annotations
 
-import math
-
 from cccatalog_spark.operators.corpus_stats import ngram_novelty
-from cccatalog_spark.operators.graph import link_prediction_scores
 from cccatalog_spark.operators.privacy import t_closeness_audit
-
-
-def test_link_prediction_hand_computed(spark):
-    # containers: c1={a,b,c}, c2={a,b}, c3={a,b}, c4={d} (degree-1,
-    # can never witness a pair), so (a,b) share 3 containers of
-    # degrees 3,2,2; (a,c)/(b,c) share only c1.
-    rows = [
-        ("a", "c1"), ("b", "c1"), ("c", "c1"),
-        ("a", "c2"), ("b", "c2"),
-        ("a", "c3"), ("b", "c3"),
-        ("d", "c4"),
-    ]
-    df = spark.createDataFrame(rows, "item string, container string")
-    out = {
-        (r["id_a"], r["id_b"]): r
-        for r in link_prediction_scores(
-            df, "item", "container", min_common=1
-        ).collect()
-    }
-    ab = out[("a", "b")]
-    assert ab["common"] == 3
-    # deg(a)=deg(b)=3 containers -> union = 3+3-3
-    assert abs(ab["jaccard"] - 1.0) < 1e-9
-    assert abs(
-        ab["adamic_adar"]
-        - (1 / math.log(3) + 1 / math.log(2) + 1 / math.log(2))
-    ) < 1e-9
-    ac = out[("a", "c")]
-    assert ac["common"] == 1
-    assert abs(ac["jaccard"] - 1 / 3) < 1e-9
-    assert ("c", "d") not in out and ("a", "d") not in out
-
-
-def test_link_prediction_min_common_and_hub_cap(spark):
-    rows = [
-        ("a", "c1"), ("b", "c1"), ("c", "c1"),
-        ("a", "c2"), ("b", "c2"),
-    ]
-    df = spark.createDataFrame(rows, "item string, container string")
-    out = link_prediction_scores(df, "item", "container", min_common=2)
-    assert [(r["id_a"], r["id_b"]) for r in out.collect()] == [("a", "b")]
-    # capping out the degree-3 hub leaves only c2's pair
-    capped = {
-        (r["id_a"], r["id_b"]): r["common"]
-        for r in link_prediction_scores(
-            df, "item", "container", min_common=1,
-            max_container_degree=2,
-        ).collect()
-    }
-    assert capped == {("a", "b"): 1}
 
 
 def test_t_closeness_hand_computed(spark):

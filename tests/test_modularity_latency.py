@@ -1,43 +1,8 @@
-"""modularity and next_event_latency."""
+"""next_event_latency (operators/temporal.py)."""
 
 from __future__ import annotations
 
-from cccatalog_spark.operators.graph import modularity
 from cccatalog_spark.operators.temporal import next_event_latency
-
-
-def test_modularity_two_cliques_positive(spark):
-    # two triangles joined by one bridge: near-ideal communities
-    edges = spark.createDataFrame(
-        [("a1", "a2"), ("a2", "a3"), ("a1", "a3"),
-         ("b1", "b2"), ("b2", "b3"), ("b1", "b3"),
-         ("a1", "b1")],
-        "src string, dst string",
-    )
-    labels = spark.createDataFrame(
-        [(n, n[0]) for n in ["a1", "a2", "a3", "b1", "b2", "b3"]],
-        "node string, label string",
-    )
-    out = modularity(edges, labels).collect()[0]
-    # hand: m=7, intra per side 3, degree sums 7 each
-    # q = 2*(3/7 - (7/14)^2) = 6/7 - 1/2
-    assert abs(out["q"] - (6 / 7 - 0.5)) < 1e-6
-    assert out["n_communities"] == 2 and out["n_edges"] == 7
-
-
-def test_modularity_bipartite_negative(spark):
-    edges = spark.createDataFrame(
-        [(f"s{i}", f"c{j}") for i in range(3) for j in range(3)],
-        "src string, dst string",
-    )
-    labels = spark.createDataFrame(
-        [(f"s{i}", "S") for i in range(3)]
-        + [(f"c{i}", "C") for i in range(3)],
-        "node string, label string",
-    )
-    out = modularity(edges, labels).collect()[0]
-    # no intra edges at all: q = -(1/2)^2 * 2 = -0.5
-    assert abs(out["q"] + 0.5) < 1e-6
 
 
 def test_next_event_latency_hand_traced(spark):

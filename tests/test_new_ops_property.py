@@ -1,5 +1,5 @@
 """Property-based checks for the round-5 operator batch (IPF,
-Bradley-Terry, Krippendorff alpha, exact-k sampling)."""
+Krippendorff alpha, exact-k sampling)."""
 
 from __future__ import annotations
 
@@ -55,37 +55,6 @@ def test_ipf_marginals_converge(spark, cells):
         assert abs(cm[k] - v) < tol
     total_target = sum(ct.values())
     assert abs(sum(rm.values()) - total_target) < tol
-
-
-@given(st.lists(
-    st.tuples(st.integers(0, 4), st.integers(0, 4)).filter(
-        lambda t: t[0] != t[1]
-    ),
-    min_size=8, max_size=40,
-))
-@settings(
-    max_examples=8, deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_bradley_terry_relabel_invariance(spark, matches):
-    from cccatalog_spark.operators.preferences import bradley_terry
-
-    df = spark.createDataFrame(matches, "winner int, loser int")
-    base = {
-        r["item"]: r["pi"]
-        for r in bradley_terry(df, iterations=4).collect()
-    }
-    assert abs(sum(base.values()) - 1.0) < 1e-9
-    # relabel item i -> i + 100: strengths must follow the relabeling
-    shifted = spark.createDataFrame(
-        [(w + 100, l + 100) for w, l in matches], "winner int, loser int"
-    )
-    moved = {
-        r["item"]: r["pi"]
-        for r in bradley_terry(shifted, iterations=4).collect()
-    }
-    for k, v in base.items():
-        assert abs(moved[k + 100] - v) < 1e-12
 
 
 @given(st.lists(

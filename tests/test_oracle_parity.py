@@ -4,7 +4,10 @@ set, order-insensitive value hash)."""
 
 from __future__ import annotations
 
+import glob
 import math
+import os
+import re
 
 import pytest
 
@@ -72,6 +75,23 @@ def test_entry_contract(spark):
     rows = df.collect()
     assert len(rows) >= 0
     assert df.columns
+
+
+def test_no_dangling_query_names():
+    """The driver window, the flagship and every query the tools name
+    must exist, so removing a query cannot leave a stale name behind."""
+    from cccatalog_spark.plans.queries import DRIVER_WINDOW
+
+    assert [n for n in DRIVER_WINDOW if n not in QUERIES] == []
+    assert entry_mod.FLAGSHIP in QUERIES
+    tools = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    stale = sorted(
+        (os.path.basename(f), n)
+        for f in glob.glob(os.path.join(tools, "*.py"))
+        for n in re.findall(r"\bq\d+_\w+", open(f).read())
+        if n not in QUERIES
+    )
+    assert stale == []
 
 
 def test_every_query_has_oracle_or_is_documented():

@@ -1,5 +1,5 @@
 """Unit tests for the round-6 batch-1 additions: FD/key discovery,
-B-cubed, Soundex blocking, weighted Jaccard join, Misra-Gries heavy
+Soundex blocking, weighted Jaccard join, Misra-Gries heavy
 hitters, grouped k-fold. Each checks a hand-computable frame."""
 
 from __future__ import annotations
@@ -54,53 +54,6 @@ def test_fd_audit_null_lhs_excluded(spark):
     )
     r = fd_audit(df, dependencies=[("a", "b")]).collect()[0]
     assert r["n"] == 2 and r["holds"]
-
-
-def test_bcubed_perfect_and_degenerate(spark):
-    from cccatalog_spark.operators.ml_metrics import bcubed
-
-    # clusters == gold -> P = R = F = 1
-    df = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (2, "b"), (2, "b")], ["cl", "g"]
-    )
-    r = bcubed(df, "cl", "g").collect()[0]
-    assert r["bcubed_precision"] == 1.0 and r["bcubed_recall"] == 1.0
-
-    # all in one cluster, two equal gold classes: P_i = 1/2, R_i = 1
-    df2 = spark.createDataFrame(
-        [(1, "a"), (1, "a"), (1, "b"), (1, "b")], ["cl", "g"]
-    )
-    r2 = bcubed(df2, "cl", "g").collect()[0]
-    assert r2["bcubed_precision"] == pytest.approx(0.5)
-    assert r2["bcubed_recall"] == 1.0
-    assert r2["bcubed_f1"] == pytest.approx(2 * 0.5 / 1.5)
-
-
-def test_bcubed_matches_per_item_definition(spark):
-    from cccatalog_spark.operators.ml_metrics import bcubed
-
-    rows = [
-        (1, "a"), (1, "a"), (1, "b"),
-        (2, "b"), (2, "a"), (3, "b"),
-    ]
-    # per-item brute force
-    n = len(rows)
-    p_sum = r_sum = 0.0
-    for cl, g in rows:
-        cluster = [x for x in rows if x[0] == cl]
-        gold = [x for x in rows if x[1] == g]
-        inter = [x for x in rows if x[0] == cl and x[1] == g]
-        p_sum += len(inter) / len(cluster)
-        r_sum += len(inter) / len(gold)
-    df = spark.createDataFrame(rows, ["cl", "g"])
-    r = bcubed(df, "cl", "g").collect()[0]
-    assert r["bcubed_precision"] == pytest.approx(p_sum / n, abs=1e-6)
-    assert r["bcubed_recall"] == pytest.approx(r_sum / n, abs=1e-6)
-    assert r["n"] == n
-    # equal-sized gold classes: regression for the case-insensitive
-    # "_G"-replaces-"_g" collision that made n_classes count distinct
-    # window SUMS instead of labels
-    assert r["n_classes"] == 2 and r["n_clusters"] == 3
 
 
 def test_soundex_classic_table(spark):

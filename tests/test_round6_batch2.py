@@ -1,11 +1,9 @@
-"""Unit tests for round-6 batch-2: RAKE keywords, per-seed BFS /
-harmonic centrality, Simpson's-paradox audit."""
+"""Unit tests for round-6 batch-2: RAKE keywords, Simpson's-paradox
+audit."""
 
 from __future__ import annotations
 
 import pytest
-
-from pyspark.sql import functions as F
 
 
 def test_rake_hand_example(spark):
@@ -54,57 +52,6 @@ def test_rake_word_order_preserved(spark):
     assert {r["phrase"] for r in out} == {"zebra apple", "mango banana"}
 
 
-def test_multi_source_distances_path_graph(spark):
-    from cccatalog_spark.operators.graph import multi_source_distances
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
-    )
-    d = {
-        (r["seed"], r["node"]): r["dist"]
-        for r in multi_source_distances(
-            edges, ["a", "d"], max_hops=3
-        ).collect()
-    }
-    assert d[("a", "b")] == 1 and d[("a", "c")] == 2 and d[("a", "d")] == 3
-    assert d[("d", "c")] == 1 and d[("d", "b")] == 2 and d[("d", "a")] == 3
-    assert d[("a", "a")] == 0 and d[("d", "d")] == 0
-    assert len(d) == 8
-
-
-def test_harmonic_centrality_path_graph(spark):
-    from cccatalog_spark.operators.graph import (
-        sampled_harmonic_centrality as harmonic_centrality,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
-    )
-    h = {
-        r["node"]: (r["n_reached"], r["harmonic"])
-        for r in harmonic_centrality(edges, ["a", "d"], max_hops=3).collect()
-    }
-    assert h["b"] == (2, pytest.approx(1.5))
-    assert h["c"] == (2, pytest.approx(1.5))
-    assert h["a"] == (1, pytest.approx(round(1 / 3, 6)))
-    assert h["d"] == (1, pytest.approx(round(1 / 3, 6)))
-
-
-def test_harmonic_hop_budget_truncates(spark):
-    from cccatalog_spark.operators.graph import (
-        sampled_harmonic_centrality as harmonic_centrality,
-    )
-
-    edges = spark.createDataFrame(
-        [("a", "b"), ("b", "c"), ("c", "d")], ["src", "dst"]
-    )
-    h = {
-        r["node"]: r["harmonic"]
-        for r in harmonic_centrality(edges, ["a"], max_hops=2).collect()
-    }
-    assert "d" not in h and h["c"] == pytest.approx(0.5)
-
-
 def test_simpson_paradox_classic_reversal(spark):
     from cccatalog_spark.operators.experiments import simpson_paradox_audit
 
@@ -142,40 +89,3 @@ def test_simpson_empty_arm_never_flags(spark):
     }
     assert out["Z"]["diff"] is None and out["Z"]["sign_flip"] is None
     assert out["W"]["sign_flip"] is not None
-
-
-def test_risk_coverage_hand_case(spark):
-    from cccatalog_spark.operators.ml_metrics import risk_coverage
-
-    # conf desc = id asc; errors at ranks 3, 9, 10
-    rows = [(i, 1.0 - i / 10.0, i not in (2, 8, 9)) for i in range(10)]
-    df = spark.createDataFrame(rows, ["id", "conf", "correct"])
-    r = risk_coverage(df, "conf", "correct", "id").collect()[0]
-    risks = [0, 0, 1 / 3, 1 / 4, 1 / 5, 1 / 6, 1 / 7, 1 / 8, 2 / 9, 3 / 10]
-    assert r["aurc"] == pytest.approx(sum(risks) / 10, abs=1e-6)
-    assert r["risk_at_50"] == pytest.approx(0.2)
-    assert r["risk_at_80"] == pytest.approx(0.125)
-    assert r["risk_at_100"] == pytest.approx(0.3)
-    opt = (1 / 8 + 2 / 9 + 3 / 10) / 10
-    assert r["e_aurc"] == pytest.approx(sum(risks) / 10 - opt, abs=1e-6)
-    assert r["n"] == 10 and r["n_errors"] == 3
-
-
-def test_risk_coverage_perfect_ranking(spark):
-    from cccatalog_spark.operators.ml_metrics import risk_coverage
-
-    # all errors at the lowest confidences -> e_aurc == 0
-    rows = [(i, 1.0 - i / 10.0, i < 7) for i in range(10)]
-    df = spark.createDataFrame(rows, ["id", "conf", "correct"])
-    r = risk_coverage(df, "conf", "correct", "id").collect()[0]
-    assert r["e_aurc"] == pytest.approx(0.0, abs=1e-9)
-
-    # no errors -> aurc 0
-    rows2 = [(i, float(i), True) for i in range(5)]
-    r2 = risk_coverage(
-        spark.createDataFrame(rows2, ["id", "conf", "correct"]),
-        "conf",
-        "correct",
-        "id",
-    ).collect()[0]
-    assert r2["aurc"] == 0.0 and r2["e_aurc"] == 0.0

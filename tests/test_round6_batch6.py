@@ -1,7 +1,6 @@
 """Unit tests for round-6 batch-6 operators: McNemar / Cochran-
 Armitage / Friedman, query-likelihood retrieval, filter funnel, CDC
-chunk dedup, linear CKA, eigenvector centrality, Page-Hinkley, DP
-group means."""
+chunk dedup, linear CKA, Page-Hinkley, DP group means."""
 
 from __future__ import annotations
 
@@ -310,42 +309,6 @@ def test_cka_matches_numpy_reference(spark):
     df = spark.createDataFrame(rows, ["x", "y"]).repartition(4)
     r = linear_cka(df, "x", "y", 8, 3).collect()[0]
     assert r["cka"] == pytest.approx(_cka_ref(X, Y), abs=1e-6)
-
-
-# ----------------------------------------------------- eigenvector centrality
-def test_eigencent_star_graph(spark):
-    from cccatalog_spark.operators.graph import eigenvector_centrality
-
-    edges = [("hub", f"leaf{i}") for i in range(6)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = {
-        r["node"]: r["r"]
-        for r in eigenvector_centrality(df, iterations=8).collect()
-    }
-    assert sum(out.values()) == pytest.approx(1.0, abs=1e-9)  # L1 normalized
-    assert out["hub"] == max(out.values())
-    leaves = [v for k, v in out.items() if k != "hub"]
-    assert max(leaves) - min(leaves) < 1e-12  # symmetry
-
-
-def test_eigencent_matches_numpy_power_iteration(spark):
-    from cccatalog_spark.operators.graph import eigenvector_centrality
-
-    edges = [(0, 1), (1, 2), (2, 3), (3, 0), (0, 2)]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = {
-        r["node"]: r["r"]
-        for r in eigenvector_centrality(df, iterations=7).collect()
-    }
-    A = np.zeros((4, 4))
-    for a, b in edges:
-        A[a, b] = A[b, a] = 1.0
-    x = np.full(4, 0.25)
-    for _ in range(7):
-        y = x + A @ x
-        x = y / y.sum()
-    for i in range(4):
-        assert out[i] == pytest.approx(x[i], abs=1e-9)
 
 
 # ------------------------------------------------------------- Page-Hinkley

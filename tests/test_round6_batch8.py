@@ -1,13 +1,10 @@
-"""Unit tests for round-6 batch-8 operators: Borda fusion, Kendall's
-W, Cronbach's alpha, caliper matching, Davies-Bouldin."""
+"""Unit tests for round-6 batch-8 operators: Borda fusion, Cronbach's
+alpha, caliper matching, Davies-Bouldin."""
 
 from __future__ import annotations
 
-import math
-
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 
 # ---------------------------------------------------------------- Borda
@@ -32,63 +29,6 @@ def test_borda_total_order_and_k(spark):
     r1 = spark.createDataFrame([(i, i + 1) for i in range(5)], ["id", "rnk"])
     top = borda_fuse([r1], "id", list_len=5, k=2).collect()
     assert [r["id"] for r in top] == [0, 1]
-
-
-# ------------------------------------------------------------- Kendall W
-def test_kendalls_w_perfect_agreement(spark):
-    from cccatalog_spark.operators.preferences import kendalls_w
-
-    rows = [
-        (i, rk, float(i)) for i in range(10) for rk in ("a", "b", "c")
-    ]
-    df = spark.createDataFrame(rows, ["item", "rk", "v"])
-    r = kendalls_w(df, "item", "rk", "v").collect()[0]
-    assert r["n_items"] == 10 and r["m_rankers"] == 3
-    assert r["w"] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_kendalls_w_matches_scipy_formula(spark):
-    from cccatalog_spark.operators.preferences import kendalls_w
-
-    vals = {
-        "a": [3.0, 1.0, 2.0, 4.0],
-        "b": [1.0, 2.0, 3.0, 4.0],
-        "c": [2.0, 2.0, 1.0, 4.0],  # tie inside ranker c
-    }
-    rows = [
-        (i, rk, vals[rk][i]) for i in range(4) for rk in ("a", "b", "c")
-    ]
-    df = spark.createDataFrame(rows, ["item", "rk", "v"])
-    r = kendalls_w(df, "item", "rk", "v").collect()[0]
-
-    # reference with average ranks + tie correction
-    def ranks(v):
-        order = sorted(range(len(v)), key=lambda i: v[i])
-        rr = [0.0] * len(v)
-        i = 0
-        while i < len(order):
-            j = i
-            while j < len(order) and v[order[j]] == v[order[i]]:
-                j += 1
-            for t in order[i:j]:
-                rr[t] = (i + 1 + j) / 2.0
-            i = j
-        return rr
-
-    m, n = 3, 4
-    R = [0.0] * n
-    tsum = 0.0
-    for rk in vals:
-        rr = ranks(vals[rk])
-        for i in range(n):
-            R[i] += rr[i]
-        from collections import Counter
-
-        for t in Counter(vals[rk]).values():
-            tsum += t**3 - t
-    num = 12 * sum(x * x for x in R) - 3 * m * m * n * (n + 1) ** 2
-    den = m * m * (n**3 - n) - m * tsum
-    assert r["w"] == pytest.approx(num / den, abs=1e-6)
 
 
 # -------------------------------------------------------------- Cronbach

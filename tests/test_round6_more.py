@@ -179,55 +179,6 @@ def test_burrows_delta_case_insensitive(spark):
     assert out[0]["delta"] == pytest.approx(0.0, abs=1e-9)
 
 
-def test_feature_propagation_star(spark):
-    from pyspark.sql import functions as F
-
-    from cccatalog_spark.operators.graph import feature_propagation
-
-    # hub h with leaves a,b,c; features: h=0, a=3, b=6, c=9
-    edges = spark.createDataFrame(
-        [("h", "a"), ("h", "b"), ("h", "c")], ["src", "dst"]
-    )
-    feats = spark.createDataFrame(
-        [("h", 0.0), ("a", 3.0), ("b", 6.0), ("c", 9.0)],
-        ["node", "h"],
-    )
-    out = {
-        r["node"]: r
-        for r in feature_propagation(
-            edges, feats, rounds=2
-        ).collect()
-    }
-    # round 1: h <- mean(3,6,9)=6 ; leaves <- 0
-    # round 2: h <- mean(0,0,0)=0 ; leaves <- 6
-    assert out["h"]["degree"] == 3
-    assert out["h"]["h_out"] == pytest.approx(0.0, abs=1e-9)
-    for leaf in "abc":
-        assert out[leaf]["h_out"] == pytest.approx(6.0, abs=1e-9)
-    assert out["a"]["h0"] == 3.0
-
-
-def test_feature_propagation_missing_feature_semantics(spark):
-    from cccatalog_spark.operators.graph import feature_propagation
-
-    # b has no input feature: a's 1-round mean uses only featured
-    # neighbors... with rounds=1, a averages over b (null) -> null
-    # excluded by avg, c=5 -> 5.0
-    edges = spark.createDataFrame(
-        [("a", "b"), ("a", "c")], ["src", "dst"]
-    )
-    feats = spark.createDataFrame([("a", 1.0), ("c", 5.0)], ["node", "h"])
-    out = {
-        r["node"]: r
-        for r in feature_propagation(
-            edges, feats, rounds=1
-        ).collect()
-    }
-    assert out["a"]["h_out"] == pytest.approx(5.0, abs=1e-9)
-    assert out["a"]["h0"] == 1.0
-    assert out["b"]["h_out"] == pytest.approx(1.0, abs=1e-9)
-
-
 def test_embedding_health_counts_defects(spark):
     from pyspark.sql.types import (
         ArrayType,
@@ -406,24 +357,6 @@ def test_path_patterns_no_cross_key_windows(spark):
     out = path_patterns(df, "k", "t", "s", length=2, top_k=10).collect()
     pats = {(r["step_1"], r["step_2"]) for r in out}
     assert pats == {("a", "b"), ("c", "d")}
-
-
-def test_dyad_census(spark):
-    from cccatalog_spark.operators.graph import dyad_census
-
-    edges = [
-        ("a", "b"), ("b", "a"),     # mutual
-        ("a", "c"),                 # asym
-        ("c", "d"), ("d", "c"),     # mutual
-        ("d", "e"),                 # asym
-        ("e", "e"),                 # self loop: dropped
-    ]
-    df = spark.createDataFrame(edges, ["src", "dst"])
-    out = dyad_census(df).collect()[0]
-    assert out["n_edges"] == 6
-    assert out["mutual_dyads"] == 2
-    assert out["asym_dyads"] == 2
-    assert out["reciprocity"] == pytest.approx(4 / 6, abs=1e-6)
 
 
 def test_kruskal_wallis_textbook(spark):

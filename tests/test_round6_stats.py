@@ -13,8 +13,6 @@ import pytest
 
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
 
-from pyspark.sql import functions as F
-
 
 def test_anova_oneway_matches_numpy(spark):
     rows = [

@@ -1,5 +1,6 @@
 """Optimization internals of sources/tables.py: the analyzed-relation
-memo and the once-per-session conf guard.
+memo (bounded, oldest loads evicted first) and the once-per-session
+conf guard.
 
 Both are planning-metadata memos (never rows or results); these tests
 pin (a) repeated loads return the same memoized plan, (b) fan_out keeps
@@ -47,3 +48,17 @@ def test_ensure_session_confs_idempotent(spark):
 def test_fan_out_known_parts_matches_probe(spark):
     df = spark.range(0, 100, 1, 2).select(F.col("id"))
     assert sorted(r["id"] for r in T.fan_out(df).collect()) == list(range(100))
+
+
+def test_table_memo_evicts_oldest_entries_of_the_live_app(spark, monkeypatch):
+    """One app loading many distinct paths must not grow the memo past
+    its cap: with no other app's entries to drop, the live app's oldest
+    loads go."""
+    app = spark.sparkContext.applicationId
+    memo = {(app, f"/fake/{i}.parquet"): object() for i in range(513)}
+    monkeypatch.setattr(T, "_TABLE_DFS", memo)
+    df = T.load_table(spark, SF, "events")
+    key = (app, f"{SF}/events.parquet")
+    assert len(T._TABLE_DFS) <= 513
+    assert T._TABLE_DFS[key] is df
+    assert (app, "/fake/0.parquet") not in T._TABLE_DFS

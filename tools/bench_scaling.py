@@ -26,40 +26,35 @@ import time
 sys.path.insert(0, ".")
 
 # the 15 most expensive queries in BENCH_LOCAL.json (round 5), the
-# verdict-prescribed scaling set: dedup pair generators, iterative
-# graph algorithms, stateful streaming, column stats, DBSCAN, salted
-# join — every family where a super-linear stage could hide
+# verdict-prescribed scaling set: dedup pair generators, stateful
+# streaming, column stats, DBSCAN, salted join — every family where a
+# super-linear stage could hide
 QUERIES = [
     "q24_ngram_jaccard",
-    "q97_pagerank",
     "q106_stream_stream_join",
     "q150_column_stats",
     "q185_jaccard_prefix_join",
     "q186_sorted_neighborhood",
     "q198_containment_pairs",
-    "q211_personalized_pagerank",
     "q237_sif_embeddings",
     "q245_lsh_recall_audit",
     "q254_stream_lsh_neardup",
     "q267_salted_join",
     "q268_stream_window_distinct",
     "q269_dbscan",
-    "q270_multi_source_bfs",
     # round-6 additions: valuation scoring scan, multiset-Jaccard
-    # pair generator, MG candidate pass, RAKE windows, per-seed BFS,
-    # vocabulary self-join
+    # pair generator, MG candidate pass, RAKE windows, vocabulary
+    # self-join
     "q372_knn_shapley",
     "q376_weighted_jaccard",
     "q377_heavy_hitters",
     "q379_rake_keywords",
-    "q381_sampled_harmonic",
     "q386_vocab_overlap",
     # final round-6 batch: chunk explode + hash dedup, single-pass
-    # gram, per-round normalized power iteration, blocked reciprocal
-    # kNN, candidate-filtered co-occurrence, trigram profile scoring
+    # gram, blocked reciprocal kNN, candidate-filtered co-occurrence,
+    # trigram profile scoring
     "q396_cdc_dedup",
     "q397_linear_cka",
-    "q398_eigenvector_centrality",
     "q404_mutual_knn",
     "q413_topic_coherence",
     "q419_langid_profile_eval",

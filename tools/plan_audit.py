@@ -63,8 +63,6 @@ SANCTIONED_BNLJ = {
     "rollup",
     "q397_linear_cka": "<= (dx*dy)-row moment-catalog self-combines "
     "+ 1-row n broadcast (single persisted gram pass)",
-    "q398_eigenvector_centrality": "1-row L1-normalizer broadcast per "
-    "round (the pagerank discipline)",
     "q400_dp_group_means": "k-row group catalog only (noise is "
     "column algebra)",
     "q401_ind_discovery": "per-candidate 1-row count x 1-row count "
@@ -76,14 +74,11 @@ SANCTIONED_BNLJ = {
     "label catalog",
     "q406_source_kl": "1-row corpus-total + 51-bucket catalog "
     "broadcasts",
-    "q408_kendalls_w": "1-row tie-correction scalar broadcast",
     "q409_cronbach_alpha": "1-row moment fold",
     "q410_caliper_matching": "1-row n_treated broadcast onto the "
     "matched-unit aggregate",
     "q411_davies_bouldin": "k-row centroid-catalog pair join (k^2 "
     "rows, corpus never pairs)",
-    "q374_bcubed_eval": "8-row seed-catalog broadcast argmin (the "
-    "kmeans_assign sanction)",
     "q377_heavy_hitters": "1-row corpus-total broadcast onto the "
     "bounded MG candidate counts",
     "q382_simpson_paradox": "1-row pooled-rates broadcast over the "
@@ -131,7 +126,6 @@ SANCTIONED_BNLJ = {
     "q336_median_ci": "listed for the rank scalars if plans shift",
     "q341_stream_hll_distinct": "listed for the final-state rollup "
     "if plans shift",
-    "q343_modularity": "1-row m/n folds over the community catalog",
     "q344_next_event_latency": "1-row summary fold over the latency "
     "catalog",
     "q321_capture_recapture": "listed for the 1-row Chapman fold if "
@@ -178,21 +172,12 @@ SANCTIONED_BNLJ = {
     "broadcast",
     "q287_kaplan_meier": "per-duration catalog windows; no join "
     "flags expected (listed for the scalar broadcast if plans shift)",
-    "q291_isotonic_calibration": "bin-catalog interval joins "
-    "(catalog^2/catalog^3 at 20 bins — the PAV minimax fold; corpus "
-    "touched once in the binning aggregate)",
-    "q292_brier_decomposition": "1-row global-stats broadcast over "
-    "the 10-bin catalog",
-    "q293_cumulative_gains": "1-row totals broadcast over the 10-bin "
-    "catalog",
     "q294_rbo_ann_agreement": "k-row top-k list catalogs: depth-grid "
     "non-equi join + 1-row k broadcast (plus q26/q47's probe "
     "broadcasts upstream)",
     "q284_eb_reputation": "1-row corpus-prior scalar broadcast",
     "q285_contrastive_pairs": "1-row corpus-size scalar broadcast "
     "(the q118 negative-draw contract)",
-    "q290_graph_report": "five 1-row report-scalar broadcasts folded "
-    "into the single output row",
     "q296_ks_test": "1-row (n_a, n_b) totals broadcast over the "
     "distinct-value catalog",
     "q297_effect_sizes": "1-row moments + delta-numerator broadcasts",
@@ -236,8 +221,6 @@ SANCTIONED_BNLJ = {
     "scores every label by construction)",
     "q130_interleave_shuffle": "1-row source-count scalar broadcast "
     "(closed-form slot arithmetic)",
-    "q131_triangle_count": "1-row doc-count scalar broadcast (the "
-    "co-occurrence edge threshold)",
     "q265_heaps_law": "1-row token-total broadcast exploded into the "
     "10-row checkpoint catalog (the regression grid; prefix-sum "
     "offsets frame is <=#partitions rows)",
@@ -263,21 +246,16 @@ SANCTIONED_BNLJ = {
     "distribution broadcasts (DSIR model state)",
     "q144_ranking_metrics": "1-row n-probes scalar broadcast inside "
     "the kNN run (q27's sanctioned shape)",
-    "q146_hits": "1-row L1-norm scalar broadcast per power-iteration "
-    "round (collect-free normalization)",
     "q151_token_shards": "1-row total-tokens scalar broadcast "
     "(closed-form shard arithmetic over the prefix sum)",
     "q158_cms_join_size": "two 1-row estimate/exact frames "
     "cross-combined into the single result row",
-    "q164_calibration_ece": "1-row bin-total scalar broadcast (ECE "
-    "weights)",
     "q173_wat_manifest": "1-row latest-index scalar broadcast "
     "attached to the slice counts",
     "q175_chi_square": "1-row grand-total scalar broadcast (expected "
     "frequencies)",
     "q176_shuffle_audit": "1-row source-count scalar broadcast inside "
     "the interleave (q130's sanctioned shape)",
-    "q215_lang_kappa": "1-row contingency-totals x 1-row chance-term scalar cross-broadcast (kappa is one number)",
     "q217_association_rules": "1-row basket-count scalar broadcast (support floor and lift denominator)",
     "q218_record_linkage": "1-row Fellegi-Sunter weights catalog cross-broadcast into the blocked candidates",
     "q221_cuped_experiment": "1-row theta/mean(X) catalog from one global aggregate, cross-broadcast into the per-unit frame",
@@ -298,16 +276,12 @@ SANCTIONED_BNLJ = {
     "q207_logreg_filter": "per-round (dim+1)-row weight-frame + 1-row "
     "learning-rate scalar cross-broadcasts (collect-free SGD round; "
     "corpus enters only the gradient aggregate)",
-    "q239_bradley_terry": "per-round 1-row total + tie-constant "
-    "cross-broadcasts over the item-strength catalog (MM update; "
-    "pair frame never BNLJ-joined)",
     "q240_dawid_skene": "per-round 1-row class-prior cross-broadcast "
     "into the posterior logits + |classes|^2 confusion-catalog "
     "broadcast join (EM round)",
     "q249_sinkhorn_ot": "per-round 1-row mass-total cross-broadcasts "
     "over the two <=k-row marginal catalogs (scaling update; the "
     "cost matrix is catalog x catalog by construction)",
-    "q248_fairness_gaps": "1-row disparity-gap frame cross-broadcast over the |groups|-row report",
 }
 
 

@@ -55,7 +55,7 @@ def _metrics(df) -> dict:
 SANCTIONED_GLOBAL_WINDOW = {
     "q117_vocab_coverage", "q118_negative_samples",
     "q130_interleave_shuffle", "q138_pack_windows", "q151_token_shards",
-    "q163_auc", "q176_shuffle_audit", "q186_sorted_neighborhood",
+    "q176_shuffle_audit", "q186_sorted_neighborhood",
     # skyline phase-2 sweep: the global window's input is the
     # UNION OF BUCKET-LOCAL FRONTIERS (pareto.py phase 1), never
     # the corpus; its size is the skyline's own output bound
@@ -97,9 +97,6 @@ SANCTIONED_GLOBAL_WINDOW = {
     # CUSUM prefix sums / running mins over the DAILY catalog (raw
     # rows collapse to per-day means first) — temporal.cusum_changepoints
     "q288_cusum_changepoint",
-    # gains/lift cums over the 10-SCORE-BIN catalog (corpus collapses
-    # to per-bin counts first) — ml_metrics.cumulative_gains
-    "q293_cumulative_gains",
     # rank windows over the two k-row TOP-K lists (k = 10 by
     # construction) — retrieval.rbo_overlap inputs
     "q294_rbo_ann_agreement",
@@ -149,10 +146,6 @@ SANCTIONED_GLOBAL_WINDOW = {
     # (the corpus collapses to per-latency counts first — the q256
     # contract) — temporal.next_event_latency summary in q344
     "q344_next_event_latency",
-    # risk-coverage window orders the SCORED EVAL catalog (bounded by
-    # construction — the q163 AUC sanction class) —
-    # ml_metrics.risk_coverage
-    "q380_risk_coverage",
     # split-candidate cumsums over the DISTINCT-VALUE catalog (corpus
     # collapses to per-value counts first — the q256 contract) —
     # classifier.decision_stump
@@ -202,26 +195,12 @@ FAMILIES = {
         "q379_rake_keywords",
         {"joins": 2, "arrow_udf_nodes": 0, "exchanges": 10},
     ),
-    # harmonic centrality: per-round frontier-only joins are behind
-    # lineage cuts; the returned rollup reads cached per-round frames
-    # (graph.multi_source_distances)
-    "harmonic-frontier-only": (
-        "q381_sampled_harmonic",
-        {"exchanges": 3},
-    ),
     # FD discovery: two map-side-combinable aggregates per declared
     # dependency, one count-distinct per key check; k-row output
     # union (constraints.fd_audit)
     "fd-audit-per-dependency": (
         "q373_fd_discovery",
         {"joins": 0, "exchanges": 14},
-    ),
-    # B-cubed: ONE (cluster, gold) contingency + window sums over that
-    # cell catalog; assignment is a k-row broadcast argmin
-    # (ml_metrics.bcubed)
-    "bcubed-contingency-windows": (
-        "q374_bcubed_eval",
-        {"joins": 0, "exchanges": 8},
     ),
     # Soundex linkage: code computed codegen-side on the
     # vocabulary-sized distinct-word catalog; block equi-join
@@ -243,7 +222,7 @@ FAMILIES = {
         "q385_ht_estimate",
         {"joins": 0, "exchanges": 1},
     ),
-    # ARI/NMI: the q374 contingency shape — one (a,b) groupBy, window
+    # ARI/NMI: one (a,b) contingency groupBy, window
     # sums over the cell catalog, 8-row seed broadcast argmin
     # (cluster_eval.clustering_agreement)
     "clustering-agreement-contingency": (
@@ -264,13 +243,6 @@ FAMILIES = {
         "q388_banned_phrases",
         {"joins": 0, "arrow_udf_nodes": 0, "exchanges": 4},
     ),
-    # link prediction: candidates generated per container (one pair
-    # self-join + two item-degree joins + the deg>=2 cut join);
-    # Σdeg² work, never items² (graph.link_prediction_scores)
-    "link-prediction-per-container": (
-        "q299_link_prediction",
-        {"joins": 5, "exchanges": 13},
-    ),
     # n-gram novelty: ONE min(id) aggregate carries the temporal
     # comparison; exactly one join (novel counts back to doc sizes),
     # the corpus never self-joins (corpus_stats.ngram_novelty)
@@ -284,14 +256,6 @@ FAMILIES = {
     "permutation-explode-constant": (
         "q304_permutation_test",
         {"joins": 0, "exchanges": 7},
-    ),
-    # HyperBall: per-round register merge persisted + lineage-cut, so
-    # the FINAL plan is round-count-independent (reads the cached
-    # register frame; graph.hyperball_harmonic) — like logreg's
-    # truncated-lineage contract
-    "hyperball-truncated-lineage": (
-        "q311_hyperball_harmonic",
-        {"joins": 0, "exchanges": 1},
     ),
     # JL audit: projection is a narrow map (plan-literal matrix, no
     # UDF); ONE consecutive-id self-join; one 1-row report aggregate
@@ -410,16 +374,6 @@ FAMILIES = {
         "q249_sinkhorn_ot",
         {"joins": 0, "exchanges": 0},
     ),
-    # Frontier-only multi-source BFS: each round joins ONLY the newly
-    # reached frontier against the edges and is lineage-cut, so the
-    # final dist frame is a checkpoint readback — 0 exchanges, 0
-    # joins, hop-count-independent (graph.multi_source_bfs; the
-    # per-round |frontier_r| work bound is pinned by
-    # tests/test_density.py::test_multi_source_bfs_frontier_only_bound).
-    "bfs-frontier-only-truncated": (
-        "q270_multi_source_bfs",
-        {"joins": 0, "exchanges": 0},
-    ),
     # Salted skew join: the hot-key side explodes into SALT shards
     # pre-join, so the shuffle keys are (key, salt) — exactly ONE join
     # and its exchange pair, never a hot-partition straggler
@@ -427,18 +381,6 @@ FAMILIES = {
     "salted-join-one-shuffle": (
         "q267_salted_join",
         {"joins": 1, "exchanges": 2},
-    ),
-    # SCC via Trim + FW-coloring: every trim/color/mark round is
-    # lineage-cut, so the FINAL plan is a union of checkpoint
-    # readbacks + ONE size aggregate — round-count-independent
-    # (graph.strongly_connected_components; the logreg/sinkhorn
-    # truncated-lineage contract for iterative algorithms).
-    "scc-truncated-lineage": (
-        "q355_scc",
-        # 1 or 2 depending on persisted-frame reuse in the session
-        # (the 2nd exchange is the final rollup of the cached
-        # component frame) — both are round-count-independent
-        {"joins": 0, "exchanges": 2},
     ),
     # RFM distributed quintiles: three two-phase rank passes, each
     # lineage-cut (segments.rfm_segments), so the final plan holds one
@@ -466,14 +408,6 @@ FAMILIES = {
         "q359_burrows_delta",
         {"joins": 11, "exchanges": 49},
     ),
-    # GNN feature propagation: per round ONE neighbor join + ONE mean
-    # aggregate over the persisted undirected edge frame. DESIGN is
-    # 2·rounds+2 joins; string budget includes persisted-subtree
-    # reprints.
-    "feature-propagation-round-shape": (
-        "q360_feature_propagation",
-        {"joins": 10, "exchanges": 13},
-    ),
     # ACF: the k lags ride ONE equi-join after the probe explode
     # (k·N candidates); mean/denominator is a broadcast scalar off the
     # persisted daily catalog.
@@ -499,14 +433,6 @@ FAMILIES = {
     "path-patterns-one-window": (
         "q367_path_patterns",
         {"joins": 0, "exchanges": 5},
-    ),
-    # dyad census: the reverse-edge join expressed as ONE
-    # canonical-pair aggregate (graph.dyad_census) — the 12 string-
-    # counted joins are the shared March-graph BUILD (fwd/bwd edge
-    # derivation), not the census itself.
-    "dyad-census-canonical-pair": (
-        "q368_dyad_census",
-        {"joins": 12, "exchanges": 7},
     ),
     # closed-form regression: ONE moment aggregate (12 sums) + a
     # 1-row Cramer projection — no iteration, no driver linear
@@ -557,13 +483,6 @@ FAMILIES = {
     "cka-single-gram-pass": (
         "q397_linear_cka",
         {"joins": 6, "exchanges": 29},
-    ),
-    # eigenvector centrality: per-round lineage cuts mean the returned
-    # frame reads the round-6 checkpoint — zero replanned exchanges
-    # (the pagerank discipline; graph.eigenvector_centrality).
-    "eigencent-lineage-cut": (
-        "q398_eigenvector_centrality",
-        {"joins": 0, "exchanges": 0},
     ),
     # Page-Hinkley: all three prefix windows are PARTITIONED BY the
     # series key — one shuffle total, no global sort
