@@ -11,7 +11,7 @@ Product surface (the same text is in README "Product surface"):
   ``ingest_provider_batch``, ``load_and_merge``, ``refresh_image_view``
   and ``cc_scrape``;
 - ``cccatalog_spark/streaming/loader.py``, the minutely loader;
-- the catalog queries, ``plans.queries.CATALOG_QUERIES``, which lead
+- the catalog queries, ``plans.catalog.CATALOG_QUERIES``, which lead
   ``queries()``: q04_merge_upsert, q05_merge_overwrite,
   q06_replay_collapse, q08_percentile_disc, q09_popularity_constants,
   q10_standardized_popularity, q16_license_extract, q17_sanitize,

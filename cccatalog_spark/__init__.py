@@ -6,8 +6,9 @@ ingestion, load/merge and popularity. Its surface is the catalog
 functions in ``pipelines`` (``ingest_provider_batch``,
 ``load_and_merge``, ``refresh_image_view``, ``cc_scrape``), the
 minutely loader in ``streaming.loader`` and the catalog queries
-(``plans.queries.CATALOG_QUERIES``); README "Product surface" has the
-list. The other operators and queries are not on any catalog path.
+(``plans.catalog.CATALOG_QUERIES``); README "Product surface" has the
+list, and ``tests/test_catalog_boundary.py`` pins the modules they
+import. The other operators and queries are not on any catalog path.
 
 Layers (see SURVEY.md §7.0):
 
@@ -20,7 +21,8 @@ Layers (see SURVEY.md §7.0):
   dedup family, similarity search, popularity pipeline, sub-provider
   joins, expiration).
 - ``plans``     — named end-to-end queries over the driver's synthetic
-  tables; exported through ``__spark_entry__``.
+  tables (``plans.catalog`` holds the registry and the catalog
+  queries); exported through ``__spark_entry__``.
 - ``streaming`` — micro-batch loader (file source + foreachBatch merge).
 
 Everything is declarative DataFrame/SQL so Catalyst plans it; Python UDFs

@@ -42,14 +42,8 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _kth_smallest(pool: DataFrame, k: int):
-    """Exact k-th smallest value of pool.v via TakeOrdered(k)."""
-    row = pool.orderBy("v").limit(k).agg(F.max("v").alias("v")).collect()[0]
-    return row["v"]
 
 
 def _kth_smallest_batch(frame, items: list) -> dict:
@@ -59,9 +53,9 @@ def _kth_smallest_batch(frame, items: list) -> dict:
     ``items``: list of ``(key, pred, k)``. Each item's candidate rows
     (≤ tail_threshold by the caller's invariant) are tagged with the
     item index, ranked by value within the tag, and the k-th smallest
-    (duplicates counted) picked per tag — identical semantics to
-    ``_kth_smallest`` per item, but one shuffle for the whole batch
-    instead of one TakeOrdered job per (column, fraction).  This is
+    (duplicates counted) picked per tag — identical semantics to one
+    ``orderBy("v").limit(k)`` max per item, but one shuffle for the
+    whole batch instead of one TakeOrdered job per (column, fraction).  This is
     what keeps ANALYZE-style multi-column stats from degenerating into
     #columns × #fractions sequential driver round-trips (guide §1.2:
     the per-task work was fine, the JOB COUNT was the bottleneck —

@@ -1,9 +1,10 @@
-"""End-to-end catalog pipelines — the reference's DAG graph as three
+"""End-to-end catalog pipelines — the reference's DAG graph as four
 composable functions (SURVEY §3): a user of cc-archive/cccatalog runs
 these instead of the Airflow DAG chain.
 
     provider APIs → bronze JSON records      (ingestion, out of scope)
     bronze → canonical rows                   ingest_provider_batch
+    Common Crawl pages → canonical rows       cc_scrape
     rows → canonical image table              load_and_merge
     image table → popularity view             refresh_image_view
 
@@ -13,9 +14,7 @@ sensors) stays outside, holding zero compute logic (SURVEY §7.0).
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cccatalog_spark.operators.merge import image_merge
@@ -48,8 +47,8 @@ def load_and_merge(
 ) -> DataFrame:
     """Clean rows → merged canonical image table (SURVEY §3.2 steps
     5-6: intra-batch key dedup A5, then the J1 upsert with system
-    columns). Write the result bucketed by IMAGE_KEY
-    (sources/bucketed.write_bucketed) so the next merge co-locates."""
+    columns). The result is a DataFrame; persisting it is the
+    caller's step."""
     from cccatalog_spark.schemas import IMAGE_KEY
 
     deduped = clean_batch.dropDuplicates(IMAGE_KEY)
@@ -68,125 +67,6 @@ def refresh_image_view(
     is read from meta_data[metric]."""
     value = F.element_at(F.col("meta_data"), metric_field).cast("double")
     return build_popularity(image, metrics, "provider", value)
-
-
-def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """The LLM-training-corpus pipeline (extension layer): quality
-    filter → near-dup clustering → one canonical doc per cluster →
-    PII scrub → per-language token accounting, composed from the
-    engine's verified pieces.
-
-        documents
-          → Gopher rule filter          (functions/text.gopher_keep)
-          → blocked-levenshtein pairs   (q56 shape: block on prefix)
-          → connected components        (operators/dedup)
-          → keep cluster-min doc        (canonical survivor)
-          → PII redaction               (functions/text.pii_redact)
-          → whitespace+BPE token totals (functions/text)
-
-    Returns (lang, n_docs, total_ws_tokens, total_bpe_tokens). Plan:
-    the filter/scrub/count stages are narrow; the wide stages are the
-    blocked pair join and the per-round clustering joins — identical
-    budgets to q56/q71.
-    """
-    from cccatalog_spark.functions.text import (
-        bpe_token_count,
-        gopher_keep,
-        gopher_signals,
-        pii_redact,
-        token_count,
-    )
-    from cccatalog_spark.operators.dedup import connected_components
-
-    kept = docs.where(gopher_keep(gopher_signals(F.col("text"))))
-    s = kept.select(
-        id_col,
-        "lang",
-        "text",
-        F.substring("text", 1, 30).alias("_s30"),
-        F.substring("text", 1, 4).alias("_blk"),
-    ).persist()
-    a, b = s.alias("a"), s.alias("b")
-    pairs = (
-        a.join(
-            b,
-            (F.col("a._blk") == F.col("b._blk"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .where(F.levenshtein(F.col("a._s30"), F.col("b._s30")) <= 5)
-        .select(
-            F.col(f"a.{id_col}").alias("src"), F.col(f"b.{id_col}").alias("dst")
-        )
-    )
-    clusters = connected_components(
-        s.select(id_col), pairs, node_col=id_col
-    )
-    canonical = s.join(
-        clusters.where(F.col(id_col) == F.col("cluster_id")).select(id_col),
-        id_col,
-    )
-    scrubbed = canonical.select(
-        "lang", pii_redact(F.col("text")).alias("clean")
-    )
-    return scrubbed.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(token_count(F.col("clean"))).cast("bigint").alias(
-            "total_ws_tokens"
-        ),
-        F.sum(bpe_token_count(F.col("clean"))).cast("bigint").alias(
-            "total_bpe_tokens"
-        ),
-    )
-
-
-def frontier_pipeline(
-    urls: DataFrame,
-    url_col: str,
-    blocked_domains: list[str],
-    robots_rules: DataFrame,
-    delays: DataFrame,
-    *,
-    id_col: str = "url_id",
-    default_delay: float = 1.0,
-) -> DataFrame:
-    """End-to-end crawl-frontier preparation — the chain a crawler
-    runs between "here are candidate URLs" and "fetch in this order":
-
-        canonicalize (q152) → dedup on the canonical key →
-        blocklist (q137) → robots (q153) → politeness schedule (q154)
-
-    Dedup keeps the smallest ``id_col`` per canonical form (first
-    occurrence in id order — deterministic). Blocked and disallowed
-    URLs are dropped; survivors get (host, rank, fetch_at).
-
-    Every stage is the scan-stage/broadcast-join algebra of its
-    standalone operator; the only exchanges are the canonical-key
-    dedup and the per-host rank window.
-    """
-    from cccatalog_spark.functions.urls import (
-        blocklist_mark,
-        canonicalize_url,
-        robots_decisions,
-        url_host,
-    )
-    from cccatalog_spark.operators.temporal import crawl_schedule
-
-    canon = urls.withColumn("canonical", canonicalize_url(F.col(url_col)))
-    first = canon.groupBy("canonical").agg(F.min(id_col).alias(id_col))
-    deduped = canon.join(first, ["canonical", id_col])
-    unblocked = blocklist_mark(
-        deduped, "canonical", blocked_domains
-    ).where(~F.col("is_blocked")).drop("is_blocked")
-    allowed = robots_decisions(
-        unblocked, "canonical", robots_rules
-    ).where(F.col("allowed")).drop("allowed")
-    frontier = allowed.withColumn(
-        "host", url_host(F.col("canonical"))
-    ).withColumn("priority", F.length("canonical"))
-    return crawl_schedule(
-        frontier, id_col, "host", "priority", delays,
-        default_delay=default_delay,
-    )
 
 
 def cc_scrape(

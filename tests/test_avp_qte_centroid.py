@@ -1,6 +1,4 @@
-"""always_valid_pvalue / quantile_treatment_effect
-(operators/experiments.py) and nearest_centroid_eval
-(operators/similarity.py)."""
+"""nearest_centroid_eval (operators/similarity.py)."""
 
 from __future__ import annotations
 
@@ -8,10 +6,6 @@ import pytest
 
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
 
-from cccatalog_spark.operators.experiments import (
-    always_valid_pvalue,
-    quantile_treatment_effect,
-)
 from cccatalog_spark.operators.similarity import nearest_centroid_eval
 
 
@@ -22,58 +16,6 @@ def _two_group_rows(shift):
             rows.append((t, "a", 10.0 + (i % 5)))
             rows.append((t, "b", 10.0 + (i % 5) + shift))
     return rows
-
-
-def test_avp_detects_real_shift_and_is_monotone(spark):
-    df = spark.createDataFrame(
-        _two_group_rows(3.0), "t long, grp string, v double"
-    )
-    out = sorted(
-        always_valid_pvalue(df, "grp", "t", "v", "a", "b").collect(),
-        key=lambda r: r["t"],
-    )
-    ps = [r["p_always"] for r in out]
-    # anytime p is a running min: non-increasing
-    assert all(a >= b for a, b in zip(ps, ps[1:]))
-    assert ps[-1] < 0.01
-    assert out[-1]["delta"] == -3.0
-    assert out[-1]["n_a"] == 120
-
-
-def test_avp_null_stays_large(spark):
-    df = spark.createDataFrame(
-        _two_group_rows(0.0), "t long, grp string, v double"
-    )
-    out = always_valid_pvalue(df, "grp", "t", "v", "a", "b").collect()
-    assert min(r["p_always"] for r in out) > 0.5
-    # lam defined from the first period (both sides have >= 2 obs)
-    assert all(r["lam"] is not None for r in out)
-
-
-def test_qte_uniform_shift_everywhere(spark):
-    rows = [("a", float(v)) for v in range(1, 101)] + [
-        ("b", float(v) + 7) for v in range(1, 101)
-    ]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = quantile_treatment_effect(df, "grp", "v", "a", "b").collect()
-    assert len(out) == 9
-    assert all(r["qte"] == 7.0 for r in out)
-    med = [r for r in out if abs(r["p"] - 0.5) < 1e-9][0]
-    assert med["q_a"] == 50.0 and med["q_b"] == 57.0
-
-
-def test_qte_tail_only_effect(spark):
-    # b equals a except the top fifth is stretched: the p=0.9 disc
-    # quantile (90th of 100) falls in the stretched region, p<=0.8
-    # quantiles don't
-    a = [float(v) for v in range(1, 101)]
-    b = a[:80] + [float(v) * 3 for v in a[80:]]
-    rows = [("a", v) for v in a] + [("b", v) for v in b]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = {round(r["p"], 1): r["qte"] for r in
-           quantile_treatment_effect(df, "grp", "v", "a", "b").collect()}
-    assert out[0.5] == 0.0 and out[0.2] == 0.0 and out[0.8] == 0.0
-    assert out[0.9] > 0.0
 
 
 def test_nearest_centroid_separable_blobs(spark):

@@ -4,8 +4,6 @@ exact verify join."""
 
 from __future__ import annotations
 
-import numpy as np
-
 from cccatalog_spark.operators.bloom import bloom_build, bloom_filter_candidates
 
 BITS, HASHES = 1 << 12, 3

@@ -6,8 +6,6 @@ result."""
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 

@@ -12,8 +12,6 @@ the result would have added one more each had it been checkpointed)."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
 CALLS = 3
 
 

@@ -1,33 +1,8 @@
-"""capture_recapture / shift_share_decomposition
-(operators/experiments.py) and chao1_richness
-(operators/corpus_stats.py)."""
+"""chao1_richness (operators/corpus_stats.py)."""
 
 from __future__ import annotations
 
 from cccatalog_spark.operators.corpus_stats import chao1_richness
-from cccatalog_spark.operators.experiments import (
-    capture_recapture,
-    shift_share_decomposition,
-)
-
-
-def test_capture_recapture_estimates_population(spark):
-    n = 2000
-    df = spark.createDataFrame([(f"id{i}",) for i in range(n)], "id string")
-    out = capture_recapture(df, "id", p1=0.4, p2=0.4).collect()[0]
-    # sample sizes concentrate near 800 and the Chapman estimate
-    # lands within a few se of the truth
-    assert 700 < out["n1"] < 900 and 700 < out["n2"] < 900
-    assert abs(out["n_hat"] - n) < 4 * out["se"] + 1
-    assert out["overlap"] > 0
-
-
-def test_capture_recapture_full_overlap(spark):
-    df = spark.createDataFrame([(f"x{i}",) for i in range(50)], "id string")
-    out = capture_recapture(df, "id", p1=1.0, p2=1.0).collect()[0]
-    assert out["n1"] == 50 and out["n2"] == 50 and out["overlap"] == 50
-    # N̂ = 51*51/51 - 1 = 50 exactly; se = 0
-    assert out["n_hat"] == 50.0 and out["se"] == 0.0
 
 
 def test_chao1_hand_computed(spark):
@@ -46,36 +21,3 @@ def test_chao1_saturated_corpus(spark):
     out = chao1_richness(docs, "text").collect()[0]
     assert out["f1"] == 0 and out["chao1"] == float(out["n_types"])
     assert out["coverage"] == 1.0
-
-
-def test_shift_share_identity_sums_to_delta(spark):
-    rows = (
-        [("g1", False, 10.0)] * 6 + [("g2", False, 20.0)] * 4
-        + [("g1", True, 12.0)] * 3 + [("g2", True, 22.0)] * 7
-    )
-    df = spark.createDataFrame(rows, "grp string, late boolean, v double")
-    out = {r["group"]: r for r in
-           shift_share_decomposition(df, "grp", "late", "v").collect()}
-    mean_a = (6 * 10 + 4 * 20) / 10
-    mean_b = (3 * 12 + 7 * 22) / 10
-    delta = mean_b - mean_a
-    total = sum(
-        r["mix_effect"] + r["rate_effect"] + r["interaction"]
-        for r in out.values()
-    )
-    assert abs(total - delta) < 1e-5
-    # g2 gained share of a higher-rate group: positive mix effect
-    assert out["g2"]["mix_effect"] > 0
-    assert out["g1"]["share_a"] == 0.6 and out["g1"]["share_b"] == 0.3
-
-
-def test_shift_share_missing_period_group(spark):
-    rows = [("only_a", False, 5.0), ("both", False, 1.0), ("both", True, 2.0)]
-    df = spark.createDataFrame(rows, "grp string, late boolean, v double")
-    out = {r["group"]: r for r in
-           shift_share_decomposition(df, "grp", "late", "v").collect()}
-    a = out["only_a"]
-    assert a["share_b"] == 0.0 and a["rate_b"] == 0.0
-    # its disappearance is pure mix(+interaction), zero rate effect
-    # under the convention rate_b = 0
-    assert a["rate_effect"] == round(a["share_a"] * (0 - a["rate_a"]), 6)

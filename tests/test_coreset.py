@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import math
-
 import pytest
 
 from cccatalog_spark.operators.coreset import k_center_select

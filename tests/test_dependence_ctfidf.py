@@ -5,8 +5,6 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import functions as F
-
 from cccatalog_spark.operators.ctfidf import class_tfidf_top_terms
 from cccatalog_spark.operators.dependence import (
     benford_audit,

@@ -7,8 +7,8 @@ from __future__ import annotations
 import os
 import re
 
+from cccatalog_spark.plans.catalog import CATALOG_QUERIES
 from cccatalog_spark.plans.queries import (
-    CATALOG_QUERIES,
     DRIVER_WINDOW,
     all_oracles,
     all_queries,
@@ -47,9 +47,10 @@ def test_oracles_follow_query_order():
 def test_full_inventory_counts():
     qs = all_queries()
     oracles = all_oracles()
-    # 383 = 423 less the 40 queries of the removed graph, ml_metrics
-    # and preferences families (q306 TextRank among them)
-    assert len(qs) == 383
+    # 357 = 423 less the 40 queries of the removed graph, ml_metrics
+    # and preferences families (q306 TextRank among them) and the 26
+    # of the removed experiments family (q287 Kaplan-Meier among them)
+    assert len(qs) == 357
     # every query is oracle-paired (q47/q50 gained literal-plane /
     # deterministic-quantizer oracles in round 3)
     assert sorted(set(qs) - set(oracles)) == []

@@ -1,52 +1,10 @@
-"""CUPED readout (operators/experiments.py) and WOE/IV scoring
-(operators/woe.py)."""
+"""WOE/IV scoring (operators/woe.py)."""
 
 from __future__ import annotations
 
 import math
 
-from cccatalog_spark.operators.experiments import cuped_readout
 from cccatalog_spark.operators.woe import woe_iv
-
-
-def test_cuped_matches_numpy_model(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(3)
-    x = rng.rand(200) * 10
-    noise = rng.rand(200)
-    variants = np.array(["a", "b"] * 100)
-    y = 2.0 * x + noise + (variants == "b") * 0.5
-    rows = [
-        (str(v), float(xi), float(yi))
-        for v, xi, yi in zip(variants, x, y)
-    ]
-    df = spark.createDataFrame(rows, "variant string, pre double, y double")
-    out = {r["variant"]: r for r in cuped_readout(df, "variant", "pre", "y").collect()}
-
-    theta = np.cov(x, y, bias=True)[0, 1] / np.var(x)
-    ycu = y - theta * (x - x.mean())
-    for v in ("a", "b"):
-        m = variants == v
-        assert out[v]["n_units"] == 100
-        assert abs(out[v]["mean_raw"] - round(float(y[m].mean()), 6)) < 1e-6
-        assert abs(out[v]["mean_cuped"] - round(float(ycu[m].mean()), 6)) < 1e-6
-        assert abs(out[v]["var_cuped"] - round(float(ycu[m].var()), 6)) < 1e-4
-    # the covariate soaks up nearly all variance here
-    assert out["a"]["var_reduction"] > 0.9
-    # CUPED is mean-preserving in the pooled sense, and the treatment
-    # lift survives adjustment
-    lift = out["b"]["mean_cuped"] - out["a"]["mean_cuped"]
-    assert abs(lift - 0.5) < 0.2
-
-
-def test_cuped_zero_variance_covariate_guard(spark):
-    rows = [("a", 1.0, 2.0), ("a", 1.0, 4.0), ("b", 1.0, 3.0)]
-    df = spark.createDataFrame(rows, "variant string, pre double, y double")
-    out = {r["variant"]: r for r in cuped_readout(df, "variant", "pre", "y").collect()}
-    # theta = 0 -> cuped == raw
-    assert out["a"]["mean_cuped"] == out["a"]["mean_raw"]
-    assert out["a"]["var_reduction"] == 0.0
 
 
 def test_woe_iv_hand_computed(spark):

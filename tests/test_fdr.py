@@ -1,5 +1,4 @@
-"""BH-FDR + closed-form chi-square tail (operators/fdr.py) and
-Mann-Whitney U (operators/experiments.py)."""
+"""BH-FDR + closed-form chi-square tail (operators/fdr.py)."""
 
 from __future__ import annotations
 
@@ -8,7 +7,6 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from cccatalog_spark.operators.experiments import mann_whitney_u
 from cccatalog_spark.operators.fdr import bh_fdr, chi2_sf_even_df
 
 
@@ -62,64 +60,6 @@ def test_bh_none_significant(spark):
     assert not any(r["significant"] for r in out.values())
 
 
-def _mw(spark, a_vals, b_vals):
-    rows = [(float(v), "a") for v in a_vals] + [
-        (float(v), "b") for v in b_vals
-    ]
-    df = spark.createDataFrame(rows, "x double, grp string")
-    return mann_whitney_u(df, "grp", "x", "a", "b").collect()[0]
-
-
-def test_mann_whitney_no_ties(spark):
-    r = _mw(spark, [1, 2, 3], [4, 5, 6])
-    assert (r["n_a"], r["n_b"]) == (3, 3)
-    assert r["u_a"] == 0.0
-    assert abs(r["z"] - (-4.5) / math.sqrt(5.25)) < 1e-6
-
-
-def test_mann_whitney_tie_correction(spark):
-    r = _mw(spark, [1, 1, 2], [2, 3, 3])
-    # mid-ranks 1.5/3.5/5.5; R_a = 6.5, U_a = 0.5;
-    # sigma = sqrt(0.75 * (7 - 18/30)) = sqrt(4.8)
-    assert r["u_a"] == 0.5
-    assert abs(r["z"] - (0.5 - 4.5) / math.sqrt(4.8)) < 1e-6
-
-
-def test_mann_whitney_all_tied_null_z(spark):
-    r = _mw(spark, [5, 5], [5, 5])
-    assert r["u_a"] == 2.0  # pure mid-rank mass
-    assert r["z"] is None
-
-
-def test_poisson_bootstrap_ci(spark):
-    from cccatalog_spark.operators.experiments import (
-        poisson_bootstrap_ci,
-    )
-
-    rows = [(i, float(100 + (i * 37) % 41)) for i in range(400)]
-    df = spark.createDataFrame(rows, "id long, x double")
-    r = poisson_bootstrap_ci(df, "id", "x", b=40, alpha=0.1).collect()[0]
-    mean = sum(v for _, v in rows) / len(rows)
-    assert abs(r["point"] - round(mean, 6)) < 1e-9
-    assert r["ci_lo"] <= r["point"] <= r["ci_hi"]
-    # interval is tight for n=400 (sd ~ 12, se ~ 0.6)
-    assert r["ci_hi"] - r["ci_lo"] < 5.0
-    assert r["b"] == 40 and r["n"] == 400
-    # deterministic end to end
-    r2 = poisson_bootstrap_ci(df, "id", "x", b=40, alpha=0.1).collect()[0]
-    assert r2.asDict() == r.asDict()
-
-
-def test_poisson_bootstrap_alpha_guard(spark):
-    from cccatalog_spark.operators.experiments import (
-        poisson_bootstrap_ci,
-    )
-
-    df = spark.createDataFrame([(1, 1.0)], "id long, x double")
-    with pytest.raises(ValueError):
-        poisson_bootstrap_ci(df, "id", "x", alpha=0.0)
-
-
 def test_bh_null_p_excluded(spark):
     df = spark.createDataFrame(
         [("a", None), ("b", 0.01), ("c", 0.5)], "key string, p double"
@@ -129,114 +69,3 @@ def test_bh_null_p_excluded(spark):
     assert out["b"]["m"] == 2       # m counts only testable hypotheses
     assert out["b"]["rank"] == 1 and out["b"]["significant"]
     assert not out["c"]["significant"]
-
-
-def test_poisson_bootstrap_null_id_excluded(spark):
-    from cccatalog_spark.operators.experiments import (
-        poisson_bootstrap_ci,
-    )
-
-    clean = [(i, 10.0 + i % 5) for i in range(100)]
-    df = spark.createDataFrame(
-        clean + [(None, 1e9)], "id long, x double"
-    )
-    r = poisson_bootstrap_ci(df, "id", "x", b=20).collect()[0]
-    mean = sum(v for _, v in clean) / len(clean)
-    # the null-id outlier is excluded from point AND replicas
-    assert abs(r["point"] - round(mean, 6)) < 1e-9
-    assert r["n"] == 100
-    assert r["ci_lo"] <= r["point"] <= r["ci_hi"] < 1e6
-
-
-def test_kaplan_meier_textbook(spark):
-    from cccatalog_spark.operators.experiments import kaplan_meier
-
-    # classic toy: events at t=1 (1 of 5), t=3 (2 of 3); censored at
-    # t=2 and t=4
-    rows = [
-        (1, 1, 1), (2, 2, 0), (3, 3, 1), (4, 3, 1), (5, 4, 0),
-    ]
-    df = spark.createDataFrame(rows, "sid long, dur long, ev int")
-    got = {r["t"]: r for r in kaplan_meier(df, "dur", "ev").collect()}
-    assert set(got) == {1, 3}
-    assert got[1]["n_risk"] == 5 and got[1]["n_events"] == 1
-    assert got[1]["survival"] == 0.8
-    assert got[3]["n_risk"] == 3 and got[3]["n_events"] == 2
-    assert got[3]["survival"] == round(0.8 * (1 / 3), 6)
-
-
-def test_kaplan_meier_all_die_hits_zero(spark):
-    from cccatalog_spark.operators.experiments import kaplan_meier
-
-    df = spark.createDataFrame(
-        [(1, 1, 1), (2, 2, 1)], "sid long, dur long, ev int"
-    )
-    got = {r["t"]: r["survival"] for r in kaplan_meier(df, "dur", "ev").collect()}
-    assert got[1] == 0.5 and got[2] == 0.0
-
-
-def test_ks_identical_vs_shifted(spark):
-    from cccatalog_spark.operators.experiments import ks_test
-
-    rows = [("a", float(v)) for v in range(100)] + [
-        ("b", float(v)) for v in range(100)
-    ]
-    df = spark.createDataFrame(rows, "g string, x double")
-    same = ks_test(df, "g", "x", "a", "b").collect()[0]
-    assert same["d_stat"] == 0.0 and same["p_value"] == 1.0
-    rows2 = [("a", float(v)) for v in range(100)] + [
-        ("b", float(v) + 50.0) for v in range(100)
-    ]
-    df2 = spark.createDataFrame(rows2, "g string, x double")
-    shift = ks_test(df2, "g", "x", "a", "b").collect()[0]
-    assert shift["d_stat"] == 0.5
-    assert shift["p_value"] < 0.001
-
-
-def test_effect_sizes_hand_computed(spark):
-    import math
-
-    from cccatalog_spark.operators.experiments import effect_sizes
-
-    a = [1.0, 2.0, 3.0, 4.0]
-    b = [3.0, 4.0, 5.0, 6.0]
-    rows = [("a", v) for v in a] + [("b", v) for v in b]
-    df = spark.createDataFrame(rows, "g string, x double")
-    got = effect_sizes(df, "g", "x", "a", "b").collect()[0]
-    # pooled sd: both sample variances are 5/3
-    sp = math.sqrt(5 / 3)
-    assert got["cohens_d"] == round(-2.0 / sp, 6)
-    assert got["hedges_g"] == round(-2.0 / sp * (1 - 3 / (4 * 8 - 9)), 6)
-    # pairs: a>b none except (3,3)(4,3)(4,4) ties... count strict:
-    # a<b pairs: 13, a>b pairs: 1 (4>3); delta = (1-13)/16
-    assert got["cliffs_delta"] == round((1 - 13) / 16, 6)
-
-
-def test_srm_detects_broken_split(spark):
-    from cccatalog_spark.operators.experiments import srm_check
-
-    rows = [("train",)] * 700 + [("val",)] * 100 + [("test",)] * 200
-    df = spark.createDataFrame(rows, "split string")
-    got = srm_check(
-        df, "split", {"train": 0.8, "val": 0.1, "test": 0.1}
-    ).collect()[0]
-    # chi2 = 100^2/800 + 0 + 100^2/100 = 112.5 -> p ~ e^-56 -> SRM
-    assert got["chi2"] == 112.5
-    assert got["srm"] is True
-    ok = [("train",)] * 800 + [("val",)] * 100 + [("test",)] * 100
-    got2 = srm_check(
-        spark.createDataFrame(ok, "split string"),
-        "split",
-        {"train": 0.8, "val": 0.1, "test": 0.1},
-    ).collect()[0]
-    assert got2["chi2"] == 0.0 and got2["srm"] is False
-
-
-def test_srm_rejects_even_split_count(spark):
-    import pytest as _pytest
-
-    from cccatalog_spark.operators.experiments import srm_check
-
-    df = spark.createDataFrame([("a",), ("b",)], "split string")
-    with _pytest.raises(ValueError):
-        srm_check(df, "split", {"a": 0.5, "b": 0.5})

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cccatalog_spark.functions.luhn import card_counts, luhn_valid
-from cccatalog_spark.operators.geo import haversine_km, radius_join
+from cccatalog_spark.operators.geo import radius_join
 
 
 def _hav(lat1, lon1, lat2, lon2):

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import json
-import os
 
 from cccatalog_spark.operators.temporal import segmented_trend
 from cccatalog_spark.operators.zorder import hilbert_value_frame

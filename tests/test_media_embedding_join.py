@@ -12,7 +12,6 @@ from __future__ import annotations
 
 import math
 
-import pyspark.sql.functions as F
 import pytest
 
 DIM = 8

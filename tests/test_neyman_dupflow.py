@@ -3,8 +3,6 @@ composition."""
 
 from __future__ import annotations
 
-import math
-
 from cccatalog_spark.operators.sampling import neyman_allocation
 
 

@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import functions as F
-
 from cccatalog_spark.operators.normalize import (
     normalize_image_batch,
     serialize_image_tsv,

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cccatalog_spark.operators.packing import pack_sequences, pack_stats
 
 

@@ -14,7 +14,6 @@ from cccatalog_spark.pipelines import (
     load_and_merge,
     refresh_image_view,
 )
-from cccatalog_spark.schemas import IMAGE_KEY
 
 
 def _flickr_record(i: int, views: int, license_id: str = "4") -> str:
@@ -103,7 +102,7 @@ def _with_system_cols(spark, df):
 
 
 def test_corpus_pipeline_keeps_one_canonical_per_neardup_cluster(spark):
-    from cccatalog_spark.pipelines import corpus_pipeline
+    from cccatalog_spark.plans.queries import corpus_pipeline
 
     base = (
         "the quick brown fox jumps over the lazy dog and keeps running "
@@ -131,7 +130,7 @@ def test_corpus_pipeline_keeps_one_canonical_per_neardup_cluster(spark):
 def test_frontier_pipeline_chain_properties(spark):
     import pyspark.sql.functions as F
 
-    from cccatalog_spark.pipelines import frontier_pipeline
+    from cccatalog_spark.plans.queries import frontier_pipeline
 
     urls = [
         (0, "https://h.io/a?b=2&a=1"),

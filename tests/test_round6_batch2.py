@@ -1,5 +1,4 @@
-"""Unit tests for round-6 batch-2: RAKE keywords, Simpson's-paradox
-audit."""
+"""Unit tests for round-6 batch-2: RAKE keywords."""
 
 from __future__ import annotations
 
@@ -50,42 +49,3 @@ def test_rake_word_order_preserved(spark):
     )
     out = rake_keywords(df, "text", "doc_id", stopwords=["of"]).collect()
     assert {r["phrase"] for r in out} == {"zebra apple", "mango banana"}
-
-
-def test_simpson_paradox_classic_reversal(spark):
-    from cccatalog_spark.operators.experiments import simpson_paradox_audit
-
-    rows = []
-    # dept X: treat 90 (72 yes) vs ctrl 10 (9 yes)  -> diff -0.1
-    rows += [("X", True, i < 72) for i in range(90)]
-    rows += [("X", False, i < 9) for i in range(10)]
-    # dept Y: treat 10 (2 yes) vs ctrl 90 (27 yes)  -> diff -0.1
-    rows += [("Y", True, i < 2) for i in range(10)]
-    rows += [("Y", False, i < 27) for i in range(90)]
-    df = spark.createDataFrame(rows, ["dept", "treat", "outcome"])
-    out = {
-        r["stratum"]: r
-        for r in simpson_paradox_audit(
-            df, "treat", "outcome", "dept"
-        ).collect()
-    }
-    # pooled: treat 74/100 vs ctrl 36/100 -> +0.38; both strata -0.1
-    for s in ("X", "Y"):
-        assert out[s]["diff"] == pytest.approx(-0.1, abs=1e-6)
-        assert out[s]["pooled_diff"] == pytest.approx(0.38, abs=1e-6)
-        assert out[s]["sign_flip"] is True
-
-
-def test_simpson_empty_arm_never_flags(spark):
-    from cccatalog_spark.operators.experiments import simpson_paradox_audit
-
-    rows = [("Z", True, True)] * 5 + [("W", True, True), ("W", False, False)]
-    df = spark.createDataFrame(rows, ["dept", "treat", "outcome"])
-    out = {
-        r["stratum"]: r
-        for r in simpson_paradox_audit(
-            df, "treat", "outcome", "dept"
-        ).collect()
-    }
-    assert out["Z"]["diff"] is None and out["Z"]["sign_flip"] is None
-    assert out["W"]["sign_flip"] is not None

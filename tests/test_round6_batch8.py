@@ -1,5 +1,5 @@
-"""Unit tests for round-6 batch-8 operators: Borda fusion, Cronbach's
-alpha, caliper matching, Davies-Bouldin."""
+"""Unit tests for round-6 batch-8 operators: Borda fusion,
+Davies-Bouldin."""
 
 from __future__ import annotations
 
@@ -29,63 +29,6 @@ def test_borda_total_order_and_k(spark):
     r1 = spark.createDataFrame([(i, i + 1) for i in range(5)], ["id", "rnk"])
     top = borda_fuse([r1], "id", list_len=5, k=2).collect()
     assert [r["id"] for r in top] == [0, 1]
-
-
-# -------------------------------------------------------------- Cronbach
-def test_cronbach_alpha_reference(spark):
-    from cccatalog_spark.operators.experiments import cronbach_alpha
-
-    rng = np.random.default_rng(5)
-    latent = rng.normal(size=60)
-    items = np.stack(
-        [latent + 0.3 * rng.normal(size=60) for _ in range(3)], axis=1
-    )
-    df = spark.createDataFrame(
-        [tuple(map(float, row)) for row in items], ["i1", "i2", "i3"]
-    )
-    r = cronbach_alpha(df, ["i1", "i2", "i3"]).collect()[0]
-    k = 3
-    iv = items.var(axis=0, ddof=1).sum()
-    tv = items.sum(axis=1).var(ddof=1)
-    ref = k / (k - 1) * (1 - iv / tv)
-    assert r["n"] == 60 and r["k"] == 3
-    assert r["alpha"] == pytest.approx(ref, abs=1e-6)
-    assert r["alpha"] > 0.8  # strongly correlated items
-    with pytest.raises(ValueError):
-        cronbach_alpha(df, ["i1"])
-
-
-# ------------------------------------------------------- caliper matching
-def test_caliper_matching_known_att(spark):
-    from cccatalog_spark.operators.experiments import caliper_matching
-
-    # controls at x=10 (y=1.0) and x=50 (y=3.0); treated at x=12 (y=2.0,
-    # matches only the x=10 control) and x=100 (no match)
-    rows = [
-        (1, True, 12.0, 2.0),
-        (2, True, 100.0, 9.9),
-        (3, False, 10.0, 1.0),
-        (4, False, 50.0, 3.0),
-    ]
-    df = spark.createDataFrame(rows, ["id", "tr", "x", "y"])
-    r = caliper_matching(df, "id", "tr", "x", "y", caliper=5.0).collect()[0]
-    assert r["n_treated"] == 2
-    assert r["n_matched"] == 1
-    assert r["match_rate"] == pytest.approx(0.5)
-    assert r["att"] == pytest.approx(2.0 - 1.0, abs=1e-9)
-
-
-def test_caliper_matching_averages_controls_in_radius(spark):
-    from cccatalog_spark.operators.experiments import caliper_matching
-
-    rows = [
-        (1, True, 0.0, 5.0),
-        (2, False, 1.0, 1.0),
-        (3, False, -1.0, 3.0),
-    ]
-    df = spark.createDataFrame(rows, ["id", "tr", "x", "y"])
-    r = caliper_matching(df, "id", "tr", "x", "y", caliper=2.0).collect()[0]
-    assert r["att"] == pytest.approx(5.0 - 2.0, abs=1e-9)
 
 
 # --------------------------------------------------------- Davies-Bouldin

@@ -137,83 +137,6 @@ def test_umass_zero_cooccurrence_smoothed(spark):
     assert r["umass"] == pytest.approx(math.log(1 / 2), abs=1e-6)
 
 
-# --------------------------------------------------------------- Wilcoxon
-def test_wilcoxon_signed_rank_reference(spark):
-    from cccatalog_spark.operators.experiments import wilcoxon_signed_rank
-
-    diffs = [1.0, -2.0, 3.0, -4.0, 5.0, 6.0, 0.0, 2.0]
-    df = spark.createDataFrame([(d,) for d in diffs], ["d"])
-    r = wilcoxon_signed_rank(df, "d").collect()[0]
-    nz = [d for d in diffs if d != 0]
-    n = len(nz)
-    # average ranks of |d| with the tie at |2|
-    by_abs = sorted(nz, key=abs)
-    ranks = {}
-    i = 0
-    while i < n:
-        j = i
-        while j < n and abs(by_abs[j]) == abs(by_abs[i]):
-            j += 1
-        for t in range(i, j):
-            ranks[t] = (i + 1 + j) / 2.0
-        i = j
-    wp = sum(ranks[t] for t in range(n) if by_abs[t] > 0)
-    assert r["n_nonzero"] == n
-    assert r["w_plus"] == pytest.approx(wp, abs=1e-9)
-    tsum = sum(
-        t**3 - t
-        for t in __import__("collections")
-        .Counter(abs(d) for d in nz)
-        .values()
-    )
-    mu = n * (n + 1) / 4
-    var = n * (n + 1) * (2 * n + 1) / 24 - tsum / 48
-    assert r["z"] == pytest.approx((wp - mu) / math.sqrt(var), abs=1e-6)
-
-
-def test_wilcoxon_symmetric_is_small(spark):
-    from cccatalog_spark.operators.experiments import wilcoxon_signed_rank
-
-    diffs = [float(i) for i in range(1, 21)] + [
-        -float(i) for i in range(1, 21)
-    ]
-    df = spark.createDataFrame([(d,) for d in diffs], ["d"])
-    r = wilcoxon_signed_rank(df, "d").collect()[0]
-    assert abs(r["z"]) < 0.1  # perfectly symmetric differences
-
-
-# ------------------------------------------------------------ Mood median
-def test_mood_median_reference(spark):
-    from cccatalog_spark.operators.experiments import mood_median_test
-
-    rows = [("a", float(v)) for v in range(1, 11)] + [
-        ("b", float(v)) for v in range(8, 18)
-    ]
-    df = spark.createDataFrame(rows, ["g", "v"])
-    r = mood_median_test(df, "g", "v").collect()[0]
-    vals = sorted(v for _, v in rows)
-    gm = vals[(len(vals) + 1) // 2 - 1]  # lower discrete median
-    assert r["grand_median"] == pytest.approx(gm)
-    assert r["n"] == 20 and r["k"] == 2 and r["dof"] == 1
-
-    # python contingency chi2
-    import collections
-
-    cells = collections.defaultdict(lambda: [0, 0])
-    for g, v in rows:
-        cells[g][0 if v > gm else 1] += 1
-    ta = sum(c[0] for c in cells.values())
-    tb = sum(c[1] for c in cells.values())
-    n = ta + tb
-    chi2 = 0.0
-    for c in cells.values():
-        rn = c[0] + c[1]
-        chi2 += (c[0] - rn * ta / n) ** 2 / (rn * ta / n)
-        chi2 += (c[1] - rn * tb / n) ** 2 / (rn * tb / n)
-    assert r["chi2"] == pytest.approx(chi2, abs=1e-6)
-    assert r["chi2"] > 3.8  # shifted groups disagree with the median
-
-
 # ------------------------------------------------------------ entropy rate
 def test_char_entropy_rate_uniform_vs_constant(spark):
     from cccatalog_spark.operators.corpus_stats import char_entropy_rate

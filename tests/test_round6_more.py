@@ -1,5 +1,5 @@
-"""Round-6 batch C: CMH pooled odds, Markov transition entropy,
-zone-map pruning audit."""
+"""Round-6 batch C: Markov transition entropy, zone-map pruning
+audit."""
 
 from __future__ import annotations
 
@@ -8,60 +8,6 @@ import math
 import pytest
 
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
-
-
-def test_cmh_odds_hand_computed(spark):
-    from cccatalog_spark.operators.experiments import cmh_odds
-
-    # two strata with opposite marginal tilts (Simpson-style setup)
-    # stratum X: a=10 b=5 c=4 d=8 ; stratum Y: a=2 b=6 c=5 d=10
-    rows = (
-        [("X", True, True)] * 10
-        + [("X", True, False)] * 5
-        + [("X", False, True)] * 4
-        + [("X", False, False)] * 8
-        + [("Y", True, True)] * 2
-        + [("Y", True, False)] * 6
-        + [("Y", False, True)] * 5
-        + [("Y", False, False)] * 10
-    )
-    df = spark.createDataFrame(rows, ["s", "t", "o"])
-    out = cmh_odds(df, "t", "o", "s").collect()[0]
-
-    def cell(n1, n2):
-        return n1, n2
-
-    strata = {"X": (10, 5, 4, 8), "Y": (2, 6, 5, 10)}
-    num = den = sa = se = sv = 0.0
-    for a, b, c, d in strata.values():
-        n = a + b + c + d
-        num += a * d / n
-        den += b * c / n
-        sa += a
-        se += (a + b) * (a + c) / n
-        sv += (a + b) * (c + d) * (a + c) * (b + d) / (n * n * (n - 1))
-    assert out["strata"] == 2
-    assert out["n"] == sum(sum(v) for v in strata.values())
-    assert out["or_mh"] == pytest.approx(num / den, abs=1e-6)
-    assert out["chi2_mh"] == pytest.approx(
-        (sa - se) ** 2 / sv, abs=1e-6
-    )
-
-
-def test_cmh_single_stratum_equals_plain_or(spark):
-    from cccatalog_spark.operators.experiments import cmh_odds
-
-    rows = (
-        [("s", True, True)] * 6
-        + [("s", True, False)] * 2
-        + [("s", False, True)] * 3
-        + [("s", False, False)] * 9
-    )
-    df = spark.createDataFrame(rows, ["s", "t", "o"])
-    out = cmh_odds(df, "t", "o", "s").collect()[0]
-    assert out["or_mh"] == pytest.approx(
-        (6 * 9) / (2 * 3), abs=1e-6
-    )
 
 
 def test_transition_entropy_deterministic_chain_is_zero(spark):
@@ -300,35 +246,6 @@ def test_l_diversity_null_sensitive_counts_as_value(spark):
     assert out["at_risk"] is False
 
 
-def test_logrank_identical_groups_chi2_small(spark):
-    from cccatalog_spark.operators.experiments import logrank_test
-
-    # mirror-image cohorts -> O_A == E_A exactly -> chi2 == 0
-    rows = []
-    for g in ("A", "B"):
-        rows += [(g, 1, 1), (g, 2, 1), (g, 3, 0), (g, 5, 1)]
-    df = spark.createDataFrame(rows, ["g", "dur", "ev"])
-    out = logrank_test(df, "dur", "ev", "g", "A", "B").collect()[0]
-    assert out["n_a"] == out["n_b"] == 4
-    assert out["o_a"] == 3
-    assert out["e_a"] == pytest.approx(3.0, abs=1e-9)
-    assert out["chi2"] == pytest.approx(0.0, abs=1e-9)
-
-
-def test_logrank_hand_computed_separated(spark):
-    from cccatalog_spark.operators.experiments import logrank_test
-
-    # A dies at t=1,1 ; B dies at t=3,3 (no censoring)
-    rows = [("A", 1, 1), ("A", 1, 1), ("B", 3, 1), ("B", 3, 1)]
-    df = spark.createDataFrame(rows, ["g", "dur", "ev"])
-    out = logrank_test(df, "dur", "ev", "g", "A", "B").collect()[0]
-    # t=1: d=2, n=4, nA=2 -> E+=1, V+=2*.5*.5*(2/3)=1/3
-    # t=3: d=2, n=2, nA=0 -> E+=0, V+=0
-    assert out["o_a"] == 2
-    assert out["e_a"] == pytest.approx(1.0, abs=1e-9)
-    assert out["chi2"] == pytest.approx(1.0 / (1 / 3), abs=1e-6)
-
-
 def test_path_patterns_counts_and_order(spark):
     from cccatalog_spark.operators.temporal import path_patterns
 
@@ -357,72 +274,6 @@ def test_path_patterns_no_cross_key_windows(spark):
     out = path_patterns(df, "k", "t", "s", length=2, top_k=10).collect()
     pats = {(r["step_1"], r["step_2"]) for r in out}
     assert pats == {("a", "b"), ("c", "d")}
-
-
-def test_kruskal_wallis_textbook(spark):
-    from cccatalog_spark.operators.experiments import kruskal_wallis
-
-    # no ties, hand-computable: groups of distinct values
-    rows = (
-        [("a", v) for v in (1.0, 2.0, 3.0)]
-        + [("b", v) for v in (4.0, 5.0, 6.0)]
-        + [("c", v) for v in (7.0, 8.0, 9.0)]
-    )
-    df = spark.createDataFrame(rows, ["g", "x"])
-    out = kruskal_wallis(df, "g", "x").collect()[0]
-    # ranks 1..9; R_a=6, R_b=15, R_c=24; H = 12/(9*10)*(12+75+192)-30
-    want = 12.0 / 90.0 * (36 / 3 + 225 / 3 + 576 / 3) - 3 * 10
-    assert out["k"] == 3 and out["n"] == 9
-    assert out["h"] == pytest.approx(want, abs=1e-6)
-    assert out["h_corrected"] == pytest.approx(want, abs=1e-6)
-
-
-def test_kruskal_wallis_all_ties_null(spark):
-    from cccatalog_spark.operators.experiments import kruskal_wallis
-
-    df = spark.createDataFrame(
-        [("a", 1.0), ("a", 1.0), ("b", 1.0)], ["g", "x"]
-    )
-    out = kruskal_wallis(df, "g", "x").collect()[0]
-    assert out["h_corrected"] is None
-
-
-def test_kruskal_wallis_tie_correction(spark):
-    from cccatalog_spark.operators.experiments import kruskal_wallis
-
-    rows = [("a", 1.0), ("a", 2.0), ("b", 2.0), ("b", 3.0)]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    out = kruskal_wallis(df, "g", "x").collect()[0]
-    # midranks: 1, 2.5, 2.5, 4 -> R_a=3.5, R_b=6.5
-    h = 12.0 / 20.0 * (3.5**2 / 2 + 6.5**2 / 2) - 15.0
-    corr = 1.0 - (2**3 - 2) / (4**3 - 4)
-    assert out["h"] == pytest.approx(h, abs=1e-6)
-    assert out["h_corrected"] == pytest.approx(h / corr, abs=1e-6)
-
-
-def test_brown_forsythe_unequal_spread(spark):
-    from cccatalog_spark.operators.experiments import brown_forsythe
-
-    # group a tight around its median, b wide around its own
-    rows = [("a", v) for v in (10.0, 10.1, 9.9, 10.05, 9.95)] + [
-        ("b", v) for v in (10.0, 15.0, 5.0, 12.0, 8.0)
-    ]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    out = brown_forsythe(df, "g", "x").collect()[0]
-    assert out["k"] == 2 and out["n"] == 10
-    assert out["f_stat"] > 5.0  # clearly heteroscedastic
-
-
-def test_brown_forsythe_equal_spread_small_f(spark):
-    from cccatalog_spark.operators.experiments import brown_forsythe
-
-    rows = [("a", v) for v in (1.0, 2.0, 3.0)] + [
-        ("b", v + 100.0) for v in (1.0, 2.0, 3.0)
-    ]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    out = brown_forsythe(df, "g", "x").collect()[0]
-    # same shape around each median -> deviations identical -> F = 0
-    assert out["f_stat"] == pytest.approx(0.0, abs=1e-9)
 
 
 def test_ridge_regression_recovers_planted_model(spark):

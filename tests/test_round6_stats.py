@@ -1,6 +1,6 @@
 """Unit tests for the round-6 statistics/quality additions: one-way
 ANOVA, Cramér's V, categorical profile, constraint audit, RFM
-quantile codes, ACF, Nelson–Aalen, and the seasonal-naïve MASE
+quantile codes, ACF and the seasonal-naïve MASE
 benchmark. Each checks against an independently-computed (numpy or
 hand-folded) expectation on a small frame with known structure."""
 
@@ -211,27 +211,6 @@ def test_acf_skips_gap_pairs(spark):
     out = {r["lag"]: r for r in acf_lags(df, "t", "v", 2).collect()}
     assert out[1]["n_pairs"] == 2
     assert out[2]["n_pairs"] == 1
-
-
-def test_nelson_aalen_hand_computed(spark):
-    from cccatalog_spark.operators.experiments import nelson_aalen
-
-    # durations: events at t=1 (2 of 5 at risk), t=3 (1 of 2);
-    # censored at t=2 and t=4
-    rows = [(1, 1), (1, 1), (2, 0), (3, 1), (4, 0)]
-    df = spark.createDataFrame(rows, ["dur", "ev"])
-    out = {r["t"]: r for r in nelson_aalen(df, "dur", "ev").collect()}
-    assert set(out) == {1, 3}
-    assert out[1]["n_risk"] == 5 and out[1]["n_events"] == 2
-    assert out[1]["cum_hazard"] == pytest.approx(2 / 5, abs=1e-6)
-    assert out[3]["n_risk"] == 2
-    assert out[3]["cum_hazard"] == pytest.approx(2 / 5 + 1 / 2, abs=1e-6)
-    assert out[3]["var_hazard"] == pytest.approx(
-        2 / 25 + 1 / 4, abs=1e-6
-    )
-    assert out[3]["fh_survival"] == pytest.approx(
-        math.exp(-0.9), abs=1e-6
-    )
 
 
 def test_seasonal_naive_mase_lag1_is_one(spark):

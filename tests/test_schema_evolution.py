@@ -10,7 +10,6 @@ import os
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cccatalog_spark.operators.merge import merge_upsert

@@ -1,14 +1,7 @@
-"""seasonal_decompose (operators/temporal.py), jackknife_ratio and
-permutation_test (operators/experiments.py)."""
+"""seasonal_decompose (operators/temporal.py)."""
 
 from __future__ import annotations
 
-import math
-
-from cccatalog_spark.operators.experiments import (
-    jackknife_ratio,
-    permutation_test,
-)
 from cccatalog_spark.operators.temporal import seasonal_decompose
 
 
@@ -47,56 +40,3 @@ def test_seasonal_decompose_odd_period(spark):
     assert abs(out[5]["trend"] - 1.0) < 1e-6
     assert abs(out[5]["seasonal"] - (5 % 3 - 1.0)) < 1e-6
     assert abs(out[5]["resid"]) < 1e-6
-
-
-def test_jackknife_ratio_matches_numpy(spark):
-    import numpy as np
-
-    rng = np.random.RandomState(7)
-    y = rng.rand(30) * 10 + 5
-    x = rng.rand(30) + 1
-    rows = [("g", float(a), float(b)) for a, b in zip(y, x)]
-    df = spark.createDataFrame(rows, "grp string, y double, x double")
-    out = jackknife_ratio(df, "grp", "y", "x").collect()[0]
-    loo = np.array(
-        [(y.sum() - y[i]) / (x.sum() - x[i]) for i in range(len(y))]
-    )
-    se = math.sqrt((len(y) - 1) / len(y) * ((loo - loo.mean()) ** 2).sum())
-    assert out["n"] == 30
-    assert abs(out["ratio"] - round(float(y.sum() / x.sum()), 6)) < 1e-6
-    assert abs(out["se_jack"] - se) < 1e-5
-    assert abs((out["ci_hi"] - out["ci_lo"]) - 2 * 1.96 * se) < 1e-3
-
-
-def test_jackknife_ratio_degenerate_guards(spark):
-    # n=1 group: se undefined; group with sx - x_i = 0: se undefined
-    rows = [("a", 2.0, 3.0), ("b", 1.0, 0.0), ("b", 1.0, 5.0)]
-    df = spark.createDataFrame(rows, "grp string, y double, x double")
-    out = {r["group"]: r for r in jackknife_ratio(df, "grp", "y", "x").collect()}
-    assert out["a"]["se_jack"] is None
-    assert out["a"]["ratio"] is not None
-    # b: one LOO has sx - x = 0 -> that replica is null -> nr < n -> null se
-    assert out["b"]["se_jack"] is None
-
-
-def test_permutation_test_detects_separation(spark):
-    # wildly separated groups: observed diff far beyond any relabeling
-    rows = [("a", f"i{i}", 100.0 + i) for i in range(30)] + [
-        ("b", f"j{i}", 0.0 + i) for i in range(30)
-    ]
-    df = spark.createDataFrame(rows, "grp string, id string, x double")
-    out = permutation_test(df, "grp", "x", "a", "b", k=99, id_col="id").collect()[0]
-    assert out["n_a"] == 30 and out["n_b"] == 30
-    assert out["observed_diff"] == 100.0
-    assert out["k"] == 99
-    assert out["p_value"] == round(1 / 100, 6)
-
-
-def test_permutation_test_null_under_exchangeability(spark):
-    # identical distributions: p should be large (not significant)
-    rows = [("a", f"i{i}", float(i % 7)) for i in range(40)] + [
-        ("b", f"j{i}", float((i + 3) % 7)) for i in range(40)
-    ]
-    df = spark.createDataFrame(rows, "grp string, id string, x double")
-    out = permutation_test(df, "grp", "x", "a", "b", k=99, id_col="id").collect()[0]
-    assert out["p_value"] > 0.2

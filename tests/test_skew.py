@@ -3,8 +3,6 @@ under a pathologically hot key."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
 from cccatalog_spark.operators.skew import salted_join
 
 

@@ -47,8 +47,6 @@ SANCTIONED_BNLJ = {
     "q391_mcnemar_gates": "1-row contingency fold (conditional sums)",
     "q394_query_likelihood": "|q|-row (3) query-term frame crossed "
     "onto hit docs + 1-row collection-length broadcast",
-    "q415_mood_median": "1-row grand-median broadcast (value-catalog "
-    "cumsum scalar)",
     "q417_term_burstiness": "1-row doc-count broadcast onto the "
     "50-term stats catalog",
     "q418_hitting_time": "k-row state-catalog rounds (transition "
@@ -74,15 +72,10 @@ SANCTIONED_BNLJ = {
     "label catalog",
     "q406_source_kl": "1-row corpus-total + 51-bucket catalog "
     "broadcasts",
-    "q409_cronbach_alpha": "1-row moment fold",
-    "q410_caliper_matching": "1-row n_treated broadcast onto the "
-    "matched-unit aggregate",
     "q411_davies_bouldin": "k-row centroid-catalog pair join (k^2 "
     "rows, corpus never pairs)",
     "q377_heavy_hitters": "1-row corpus-total broadcast onto the "
     "bounded MG candidate counts",
-    "q382_simpson_paradox": "1-row pooled-rates broadcast over the "
-    "stratum catalog",
     "q383_alignment_uniformity": "1-row alignment x uniformity report "
     "fold",
     "q388_banned_phrases": "k-row phrase catalog cross (the scan-side "
@@ -95,8 +88,6 @@ SANCTIONED_BNLJ = {
     "broadcast under the one-row strength aggregate",
     "q302_seasonal_decompose": "1-row seasonal-mean recentering "
     "broadcast over the day catalog",
-    "q304_permutation_test": "1-row observed-stat broadcast onto the "
-    "replica axis + 1-row hit-count fold",
     "q309_kendall_tau": "1-row marginal-tie scalars broadcast",
     "q310_mann_kendall": "1-row S/tie scalars broadcast",
     "q312_concentration": "1-row category-total broadcast over the "
@@ -106,11 +97,8 @@ SANCTIONED_BNLJ = {
     "value catalog",
     "q319_chi2_residuals": "1-row N broadcast over the contingency "
     "catalog",
-    "q323_shift_share": "1-row split-day scalar broadcast",
-    "q325_qte": "9-row decile grid broadcast over the value catalogs",
     "q326_nearest_centroid": "k-row label-centroid catalog broadcast "
     "(the kmeans_assign sanction)",
-    "q328_diff_in_diff": "1-row split-day scalar broadcast",
     "q331_segmented_trend": "1-row totals broadcast over the day "
     "catalog + 1-row argmin fold",
     "q332_jsonl_quarantine": "1-row quarantine-count fold",
@@ -128,12 +116,6 @@ SANCTIONED_BNLJ = {
     "if plans shift",
     "q344_next_event_latency": "1-row summary fold over the latency "
     "catalog",
-    "q321_capture_recapture": "listed for the 1-row Chapman fold if "
-    "plans shift",
-    "q324_always_valid_p": "listed for the cum-window folds if plans "
-    "shift",
-    "q329_mde_curve": "listed for the cum-window folds if plans "
-    "shift",
     # round-6 second-wave batch: all 1-row scalar / ≤k-row catalog
     # cross-broadcasts (totals, mean/denominator, tie scalars, grids)
     "q346_constraint_audit": "1-row metric-scalars x 1-row FK-coverage "
@@ -149,10 +131,7 @@ SANCTIONED_BNLJ = {
     "broadcast (both bounded catalogs)",
     "q364_skew_report": "1-row total/keys scalar broadcast",
     "q365_l_diversity": "1-row release-total scalar broadcast",
-    "q366_logrank": "1-row cohort totals x 1-row O/E/V fold",
     "q367_path_patterns": "1-row window-total scalar broadcast",
-    "q369_kruskal_wallis": "1-row N/tie scalars broadcast over the "
-    "group rank catalog",
     "q350_categorical_profile": "listed for the per-column folds if "
     "plans shift",
     "q361_embedding_health": "listed for the 1-row audit fold if "
@@ -170,19 +149,12 @@ SANCTIONED_BNLJ = {
     "q289_theil_sen": "daily-catalog pairwise-slope self-join "
     "(catalog^2, bounded; raw rows never pair-joined) + 1-row median "
     "broadcast",
-    "q287_kaplan_meier": "per-duration catalog windows; no join "
-    "flags expected (listed for the scalar broadcast if plans shift)",
     "q294_rbo_ann_agreement": "k-row top-k list catalogs: depth-grid "
     "non-equi join + 1-row k broadcast (plus q26/q47's probe "
     "broadcasts upstream)",
     "q284_eb_reputation": "1-row corpus-prior scalar broadcast",
     "q285_contrastive_pairs": "1-row corpus-size scalar broadcast "
     "(the q118 negative-draw contract)",
-    "q296_ks_test": "1-row (n_a, n_b) totals broadcast over the "
-    "distinct-value catalog",
-    "q297_effect_sizes": "1-row moments + delta-numerator broadcasts",
-    "q298_srm_check": "1-row split-total scalar broadcast over the "
-    "3-row split catalog",
     "q272_min_k_prob": "1-row vocabulary-size scalar broadcast (the "
     "q103 contract)",
     "q273_ccnet_ppl_buckets": "1-row vocabulary-size scalar broadcast "
@@ -229,8 +201,6 @@ SANCTIONED_BNLJ = {
     "q264_good_turing": "1-row token-total scalar broadcast (the "
     "mass_share denominator; spectrum math runs on the <=max_r-row "
     "catalog)",
-    "q260_bootstrap_ci": "1-row bounds/point frames cross-combined "
-    "(the b-row replica catalog reduced to scalars)",
     "q261_matryoshka_audit": "1-row probe vector + |dims|-row dim "
     "catalog broadcasts (every row scores every prefix dim by "
     "construction — the q26/q96 linear-scan contract)",
@@ -258,7 +228,6 @@ SANCTIONED_BNLJ = {
     "the interleave (q130's sanctioned shape)",
     "q217_association_rules": "1-row basket-count scalar broadcast (support floor and lift denominator)",
     "q218_record_linkage": "1-row Fellegi-Sunter weights catalog cross-broadcast into the blocked candidates",
-    "q221_cuped_experiment": "1-row theta/mean(X) catalog from one global aggregate, cross-broadcast into the per-unit frame",
     "q222_woe_iv": "1-row min/max bounds, totals, and IV scalars cross-broadcast around a <=n_bins-row contingency",
     "q226_mutual_information": "1-row total/entropy scalars cross-broadcast around the |cells|-row contingency",
     "q227_benford_audit": "1-row total and chi-square scalars cross-broadcast around the 9-row digit frame",

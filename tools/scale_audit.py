@@ -63,23 +63,9 @@ SANCTIONED_GLOBAL_WINDOW = {
     # BH step-up ranks the m-row HYPOTHESIS CATALOG (m = number of
     # tests, 20 here), never the corpus — fdr.bh_fdr docstring
     "q255_bh_fdr",
-    # rank-sum mid-ranks cumsum over the DISTINCT-VALUE catalog
-    # (value-domain-bounded; the corpus collapses to per-value counts
-    # in one aggregate first) — experiments.mann_whitney_u docstring
-    "q256_mann_whitney",
-    # same q256 class: Wilcoxon's average ranks are a cumsum over the
-    # |d| DISTINCT-VALUE catalog (one groupBy collapses the corpus to
-    # per-value counts first) — experiments.wilcoxon_signed_rank
-    "q414_wilcoxon_signed_rank",
-    # same class: Mood's grand median is the value-catalog cumsum
-    # (the mad_outliers discipline) — experiments.mood_median_test
-    "q415_mood_median",
     # q302's sanctioned day-CATALOG moving-average window, reused by
     # the strength readout built on top of it
     "q420_seasonality_strength",
-    # percentile selection over the b-row REPLICA-MEAN catalog
-    # (b = 50 bootstrap replicas) — experiments.poisson_bootstrap_ci
-    "q260_bootstrap_ci",
     # argmin rank over the |divisors|-row (b,r) combo catalog — a
     # pure-math planner with no corpus input (planner.lsh_parameter_plan)
     "q262_lsh_plan",
@@ -87,13 +73,10 @@ SANCTIONED_GLOBAL_WINDOW = {
     # ≤#partitions offsets frame (cumsum.py:63-70), plus the 10-row
     # checkpoint regression catalog (corpus_stats.heaps_law_fit)
     "q265_heaps_law",
-    # CDF cumsum over the DISTINCT-value catalog (the q256 contract)
+    # CDF cumsum over the DISTINCT-value catalog (value-domain-bounded;
+    # the corpus collapses to per-value counts in one aggregate first)
     # — corpus_stats.emd_1d
     "q266_emd_drift",
-    # at-risk / survival folds over the DISTINCT-DURATION catalog
-    # (value-domain-bounded; subjects collapse to per-duration counts
-    # first) — experiments.kaplan_meier
-    "q287_kaplan_meier",
     # CUSUM prefix sums / running mins over the DAILY catalog (raw
     # rows collapse to per-day means first) — temporal.cusum_changepoints
     "q288_cusum_changepoint",
@@ -104,11 +87,6 @@ SANCTIONED_GLOBAL_WINDOW = {
     # ≤#partitions offsets frame (cumsum.py:63-70) inside
     # negative_samples' dense-index build — the q118 contract
     "q285_contrastive_pairs",
-    # CDF cumsums over the DISTINCT-VALUE catalog (corpus collapses
-    # to per-value counts first — the q256 contract):
-    # experiments.ks_test / effect_sizes
-    "q296_ks_test",
-    "q297_effect_sizes",
     # mid-rank cumsums over the DISTINCT-VALUE catalogs (corpus
     # collapses to per-value counts first) — dependence.spearman_corr
     "q308_spearman",
@@ -119,10 +97,7 @@ SANCTIONED_GLOBAL_WINDOW = {
     # collapses the corpus first) — corpus_stats.concentration_report
     "q312_concentration",
     # cumulative-day windows over the PERIOD catalog (corpus collapses
-    # to per-day aggregates first) — experiments.always_valid_pvalue /
-    # mde_curve / temporal.segmented_trend
-    "q324_always_valid_p",
-    "q329_mde_curve",
+    # to per-day aggregates first) — temporal.segmented_trend
     "q331_segmented_trend",
     # curve-order lag windows over the 256-row CELL catalog —
     # zorder.hilbert locality audit
@@ -133,21 +108,11 @@ SANCTIONED_GLOBAL_WINDOW = {
     # three two-phase rank passes: each single-partition window is the
     # ≤#partitions offsets frame (cumsum.py:63-70) — segments.rfm
     "q347_rfm_segments",
-    # at-risk / hazard folds over the DISTINCT-DURATION catalog
-    # (the q287 Kaplan-Meier contract) — experiments.nelson_aalen
-    "q351_nelson_aalen",
-    # at-risk folds over the DISTINCT-DURATION catalog (same
-    # contract) — experiments.logrank_test
-    "q366_logrank",
-    # mid-rank cumsum over the 50-value quantity catalog (the q256
-    # rank-statistics contract) — experiments.kruskal_wallis
-    "q369_kruskal_wallis",
     # exact-disc p50/p90 cumsum over the DISTINCT-LATENCY catalog
-    # (the corpus collapses to per-latency counts first — the q256
-    # contract) — temporal.next_event_latency summary in q344
+    # (the corpus collapses to per-latency counts first) — temporal.next_event_latency summary in q344
     "q344_next_event_latency",
     # split-candidate cumsums over the DISTINCT-VALUE catalog (corpus
-    # collapses to per-value counts first — the q256 contract) —
+    # collapses to per-value counts first) —
     # classifier.decision_stump
     "q384_decision_stump",
     # share windows over the k x |strata| CELL catalog (one groupBy
@@ -249,13 +214,6 @@ FAMILIES = {
     "novelty-single-min-aggregate": (
         "q301_ngram_novelty",
         {"joins": 1, "exchanges": 4},
-    ),
-    # permutation test: k relabelings ride ONE exploded axis into a
-    # (replica,label) aggregate — zero joins, cost k×scan, never n²
-    # (experiments.permutation_test)
-    "permutation-explode-constant": (
-        "q304_permutation_test",
-        {"joins": 0, "exchanges": 7},
     ),
     # JL audit: projection is a narrow map (plan-literal matrix, no
     # UDF); ONE consecutive-id self-join; one 1-row report aggregate
@@ -441,13 +399,6 @@ FAMILIES = {
         "q371_ridge_regression",
         {"joins": 0, "exchanges": 1},
     ),
-    # Brown-Forsythe: group-partitioned median windows + ONE broadcast
-    # join back + one ANOVA aggregate (experiments.brown_forsythe) —
-    # no single-partition window anywhere.
-    "brown-forsythe-group-windows": (
-        "q370_brown_forsythe",
-        {"joins": 1, "exchanges": 4},
-    ),
     # embedding audits: health is ONE aggregate pass; separability is
     # one melt + (label,dim) aggregate (embedding_quality.py).
     "embedding-health-one-pass": (
@@ -512,13 +463,6 @@ FAMILIES = {
     "kl-bucketed-vocab": (
         "q406_source_kl",
         {"joins": 6, "exchanges": 28},
-    ),
-    # caliper matching: the range join is BANDED (caliper-width
-    # buckets ±1, the geo-radius pattern) — ONE join, candidates
-    # density-bounded (experiments.caliper_matching).
-    "caliper-banded-join": (
-        "q410_caliper_matching",
-        {"joins": 1, "exchanges": 6},
     ),
     # Davies-Bouldin: two corpus passes (centroid catalog, scatter
     # against the broadcast catalog); the (i,j) stage is a k²-row
