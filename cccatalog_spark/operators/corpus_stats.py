@@ -507,7 +507,7 @@ def heaps_law_fit(
         # + 0.0 normalizes IEEE −0.0 to +0.0: with a degenerate grid
         # (tiny corpora) beta rounds to zero whose SIGN is association
         # noise — the one case the driver's %.10g canonicalizer
-        # distinguishes ("−0" vs "0"); same idiom as q148's oracle
+        # distinguishes ("−0" vs "0")
         (F.round(beta, 6) + F.lit(0.0)).alias("beta"),
         (F.round(k, 6) + F.lit(0.0)).alias("k"),
     )
@@ -524,8 +524,7 @@ def emd_1d(
     groups' distributions of a numeric column — the drift metric with
     actual units (``EMD = ∫|CDF_a - CDF_b| dx``, i.e. "how far does
     mass move, in the column's units"), complementing PSI (q235,
-    bin-share ratios) and the Sinkhorn plan (q249, categorical with a
-    cost model).
+    bin-share ratios).
 
     Returns one row ``(n_a, n_b, n_support, emd)`` (rounded 6).
 

@@ -79,7 +79,7 @@ def jaro_winkler(a: str, b: str) -> float:
 
 def _jw_udf():
     # defined lazily: pandas_udf needs an active session to parse the
-    # return type (repo convention, cf. operators/bloom.py)
+    # return type (repo convention)
     @pandas_udf("double")
     def jw(
         it: Iterator[Tuple[pd.Series, pd.Series]]

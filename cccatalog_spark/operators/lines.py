@@ -362,9 +362,8 @@ def banned_phrase_audit(
     phrases: list[str],
 ) -> DataFrame:
     """Compliance scan: exact-substring occurrence counts for a
-    curated banned/watched phrase list (the blocklist's content-side
-    twin — operators/blocklist.py gates URLs, this gates text). Per
-    phrase: documents hit, total occurrences, hit rate.
+    curated banned/watched phrase list. Per phrase: documents hit,
+    total occurrences, hit rate.
 
     The phrase catalog is broadcast (compliance lists are small by
     construction); occurrences per (doc, phrase) are computed with the

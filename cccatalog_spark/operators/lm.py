@@ -121,9 +121,9 @@ def min_k_prob_score(
     tail score means even the document's worst tokens are predictable
     — the membership-inference signal for "the model has seen this";
     pipelines use it to audit eval-set contamination beyond exact
-    n-gram overlap (operators/bloom.py's family).  Model here is the
-    same exact relational add-one bigram LM as ``bigram_lm_score``, so
-    the whole audit sits under a SQL oracle.
+    n-gram overlap.  Model here is the same exact relational add-one
+    bigram LM as ``bigram_lm_score``, so the whole audit sits under a
+    SQL oracle.
 
     Returns ``(id, n_bigrams, n_scored, mink_nll)``; documents with
     fewer than two tokens emit no row.

@@ -606,12 +606,11 @@ def media_embedding_ivf_join(
         F.explode("_lids").alias("_ivf_list"),
     )
 
-    # --- per-list cogroup GEMM scorer (guide §4.2, the
-    # covariance_matrix_np pattern): pairs are never materialized in
-    # the JVM — each probed list's media×catalog block is scored as
-    # one numpy accumulation (dim-ascending, the exact _dot fold
-    # order), divided by the precomputed norms in the same operation
-    # order as the per-pair expression. A rounding-safe margin prune
+    # --- per-list cogroup GEMM scorer (guide §4.2): pairs are never
+    # materialized in the JVM — each probed list's media×catalog block
+    # is scored as one numpy accumulation (dim-ascending, the exact
+    # _dot fold order), divided by the precomputed norms in the same
+    # operation order as the per-pair expression. A rounding-safe margin prune
     # (keep everything within 2e-6 of the per-media kth best in the
     # list; round-to-6 maps any candidate that could still rank ≤ k
     # inside that margin) bounds what crosses back to the JVM: the

@@ -29,7 +29,7 @@ Example specs below model the two biggest providers:
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame

@@ -23,11 +23,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-# Hard cap on any "bounded catalog" the driver-side iteration rounds
-# are allowed to collect (ipf_weights here; ot.sinkhorn_transport uses
-# the same bound): generous for category x category contingency
-# tables, tiny for driver memory, and a loud failure for callers who
-# pass corpus-cardinality columns.
+# Hard cap on the "bounded catalog" ipf_weights' driver-side iteration
+# rounds are allowed to collect: generous for category x category
+# contingency tables, tiny for driver memory, and a loud failure for
+# callers who pass corpus-cardinality columns.
 _BOUNDED_CATALOG_MAX_CELLS = 200_000
 
 BUCKETS = 16**4  # 4 hex chars

@@ -234,9 +234,8 @@ def sessionize(
 ) -> DataFrame:
     """Batch gap-based sessionization: a new session starts when the
     gap to the key's previous event exceeds ``gap_seconds``. Adds
-    ``session_id`` (1-based per key, in time order) — the batch form
-    of streaming/windows' merging session windows (q111), and the
-    standard lag-flag-cumsum window composition:
+    ``session_id`` (1-based per key, in time order) — the standard
+    lag-flag-cumsum window composition:
 
         flag = (ts − lag(ts) > gap);  session_id = 1 + Σ flag
 

@@ -2867,35 +2867,6 @@ def q87_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q88 — q87's per-source cap through the skew-safe two-phase top-k
-# (operators/topk.grouped_topk with a salt): identical rows by
-# algebra (top-k of a union == top-k of the per-salt top-ks), same
-# oracle — pins the hot-key scale path to an exact-value check.
-# ---------------------------------------------------------------------------
-@query(
-    "q88_source_cap_salted",
-    oracle=ORACLE["q87_source_cap"],
-)
-def q88_source_cap_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.topk import grouped_topk
-
-    d = load_table(spark, sf_dir, "documents")
-    kept = grouped_topk(
-        d,
-        ["source"],
-        [F.desc("n_chars"), F.asc("doc_id")],
-        10,
-        salt_col=F.col("doc_id"),
-        salt_buckets=8,
-    )
-    return kept.groupBy("source").agg(
-        F.count("*").alias("n_kept"),
-        F.sum("n_chars").alias("sum_chars"),
-        F.min("n_chars").alias("min_chars"),
-    )
-
-
-# ---------------------------------------------------------------------------
 # q89 — exact duplicated-substring (k-token-gram span) profiling: the
 # Lee et al. (ACL 2022) suffix-array training-data dedup re-expressed
 # as one gram-frequency window + one per-doc interval-union window
@@ -3009,140 +2980,6 @@ def q92_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.explode(toks).alias("item"))
     )
     return heavy_hitters(items, "item", min_share=0.02, capacity=256)
-
-
-# ---------------------------------------------------------------------------
-# q91 — q80's decontamination through the Bloom-filter scale path
-# (operators/bloom.py): when the benchmark shingle set is too large to
-# broadcast as rows, it broadcasts as BITS (xxhash64 positions folded
-# by a bit_or aggregate) and prunes the training stream before the
-# exact verify join — no false negatives, false positives removed by
-# the verify stage, so the result stays value-exact against the same
-# join oracle (contaminated docs only).
-# ---------------------------------------------------------------------------
-@query(
-    "q91_bloom_decontaminate",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id,
-               list_filter(string_split_regex(text, '\\s+'),
-                           x -> x <> '') AS t
-        FROM documents),
-    sh AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                   range(1, greatest(len(t) - 7, 0) + 1),
-                   i -> array_to_string(list_slice(t, i, i + 7), ' ')))
-                   AS grams
-        FROM toks),
-    bench AS (
-        SELECT DISTINCT unnest(grams) AS g FROM sh WHERE doc_id % 50 = 0),
-    train AS (SELECT doc_id, unnest(grams) AS g FROM sh
-              WHERE doc_id % 50 <> 0)
-    SELECT train.doc_id, count(*) AS n_hits
-    FROM train JOIN bench ON train.g = bench.g
-    GROUP BY train.doc_id
-    """,
-)
-def q91_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.functions.text import shingles
-    from cccatalog_spark.operators.bloom import (
-        bloom_build,
-        bloom_filter_candidates,
-    )
-
-    num_bits, num_hashes = 1 << 18, 3
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sh = d.select("doc_id", shingles(F.col("text"), 8).alias("grams"))
-    # persist: bench (the small distinct benchmark-gram set, 2% of
-    # docs) is consumed twice — collected into the bloom bitmap AND
-    # broadcast into the exact-verify join. Without the persist the
-    # benchmark shingling runs twice; the cached frame is bounded by
-    # the benchmark's gram vocabulary at any corpus scale.
-    bench = (
-        sh.where(F.col("doc_id") % 50 == 0)
-        .select(F.explode("grams").alias("g"))
-        .distinct()
-        .persist()
-    )
-    words = spark.sparkContext.broadcast(
-        bloom_build(bench, "g", num_bits, num_hashes)
-    )
-    train = sh.where(F.col("doc_id") % 50 != 0).select(
-        "doc_id", F.explode("grams").alias("g")
-    )
-    cand = bloom_filter_candidates(train, "g", words, num_bits, num_hashes)
-    return (
-        cand.join(F.broadcast(bench), "g")
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_hits"))
-    )
-
-
-# ---------------------------------------------------------------------------
-# q93 — custom stateful streaming operator under an exact oracle
-# (streaming/stateful.running_counts, applyInPandasWithState): three
-# event micro-batches drain through per-key state; each trigger emits
-# the key's updated running total, so the last (= max, counts are
-# monotone) update per key must equal the plain batch count — which is
-# exactly what the oracle asserts. State is one long per key; the
-# escape hatch the built-in streaming aggs can't express (SURVEY §2.9).
-# ---------------------------------------------------------------------------
-@query(
-    "q93_stateful_running_counts",
-    oracle="""
-    SELECT event_type, count(*) AS n
-    FROM events WHERE event_id % 4 = 1
-    GROUP BY event_type
-    """,
-)
-def q93_stateful_running_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import running_counts
-
-    base = tempfile.mkdtemp(prefix="ccc_state_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-
-    e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 4 == 1)
-    write_replay_batches(
-        base,
-        src,
-        [
-            e.where(F.col("event_id") % 3 == i).select("event_type")
-            for i in range(3)
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    counts = running_counts(stream, "event_type")
-    sink = f"q93_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, dir_bytes(src)):
-        q = (
-            counts.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(
-        f"SELECT event_type, max(n) AS n FROM {sink} GROUP BY event_type"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -3275,92 +3112,6 @@ def q95_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q96_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.kmeans_assign(e, "embedding", "vec_id", n_seeds=8)
-
-
-# ---------------------------------------------------------------------------
-# q98 — streaming first-seen dedup by key (streaming/stateful.
-# dedup_first_seen): three micro-batches, per-key seen-flag state,
-# append mode — the exactly-once ingest primitive (replayed rows never
-# re-enter). Deterministic: batches drain oldest-first and within a
-# trigger the key's head row is picked by (sec, event_id); the oracle
-# replays the identical (batch, sec, event_id) ranking.
-# ---------------------------------------------------------------------------
-@query(
-    "q98_stream_dedup_first_seen",
-    oracle="""
-    WITH e AS (SELECT user_id, event_type,
-                      CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-                      event_id, event_id % 3 AS b
-               FROM events WHERE event_id % 4 = 2),
-    r AS (SELECT *, row_number() OVER (PARTITION BY user_id
-                                       ORDER BY b, sec, event_id) AS rn
-          FROM e)
-    SELECT user_id, event_type, sec FROM r WHERE rn = 1
-    """,
-)
-def q98_stream_dedup_first_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import dedup_first_seen
-
-    base = tempfile.mkdtemp(prefix="ccc_fsd_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-
-    e = load_table(spark, sf_dir, "events").where(
-        F.col("event_id") % 4 == 2
-    ).select(
-        "event_id",
-        "user_id",
-        "event_type",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    write_replay_batches(
-        base,
-        src,
-        [e.where(F.col("event_id") % 3 == i) for i in range(3)],
-    )  # oldest-first drain
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, event_type string, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    first = dedup_first_seen(
-        stream,
-        "user_id",
-        "user_id long, event_type string, sec long",
-        ["sec", "event_id"],
-    )
-    sink = f"q98_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            first.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT user_id, event_type, sec FROM {sink}")
 
 
 # ---------------------------------------------------------------------------
@@ -3706,119 +3457,6 @@ def q105_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q106 — stream-stream event-time interval join (streaming/joins.py):
-# click→purchase attribution per user within 30 minutes, both sides
-# replayed as 2 time-ordered micro-batches each. Inner joins emit
-# eagerly and the replay watermark exceeds the span, so the streaming
-# result equals the batch interval join — the oracle is that plain
-# SQL join. Cross-batch matches exercise the symmetric keyed state.
-# ---------------------------------------------------------------------------
-@query(
-    "q106_stream_stream_join",
-    oracle="""
-    WITH e AS (SELECT event_id, user_id, event_type,
-                      CAST(floor(epoch(ts)) AS BIGINT) AS sec
-               FROM events),
-    c AS (SELECT event_id AS click_id, user_id, sec AS click_sec
-          FROM e WHERE event_type = 'click'),
-    p AS (SELECT event_id AS purchase_id, user_id, sec AS purchase_sec
-          FROM e WHERE event_type = 'purchase')
-    SELECT c.click_id, p.purchase_id, c.user_id,
-           c.click_sec, p.purchase_sec
-    FROM c JOIN p
-      ON c.user_id = p.user_id
-     AND p.purchase_sec >= c.click_sec
-     AND p.purchase_sec <= c.click_sec + 1800
-    """,
-)
-def q106_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.joins import interval_join_streams
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-
-    base = tempfile.mkdtemp(prefix="ccc_ssj_")
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    cutoff = 1705363200  # 2024-01-16: splits the 30-day span mid-way
-    srcs = {}
-    for side, etype in (("click", "click"), ("purchase", "purchase")):
-        src = os.path.join(base, side)
-        os.makedirs(src)
-        srcs[side] = src
-        side_df = e.where(F.col("event_type") == etype).select(
-            "event_id", "user_id", "sec"
-        )
-        write_replay_batches(
-            os.path.join(base, f"stage_{side}"),
-            src,
-            [
-                side_df.where(pred)
-                for pred in (
-                    F.col("sec") < cutoff,
-                    F.col("sec") >= cutoff,
-                )
-            ],
-        )
-
-    def read_side(src: str, id_alias: str, ts_alias: str) -> DataFrame:
-        return (
-            spark.readStream.option("sep", "\t")
-            .schema("event_id long, user_id long, sec long")
-            .option("maxFilesPerTrigger", "1")
-            .csv(src)
-            .select(
-                F.col("event_id").alias(id_alias),
-                "user_id",
-                F.timestamp_seconds(F.col("sec")).alias(ts_alias),
-            )
-        )
-
-    joined = interval_join_streams(
-        read_side(srcs["click"], "click_id", "click_ts"),
-        read_side(srcs["purchase"], "purchase_id", "purchase_ts"),
-        "user_id",
-        "click_ts",
-        "purchase_ts",
-        max_gap="30 minutes",
-        watermark="60 days",  # > replay span: nothing expires mid-drain
-    )
-    out = joined.select(
-        "click_id",
-        "purchase_id",
-        "user_id",
-        F.unix_seconds(F.col("click_ts")).alias("click_sec"),
-        F.unix_seconds(F.col("purchase_ts")).alias("purchase_sec"),
-    )
-    sink = f"q106_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark, dir_bytes(srcs["click"]) + dir_bytes(srcs["purchase"])
-    ):
-        q = (
-            out.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {sink}")
-
-
-# ---------------------------------------------------------------------------
 # q107 — mergeable partial-aggregate rollup (operators/rollup_state.
 # py): daily partials (count/sum/min/max + HLL registers) re-merged to
 # weekly grain WITHOUT touching raw rows. HLL registers merge by max
@@ -3971,124 +3609,6 @@ def q109_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return token_budget_take(
         d, "source", "n_tokens", 500, ["doc_id"], cum_col="cum_tokens"
-    )
-
-
-# ---------------------------------------------------------------------------
-# q110 — feature hashing (operators/features.py): vocabulary-free
-# signed hashed bag-of-words, 64 buckets — md5-deterministic buckets
-# and signs so the oracle rebuilds identical sparse vectors. One
-# explode + one (doc, bucket) groupBy.
-# ---------------------------------------------------------------------------
-@query(
-    "q110_feature_hashing",
-    oracle=f"""
-    WITH t AS (SELECT doc_id,
-                      unnest(list_transform({_TOKS}, x -> lower(x))) AS tok
-               FROM documents),
-    hx AS (SELECT doc_id, md5(tok) AS hx FROM t),
-    hh AS (SELECT doc_id, {_KMV_FOLD} AS h FROM hx),
-    s AS (SELECT doc_id, h % 64 AS bucket,
-                 CASE WHEN (h // 64) % 2 = 0 THEN 1 ELSE -1 END AS sg
-          FROM hh)
-    SELECT doc_id, bucket, CAST(sum(sg) AS BIGINT) AS weight
-    FROM s GROUP BY 1, 2 HAVING sum(sg) <> 0
-    """,
-)
-def q110_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import hashed_bow
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return hashed_bow(d, "text", "doc_id", dim=64)
-
-
-# ---------------------------------------------------------------------------
-# q111 — streaming session windows (streaming/windows.session_counts):
-# per-user merging-session state over a 2-batch replay, 30-minute gap.
-# Complete-mode drain of a bounded replay equals batch sessionization,
-# so the oracle is q31's lag/cumsum form with window bounds
-# (end = last event + gap). Events staged as integer seconds so both
-# engines session the identical time domain.
-# ---------------------------------------------------------------------------
-@query(
-    "q111_stream_sessions",
-    oracle="""
-    WITH e AS (SELECT user_id, event_id,
-                      CAST(floor(epoch(ts)) AS BIGINT) AS sec
-               FROM events),
-    x AS (SELECT user_id, event_id, sec,
-                 CASE WHEN sec - lag(sec) OVER (
-                          PARTITION BY user_id ORDER BY sec, event_id)
-                          > 1800
-                      THEN 1 ELSE 0 END AS brk
-          FROM e),
-    g AS (SELECT user_id, sec,
-                 sum(brk) OVER (PARTITION BY user_id
-                                ORDER BY sec, event_id
-                                ROWS UNBOUNDED PRECEDING) AS sid
-          FROM x)
-    SELECT user_id, min(sec) AS start_sec, max(sec) + 1800 AS end_sec,
-           count(*) AS n_events
-    FROM g GROUP BY user_id, sid
-    """,
-)
-def q111_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.windows import session_counts
-
-    base = tempfile.mkdtemp(prefix="ccc_sess_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    cutoff = 1705363200  # 2024-01-16: time-ordered 2-batch replay
-    write_replay_batches(
-        base,
-        src,
-        [
-            e.where(pred)
-            for pred in (F.col("sec") < cutoff, F.col("sec") >= cutoff)
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-        .select("user_id", F.timestamp_seconds(F.col("sec")).alias("ts"))
-    )
-    sess = session_counts(stream, "ts", "user_id", gap="30 minutes")
-    sink = f"q111_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, dir_bytes(src)):
-        q = (
-            sess.writeStream.outputMode("complete")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(
-        f"""SELECT user_id,
-                   unix_seconds(session_start) AS start_sec,
-                   unix_seconds(session_end) AS end_sec,
-                   n_events
-            FROM {sink}"""
     )
 
 
@@ -4413,73 +3933,6 @@ def q119_ann_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q120 — engine-native replay dedup (streaming/stateful.
-# dedup_within_watermark → dropDuplicatesWithinWatermark): batch 1 is
-# fully re-delivered inside batch 2 plus new rows (at-least-once
-# replay); every event_id emits exactly once. Oracle: plain DISTINCT
-# over the subset — the replay horizon is inside the watermark, so
-# the streaming result equals batch dedup.
-# ---------------------------------------------------------------------------
-@query(
-    "q120_stream_replay_dedup",
-    oracle="""
-    SELECT event_id, user_id,
-           CAST(floor(epoch(ts)) AS BIGINT) AS sec
-    FROM events WHERE event_type = 'error'
-    """,
-)
-def q120_stream_replay_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import dedup_within_watermark
-
-    base = tempfile.mkdtemp(prefix="ccc_rdd_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "error"
-    ).select(
-        "event_id",
-        "user_id",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    first = e.where(F.col("event_id") % 2 == 0)
-    # batch 2 re-delivers ALL of batch 1
-    write_replay_batches(base, src, [first, e])
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-        .withColumn("ts", F.timestamp_seconds(F.col("sec")))
-    )
-    deduped = dedup_within_watermark(stream, ["event_id"], "ts", "60 days")
-    sink = f"q120_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, dir_bytes(src)):
-        q = (
-            deduped.select("event_id", "user_id", "sec")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT event_id, user_id, sec FROM {sink}")
-
-
-# ---------------------------------------------------------------------------
 # q121 — per-source data card (the corpus composition report a
 # training run records next to the data: volume, token mass, language
 # spread, exact-dup rate, short-doc rate). One scan + one groupBy —
@@ -4526,82 +3979,6 @@ def q121_corpus_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("short_frac"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# q122 — stream-static enrichment (streaming/joins.enrich_stream):
-# a 2-batch replay of view events joined per-trigger against a batch
-# user-profile dim (total event counts). Stateless broadcast join per
-# micro-batch; equals the batch join, which is the oracle.
-# ---------------------------------------------------------------------------
-@query(
-    "q122_stream_enrich",
-    oracle="""
-    WITH d AS (SELECT user_id, count(*) AS user_total
-               FROM events GROUP BY 1),
-    v AS (SELECT event_id, user_id,
-                 CAST(floor(epoch(ts)) AS BIGINT) AS sec
-          FROM events WHERE event_type = 'view')
-    SELECT v.event_id, v.user_id, v.sec, d.user_total
-    FROM v JOIN d ON v.user_id = d.user_id
-    """,
-)
-def q122_stream_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.joins import enrich_stream
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-
-    base = tempfile.mkdtemp(prefix="ccc_enr_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    ev = load_table(spark, sf_dir, "events")
-    dim = ev.groupBy("user_id").agg(F.count("*").alias("user_total"))
-    views = ev.where(F.col("event_type") == "view").select(
-        "event_id",
-        "user_id",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    write_replay_batches(
-        base,
-        src,
-        [
-            views.where(pred)
-            for pred in (
-                F.col("event_id") % 2 == 0,
-                F.col("event_id") % 2 == 1,
-            )
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    out = enrich_stream(stream, dim, ["user_id"], how="inner")
-    sink = f"q122_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, dir_bytes(src)):
-        q = (
-            out.select("event_id", "user_id", "sec", "user_total")
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(f"SELECT * FROM {sink}")
 
 
 # ---------------------------------------------------------------------------
@@ -4828,33 +4205,6 @@ def q127_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return pmi_pairs(d, "text", "doc_id", min_count=5, k=20)
-
-
-# ---------------------------------------------------------------------------
-# q128 — JL random projection (operators/features.random_projection):
-# 64-d embeddings → 8-d via a derandomized Achlioptas sign matrix
-# (pure integer formula, reproduced exactly by the oracle). Zero
-# shuffles — entirely map-side column algebra.
-# ---------------------------------------------------------------------------
-@query(
-    "q128_random_projection",
-    oracle="""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings)
-    SELECT vec_id, j AS dim,
-           round(sum(e[i+1]
-                     * sign(CAST(((i*31 + j*17) % 7) - 3 AS DOUBLE))), 6)
-             + CAST(0 AS DOUBLE) AS value
-    FROM v,
-         LATERAL unnest(generate_series(0, len(e) - 1)) AS gi(i),
-         LATERAL unnest(generate_series(0, 7)) AS gj(j)
-    GROUP BY 1, 2
-    """,
-)
-def q128_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import random_projection
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return random_projection(emb, "embedding", "vec_id", out_dim=8)
 
 
 # ---------------------------------------------------------------------------
@@ -5092,60 +4442,6 @@ def q134_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q135 — distributed BPE merge learning (operators/bpe.learn_merges):
-# 6 rounds of adjacent-pair counting over the word-TYPE table (vocab
-# rows, corpus scanned once) + deterministic argmax + codegen'd fold
-# merge. Oracle: the same 6 rounds unrolled as CTE stages over a
-# unit-separator symbol encoding (replace() is greedy left-to-right
-# non-overlapping, exactly the BPE apply step).
-# ---------------------------------------------------------------------------
-def _q135_oracle(n_merges: int = 6) -> str:
-    us = "chr(31)"
-    parts = [
-        f"""
-    WITH toks AS (SELECT {_TOKS} AS t FROM documents),
-    wf AS (SELECT w AS word, count(*) AS freq
-           FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-    w0 AS (SELECT {us} || array_to_string(string_split(word, ''), {us})
-                    || {us} AS s, freq
-           FROM wf)"""
-    ]
-    for i in range(n_merges):
-        parts.append(
-            f""",
-    p{i} AS (
-      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
-      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
-            FROM w{i}),
-           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
-      GROUP BY 1, 2
-    ),
-    t{i} AS (SELECT a, b, cnt FROM p{i}
-             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-    w{i + 1} AS (
-      SELECT replace(w.s, {us} || t.a || {us} || t.b || {us},
-                     {us} || t.a || t.b || {us}) AS s, w.freq
-      FROM w{i} w, t{i} t
-    )"""
-        )
-    selects = [
-        f"""SELECT {i + 1} AS step, a AS "left", b AS "right",
-               a || b AS merged, CAST(cnt AS BIGINT) AS pair_count
-        FROM t{i}"""
-        for i in range(n_merges)
-    ]
-    return "".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
-
-
-@query("q135_bpe_learn", oracle=_q135_oracle(6))
-def q135_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.bpe import learn_merges_df
-
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    return learn_merges_df(spark, docs, TX.tokens(F.col("text")), 6)
-
-
-# ---------------------------------------------------------------------------
 # q136 — fractional-epoch corpus upsampling (operators/sampling.
 # epoch_repeat): the training mixture table ("2.4 epochs of src1, 0.25
 # of src2, 3.0 of src3, 0.5 of src4, 1.0 elsewhere") realized as
@@ -5351,62 +4647,6 @@ def q139_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q140 — BPE encode + per-source compression report (operators/bpe.
-# encode_report): learn 6 merges (q135's trainer) then APPLY them —
-# both on the word-type table; the corpus is scanned once for
-# (source, word) counts and the encode lengths re-join at vocab
-# granularity. Oracle carries the word identity through the same 6
-# unrolled replace() stages.
-# ---------------------------------------------------------------------------
-def _q140_oracle(n_merges: int = 6) -> str:
-    us = "chr(31)"
-    sql = f"""
-    WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
-    wsrc AS (SELECT source, w AS word, count(*) AS cnt
-             FROM (SELECT source, unnest(t) AS w FROM toks) GROUP BY 1, 2),
-    wf AS (SELECT word, sum(cnt) AS freq FROM wsrc GROUP BY 1),
-    w0 AS (SELECT word, {us} || array_to_string(string_split(word, ''), {us})
-                    || {us} AS s, freq
-           FROM wf)"""
-    for i in range(n_merges):
-        sql += f""",
-    p{i} AS (
-      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
-      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
-            FROM w{i}),
-           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
-      GROUP BY 1, 2
-    ),
-    t{i} AS (SELECT a, b FROM p{i}
-             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-    w{i + 1} AS (
-      SELECT w.word,
-             replace(w.s, {us} || t.a || {us} || t.b || {us},
-                     {us} || t.a || t.b || {us}) AS s, w.freq
-      FROM w{i} w, t{i} t
-    )"""
-    sql += f"""
-    SELECT ws.source,
-           CAST(sum(ws.cnt * len(ws.word)) AS BIGINT) AS symbols_before,
-           CAST(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
-                AS BIGINT) AS symbols_after,
-           round(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
-                 / CAST(sum(ws.cnt * len(ws.word)) AS DOUBLE), 6)
-             AS compression
-    FROM wsrc ws JOIN w{n_merges} f USING (word)
-    GROUP BY 1"""
-    return sql
-
-
-@query("q140_bpe_encode_report", oracle=_q140_oracle(6))
-def q140_bpe_encode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.bpe import encode_report
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    return encode_report(docs, TX.tokens(F.col("text")), "source", 6)
-
-
-# ---------------------------------------------------------------------------
 # q141 — count-min sketch frequency estimation (functions/sketches.
 # cms_counters / cms_estimate): 4×256 mergeable counters over the
 # corpus token stream, probed for the exact top-20 words — estimate
@@ -5486,99 +4726,6 @@ def q142_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return robust_outliers(d, "source", "n_chars", "doc_id", z=3.0).select(
         "doc_id", "source", "n_chars", "median", "deviation", "mad",
         "is_outlier",
-    )
-
-
-# ---------------------------------------------------------------------------
-# q143 — cross-batch EWMA drift tracker on Spark 4's
-# transformWithState API (streaming/stateful.ewma_tracker): per-user
-# exponentially-weighted mean of click values folded across two
-# micro-batches in event_id order; ValueState carries (s, n). The
-# latest emission per key equals the closed form Σ α(1−α)^{n−i}x_i —
-# which is exactly what the oracle computes.
-# ---------------------------------------------------------------------------
-@query(
-    "q143_stream_ewma",
-    oracle="""
-    WITH e AS (SELECT user_id, event_id, value,
-                      row_number() OVER (PARTITION BY user_id
-                                         ORDER BY event_id) AS rn,
-                      count(*) OVER (PARTITION BY user_id) AS n
-               FROM events WHERE event_type = 'click')
-    SELECT user_id, CAST(max(n) AS BIGINT) AS n,
-           round(sum(CASE WHEN rn = 1 THEN power(0.7, n - 1) * value
-                          ELSE 0.3 * power(0.7, n - rn) * value END), 6)
-             AS ewma
-    FROM e GROUP BY user_id
-    """,
-)
-def q143_stream_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import ewma_tracker
-
-    base = tempfile.mkdtemp(prefix="ccc_ewma_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "click"
-    ).select("user_id", "event_id", "value")
-    # Order-preserving two-way split WITHOUT a driver collect: ntile(2)
-    # over event_id hands the lower half of ids to batch 0 and the
-    # upper half to batch 1, so the micro-batch sequence replays rows
-    # in global event_id order (the only property the oracle needs).
-    # Single-partition window is fine: this is test-fixture staging
-    # that already coalesce(1)s into one TSV per batch.
-    halved = e.withColumn(
-        "_half", F.ntile(2).over(Window.orderBy("event_id"))
-    )
-    write_replay_batches(
-        base,
-        src,
-        [
-            halved.where(F.col("_half") == 1).drop("_half"),
-            halved.where(F.col("_half") == 2).drop("_half"),
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("user_id long, event_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    tracked = ewma_tracker(stream, "user_id", "value", "event_id", 0.3)
-    sink = f"q143_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            tracked.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(
-            F.max("n").alias("n"),
-            F.round(F.max_by("ewma", "n"), 6).alias("ewma"),
-        )
     )
 
 
@@ -5765,43 +4912,6 @@ def q147_gapfill_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return resample_ffill(
         e, "user_id", F.to_date("ts"), F.col("value")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q148 — distributed covariance matrix (operators/features.
-# covariance_matrix): the PCA/whitening second-moment aggregation over
-# the 64-dim embeddings — upper triangle as (i, j, cov) rows, one
-# map-side-combined shuffle of ~d²/2 keys. Eigendecomposition of the
-# 2080-row result is driver-side numpy by design.
-# ---------------------------------------------------------------------------
-@query(
-    "q148_covariance_matrix",
-    oracle="""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-    x AS (SELECT vec_id, i, e[i] AS xi
-          FROM v, LATERAL unnest(generate_series(1, 64)) g(i)),
-    m AS (SELECT i, sum(xi) AS s FROM x GROUP BY 1)
-    SELECT a.i, b.i AS j,
-           round(sum(a.xi * b.xi) / max(n.n)
-                 - (max(ma.s) / max(n.n)) * (max(mb.s) / max(n.n)), 6)
-             + 0.0 AS cov
-    FROM x a
-    JOIN x b ON a.vec_id = b.vec_id AND a.i <= b.i, n
-    JOIN m ma ON ma.i = a.i
-    JOIN m mb ON mb.i = b.i
-    GROUP BY a.i, b.i
-    """,
-)
-def q148_covariance_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # numpy-GEMM partials (pinned equal to the expression path by
-    # tests/test_features.py): ~2.6x less per-row work at d=64
-    from cccatalog_spark.operators.features import covariance_matrix_np
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    return covariance_matrix_np(emb, "embedding", 64).select(
-        "i", "j", (F.round("cov", 6) + F.lit(0.0)).alias("cov")
     )
 
 
@@ -6185,89 +5295,6 @@ def q155_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("wmedian"),
         F.col("total_weight").cast("long").alias("total_weight"),
     )
-
-
-# ---------------------------------------------------------------------------
-# q156 — streaming per-key admission quota (streaming/stateful.
-# quota_admit): first 20 click events per user across two replayed
-# micro-batches, cross-batch admitted-count state. Oracle: the batch
-# row_number form of the same cap.
-# ---------------------------------------------------------------------------
-@query(
-    "q156_stream_quota",
-    oracle="""
-    SELECT user_id, event_id, value FROM (
-      SELECT user_id, event_id, value,
-             row_number() OVER (PARTITION BY user_id ORDER BY event_id)
-               AS rn
-      FROM events WHERE event_type = 'click')
-    WHERE rn <= 20
-    """,
-)
-def q156_stream_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import quota_admit
-
-    base = tempfile.mkdtemp(prefix="ccc_quota_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "click"
-    ).select("user_id", "event_id", "value")
-    # Order-preserving two-way split WITHOUT a driver collect: ntile(2)
-    # over event_id hands the lower half of ids to batch 0 and the
-    # upper half to batch 1, so the micro-batch sequence replays rows
-    # in global event_id order (the only property the oracle needs).
-    # Single-partition window is fine: this is test-fixture staging
-    # that already coalesce(1)s into one TSV per batch.
-    halved = e.withColumn(
-        "_half", F.ntile(2).over(Window.orderBy("event_id"))
-    )
-    write_replay_batches(
-        base,
-        src,
-        [
-            halved.where(F.col("_half") == 1).drop("_half"),
-            halved.where(F.col("_half") == 2).drop("_half"),
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("user_id long, event_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    admitted = quota_admit(
-        stream, "user_id", ["event_id"], 20,
-        "user_id long, event_id long, value double",
-    )
-    sink = f"q156_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            admitted.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return spark.table(sink)
 
 
 # ---------------------------------------------------------------------------
@@ -7443,8 +6470,7 @@ def q182_incremental_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q183 — batch sessionization (operators/temporal.sessionize): 1-hour
 # gap sessions per user over the event stream, rolled up to per-
-# session stats — the batch twin of q111's streaming session windows
-# (lag-flag-cumsum, one exchange, two streaming windows).
+# session stats (lag-flag-cumsum, one exchange, two windows).
 # ---------------------------------------------------------------------------
 @query(
     "q183_batch_sessions",
@@ -7708,82 +6734,6 @@ def q188_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q189/q190 — PCA by power iteration (operators/features.
-# pca_power_component / pca_project): the distributed half is the one
-# d²/2-key covariance shuffle (q148); every later frame is a bounded
-# d- or d²-row catalog, normalized via 1-row cross-broadcast, no
-# collect, no sign flip (identical arithmetic both
-# engines). The oracle unrolls the 3 deterministic iterations from
-# v0 = 1/√64 and the same Rayleigh-quotient eigenvalue.
-# ---------------------------------------------------------------------------
-_PCA_CHAIN = """
-    v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-    x AS (SELECT vec_id, i, e[i] AS xi
-          FROM v, LATERAL unnest(generate_series(1, 64)) g(i)),
-    c AS (SELECT a.i AS i, b.i AS j,
-                 sum(a.xi * b.xi) / max(n.n)
-                 - (sum(a.xi) / max(n.n)) * (sum(b.xi) / max(n.n)) AS cov
-          FROM x a JOIN x b USING (vec_id), n GROUP BY 1, 2),
-    v0 AS (SELECT unnest(generate_series(1, 64)) AS i, 0.125 AS val),
-    w1 AS (SELECT c.i, sum(c.cov * v.val) AS w
-           FROM c JOIN v0 v ON c.j = v.i GROUP BY 1),
-    v1 AS (SELECT i, w / (SELECT sqrt(sum(w * w)) FROM w1) AS val FROM w1),
-    w2 AS (SELECT c.i, sum(c.cov * v.val) AS w
-           FROM c JOIN v1 v ON c.j = v.i GROUP BY 1),
-    v2 AS (SELECT i, w / (SELECT sqrt(sum(w * w)) FROM w2) AS val FROM w2),
-    w3 AS (SELECT c.i, sum(c.cov * v.val) AS w
-           FROM c JOIN v2 v ON c.j = v.i GROUP BY 1),
-    v3 AS (SELECT i, w / (SELECT sqrt(sum(w * w)) FROM w3) AS val FROM w3),
-    w4 AS (SELECT c.i, sum(c.cov * v.val) AS w
-           FROM c JOIN v3 v ON c.j = v.i GROUP BY 1),
-    lam AS (SELECT sum(v3.val * w4.w) AS ev
-            FROM v3 JOIN w4 ON v3.i = w4.i)
-"""
-
-
-@query(
-    "q189_pca_power",
-    oracle=f"""
-    WITH {_PCA_CHAIN}
-    SELECT v3.i AS i, round(v3.val, 6) AS loading,
-           round(lam.ev, 6) AS eigenvalue
-    FROM v3, lam
-    """,
-)
-def q189_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import pca_power_component
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    comp = pca_power_component(emb, "embedding", 64, n_iter=3)
-    return comp.select(
-        "i", F.round("loading", 6).alias("loading"),
-        F.round("eigenvalue", 6).alias("eigenvalue"),
-    )
-
-
-@query(
-    "q190_pca_project",
-    oracle=f"""
-    WITH {_PCA_CHAIN}
-    SELECT x.vec_id, round(sum(x.xi * v3.val), 6) AS pc1
-    FROM x JOIN v3 ON x.i = v3.i
-    GROUP BY 1
-    """,
-)
-def q190_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import (
-        pca_power_component,
-        pca_project,
-    )
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    comp = pca_power_component(emb, "embedding", 64, n_iter=3)
-    proj = pca_project(emb, "embedding", "vec_id", comp)
-    return proj.select("vec_id", F.round("pc1", 6).alias("pc1"))
-
-
-# ---------------------------------------------------------------------------
 # q191 — mergeable histogram quantile state (operators/quantiles.
 # histogram_partials / merge_histogram_partials /
 # quantiles_from_histogram): partials built at (event_type, day)
@@ -7997,129 +6947,6 @@ def q194_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         e, "user_id", "sec", "event_type",
         ["view", "click", "purchase"],
         within=86400, tiebreak_col="event_id",
-    )
-
-
-# ---------------------------------------------------------------------------
-# q195 — STREAMING CEP (streaming/stateful.match_sequence_stream):
-# the greedy view→click→purchase automaton of q194 carried across a
-# 2-batch time-ordered replay in keyed state — buffered step-type
-# events bounded by the match window (expired anchors retry
-# immediately). Drained output equals the batch operator exactly, so
-# the oracle is the SAME recursive-CTE automaton replay.
-# ---------------------------------------------------------------------------
-@query(
-    "q195_stream_event_pattern",
-    oracle="""
-    WITH RECURSIVE ev AS (
-      SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, event_type,
-             row_number() OVER (PARTITION BY user_id
-                                ORDER BY CAST(floor(epoch(ts)) AS BIGINT),
-                                         event_id) AS rn
-      FROM events),
-    lists AS (
-      SELECT user_id,
-             list(rn ORDER BY rn) FILTER (event_type = 'view')     AS l1,
-             list(rn ORDER BY rn) FILTER (event_type = 'click')    AS l2,
-             list(rn ORDER BY rn) FILTER (event_type = 'purchase') AS l3,
-             list(sec ORDER BY rn) AS secs
-      FROM ev GROUP BY 1),
-    m AS (
-      SELECT user_id, CAST(0 AS BIGINT) AS ptr,
-             CAST(NULL AS BIGINT) AS s_sec, CAST(NULL AS BIGINT) AS e_sec
-      FROM lists
-      UNION ALL
-      SELECT user_id, new_ptr, s_sec, e_sec FROM (
-        SELECT m.user_id,
-               list_min(list_filter(l.l1, r -> r > m.ptr)) AS a_rn,
-               list_min(list_filter(l.l2, r -> r > a_rn)) AS b_rn,
-               list_min(list_filter(l.l3, r -> r > b_rn)) AS c_rn,
-               CASE WHEN c_rn IS NULL THEN NULL
-                    WHEN l.secs[CAST(c_rn AS INT)]
-                         - l.secs[CAST(a_rn AS INT)] <= 86400
-                    THEN c_rn ELSE a_rn END AS new_ptr,
-               CASE WHEN c_rn IS NOT NULL
-                     AND l.secs[CAST(c_rn AS INT)]
-                         - l.secs[CAST(a_rn AS INT)] <= 86400
-                    THEN l.secs[CAST(a_rn AS INT)] END AS s_sec,
-               CASE WHEN c_rn IS NOT NULL
-                     AND l.secs[CAST(c_rn AS INT)]
-                         - l.secs[CAST(a_rn AS INT)] <= 86400
-                    THEN l.secs[CAST(c_rn AS INT)] END AS e_sec
-        FROM m JOIN lists l USING (user_id)
-      ) WHERE new_ptr IS NOT NULL
-    )
-    SELECT user_id,
-           CAST(row_number() OVER (PARTITION BY user_id
-                                   ORDER BY s_sec, e_sec) AS INT) AS match_n,
-           s_sec AS start_sec, e_sec AS end_sec
-    FROM m WHERE s_sec IS NOT NULL
-    """,
-)
-def q195_stream_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import match_sequence_stream
-
-    base = tempfile.mkdtemp(prefix="ccc_cep_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "user_id",
-        "event_type",
-        (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-        .cast("long")
-        .alias("sec"),
-    )
-    cutoff = 1705363200  # 2024-01-16: time-ordered 2-batch replay
-    write_replay_batches(
-        base,
-        src,
-        [
-            e.where(pred)
-            for pred in (F.col("sec") < cutoff, F.col("sec") >= cutoff)
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, event_type string, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    matches = match_sequence_stream(
-        stream, "user_id", "sec", "event_type",
-        ["view", "click", "purchase"],
-        within=86400, tiebreak_col="event_id",
-    )
-    sink = f"q195_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            matches.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(
-        f"SELECT user_id, match_n, start_sec, end_sec FROM {sink}"
     )
 
 
@@ -8473,150 +7300,6 @@ def q203_trimmed_mean_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.join(F.broadcast(counts), "event_type").select(
         "event_type", "n_events",
         F.round("_tm", 6).alias("trimmed_mean"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# q206 — multinomial Naive Bayes language classifier trained in-engine
-# (operators/classifier.nb_train / nb_score): the CCNet-style filter
-# trainer — train on the doc_id%5!=0 slice with lang labels, score
-# every held-out doc against every label (full score surface, argmax
-# left to the caller). One (token, label) shuffle to train; scoring
-# is explode → L-row label cross → LEFT hash join on token → one
-# (doc, label) re-agg. All smoothing terms are exact integer
-# rationals, so both engines ln() identical doubles; the per-doc sum
-# is the only order-dependent float op (round-6 rule, q189).
-# ---------------------------------------------------------------------------
-@query(
-    "q206_nb_classifier",
-    oracle=f"""
-    WITH tr AS (SELECT doc_id, lang, text FROM documents
-                WHERE doc_id % 5 <> 0),
-    te AS (SELECT doc_id, text FROM documents WHERE doc_id % 5 = 0),
-    tt AS (SELECT lang AS label,
-                  unnest(list_transform({_TOKS}, x -> lower(x))) AS token
-           FROM tr),
-    cnt AS (SELECT token, label, count(*) AS c FROM tt GROUP BY 1, 2),
-    ltot AS (SELECT label, sum(c) AS n_tok FROM cnt GROUP BY 1),
-    voc AS (SELECT count(DISTINCT token) AS v FROM cnt),
-    den AS (SELECT label, CAST(n_tok AS DOUBLE) + 1.0 * v AS denom
-            FROM ltot CROSS JOIN voc),
-    mdl AS (SELECT token, label,
-                   ln((CAST(c AS DOUBLE) + 1.0) / denom) AS log_prob
-            FROM cnt JOIN den USING (label)),
-    dc AS (SELECT lang AS label, count(*) AS n_docs FROM tr GROUP BY 1),
-    tot AS (SELECT sum(n_docs) AS t FROM dc),
-    ls AS (SELECT dc.label,
-                  ln(CAST(n_docs AS DOUBLE) / CAST(t AS DOUBLE))
-                    AS log_prior,
-                  ln(1.0 / denom) AS log_fallback
-           FROM dc CROSS JOIN tot JOIN den ON den.label = dc.label),
-    tk AS (SELECT doc_id,
-                  unnest(list_transform({_TOKS}, x -> lower(x))) AS token
-           FROM te),
-    sc AS (SELECT tk.doc_id, ls.label,
-                  coalesce(mdl.log_prob, ls.log_fallback) AS lp
-           FROM tk CROSS JOIN ls
-           LEFT JOIN mdl ON mdl.token = tk.token AND mdl.label = ls.label),
-    agg AS (SELECT doc_id, label, sum(lp) AS token_ll
-            FROM sc GROUP BY 1, 2)
-    SELECT te.doc_id, ls.label,
-           round(ls.log_prior + coalesce(agg.token_ll, 0.0), 6) AS score
-    FROM te CROSS JOIN ls
-    LEFT JOIN agg ON agg.doc_id = te.doc_id AND agg.label = ls.label
-    """,
-)
-def q206_nb_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.classifier import nb_score, nb_train
-
-    d = load_table(spark, sf_dir, "documents")
-    train = d.where(F.col("doc_id") % 5 != 0)
-    test = d.where(F.col("doc_id") % 5 == 0)
-    model = nb_train(train, "text", "lang")
-    return nb_score(test, model, "text", "doc_id").select(
-        "doc_id", "label", F.round("score", 6).alias("score")
-    )
-
-
-# ---------------------------------------------------------------------------
-# q207 — logistic-regression quality filter trained by full-batch
-# gradient descent in-engine (operators/classifier.logreg_train):
-# y = [lang = 'en'] over signed hashed bag-of-words (q110's md5
-# hashing at dim 8) + bias, 3 iterations at lr 0.5 from w = 0, then
-# the corpus scored with the final weights. Two exchanges per
-# iteration (doc margins, bucket gradients); the 9-row weight frame
-# is broadcast, lineage truncated per round. The oracle unrolls the
-# 3 deterministic iterations (q189's PCA-chain discipline).
-# ---------------------------------------------------------------------------
-def _q207_oracle() -> str:
-    head = f"""
-    WITH t AS (SELECT doc_id,
-                      unnest(list_transform({_TOKS}, x -> lower(x))) AS tok
-               FROM documents),
-    hx AS (SELECT doc_id, md5(tok) AS hx FROM t),
-    hh AS (SELECT doc_id, {_KMV_FOLD} AS h FROM hx),
-    s AS (SELECT doc_id, h % 8 AS bucket,
-                 CASE WHEN (h // 8) % 2 = 0 THEN 1 ELSE -1 END AS sg
-          FROM hh),
-    fb AS (SELECT doc_id, CAST(bucket AS INT) AS bucket,
-                  CAST(sum(sg) AS DOUBLE) AS x
-           FROM s GROUP BY 1, 2 HAVING sum(sg) <> 0
-           UNION ALL
-           SELECT doc_id, CAST(-1 AS INT), 1.0 FROM documents),
-    lab AS (SELECT doc_id,
-                   CAST(CASE WHEN lang = 'en' THEN 1.0 ELSE 0.0 END
-                        AS DOUBLE) AS y
-            FROM documents),
-    f AS (SELECT fb.doc_id, bucket, x, y FROM fb JOIN lab USING (doc_id)),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM lab),
-    w0 AS (SELECT CAST(unnest(generate_series(-1, 7)) AS INT) AS j,
-                  0.0 AS w)"""
-    steps = []
-    for k in range(1, 4):
-        p = k - 1
-        steps.append(f""",
-    m{k} AS (SELECT doc_id, sum(x * w{p}.w) AS m, max(y) AS y
-             FROM f JOIN w{p} ON f.bucket = w{p}.j GROUP BY 1),
-    r{k} AS (SELECT doc_id, 1.0 / (1.0 + exp(-m)) - y AS r FROM m{k}),
-    g{k} AS (SELECT bucket, sum(x * r) / max(n.n) AS g
-             FROM f JOIN r{k} USING (doc_id) CROSS JOIN n GROUP BY 1),
-    w{k} AS (SELECT j, w - 0.5 * coalesce(g, 0.0) AS w
-             FROM w{p} LEFT JOIN g{k} ON g{k}.bucket = w{p}.j)""")
-    tail = """,
-    mf AS (SELECT doc_id, sum(x * w3.w) AS m
-           FROM f JOIN w3 ON f.bucket = w3.j GROUP BY 1)
-    SELECT lab.doc_id, lab.y,
-           round(1.0 / (1.0 + exp(-mf.m)), 6) AS prob
-    FROM lab JOIN mf USING (doc_id)
-    """
-    return head + "".join(steps) + tail
-
-
-@query("q207_logreg_filter", oracle=_q207_oracle())
-def q207_logreg_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.classifier import (
-        logreg_predict,
-        logreg_train,
-        with_bias,
-    )
-    from cccatalog_spark.operators.features import hashed_bow
-
-    d = load_table(spark, sf_dir, "documents")
-    feats = with_bias(
-        hashed_bow(d.select("doc_id", "text"), "text", "doc_id", dim=8),
-        d,
-        "doc_id",
-    )
-    labels = d.select(
-        "doc_id",
-        F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
-    )
-    w = logreg_train(
-        feats, labels, 8, id_col="doc_id", iterations=3, lr=0.5
-    )
-    probs = logreg_predict(feats, w, id_col="doc_id")
-    return probs.join(labels, "doc_id").select(
-        "doc_id", "y", F.round("prob", 6).alias("prob")
     )
 
 
@@ -9742,96 +8425,6 @@ def q236_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q237 — SIF document embeddings (operators/features.sif_embed, Arora
-# ICLR'17): smooth-inverse-frequency weighted pooling of md5-hash
-# word vectors + first-principal-component removal — the classic
-# cheap-but-strong sentence embedding, fully derandomized so the
-# whole trajectory (freq weights, hash vectors, covariance, 3 power
-# iterations, projection removal) replays in SQL.
-# ---------------------------------------------------------------------------
-_SIF_DIM = 8
-
-
-def _q237_oracle(dim: int = _SIF_DIM, n_iter: int = 3) -> str:
-    def hv(j: int) -> str:
-        return (
-            f"((('0x' || substring(md5('wv:{j}:' || e.w), 1, 8))::BIGINT"
-            f" % 2001) - 1000) / CAST(1000.0 AS DOUBLE)"
-        )
-
-    pooled = ",\n            ".join(
-        f"sum(wgt * ({hv(j)})) / count(*) AS e{j}"
-        for j in range(1, dim + 1)
-    )
-    arr = "[" + ", ".join(f"e{j}" for j in range(1, dim + 1)) + "]"
-    parts = [
-        "WITH t AS (SELECT doc_id, list_filter(string_split_regex("
-        "text, '\\s+'), x -> x <> '') AS toks FROM documents)",
-        "e AS (SELECT doc_id, lower(unnest(toks)) AS w FROM t)",
-        "f AS (SELECT w, count(*) AS cnt FROM e GROUP BY 1)",
-        "tt AS (SELECT CAST(sum(cnt) AS DOUBLE) AS total FROM f)",
-        "wt AS (SELECT f.w, CAST(0.001 AS DOUBLE)"
-        " / (CAST(0.001 AS DOUBLE) + cnt / total) AS wgt FROM f, tt)",
-        f"""p AS (SELECT e.doc_id, count(*) AS n_tokens,
-            {pooled}
-          FROM e JOIN wt ON e.w = wt.w GROUP BY 1)""",
-        f"x AS (SELECT doc_id, i, {arr}[i] AS xi FROM p,"
-        f" unnest(generate_series(1, {dim})) g(i))",
-        "nn AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM p)",
-        "c AS (SELECT a.i AS i, b.i AS j,"
-        " sum(a.xi * b.xi) / max(nn.n)"
-        " - (sum(a.xi) / max(nn.n)) * (sum(b.xi) / max(nn.n)) AS cov"
-        " FROM x a JOIN x b USING (doc_id), nn GROUP BY 1, 2)",
-        f"v0 AS (SELECT unnest(generate_series(1, {dim})) AS i,"
-        f" 1.0 / sqrt({dim}.0) AS val)",
-    ]
-    for s in range(1, n_iter + 1):
-        parts.append(
-            f"w{s} AS (SELECT c.i, sum(c.cov * v.val) AS w"
-            f" FROM c JOIN v{s-1} v ON c.j = v.i GROUP BY 1)"
-        )
-        parts.append(
-            f"v{s} AS (SELECT i, w / (SELECT sqrt(sum(w * w))"
-            f" FROM w{s}) AS val FROM w{s})"
-        )
-    parts.append(
-        f"pc AS (SELECT x.doc_id, sum(x.xi * v.val) AS pc1"
-        f" FROM x JOIN v{n_iter} v ON x.i = v.i GROUP BY 1)"
-    )
-    parts.append(
-        f"o AS (SELECT x.doc_id, x.i, x.xi - pc.pc1 * v.val AS xo"
-        f" FROM x JOIN pc ON x.doc_id = pc.doc_id"
-        f" JOIN v{n_iter} v ON x.i = v.i)"
-    )
-    out = ",\n           ".join(
-        f"round(max(CASE WHEN o.i = {j} THEN o.xo END), 6) AS e{j}"
-        for j in range(1, dim + 1)
-    )
-    return (
-        ",\n    ".join(parts)
-        + f"\n    SELECT o.doc_id, max(p.n_tokens) AS n_tokens,\n"
-        f"           {out}\n"
-        f"    FROM o JOIN p ON o.doc_id = p.doc_id GROUP BY o.doc_id"
-    )
-
-
-@query("q237_sif_embeddings", oracle=_q237_oracle())
-def q237_sif_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import sif_embed
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    out = sif_embed(d, "text", "doc_id", dim=_SIF_DIM)
-    return out.select(
-        "doc_id",
-        "n_tokens",
-        *[
-            F.round(F.col("emb")[j], 6).alias(f"e{j+1}")
-            for j in range(_SIF_DIM)
-        ],
-    )
-
-
-# ---------------------------------------------------------------------------
 # q238 — skip-gram pair generation with frequency subsampling
 # (operators/skipgram.skipgram_pairs, Mikolov NIPS'13): (center,
 # context) pair counts over a ±2 post-subsample window, keep draw
@@ -9874,106 +8467,6 @@ def q238_skipgram_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q240 — Dawid–Skene crowd-label aggregation (operators/labeling.
-# dawid_skene_binary, 1979): five synthetic annotators of reliability
-# 0.55..0.95 label every doc's parity; 2 EM rounds learn per-worker
-# sensitivity/specificity and the item posteriors — the step that
-# collapses redundant annotations into one training label. Oracle
-# unrolls init + both EM rounds.
-# ---------------------------------------------------------------------------
-_DS_OBS_SQL = """
-      SELECT doc_id AS i, w,
-             CASE WHEN ('0x' || substring(md5('ds:'
-                    || CAST(w AS VARCHAR) || ':'
-                    || CAST(doc_id AS VARCHAR)), 1, 13))::BIGINT
-                  / CAST(4503599627370496.0 AS DOUBLE)
-                  < 0.55 + 0.1 * w
-                  THEN CAST(doc_id % 2 AS DOUBLE)
-                  ELSE CAST(1 - doc_id % 2 AS DOUBLE) END AS l
-      FROM documents, unnest(generate_series(0, 4)) g(w)
-"""
-
-
-def _q240_oracle(rounds: int = 2) -> str:
-    parts = [
-        f"WITH obs AS ({_DS_OBS_SQL})",
-        "mu0 AS (SELECT i, avg(l) AS mu FROM obs GROUP BY 1)",
-    ]
-    for r in range(1, rounds + 1):
-        parts.append(
-            f"""conf{r} AS (SELECT obs.w,
-            least(greatest(sum(m.mu * obs.l) / sum(m.mu),
-                  CAST(0.001 AS DOUBLE)), CAST(0.999 AS DOUBLE)) AS alpha,
-            least(greatest(sum((1 - m.mu) * (1 - obs.l))
-                  / sum(1 - m.mu),
-                  CAST(0.001 AS DOUBLE)), CAST(0.999 AS DOUBLE)) AS beta
-          FROM obs JOIN mu{r-1} m ON obs.i = m.i GROUP BY 1)"""
-        )
-        parts.append(
-            f"pr{r} AS (SELECT least(greatest(avg(mu),"
-            f" CAST(0.001 AS DOUBLE)), CAST(0.999 AS DOUBLE)) AS p"
-            f" FROM mu{r-1})"
-        )
-        parts.append(
-            f"""s{r} AS (SELECT obs.i,
-            sum(ln(CASE WHEN obs.l = 1 THEN c.alpha
-                        ELSE 1 - c.alpha END
-                   / CASE WHEN obs.l = 1 THEN 1 - c.beta
-                          ELSE c.beta END)) AS s
-          FROM obs JOIN conf{r} c ON obs.w = c.w GROUP BY 1)"""
-        )
-        parts.append(
-            f"mu{r} AS (SELECT i, 1 / (1 + exp(-(ln(p / (1 - p)) + s)))"
-            f" AS mu FROM s{r}, pr{r})"
-        )
-    return (
-        ",\n    ".join(parts)
-        + f"""
-    SELECT i AS doc_id, round(mu, 6) AS mu,
-           CAST(mu >= 0.5 AS INT) AS label
-    FROM mu{rounds}"""
-    )
-
-
-@query("q240_dawid_skene", oracle=_q240_oracle())
-def q240_dawid_skene(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.labeling import dawid_skene_binary
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = d.select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(4))).alias("w")
-    )
-    frac = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ds:"),
-                        F.col("w").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(1 << 52))
-    )
-    truth = (F.col("doc_id") % 2).cast("double")
-    obs = lab.select(
-        "doc_id",
-        "w",
-        F.when(frac < 0.55 + 0.1 * F.col("w"), truth)
-        .otherwise(1.0 - truth)
-        .alias("l"),
-    )
-    return dawid_skene_binary(obs, "doc_id", "w", "l", rounds=2)
-
-
-# ---------------------------------------------------------------------------
 # q241 — GloVe co-occurrence matrix extraction (operators/skipgram.
 # cooccurrence_counts, Pennington EMNLP'14): distance-weighted
 # (1/d) co-occurrence sums over a ±4 window — the other embedding-
@@ -10000,79 +8493,6 @@ def q241_glove_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return cooccurrence_counts(d, "text", "doc_id", window=4)
-
-
-# ---------------------------------------------------------------------------
-# q242 — Krippendorff's alpha (operators/labeling.
-# krippendorff_alpha_nominal): agreement over the q240 synthetic
-# annotator pool with ragged coverage (worker w skips doc_id % 5 = w
-# items) — the any-raters/missing-data coefficient Cohen's kappa
-# cannot express. Oracle replays the coincidence matrix.
-# ---------------------------------------------------------------------------
-@query(
-    "q242_krippendorff_alpha",
-    oracle=f"""
-    WITH obs0 AS ({_DS_OBS_SQL}),
-    obs AS (SELECT i, w, CAST(l AS VARCHAR) AS v FROM obs0
-            WHERE i % 5 <> w),
-    m AS (SELECT i, count(*) AS mu FROM obs GROUP BY 1),
-    p AS (SELECT obs.i, obs.w, obs.v, m.mu FROM obs
-          JOIN m ON obs.i = m.i WHERE m.mu >= 2),
-    pr AS (SELECT a.v AS c, b.v AS k,
-                  CAST(1.0 AS DOUBLE) / (a.mu - 1) AS wt
-           FROM p a JOIN p b ON a.i = b.i AND a.w <> b.w),
-    coin AS (SELECT c, k, sum(wt) AS o FROM pr GROUP BY 1, 2),
-    nt AS (SELECT CAST(count(DISTINCT i) AS BIGINT) AS n_items,
-                  CAST(count(*) AS DOUBLE) AS n FROM p),
-    nc AS (SELECT c, sum(o) AS n_c FROM coin GROUP BY 1),
-    dis AS (SELECT coalesce(sum(o), 0) AS od FROM coin WHERE c <> k),
-    ee AS (SELECT coalesce(sum(x.n_c * y.n_c), 0) AS ee
-           FROM nc x, nc y WHERE x.c <> y.c)
-    SELECT n_items, CAST(n AS BIGINT) AS n_pairable_values,
-           round(od / n, 6) AS d_o,
-           round(ee / (n * (n - 1)), 6) AS d_e,
-           round(CASE WHEN ee > 0 THEN 1.0 - (od / n) / (ee / (n * (n - 1))) END, 6) AS alpha
-    FROM nt, dis, ee
-    """,
-)
-def q242_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.labeling import (
-        krippendorff_alpha_nominal,
-    )
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id")
-    lab = d.select(
-        "doc_id", F.explode(F.sequence(F.lit(0), F.lit(4))).alias("w")
-    ).where(F.col("doc_id") % 5 != F.col("w"))
-    frac = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ds:"),
-                        F.col("w").cast("string"),
-                        F.lit(":"),
-                        F.col("doc_id").cast("string"),
-                    )
-                ),
-                1,
-                13,
-            ),
-            16,
-            10,
-        ).cast("double")
-        / F.lit(float(1 << 52))
-    )
-    truth = (F.col("doc_id") % 2).cast("double")
-    obs = lab.select(
-        "doc_id",
-        "w",
-        F.when(frac < 0.55 + 0.1 * F.col("w"), truth)
-        .otherwise(1.0 - truth)
-        .cast("string")
-        .alias("v"),
-    )
-    return krippendorff_alpha_nominal(obs, "doc_id", "w", "v")
 
 
 # ---------------------------------------------------------------------------
@@ -10314,73 +8734,6 @@ def q245_lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q249 — entropic optimal transport (operators/ot.sinkhorn_transport,
-# Cuturi NeurIPS'13): the Sinkhorn plan that reshapes the corpus's
-# doc-length-bucket histogram into a long-doc-heavy target mixture
-# with |i-j| movement cost. The kernel is pow(2, -cost) so both
-# engines compute EXACT binary doubles (no libm exp); 12 alternating
-# scalings unroll into window-sum CTEs, mirroring q243's IPF replay.
-# ---------------------------------------------------------------------------
-_OT_TARGETS = [(0, 6.0), (1, 10.0), (2, 14.0), (3, 20.0), (4, 26.0),
-               (5, 24.0)]
-
-
-def _q249_oracle(iterations: int = 12) -> str:
-    bt = ", ".join(f"({j}, {m})" for j, m in _OT_TARGETS)
-    parts = [
-        "WITH d AS (SELECT least(CAST(floor(length(text) / 100.0)"
-        " AS INT), 5) AS src FROM documents)",
-        "acnt AS (SELECT src, CAST(count(*) AS DOUBLE) AS n FROM d"
-        " GROUP BY 1)",
-        "tot AS (SELECT sum(n) AS t FROM acnt)",
-        f"bt(dst, bm) AS (VALUES {bt})",
-        "bsum AS (SELECT sum(bm) AS s FROM bt)",
-        """cells AS (SELECT acnt.src, bt.dst, acnt.n / tot.t AS a,
-            bt.bm / bsum.s AS b,
-            power(2.0, -abs(acnt.src - bt.dst)) AS k
-          FROM acnt, tot, bt, bsum)""",
-        "s0 AS (SELECT src, dst, a, b, k, CAST(1.0 AS DOUBLE) AS v"
-        " FROM cells)",
-    ]
-    for s in range(1, iterations + 1):
-        parts.append(
-            f"""u{s} AS (SELECT src, dst, a, b, k, v,
-            a / sum(k * v) OVER (PARTITION BY src) AS u FROM s{s-1})"""
-        )
-        parts.append(
-            f"""s{s} AS (SELECT src, dst, a, b, k, u,
-            b / sum(k * u) OVER (PARTITION BY dst) AS v FROM u{s})"""
-        )
-    return (
-        ",\n    ".join(parts)
-        + f"""
-    SELECT src, dst, round(a, 6) AS a, round(b, 6) AS b,
-           round(u * k * v, 6) AS mass,
-           round(u * k * v / a, 6) AS move_share
-    FROM s{iterations}"""
-    )
-
-
-@query("q249_sinkhorn_ot", oracle=_q249_oracle())
-def q249_sinkhorn_ot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.ot import sinkhorn_transport
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.least(
-            F.floor(F.length("text") / 100.0).cast("int"), F.lit(5)
-        ).alias("len_bucket")
-    )
-    return sinkhorn_transport(
-        d,
-        "len_bucket",
-        dict(_OT_TARGETS),
-        cost_fn=lambda s, t: F.abs(s - t),
-        epsilon=1.0,
-        iterations=12,
-    )
-
-
-# ---------------------------------------------------------------------------
 # q250 — mojibake screen + repair (functions/encoding.py, ftfy-shaped):
 # deterministic UTF-8-as-CP1252 damage grafted per doc_id band, then
 # artifact counting, score, and the ordered replace-chain repair. The
@@ -10438,52 +8791,6 @@ def q250_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(mojibake_score(raw), 6).alias("score"),
         F.length(repair_mojibake(raw)).alias("repaired_len"),
     )
-
-
-# ---------------------------------------------------------------------------
-# q251 — phrase blocklist screen (operators/blocklist.
-# phrase_match_report): token-exact banned-phrase matching via lead()
-# n-gram construction + broadcast join (the Spark-native Aho-Corasick
-# stand-in). One doc-keyed shuffle + one broadcast join + one agg;
-# mixed 1/2/3-token phrases exercise the full gram ladder.
-# ---------------------------------------------------------------------------
-_BLOCK_PHRASES = ["filter", "slow query", "big table scan"]
-
-
-@query(
-    "q251_phrase_blocklist",
-    oracle="""
-    WITH p(gram) AS (VALUES ('filter'), ('slow query'),
-                            ('big table scan')),
-    nrm AS (SELECT doc_id, string_split(trim(regexp_replace(
-              lower(text), '[^a-z0-9]+', ' ', 'g')), ' ') AS tk
-            FROM documents),
-    tok AS (SELECT doc_id, g.p AS pos, tk[g.p] AS tok
-            FROM nrm, unnest(generate_series(1, len(tk))) g(p)
-            WHERE tk[g.p] <> ''),
-    gr AS (SELECT doc_id, pos, tok AS g1,
-              tok || ' ' || lead(tok, 1) OVER w AS g2,
-              tok || ' ' || lead(tok, 1) OVER w || ' '
-                  || lead(tok, 2) OVER w AS g3
-           FROM tok WINDOW w AS (PARTITION BY doc_id ORDER BY pos)),
-    grams AS (SELECT doc_id, pos, g1 AS gram FROM gr
-      UNION ALL SELECT doc_id, pos, g2 FROM gr WHERE g2 IS NOT NULL
-      UNION ALL SELECT doc_id, pos, g3 FROM gr WHERE g3 IS NOT NULL),
-    m AS (SELECT grams.doc_id, grams.pos, grams.gram
-          FROM grams JOIN p USING (gram))
-    SELECT doc_id, count(*) AS n_matches,
-           count(DISTINCT gram) AS n_phrases,
-           array_to_string(list_sort(list(DISTINCT gram)), '|')
-             AS phrases,
-           CAST(min(pos) AS INT) AS first_pos
-    FROM m GROUP BY 1
-    """,
-)
-def q251_phrase_blocklist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.blocklist import phrase_match_report
-
-    d = load_table(spark, sf_dir, "documents")
-    return phrase_match_report(d, "doc_id", "text", _BLOCK_PHRASES)
 
 
 # ---------------------------------------------------------------------------
@@ -10554,149 +8861,6 @@ def q252_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q253_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.silhouette_centroid(e, "embedding", "vec_id", n_seeds=8)
-
-
-# ---------------------------------------------------------------------------
-# q254 — STREAMING MinHash-LSH near-dup screen (streaming/stateful.
-# lsh_bucket_claims): the batch q25 banding column algebra runs
-# unchanged on a file stream; keyed state per (band, bsig) bucket
-# remembers the first claimant across micro-batches; a doc that owns
-# none of its 4 buckets is a near-dup candidate. Two triggers
-# (doc_id%2==0 first, rest second) make arrival order deterministic,
-# so the whole streaming outcome replays as one SQL argmin-by-
-# (batch, doc_id) per bucket.
-# ---------------------------------------------------------------------------
-@query(
-    "q254_stream_lsh_neardup",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES3} AS s FROM t),
-    shn AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    sig AS (
-        SELECT doc_id,
-               [list_min(list_transform(s, x -> md5('0:' || x))),
-                list_min(list_transform(s, x -> md5('1:' || x))),
-                list_min(list_transform(s, x -> md5('2:' || x))),
-                list_min(list_transform(s, x -> md5('3:' || x))),
-                list_min(list_transform(s, x -> md5('4:' || x))),
-                list_min(list_transform(s, x -> md5('5:' || x))),
-                list_min(list_transform(s, x -> md5('6:' || x))),
-                list_min(list_transform(s, x -> md5('7:' || x)))] AS sg
-        FROM shn
-    ),
-    banded AS (
-        SELECT doc_id, u.band,
-               sg[2 * u.band + 1] || '|' || sg[2 * u.band + 2] AS bsig
-        FROM sig, (SELECT unnest([0, 1, 2, 3]) AS band) u
-    ),
-    k AS (SELECT doc_id, band, bsig,
-            CASE WHEN doc_id % 2 = 0 THEN doc_id
-                 ELSE doc_id + 1000000000000 END AS key
-          FROM banded),
-    own AS (SELECT band, bsig, min(key) AS okey FROM k GROUP BY 1, 2),
-    j AS (SELECT k.doc_id, k.key, o.okey FROM k
-          JOIN own o ON k.band = o.band AND k.bsig = o.bsig)
-    SELECT doc_id, count(*) AS n_buckets,
-           CAST(sum(CASE WHEN key = okey THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_owned,
-           sum(CASE WHEN key = okey THEN 1 ELSE 0 END) = 0
-             AS is_candidate
-    FROM j GROUP BY 1
-    """,
-)
-def q254_stream_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.functions.text import shingles
-    from cccatalog_spark.operators.dedup import minhash_signature
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import lsh_bucket_claims
-
-    base = tempfile.mkdtemp(prefix="ccc_slsh_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    write_replay_batches(
-        base,
-        src,
-        [
-            d.where(F.col("doc_id") % 2 == 0),
-            d.where(F.col("doc_id") % 2 == 1),
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("doc_id long, text string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    # q25's banding algebra, applied to the unbounded frame
-    rows_per_band, bands = 2, 4
-    banded = (
-        stream.select(
-            "doc_id", shingles(F.col("text"), 3).alias("sh")
-        )
-        .where(F.size("sh") > 0)
-        .select(
-            "doc_id", minhash_signature(F.col("sh"), 8).alias("sig")
-        )
-        .select(
-            "doc_id",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(i).cast("int").alias("band"),
-                            F.array_join(
-                                F.slice(
-                                    "sig", i * rows_per_band + 1,
-                                    rows_per_band,
-                                ),
-                                "|",
-                            ).alias("bsig"),
-                        )
-                        for i in range(bands)
-                    ]
-                )
-            ).alias("bk"),
-        )
-        .select("doc_id", "bk.band", "bk.bsig")
-    )
-    claims = lsh_bucket_claims(banded, "doc_id")
-    sink = f"q254_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            claims.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.sql(
-        f"""
-        SELECT doc_id, count(*) AS n_buckets,
-               sum(CASE WHEN is_first THEN 1 ELSE 0 END) AS n_owned,
-               sum(CASE WHEN is_first THEN 1 ELSE 0 END) = 0
-                 AS is_candidate
-        FROM {sink} GROUP BY doc_id
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -11156,9 +9320,8 @@ def q265_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q266 — exact 1-D earth mover's distance (operators/corpus_stats.
 # emd_1d): Wasserstein-1 between the en and zh doc-length
 # distributions — drift in the column's own units (∫|CDF_a-CDF_b|dx),
-# beside q235's PSI (bin ratios) and q249's Sinkhorn (categorical +
-# cost model). Corpus collapses to distinct-value counts; CDF cumsum
-# over the value catalog.
+# beside q235's PSI (bin ratios). Corpus collapses to distinct-value
+# counts; CDF cumsum over the value catalog.
 # ---------------------------------------------------------------------------
 @query(
     "q266_emd_drift",
@@ -11438,8 +9601,8 @@ def q271_product_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
 # min_k_prob_score, Shi et al. ICLR'24): per document, the mean NLL of
 # its 20% least-probable bigram instances under the exact add-one
 # bigram LM — the membership-inference / eval-contamination audit
-# signal beyond exact n-gram overlap (bloom.py family). One doc-keyed
-# window shuffle on top of q103's model joins.
+# signal beyond exact n-gram overlap. One doc-keyed window shuffle on
+# top of q103's model joins.
 # ---------------------------------------------------------------------------
 @query(
     "q272_min_k_prob",
@@ -11611,7 +9774,7 @@ def q274_ccnet_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q275 — train/test split leakage audit (dedup.dedup_minhash_lsh +
 # sampling.hash_split): near-duplicate pairs that STRADDLE the
 # hash-assigned train/test boundary — the eval-contamination failure
-# mode exact-overlap decontamination (q80/q91/q139) misses. The pair
+# mode exact-overlap decontamination (q80/q139) misses. The pair
 # generator is q25's banded LSH unchanged; the split adds two
 # broadcast-cheap key joins.
 # ---------------------------------------------------------------------------
@@ -12882,96 +11045,6 @@ def q312_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q313 — Fleiss' kappa (operators/labeling.fleiss_kappa, Fleiss
-# 1971): 3-rater agreement on document language — the metadata lang,
-# q23's lang_id on the full text, and lang_id on the first half of
-# the tokens (the "does the prediction survive truncation"
-# consistency panel). Chance-corrected multi-rater agreement that
-# Cohen's kappa can't express.
-# ---------------------------------------------------------------------------
-def _langid_case_sql(toks: str) -> str:
-    def sc(markers: str) -> str:
-        return (
-            f"len(list_filter({toks}, x -> list_contains([{markers}], x)))"
-        )
-
-    s_de = sc("'der','die','das','und','ist'")
-    s_en = sc("'the','and','of','is','was'")
-    s_es = sc("'el','la','los','las','es'")
-    s_fr = sc("'le','la','les','est','et'")
-    s_zh = sc("'de5','shi4','le5','zai4','he2'")
-    return f"""CASE WHEN greatest({s_de}, {s_en}, {s_es}, {s_fr}, {s_zh}) = 0
-             THEN 'und'
-         WHEN {s_de} >= {s_en} AND {s_de} >= {s_es} AND {s_de} >= {s_fr}
-              AND {s_de} >= {s_zh} THEN 'de'
-         WHEN {s_en} >= {s_es} AND {s_en} >= {s_fr} AND {s_en} >= {s_zh}
-             THEN 'en'
-         WHEN {s_es} >= {s_fr} AND {s_es} >= {s_zh} THEN 'es'
-         WHEN {s_fr} >= {s_zh} THEN 'fr'
-         ELSE 'zh' END"""
-
-
-@query(
-    "q313_fleiss_kappa",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, lang,
-                      list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    h AS (SELECT doc_id, lang, toks,
-                 list_slice(toks, 1, (len(toks) + 1) // 2) AS hd
-          FROM t),
-    labels AS (
-        SELECT doc_id, lang AS cat FROM h
-        UNION ALL
-        SELECT doc_id, {_langid_case_sql("toks")} AS cat FROM h
-        UNION ALL
-        SELECT doc_id, {_langid_case_sql("hd")} AS cat FROM h),
-    nij AS (SELECT doc_id, cat, count(*) AS n FROM labels GROUP BY 1, 2),
-    per AS (SELECT doc_id, sum(n) AS r, sum(n * n) AS sq
-            FROM nij GROUP BY 1),
-    pi AS (SELECT CAST(sum(CASE WHEN r = 3 THEN 1 ELSE 0 END) AS BIGINT)
-                      AS n_items,
-                  CAST(sum(CASE WHEN r <> 3 THEN 1 ELSE 0 END) AS BIGINT)
-                      AS n_dropped,
-                  avg(CASE WHEN r = 3
-                           THEN (sq - 3.0) / (3.0 * 2.0) END) AS p_bar
-           FROM per),
-    pe AS (SELECT sum(cj * cj) / (sum(cj) * sum(cj)) AS p_e
-           FROM (SELECT CAST(sum(n) AS DOUBLE) AS cj
-                 FROM nij
-                 JOIN (SELECT doc_id FROM per WHERE r = 3) k
-                 USING (doc_id)
-                 GROUP BY cat))
-    SELECT pi.n_items, 3 AS n_raters, pi.n_dropped,
-           round(pi.p_bar, 6) AS p_bar, round(pe.p_e, 6) AS p_e,
-           round(CASE WHEN pe.p_e < 1.0
-                      THEN (pi.p_bar - pe.p_e) / (1.0 - pe.p_e) END, 6)
-               AS kappa
-    FROM pi, pe
-    """,
-)
-def q313_fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.functions import text as TX
-    from cccatalog_spark.operators.labeling import fleiss_kappa
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "text"
-    )
-    toks = TX.tokens(F.col("text"))
-    head = F.array_join(
-        F.slice(toks, 1, ((F.size(toks) + 1) / 2).cast("int")), " "
-    )
-    labels = (
-        d.select("doc_id", F.col("lang").alias("cat"))
-        .unionAll(
-            d.select("doc_id", TX.lang_id(F.col("text")).alias("cat"))
-        )
-        .unionAll(d.select("doc_id", TX.lang_id(head).alias("cat")))
-    )
-    return fleiss_kappa(labels, "doc_id", "cat", n_raters=3)
-
-
-# ---------------------------------------------------------------------------
 # q314 — Johnson-Lindenstrauss distortion audit (operators/
 # similarity.jl_distortion_audit, Achlioptas 2003 ±1 rows): squared-
 # distance ratios 64→16 dims over consecutive-id pairs. Projection
@@ -13122,90 +11195,6 @@ def q316_lexical_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("lang", "text")
     return lexical_profile(d, "text", "lang").orderBy("group")
-
-
-# ---------------------------------------------------------------------------
-# q317 — streaming heavy hitters (streaming/stateful.
-# heavy_hitters_topk, SpaceSaving ICDT'05): sharded capacity-bounded
-# summaries in keyed state across three micro-batches, merged by
-# summing ests per key. Capacity covers the fixture's key domain, so
-# the final summary is EXACT — the oracle is the plain count. Tests
-# pin the eviction/overestimation path.
-# ---------------------------------------------------------------------------
-@query(
-    "q317_stream_heavy_hitters",
-    oracle="""
-    SELECT event_type, CAST(count(*) AS BIGINT) AS est
-    FROM events WHERE event_id % 4 = 2
-    GROUP BY event_type
-    ORDER BY est DESC, event_type
-    """,
-)
-def q317_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import heavy_hitters_topk
-
-    base = tempfile.mkdtemp(prefix="ccc_hh_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-
-    e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 4 == 2)
-    write_replay_batches(
-        base,
-        src,
-        [
-            e.where(F.col("event_id") % 3 == i).select("event_type")
-            for i in range(3)
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_type string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    hh = heavy_hitters_topk(stream, "event_type", capacity=8, n_shards=4)
-    sink = f"q317_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # UNLIKE the per-user stateful replays, the group key here is
-        # the shard id: cardinality is bounded by n_shards, so
-        # dispatch parallelism beyond that is dead weight — every
-        # extra partition is an empty state-store commit per
-        # micro-batch at ANY scale (the shard count, not the data
-        # size, bounds useful parallelism)
-        min_partitions=min(4, spark.sparkContext.defaultParallelism),
-    ):
-        q = (
-            hh.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    # last emission per (shard, key) is the final summary; merge
-    # shards by summing ests (the Misra-Gries-family merge)
-    return spark.sql(
-        f"""
-        SELECT event_type, CAST(sum(est) AS BIGINT) AS est
-        FROM (SELECT shard, event_type, max(est) AS est
-              FROM {sink} GROUP BY shard, event_type)
-        GROUP BY event_type
-        ORDER BY est DESC, event_type
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -13899,162 +11888,6 @@ def q336_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q338 — label-noise suspects (composite: operators/classifier
-# nb_train/nb_score + an argmax window): documents whose metadata
-# language the full-corpus NB model confidently contradicts — the
-# confident-learning-style "find the mislabeled rows" pass. Top-20
-# by rounded margin.
-# ---------------------------------------------------------------------------
-@query(
-    "q338_label_noise",
-    oracle=f"""
-    WITH tt AS (SELECT lang AS label,
-                  unnest(list_transform({_TOKS}, x -> lower(x))) AS token
-           FROM documents),
-    cnt AS (SELECT token, label, count(*) AS c FROM tt GROUP BY 1, 2),
-    ltot AS (SELECT label, sum(c) AS n_tok FROM cnt GROUP BY 1),
-    voc AS (SELECT count(DISTINCT token) AS v FROM cnt),
-    den AS (SELECT label, CAST(n_tok AS DOUBLE) + 1.0 * v AS denom
-            FROM ltot CROSS JOIN voc),
-    mdl AS (SELECT token, label,
-                   ln((CAST(c AS DOUBLE) + 1.0) / denom) AS log_prob
-            FROM cnt JOIN den USING (label)),
-    dc AS (SELECT lang AS label, count(*) AS n_docs FROM documents
-           GROUP BY 1),
-    tot AS (SELECT sum(n_docs) AS t FROM dc),
-    ls AS (SELECT dc.label,
-                  ln(CAST(n_docs AS DOUBLE) / CAST(t AS DOUBLE))
-                    AS log_prior,
-                  ln(1.0 / denom) AS log_fallback
-           FROM dc CROSS JOIN tot JOIN den ON den.label = dc.label),
-    tk AS (SELECT doc_id,
-                  unnest(list_transform({_TOKS}, x -> lower(x))) AS token
-           FROM documents),
-    sc AS (SELECT tk.doc_id, ls.label,
-                  coalesce(mdl.log_prob, ls.log_fallback) AS lp
-           FROM tk CROSS JOIN ls
-           LEFT JOIN mdl ON mdl.token = tk.token AND mdl.label = ls.label),
-    agg AS (SELECT doc_id, label, sum(lp) AS token_ll
-            FROM sc GROUP BY 1, 2),
-    d0 AS (SELECT doc_id, lang FROM documents),
-    full0 AS (SELECT d0.doc_id, d0.lang, ls.label,
-                     ls.log_prior + coalesce(agg.token_ll, 0.0) AS score
-              FROM d0 CROSS JOIN ls
-              LEFT JOIN agg ON agg.doc_id = d0.doc_id
-                           AND agg.label = ls.label),
-    rk AS (SELECT doc_id, lang, label, score,
-                  row_number() OVER (PARTITION BY doc_id
-                                     ORDER BY score DESC, label) AS r
-           FROM full0),
-    pred AS (SELECT doc_id, lang, label AS pred, score AS s_pred
-             FROM rk WHERE r = 1),
-    truth AS (SELECT doc_id, score AS s_true FROM full0
-              WHERE label = lang)
-    SELECT p.doc_id, p.lang AS label, p.pred,
-           round(p.s_pred - t.s_true, 6) AS margin
-    FROM pred p JOIN truth t USING (doc_id)
-    WHERE p.pred <> p.lang
-    ORDER BY round(p.s_pred - t.s_true, 6) DESC, p.doc_id
-    LIMIT 20
-    """,
-)
-def q338_label_noise(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from cccatalog_spark.operators.classifier import nb_score, nb_train
-
-    d = load_table(spark, sf_dir, "documents")
-    model = nb_train(d, "text", "lang")
-    scores = nb_score(d, model, "text", "doc_id")
-    truth = d.select("doc_id", F.col("lang").alias("_true"))
-    # the scored surface feeds both the argmax and the true-label
-    # lookup: persist so the NB model+scoring subtree runs once
-    s = scores.join(truth, "doc_id").persist()
-    w = Window.partitionBy("doc_id").orderBy(
-        F.desc("score"), F.asc("label")
-    )
-    pred = s.withColumn("_r", F.row_number().over(w)).where(
-        F.col("_r") == 1
-    ).select(
-        "doc_id",
-        F.col("_true").alias("label"),
-        F.col("label").alias("pred"),
-        F.col("score").alias("_s_pred"),
-    )
-    ts = s.where(F.col("label") == F.col("_true")).select(
-        "doc_id", F.col("score").alias("_s_true")
-    )
-    out = (
-        pred.join(ts, "doc_id")
-        .where(F.col("pred") != F.col("label"))
-        .select(
-            "doc_id",
-            "label",
-            "pred",
-            F.round(F.col("_s_pred") - F.col("_s_true"), 6).alias(
-                "margin"
-            ),
-        )
-    )
-    return out.orderBy(F.desc("margin"), F.asc("doc_id")).limit(20)
-
-
-# ---------------------------------------------------------------------------
-# q339 — feature-hashing collision audit (operators/features.
-# hashing_collision_audit, Weinberger ICML'09): vocabulary collision
-# rate / worst bucket at 64-1024 dims — the table that picks the
-# hashed-bow dimension before q207's classifier degrades silently.
-# Dims axis explodes over the term CATALOG, never the corpus.
-# ---------------------------------------------------------------------------
-@query(
-    "q339_hashing_collisions",
-    oracle=f"""
-    WITH t AS (SELECT list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    cat AS (SELECT w, count(*) AS c
-            FROM (SELECT unnest(toks) AS w FROM t) GROUP BY 1),
-    dm AS (SELECT unnest([64, 256, 1024]) AS dims),
-    g AS (SELECT dm.dims, cat.c,
-                 CAST(floor(
-                     (CAST(('0x' || substring(md5('hb:' || cat.w), 1, 12))
-                           AS BIGINT) + CAST(0.5 AS DOUBLE))
-                     / CAST(281474976710656.0 AS DOUBLE)
-                     * dm.dims) AS BIGINT) AS b
-          FROM cat CROSS JOIN dm),
-    pb AS (SELECT dims, b, count(*) AS terms, sum(c) AS mass
-           FROM g GROUP BY 1, 2),
-    mb AS (SELECT dims, mass AS top_mass
-           FROM (SELECT dims, terms, mass,
-                        row_number() OVER (PARTITION BY dims
-                                           ORDER BY terms DESC,
-                                                    mass DESC) AS r
-                 FROM pb)
-           WHERE r = 1),
-    tt AS (SELECT dims, CAST(sum(terms) AS BIGINT) AS vocab,
-                  CAST(count(*) AS BIGINT) AS buckets_used,
-                  CAST(max(terms) AS BIGINT) AS max_bucket,
-                  sum(mass) AS tmass
-           FROM pb GROUP BY 1)
-    SELECT tt.dims, tt.vocab, tt.buckets_used,
-           round(1.0 - CAST(tt.buckets_used AS DOUBLE) / tt.vocab, 6)
-               AS collision_rate,
-           tt.max_bucket,
-           round(CAST(mb.top_mass AS DOUBLE) / tt.tmass, 6)
-               AS mass_top_bucket
-    FROM tt JOIN mb USING (dims)
-    ORDER BY tt.dims
-    """,
-)
-def q339_hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import hashing_collision_audit
-
-    d = load_table(spark, sf_dir, "documents").select("text")
-    return hashing_collision_audit(
-        d, "text", [64, 256, 1024]
-    ).orderBy("dims")
-
-
-# ---------------------------------------------------------------------------
 # q340 — inter-arrival regularity / bot tell (operators/temporal.
 # timing_regularity): per-user coefficient of variation of event
 # gaps — metronome gaps (CV→0) are scripted clients, CV≈1 is human
@@ -14094,107 +11927,6 @@ def q340_timing_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = timing_regularity(e, "user_id", "t", min_events=5)
     return out.orderBy(F.asc("cv"), F.asc("key")).limit(20)
-
-
-# ---------------------------------------------------------------------------
-# q341 — streaming per-key HLL distinct (streaming/stateful.
-# hll_distinct_stream): COUNT(DISTINCT user) per event type carried
-# across three micro-batches as 256-int register state — the only
-# distinct that exists on an unbounded stream. Register max is batch-
-# order-independent, so the oracle replays the identical sketch (and
-# the estimate) from the batch table.
-# ---------------------------------------------------------------------------
-from cccatalog_spark.functions.sketches import _HLL_ALPHA_M2 as _HLLC3
-
-
-@query(
-    "q341_stream_hll_distinct",
-    oracle=f"""
-    WITH d AS (SELECT DISTINCT event_type,
-                      md5(CAST(user_id AS VARCHAR)) AS hx
-               FROM events WHERE event_id % 4 = 3),
-    hh AS (SELECT DISTINCT event_type, {_KMV_FOLD} AS h FROM d),
-    b AS (SELECT event_type, h % 256 AS j, h // 256 AS w FROM hh),
-    rg AS (SELECT event_type, j,
-                  max(CASE WHEN w = 0 THEN 53
-                           ELSE CAST(round(log2(w & (-w))) AS INTEGER)
-                                + 1 END) AS mr
-           FROM b GROUP BY 1, 2),
-    a AS (SELECT event_type, CAST(count(*) AS INTEGER) AS n_used,
-                 sum(power(CAST(2.0 AS DOUBLE), -mr)) AS zu
-          FROM rg GROUP BY 1)
-    SELECT event_type, n_used,
-           round(CASE WHEN CAST({_HLLC3!r} AS DOUBLE)
-                           / (CAST(256 - n_used AS DOUBLE) + zu)
-                        <= CAST(640.0 AS DOUBLE)
-                      AND n_used < 256
-                 THEN CAST(256.0 AS DOUBLE)
-                      * ln(CAST(256.0 AS DOUBLE)
-                           / CAST(256 - n_used AS DOUBLE))
-                 ELSE CAST({_HLLC3!r} AS DOUBLE)
-                      / (CAST(256 - n_used AS DOUBLE) + zu)
-                 END, 4) AS hll_distinct
-    FROM a ORDER BY event_type
-    """,
-)
-def q341_stream_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import hll_distinct_stream
-
-    base = tempfile.mkdtemp(prefix="ccc_shll_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-
-    e = load_table(spark, sf_dir, "events").where(F.col("event_id") % 4 == 3)
-    write_replay_batches(
-        base,
-        src,
-        [
-            e.where(F.col("event_id") % 3 == i).select(
-                "event_type", F.col("user_id").cast("string")
-            )
-            for i in range(3)
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_type string, user_id string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    est = hll_distinct_stream(stream, "event_type", "user_id")
-    sink = f"q341_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(spark, dir_bytes(src)):
-        q = (
-            est.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .option("checkpointLocation", os.path.join(base, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    # per key, the LAST emission (max n_used) is the final state
-    return spark.sql(
-        f"""
-        SELECT event_type, n_used, hll_distinct
-        FROM (SELECT event_type, n_used, hll_distinct,
-                     row_number() OVER (PARTITION BY event_type
-                                        ORDER BY n_used DESC,
-                                                 hll_distinct DESC) AS r
-              FROM {sink})
-        WHERE r = 1 ORDER BY event_type
-        """
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -15533,37 +13265,6 @@ def q376_weighted_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q377 — Misra-Gries heavy hitters, exact-verified (operators/topk.
-# misra_gries_heavy_hitters): all tokens with count > n/k over the
-# document corpus. Pass 1 is a shuffle-free per-partition MG summary
-# (candidate superset by the Agarwal et al. merge lemma); pass 2
-# exact-counts only the bounded candidate set — output is
-# partitioning-independent, hence oracle-exact against the plain
-# GROUP BY. The scale win: no vocabulary-sized shuffle.
-# ---------------------------------------------------------------------------
-@query(
-    "q377_heavy_hitters",
-    oracle="""
-    WITH toks AS (
-        SELECT unnest(regexp_split_to_array(text, '\\s+')) AS token
-        FROM documents),
-    tc AS (SELECT token, count(*) AS cnt FROM toks
-           WHERE token <> '' GROUP BY 1),
-    n AS (SELECT sum(cnt) AS n FROM tc)
-    SELECT token, CAST(cnt AS BIGINT) AS cnt,
-           round(cnt / CAST(n.n AS DOUBLE), 6) AS freq
-    FROM tc, n WHERE cnt * 40 > n.n
-    """,
-)
-def q377_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.topk import misra_gries_heavy_hitters
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.explode(TX.tokens(F.col("text"))).alias("token"))
-    return misra_gries_heavy_hitters(toks, "token", k=40)
-
-
-# ---------------------------------------------------------------------------
 # q378 — grouped k-fold split + stratification audit (operators/
 # sampling.grouped_kfold / kfold_balance_audit): every user's events
 # land in one fold (md5 mod k — RNG-free, repartition-stable, the
@@ -15708,68 +13409,6 @@ def q383_alignment_uniformity(
 
     emb = load_table(spark, sf_dir, "embeddings")
     return alignment_uniformity(emb)
-
-
-# ---------------------------------------------------------------------------
-# q384 — 1R decision stump (operators/classifier.decision_stump;
-# Holte 1993): best single info-gain threshold on document length for
-# "is this English" — the feature-triage weak learner. The corpus
-# collapses to the distinct-value catalog in ONE aggregate; candidate
-# splits are cumulative sums over that catalog;
-# argmax on the ROUNDED gain with a threshold tiebreak.
-# ---------------------------------------------------------------------------
-@query(
-    "q384_decision_stump",
-    oracle="""
-    WITH base AS (SELECT CAST(n_chars AS DOUBLE) AS x,
-                         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-                  FROM documents WHERE n_chars IS NOT NULL),
-    cat AS (SELECT x, count(*) AS n, sum(y) AS p FROM base GROUP BY 1),
-    c AS (SELECT x,
-                 sum(n) OVER w AS cn, sum(p) OVER w AS cp,
-                 sum(n) OVER () AS tn, sum(p) OVER () AS tp
-          FROM cat
-          WINDOW w AS (ORDER BY x ROWS BETWEEN UNBOUNDED PRECEDING
-                       AND CURRENT ROW)),
-    g AS (SELECT x, cn, cp, tn, tp,
-                 cn / CAST(tn AS DOUBLE) AS fl,
-                 CASE WHEN tp > 0 AND tp < tn THEN
-                      -(tp / CAST(tn AS DOUBLE))
-                          * ln(tp / CAST(tn AS DOUBLE))
-                      - (1 - tp / CAST(tn AS DOUBLE))
-                          * ln(1 - tp / CAST(tn AS DOUBLE))
-                 ELSE 0.0 END AS hp,
-                 CASE WHEN cp > 0 AND cp < cn THEN
-                      -(cp / CAST(cn AS DOUBLE))
-                          * ln(cp / CAST(cn AS DOUBLE))
-                      - (1 - cp / CAST(cn AS DOUBLE))
-                          * ln(1 - cp / CAST(cn AS DOUBLE))
-                 ELSE 0.0 END AS hl,
-                 CASE WHEN (tp - cp) > 0 AND (tp - cp) < (tn - cn) THEN
-                      -((tp - cp) / CAST(tn - cn AS DOUBLE))
-                          * ln((tp - cp) / CAST(tn - cn AS DOUBLE))
-                      - (1 - (tp - cp) / CAST(tn - cn AS DOUBLE))
-                          * ln(1 - (tp - cp) / CAST(tn - cn AS DOUBLE))
-                 ELSE 0.0 END AS hr
-          FROM c WHERE cn < tn)
-    SELECT x AS threshold,
-           round(hp - fl * hl - (1 - fl) * hr, 6) AS gain,
-           round(hp, 6) AS parent_entropy,
-           CAST(cn AS BIGINT) AS n_left, CAST(cp AS BIGINT) AS pos_left,
-           CAST(tn - cn AS BIGINT) AS n_right,
-           CAST(tp - cp AS BIGINT) AS pos_right
-    FROM g
-    ORDER BY gain DESC, threshold ASC LIMIT 1
-    """,
-)
-def q384_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.classifier import decision_stump
-
-    d = load_table(spark, sf_dir, "documents").select(
-        F.col("n_chars").cast("double").alias("x"),
-        (F.col("lang") == "en").alias("y"),
-    )
-    return decision_stump(d, "x", "y")
 
 
 # ---------------------------------------------------------------------------
@@ -16416,53 +14055,6 @@ def q396_cdc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q397 — linear CKA representation similarity (operators/features.
-# linear_cka, Kornblith ICML'19): how much embedding geometry survives
-# Matryoshka truncation to the first 16 dims — the scorecard beside
-# q261's recall-based audit and q314's JL distortion. Partial second
-# moments per Arrow batch (numpy GEMM), one groupBy merge; nothing on
-# the driver.
-# ---------------------------------------------------------------------------
-@query(
-    "q397_linear_cka",
-    oracle="""
-    WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM v),
-    x AS (SELECT vec_id, i, e[i] AS xi
-          FROM v, LATERAL unnest(generate_series(1, 64)) g(i)),
-    y AS (SELECT vec_id, j, e[j] AS yj
-          FROM v, LATERAL unnest(generate_series(1, 16)) g(j)),
-    mx AS (SELECT i, sum(xi) AS s FROM x GROUP BY 1),
-    my AS (SELECT j, sum(yj) AS s FROM y GROUP BY 1),
-    xx AS (SELECT sum(pow(v2 - ma.s * mb.s / n.n, 2)) AS f FROM (
-               SELECT a.i AS i, b.i AS j, sum(a.xi * b.xi) AS v2
-               FROM x a JOIN x b USING (vec_id) GROUP BY 1, 2) m
-           JOIN mx ma ON ma.i = m.i JOIN mx mb ON mb.i = m.j, n),
-    yy AS (SELECT sum(pow(v2 - ma.s * mb.s / n.n, 2)) AS f FROM (
-               SELECT a.j AS i, b.j AS j, sum(a.yj * b.yj) AS v2
-               FROM y a JOIN y b USING (vec_id) GROUP BY 1, 2) m
-           JOIN my ma ON ma.j = m.i JOIN my mb ON mb.j = m.j, n),
-    xy AS (SELECT sum(pow(v2 - ma.s * mb.s / n.n, 2)) AS f FROM (
-               SELECT a.i AS i, b.j AS j, sum(a.xi * b.yj) AS v2
-               FROM x a JOIN y b USING (vec_id) GROUP BY 1, 2) m
-           JOIN mx ma ON ma.i = m.i JOIN my mb ON mb.j = m.j, n)
-    SELECT CAST(n.n AS BIGINT) AS n,
-           round(CASE WHEN xx.f > 0 AND yy.f > 0
-                 THEN xy.f / sqrt(xx.f * yy.f) END, 6) AS cka
-    FROM n, xx, yy, xy
-    """,
-)
-def q397_linear_cka(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.features import linear_cka
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        F.col("embedding").cast("array<double>").alias("x"),
-        F.slice(F.col("embedding").cast("array<double>"), 1, 16).alias("y"),
-    )
-    return linear_cka(emb, "x", "y", 64, 16).select("n", "cka")
-
-
-# ---------------------------------------------------------------------------
 # q399 — Page-Hinkley drift detection (operators/temporal.
 # page_hinkley): per-user mean-shift monitor over purchase values —
 # the self-centering sequential test beside q288's known-target CUSUM.
@@ -16739,37 +14331,6 @@ def q404_mutual_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q405 — class-balancing weights (operators/labeling.class_weights):
-# inverse-frequency and effective-number-of-samples (Cui CVPR'19)
-# weight tables for the lang label, both normalized to keep the loss
-# scale. One K-row count aggregate + a 1-row broadcast.
-# ---------------------------------------------------------------------------
-@query(
-    "q405_class_weights",
-    oracle="""
-    WITH g AS (SELECT lang AS label, CAST(count(*) AS DOUBLE) AS n
-               FROM documents GROUP BY 1),
-    t AS (SELECT sum(n) AS tn, CAST(count(*) AS DOUBLE) AS k,
-                 sum((1 - CAST(0.999 AS DOUBLE))
-                     / (1 - pow(CAST(0.999 AS DOUBLE), n)) * n) AS em
-          FROM g)
-    SELECT label, CAST(n AS BIGINT) AS n,
-           round(n / tn, 6) AS share,
-           round(tn / (k * n), 6) AS inv_freq_w,
-           round((1 - CAST(0.999 AS DOUBLE))
-                 / (1 - pow(CAST(0.999 AS DOUBLE), n)) * tn / em, 6)
-               AS eff_num_w
-    FROM g, t
-    """,
-)
-def q405_class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.labeling import class_weights
-
-    d = load_table(spark, sf_dir, "documents")
-    return class_weights(d, "lang", beta=0.999)
-
-
-# ---------------------------------------------------------------------------
 # q406 — per-source KL from the corpus LM (operators/corpus_stats.
 # kl_to_corpus): "which source deviates most from the corpus unigram
 # distribution", exact over the top-50 + OTHER bucketed vocabulary
@@ -16912,110 +14473,6 @@ def q411_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return davies_bouldin(emb, "embedding", "label")
-
-
-# ---------------------------------------------------------------------------
-# q412 — streaming Page-Hinkley drift monitor (streaming/stateful.
-# page_hinkley_tracker): q399's self-centering mean-shift test carried
-# as per-key state across two micro-batches (ntile order-preserving
-# split, oldest-first drain) — the online drift watch for ingest-time
-# quality scores. State is seven scalars per key; the exact oracle
-# replays the identical prefix recursion in window algebra.
-# ---------------------------------------------------------------------------
-@query(
-    "q412_stream_page_hinkley",
-    oracle="""
-    WITH p AS (SELECT user_id, event_id, value FROM events
-               WHERE event_type = 'view'),
-    d AS (SELECT user_id, event_id,
-                 value - avg(value) OVER w - CAST(5.0 AS DOUBLE) AS dv
-          FROM p
-          WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    u AS (SELECT user_id, event_id, sum(dv) OVER w AS uu
-          FROM d
-          WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)),
-    ph AS (SELECT user_id, event_id, uu - min(uu) OVER w AS ph
-           FROM u
-           WINDOW w AS (PARTITION BY user_id ORDER BY event_id
-                        ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
-    SELECT user_id, CAST(count(*) AS BIGINT) AS n,
-           round(max(ph), 6) AS ph_max,
-           CAST(sum(CASE WHEN ph > 50.0 THEN 1 ELSE 0 END) AS BIGINT)
-               AS n_alarms,
-           min(CASE WHEN ph > 50.0 THEN event_id END) AS first_alarm_ord
-    FROM ph GROUP BY 1
-    """,
-)
-def q412_stream_page_hinkley(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    import os
-    import tempfile
-    import uuid
-
-    from cccatalog_spark.streaming.replay import (
-        dir_bytes,
-        stream_shuffle_partitions,
-        write_replay_batches,
-    )
-    from cccatalog_spark.streaming.stateful import page_hinkley_tracker
-
-    base = tempfile.mkdtemp(prefix="ccc_sph_")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    e = load_table(spark, sf_dir, "events").where(
-        F.col("event_type") == "view"
-    ).select("user_id", "event_id", "value")
-    halved = e.withColumn(
-        "_half", F.ntile(2).over(Window.orderBy("event_id"))
-    )
-    write_replay_batches(
-        base,
-        src,
-        [
-            halved.where(F.col("_half") == 1).drop("_half"),
-            halved.where(F.col("_half") == 2).drop("_half"),
-        ],
-    )
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("user_id long, event_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-    )
-    tracked = page_hinkley_tracker(
-        stream, "user_id", "value", "event_id", delta=5.0, threshold=50.0
-    )
-    sink = f"q412_sink_{uuid.uuid4().hex[:8]}"
-    with stream_shuffle_partitions(
-        spark,
-        dir_bytes(src),
-        # applyInPandasWithState over a high-cardinality key:
-        # group-dispatch parallelism = partition count, so keep
-        # core-count partitions (see streaming/replay.py)
-        min_partitions=spark.sparkContext.defaultParallelism,
-    ):
-        q = (
-            tracked.writeStream.outputMode("update")
-            .format("memory")
-            .queryName(sink)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-    return (
-        spark.table(sink)
-        .groupBy("user_id")
-        .agg(
-            F.max("n").alias("n"),
-            F.round(F.max_by("ph_max", "n"), 6).alias("ph_max"),
-            F.max_by("n_alarms", "n").alias("n_alarms"),
-            F.max_by("first_alarm_ord", "n").alias("first_alarm_ord"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

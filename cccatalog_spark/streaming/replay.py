@@ -1,6 +1,6 @@
 """Bounded-replay harness helpers for the streaming query family.
 
-Two overheads dominate a bounded micro-batch replay (the q81/q93/q106…
+Two overheads dominate a bounded micro-batch replay (the q81/q268
 fixture shape: write K tiny batch files, drain them with
 ``maxFilesPerTrigger=1`` + ``availableNow``):
 
@@ -101,30 +101,17 @@ def stream_shuffle_partitions(
     input_bytes: int,
     *,
     bytes_per_partition: int | None = None,
-    min_partitions: int | None = None,
 ):
     """Scope ``spark.sql.shuffle.partitions`` (= streaming state-store
     count; captured by a stream at START) to an input-size-derived
     value, restoring the session conf on exit.  Must wrap BOTH
-    ``.start()`` and the drain.
-
-    ``min_partitions``: floor for operators whose per-batch cost is
-    NOT state-store commits but per-group PYTHON work
-    (``applyInPandasWithState`` over a high-cardinality key): group
-    dispatch parallelism equals the partition count, so shrinking
-    partitions to the byte-derived value serializes the Python stage
-    (measured 4.7 s → 19.5 s on the q98 per-user dedup).  Such
-    callers pass ``min_partitions=spark.sparkContext.
-    defaultParallelism`` — i.e. keep core-count parallelism, which on
-    a cluster is exactly the pre-existing sizing."""
+    ``.start()`` and the drain."""
     bpp = bytes_per_partition or int(
         os.environ.get("SPARK_GRAFT_STREAM_BPP", str(_DEFAULT_BPP))
     )
     old = spark.conf.get("spark.sql.shuffle.partitions")
     cap = max(1, int(old))
     n = max(1, min(cap, -(-int(input_bytes) // max(1, bpp))))
-    if min_partitions:
-        n = min(cap, max(n, int(min_partitions)))
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     try:
         yield n

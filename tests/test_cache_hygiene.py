@@ -7,8 +7,8 @@ The returned frame's own lineage-cut checkpoint legitimately stays
 registered until the caller drops it, so the pin is on GROWTH: N calls
 may leave at most N result checkpoints, never N x intermediates
 (umass_coherence used to leave 3 cached frames per call, kl_to_corpus
-and mutual_knn_pairs 2, linear_cka and markov_hitting_time 1 — plus
-the result would have added one more each had it been checkpointed)."""
+and mutual_knn_pairs 2, markov_hitting_time 1 — plus the result would
+have added one more each had it been checkpointed)."""
 
 from __future__ import annotations
 
@@ -78,16 +78,4 @@ def test_markov_hitting_time_releases_intermediates(spark):
     _assert_no_intermediate_growth(
         spark,
         lambda: markov_hitting_time(df, "u", "o", "s", "t", horizon=4).count(),
-    )
-
-
-def test_linear_cka_releases_intermediates(spark):
-    from cccatalog_spark.operators.features import linear_cka
-
-    df = spark.createDataFrame(
-        [([float(i), float(i % 3)], [float(i % 2)]) for i in range(20)],
-        "x array<double>, y array<double>",
-    )
-    _assert_no_intermediate_growth(
-        spark, lambda: linear_cka(df, "x", "y", 2, 1).count()
     )

@@ -1,7 +1,6 @@
-"""hll_distinct_stream register math (streaming/stateful.py) — the
-Python state transition must match the batch sketch's column algebra
-(functions/sketches.py) bit-for-bit, which is what q341's oracle
-relies on."""
+"""HLL register math: a Python register model must match the batch
+sketch's column algebra (functions/sketches.hll_distinct) bit-for-bit,
+and its registers merge independently of batch order."""
 
 from __future__ import annotations
 

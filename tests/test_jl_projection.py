@@ -1,54 +1,14 @@
-"""fleiss_kappa (operators/labeling.py) and JL projection/audit
-(operators/similarity.py)."""
+"""JL projection/audit (operators/similarity.py)."""
 
 from __future__ import annotations
 
 import math
 
-from cccatalog_spark.operators.labeling import fleiss_kappa
 from cccatalog_spark.operators.similarity import (
     jl_distortion_audit,
     jl_project,
     jl_signs,
 )
-
-
-def test_fleiss_kappa_textbook(spark):
-    # Fleiss 1971-style: perfect agreement -> kappa = 1
-    rows = [(f"i{i}", "a") for i in range(5) for _ in range(3)]
-    df = spark.createDataFrame(rows, "item string, cat string")
-    out = fleiss_kappa(df, "item", "cat", 3).collect()[0]
-    assert out["p_bar"] == 1.0
-    # single category: P_e = 1 -> kappa undefined
-    assert out["kappa"] is None
-
-    # two categories, perfect agreement per item, split across items
-    rows2 = [(f"i{i}", "a") for i in range(3) for _ in range(3)] + [
-        (f"j{i}", "b") for i in range(3) for _ in range(3)
-    ]
-    df2 = spark.createDataFrame(rows2, "item string, cat string")
-    out2 = fleiss_kappa(df2, "item", "cat", 3).collect()[0]
-    assert out2["p_bar"] == 1.0 and out2["kappa"] == 1.0
-
-
-def test_fleiss_kappa_hand_computed(spark):
-    # 2 items, 3 raters: item1 = (a,a,b), item2 = (b,b,b)
-    rows = [("1", "a"), ("1", "a"), ("1", "b"),
-            ("2", "b"), ("2", "b"), ("2", "b")]
-    df = spark.createDataFrame(rows, "item string, cat string")
-    out = fleiss_kappa(df, "item", "cat", 3).collect()[0]
-    # P_1 = (4+1-3)/6 = 1/3; P_2 = (9-3)/6 = 1; P_bar = 2/3
-    assert abs(out["p_bar"] - 2 / 3) < 1e-6
-    # p_a = 2/6, p_b = 4/6 -> P_e = 1/9 + 4/9 = 5/9
-    assert abs(out["p_e"] - 5 / 9) < 1e-6
-    assert abs(out["kappa"] - (2 / 3 - 5 / 9) / (1 - 5 / 9)) < 1e-6
-
-
-def test_fleiss_kappa_drops_partial_panels(spark):
-    rows = [("1", "a"), ("1", "a"), ("1", "b"), ("2", "a")]
-    df = spark.createDataFrame(rows, "item string, cat string")
-    out = fleiss_kappa(df, "item", "cat", 3).collect()[0]
-    assert out["n_items"] == 1 and out["n_dropped"] == 1
 
 
 def test_jl_signs_deterministic_pm1(spark):

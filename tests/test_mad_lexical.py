@@ -1,7 +1,5 @@
-"""mad_outliers (operators/stats.py), lexical_profile
-(operators/corpus_stats.py), heavy_hitters_topk summary logic
-(streaming/stateful.py — state transition exercised directly; the
-end-to-end stream runs under q317's oracle)."""
+"""mad_outliers (operators/stats.py) and lexical_profile
+(operators/corpus_stats.py)."""
 
 from __future__ import annotations
 
@@ -56,49 +54,3 @@ def test_lexical_profile_empty_docs_group(spark):
     out = lexical_profile(docs, "text", "grp").collect()[0]
     assert out["n_docs"] == 2 and out["n_tokens"] == 0
     assert out["ttr"] is None
-
-
-def _run_summary(batches, capacity):
-    # replicate the per-shard SpaceSaving transition for direct tests
-    summ = {}
-    for batch in batches:
-        counts = {}
-        for k in batch:
-            counts[k] = counts.get(k, 0) + 1
-        for k in sorted(counts):
-            c = counts[k]
-            if k in summ:
-                summ[k][0] += c
-            elif len(summ) < capacity:
-                summ[k] = [c, 0]
-            else:
-                victim = min(summ, key=lambda x: (summ[x][0], x))
-                vcount = summ[victim][0]
-                del summ[victim]
-                summ[k] = [vcount + c, vcount]
-    return summ
-
-
-def test_spacesaving_exact_when_capacity_suffices():
-    summ = _run_summary([["a", "a", "b"], ["b", "c", "a"]], capacity=8)
-    assert summ == {"a": [3, 0], "b": [2, 0], "c": [1, 0]}
-
-
-def test_spacesaving_eviction_bound():
-    # capacity 2: 'c' evicts the min and inherits its count as err
-    summ = _run_summary([["a", "a", "b"], ["c"]], capacity=2)
-    assert "a" in summ and "c" in summ and "b" not in summ
-    est, err = summ["c"]
-    # SpaceSaving bound: true <= est <= true + err
-    assert err == 1 and est == 2 and 1 <= est
-
-
-def test_spacesaving_sorted_processing_determinism():
-    # the docstring's determinism contract: per-batch keys collapse
-    # to counts and apply in sorted order, so permuting arrival order
-    # within a batch cannot change the summary
-    batches = [["b", "a", "a"], ["c"]]
-    summ = _run_summary(batches, capacity=2)
-    assert summ == {"a": [2, 0], "c": [2, 1]}
-    summ2 = _run_summary([["a", "b", "a"], ["c"]], capacity=2)
-    assert summ2 == summ

@@ -78,16 +78,22 @@ def test_entry_contract(spark):
 
 
 def test_no_dangling_query_names():
-    """The driver window, the flagship and every query the tools name
-    must exist, so removing a query cannot leave a stale name behind."""
+    """The driver window, the flagship and every query the tools, the
+    tests, README.md and COVERAGE.md name must exist, so removing a
+    query cannot leave a stale name behind."""
     from cccatalog_spark.plans.queries import DRIVER_WINDOW
 
     assert [n for n in DRIVER_WINDOW if n not in QUERIES] == []
     assert entry_mod.FLAGSHIP in QUERIES
-    tools = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+    root = os.path.dirname(os.path.dirname(__file__))
+    files = (
+        glob.glob(os.path.join(root, "tools", "*.py"))
+        + glob.glob(os.path.join(root, "tests", "*.py"))
+        + [os.path.join(root, "README.md"), os.path.join(root, "COVERAGE.md")]
+    )
     stale = sorted(
-        (os.path.basename(f), n)
-        for f in glob.glob(os.path.join(tools, "*.py"))
+        (os.path.relpath(f, root), n)
+        for f in files
         for n in re.findall(r"\bq\d+_\w+", open(f).read())
         if n not in QUERIES
     )

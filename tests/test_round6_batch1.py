@@ -1,6 +1,6 @@
 """Unit tests for the round-6 batch-1 additions: FD/key discovery,
-Soundex blocking, weighted Jaccard join, Misra-Gries heavy
-hitters, grouped k-fold. Each checks a hand-computable frame."""
+Soundex blocking, weighted Jaccard join, grouped k-fold. Each checks
+a hand-computable frame."""
 
 from __future__ import annotations
 
@@ -145,43 +145,6 @@ def test_weighted_jaccard_threshold_and_prefilter(spark):
     ).collect()
     assert {(r["id_a"], r["id_b"]) for r in out} == {(0, 1)}
     assert out[0]["weighted_jaccard"] == 1.0
-
-
-def test_misra_gries_exact_output(spark):
-    from cccatalog_spark.operators.topk import misra_gries_heavy_hitters
-
-    # 40 a's, 30 b's, 29 singletons: n = 99, k = 3 -> cut at 33
-    rows = (
-        [("a",)] * 40 + [("b",)] * 30 + [(f"s{i}",) for i in range(29)]
-    )
-    df = spark.createDataFrame(rows, ["token"]).repartition(7)
-    out = {
-        r["token"]: r["cnt"]
-        for r in misra_gries_heavy_hitters(df, "token", k=3).collect()
-    }
-    assert out == {"a": 40}
-
-    out2 = {
-        r["token"]: r["cnt"]
-        for r in misra_gries_heavy_hitters(df, "token", k=4).collect()
-    }
-    # cut at 99/4 = 24.75 -> a and b qualify
-    assert out2 == {"a": 40, "b": 30}
-
-
-def test_misra_gries_partitioning_independent(spark):
-    from cccatalog_spark.operators.topk import misra_gries_heavy_hitters
-
-    rows = [(f"t{i % 17}",) for i in range(500)] + [("hot",)] * 300
-    for parts in (1, 5, 32):
-        df = spark.createDataFrame(rows, ["token"]).repartition(parts)
-        out = {
-            r["token"]: r["cnt"]
-            for r in misra_gries_heavy_hitters(
-                df, "token", k=3
-            ).collect()
-        }
-        assert out == {"hot": 300}
 
 
 def test_grouped_kfold_groups_stay_together(spark):

@@ -1,5 +1,4 @@
-"""Unit tests for round-6 batch-3: embedding alignment/uniformity and
-the 1R decision stump."""
+"""Unit tests for round-6 batch-3: embedding alignment/uniformity."""
 
 from __future__ import annotations
 
@@ -61,59 +60,3 @@ def test_alignment_collapsed_space(spark):
     )
     out = alignment_uniformity(df).collect()[0]
     assert out["alignment"] == 0.0 and out["uniformity"] == 0.0
-
-
-def test_decision_stump_perfect_split(spark):
-    from cccatalog_spark.operators.classifier import decision_stump
-
-    rows = [(float(i), i < 10) for i in range(20)]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    r = decision_stump(df, "x", "y").collect()[0]
-    assert r["threshold"] == 9.0
-    assert r["gain"] == pytest.approx(math.log(2), abs=1e-6)
-    assert r["n_left"] == 10 and r["pos_left"] == 10
-    assert r["n_right"] == 10 and r["pos_right"] == 0
-
-
-def test_decision_stump_matches_sklearn_style_scan(spark):
-    from cccatalog_spark.operators.classifier import decision_stump
-
-    rng = np.random.RandomState(5)
-    xs = rng.randint(0, 15, 200).astype(float)
-    ys = (xs + rng.randn(200) * 3 > 7).tolist()
-    df = spark.createDataFrame(
-        [(float(x), bool(y)) for x, y in zip(xs, ys)], ["x", "y"]
-    )
-
-    def H(p, n):
-        if n == 0 or p == 0 or p == n:
-            return 0.0
-        q = p / n
-        return -q * math.log(q) - (1 - q) * math.log(1 - q)
-
-    n, p = len(xs), sum(ys)
-    best = None
-    for t in sorted(set(xs.tolist()))[:-1]:
-        nl = int((xs <= t).sum())
-        pl = sum(y for x, y in zip(xs, ys) if x <= t)
-        g = round(
-            H(p, n) - nl / n * H(pl, nl) - (n - nl) / n * H(p - pl, n - nl),
-            6,
-        )
-        if best is None or g > best[1]:
-            best = (t, g)
-    r = decision_stump(df, "x", "y").collect()[0]
-    assert r["threshold"] == best[0]
-    assert r["gain"] == pytest.approx(best[1], abs=2e-6)
-
-
-def test_decision_stump_no_signal(spark):
-    from cccatalog_spark.operators.classifier import decision_stump
-
-    # target independent of feature and perfectly balanced per value:
-    # every split has zero gain; argmax tiebreak picks the smallest x
-    rows = [(float(i % 4), bool(j)) for i in range(16) for j in (0, 1)]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    r = decision_stump(df, "x", "y").collect()[0]
-    assert r["gain"] == pytest.approx(0.0, abs=1e-9)
-    assert r["threshold"] == 0.0

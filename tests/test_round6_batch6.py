@@ -1,6 +1,6 @@
 """Unit tests for round-6 batch-6 operators: McNemar / Cochran-
 Armitage / Friedman, query-likelihood retrieval, filter funnel, CDC
-chunk dedup, linear CKA, Page-Hinkley, DP group means."""
+chunk dedup, Page-Hinkley, DP group means."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "n
 
 import math
 
-import numpy as np
 from pyspark.sql import functions as F
 
 
@@ -273,42 +272,6 @@ def test_cdc_report_consistency(spark):
     assert r["total_chars"] == 2 * 320
     assert r["dedup_ratio"] == pytest.approx(0.5)  # one full copy saved
     assert r["max_chunk_copies"] >= 2
-
-
-# ---------------------------------------------------------------- linear CKA
-def _cka_ref(X, Y):
-    Xc = X - X.mean(axis=0)
-    Yc = Y - Y.mean(axis=0)
-    num = np.linalg.norm(Xc.T @ Yc, "fro") ** 2
-    den = (
-        np.linalg.norm(Xc.T @ Xc, "fro")
-        * np.linalg.norm(Yc.T @ Yc, "fro")
-    )
-    return num / den
-
-
-def test_cka_self_is_one(spark):
-    from cccatalog_spark.operators.features import linear_cka
-
-    rng = np.random.default_rng(7)
-    X = rng.normal(size=(40, 6))
-    rows = [(x.tolist(), x.tolist()) for x in X]
-    df = spark.createDataFrame(rows, ["x", "y"])
-    r = linear_cka(df, "x", "y", 6, 6).collect()[0]
-    assert r["n"] == 40
-    assert r["cka"] == pytest.approx(1.0, abs=1e-9)
-
-
-def test_cka_matches_numpy_reference(spark):
-    from cccatalog_spark.operators.features import linear_cka
-
-    rng = np.random.default_rng(11)
-    X = rng.normal(size=(50, 8))
-    Y = X[:, :3] + 0.1 * rng.normal(size=(50, 3))
-    rows = [(a.tolist(), b.tolist()) for a, b in zip(X, Y)]
-    df = spark.createDataFrame(rows, ["x", "y"]).repartition(4)
-    r = linear_cka(df, "x", "y", 8, 3).collect()[0]
-    assert r["cka"] == pytest.approx(_cka_ref(X, Y), abs=1e-6)
 
 
 # ------------------------------------------------------------- Page-Hinkley

@@ -1,5 +1,5 @@
 """Unit tests for round-6 batch-7 operators: inclusion dependencies,
-Hellinger drift, linear MMD, mutual k-NN, class weights, KL-to-corpus."""
+Hellinger drift, linear MMD, mutual k-NN, KL-to-corpus."""
 
 from __future__ import annotations
 
@@ -110,27 +110,6 @@ def test_mutual_knn_respects_blocks(spark):
     ]
     df = spark.createDataFrame(rows, ["id", "blk", "v"])
     assert mutual_knn_pairs(df, "v", "id", "blk", k=3).count() == 0
-
-
-# ---------------------------------------------------------- class weights
-def test_class_weights_normalization(spark):
-    from cccatalog_spark.operators.labeling import class_weights
-
-    rows = [("a",)] * 90 + [("b",)] * 10
-    df = spark.createDataFrame(rows, ["y"])
-    out = {r["label"]: r for r in class_weights(df, "y", beta=0.99).collect()}
-    # inverse-frequency: w_c = N/(K n_c)
-    assert out["a"]["inv_freq_w"] == pytest.approx(100 / (2 * 90), abs=1e-6)
-    assert out["b"]["inv_freq_w"] == pytest.approx(100 / (2 * 10), abs=1e-6)
-    # both weightings keep the loss scale: sum w_c n_c = N
-    for key in ("inv_freq_w", "eff_num_w"):
-        assert sum(out[c][key] * out[c]["n"] for c in out) == pytest.approx(
-            100, abs=1e-3
-        )
-    # minority class upweighted under both
-    assert out["b"]["eff_num_w"] > out["a"]["eff_num_w"]
-    with pytest.raises(ValueError):
-        class_weights(df, "y", beta=1.0)
 
 
 # ------------------------------------------------------------ KL to corpus

@@ -502,11 +502,10 @@ def test_ipf_missing_target_category_zeroes_out(spark):
 
 
 def test_bounded_catalog_guards_raise_on_high_cardinality(spark, monkeypatch):
-    """Round-8 verdict item 6: the driver-side IPF/Sinkhorn rounds are
+    """Round-8 verdict item 6: the driver-side IPF rounds are
     sanctioned only for category-bounded cell catalogs; a corpus-
     cardinality caller must fail loudly instead of collecting."""
     import cccatalog_spark.operators.sampling as sampling
-    from cccatalog_spark.operators.ot import sinkhorn_transport
     from cccatalog_spark.operators.sampling import ipf_weights
 
     monkeypatch.setattr(sampling, "_BOUNDED_CATALOG_MAX_CELLS", 4)
@@ -516,11 +515,6 @@ def test_bounded_catalog_guards_raise_on_high_cardinality(spark, monkeypatch):
         ipf_weights(
             df, "lang", "src", {f"r{i}": 1.0 for i in range(10)},
             {f"c{i}": 1.0 for i in range(10)},
-        )
-    with pytest.raises(ValueError, match="exceeds 4 cells"):
-        sinkhorn_transport(
-            df, "lang", {f"c{i}": 0.1 for i in range(10)},
-            lambda s, d: (s != d).cast("double"),
         )
 
 
@@ -534,10 +528,3 @@ def test_bounded_catalog_guard_passes_within_cap(spark):
         {"web": 3.0, "book": 2.0},
     ).collect()
     assert len(out) == 2
-
-
-def test_pca_power_dim_guard():
-    from cccatalog_spark.operators.features import pca_power_component
-
-    with pytest.raises(ValueError, match="bounded-catalog cap"):
-        pca_power_component(None, "v", 10_000)

@@ -10,7 +10,6 @@ pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "n
 import os
 import time
 
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from cccatalog_spark.streaming.loader import (
@@ -67,49 +66,6 @@ def test_stream_dedups_within_batch(spark, tmp_path):
     )
     q.awaitTermination(120)
     assert table.read().count() == 1
-
-
-def test_stateful_running_counts_across_batches(spark, tmp_path):
-    """applyInPandasWithState: state must carry across micro-batches
-    (two files, maxFilesPerTrigger=1 → two triggers)."""
-    import time
-
-    from cccatalog_spark.streaming.stateful import running_counts
-
-    watch = tmp_path / "in"
-    watch.mkdir()
-    now = time.time()
-    _write_tsv(str(watch / "b1.tsv"), ["a\t1", "a\t2", "b\t3"], now - 120)
-    _write_tsv(str(watch / "b2.tsv"), ["a\t4", "c\t5"], now - 60)
-
-    schema = T.StructType(
-        [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
-    )
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .option("maxFilesPerTrigger", "1")
-        .schema(schema)
-        .csv(str(watch))
-    )
-    q = (
-        running_counts(stream, "k")
-        .writeStream.format("memory")
-        .queryName("running_counts_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM running_counts_test").collect()
-    # update mode: one emission per key per touched trigger; the LAST
-    # emission per key is the running total across batches
-    last = {}
-    for r in rows:
-        last[r["k"]] = r["n"]  # later triggers append later
-    assert last == {"a": 3, "b": 1, "c": 1}
-    # 'a' must have been emitted twice (batch1: 2, batch2: 3)
-    a_vals = [r["n"] for r in rows if r["k"] == "a"]
-    assert sorted(a_vals) == [2, 3]
 
 
 def test_parquet_upsert_table_snapshot_swap(spark, tmp_path):
@@ -341,216 +297,12 @@ def test_stale_writer_loses_bucketed(spark, tmp_path):
     assert set(out) == {1} and out[1]["val"] == "old"
 
 
-def test_stateful_first_seen_dedup_across_batches(spark, tmp_path):
-    """dedup_first_seen: a key replayed in a later micro-batch emits
-    nothing; within a trigger the head row follows the order columns."""
-    import time
-
-    from cccatalog_spark.streaming.stateful import dedup_first_seen
-
-    watch = tmp_path / "in"
-    watch.mkdir()
-    now = time.time()
-    # batch1: k=a twice (sec 5 wins over 9), k=b once
-    _write_tsv(str(watch / "b1.tsv"), ["1\ta\t9", "2\ta\t5", "3\tb\t7"],
-               now - 120)
-    # batch2: k=a replayed (suppressed), k=c new
-    _write_tsv(str(watch / "b2.tsv"), ["4\ta\t1", "5\tc\t2"], now - 60)
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .option("maxFilesPerTrigger", "1")
-        .schema("event_id long, k string, sec long")
-        .csv(str(watch))
-    )
-    out = dedup_first_seen(
-        stream, "k", "k string, sec long", ["sec", "event_id"]
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("first_seen_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        r["k"]: r["sec"]
-        for r in spark.sql("SELECT * FROM first_seen_test").collect()
-    }
-    # exactly one emission per key; a's batch-2 replay suppressed
-    assert rows == {"a": 5, "b": 7, "c": 2}
-
-
-def test_dedup_within_watermark_drops_replays(spark, tmp_path):
-    import os
-    import time
-    import uuid
-
-    from cccatalog_spark.streaming.stateful import dedup_within_watermark
-
-    src = str(tmp_path / "in")
-    os.makedirs(src)
-    now = time.time()
-    batches = [
-        [(1, 10, 100), (2, 20, 200)],
-        [(1, 10, 100), (3, 30, 300)],  # row 1 replayed verbatim
-    ]
-    for i, rows in enumerate(batches):
-        p = os.path.join(src, f"b{i}.tsv")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write("\t".join(map(str, r)) + "\n")
-        os.utime(p, (now - 300 + i * 60,) * 2)
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-        .withColumn("ts", F.timestamp_seconds(F.col("sec")))
-    )
-    sink = f"rdd_{uuid.uuid4().hex[:8]}"
-    q = (
-        dedup_within_watermark(stream, ["event_id"], "ts", "1 hour")
-        .select("event_id", "user_id", "sec")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        tuple(r) for r in spark.sql(f"SELECT * FROM {sink}").collect()
-    )
-    assert got == [(1, 10, 100), (2, 20, 200), (3, 30, 300)]
-
-
-def test_ewma_tracker_two_batch_fold(spark, tmp_path):
-    import os
-    import time
-
-    import pyspark.sql.functions as F
-
-    from cccatalog_spark.streaming.stateful import ewma_tracker
-
-    src = tmp_path / "in"
-    src.mkdir()
-    # key 1: values 10, 20, 30, 40 split 2/2 across batches;
-    # key 2: single value in batch 2 only
-    batches = [
-        [(1, 1, 10.0), (1, 2, 20.0)],
-        [(1, 3, 30.0), (1, 4, 40.0), (2, 5, 7.0)],
-    ]
-    now = time.time()
-    for i, rows in enumerate(batches):
-        f = src / f"b{i}.tsv"
-        f.write_text("\n".join(f"{k}\t{o}\t{v}" for k, o, v in rows))
-        os.utime(f, (now - 60 + i * 30,) * 2)
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("user_id long, event_id long, value double")
-        .option("maxFilesPerTrigger", "1")
-        .csv(str(src))
-    )
-    q = (
-        ewma_tracker(stream, "user_id", "value", "event_id", 0.5)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("ewma_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    out = (
-        spark.table("ewma_test")
-        .groupBy("user_id")
-        .agg(F.max("n").alias("n"), F.max_by("ewma", "n").alias("ewma"))
-        .collect()
-    )
-    got = {r["user_id"]: (r["n"], r["ewma"]) for r in out}
-
-    def fold(vals, a=0.5):
-        s = None
-        for x in vals:
-            s = x if s is None else a * x + (1 - a) * s
-        return s
-
-    assert got[1][0] == 4
-    assert abs(got[1][1] - fold([10.0, 20.0, 30.0, 40.0])) < 1e-12
-    assert got[2] == (1, 7.0)
-    # intermediate emission after batch 1 also present (n=2)
-    ns = {r["n"] for r in spark.table("ewma_test").where("user_id = 1").collect()}
-    assert 2 in ns and 4 in ns
-
-
-def test_quota_admit_cross_batch_cap(spark, tmp_path):
-    import os
-    import time
-
-    from cccatalog_spark.streaming.stateful import quota_admit
-
-    src = tmp_path / "in"
-    src.mkdir()
-    # key 1: 3 rows in batch 0 + 3 in batch 1, quota 4 -> admit 3 + 1
-    # key 2: quota not reached
-    batches = [
-        [(1, 1), (1, 2), (1, 3), (2, 10)],
-        [(1, 4), (1, 5), (1, 6), (2, 11)],
-    ]
-    now = time.time()
-    for i, rows in enumerate(batches):
-        f = src / f"b{i}.tsv"
-        f.write_text("\n".join(f"{k}\t{o}" for k, o in rows))
-        os.utime(f, (now - 60 + i * 30,) * 2)
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("k long, o long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(str(src))
-    )
-    q = (
-        quota_admit(stream, "k", ["o"], 4, "k long, o long")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("quota_test")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    got = sorted((r["k"], r["o"]) for r in spark.table("quota_test").collect())
-    assert got == [(1, 1), (1, 2), (1, 3), (1, 4), (2, 10), (2, 11)]
-
-
-def test_stream_cep_equals_batch_cep(spark, sf_dir):
-    """The streaming automaton (cross-batch keyed state, 2-batch
-    ordered replay) emits exactly the batch operator's matches."""
-    from cccatalog_spark.plans.queries import (
-        q194_event_pattern,
-        q195_stream_event_pattern,
-    )
-
-    batch = {
-        (r.user_id, r.match_n, r.start_sec, r.end_sec)
-        for r in q194_event_pattern(spark, sf_dir).collect()
-    }
-    stream = {
-        (r.user_id, r.match_n, r.start_sec, r.end_sec)
-        for r in q195_stream_event_pattern(spark, sf_dir).collect()
-    }
-    assert stream == batch
-
-
-def test_stream_cep_repeated_step_types_equals_batch(spark, tmp_path):
-    """A pattern with a REPEATED step type (view,view,purchase) must
-    match the batch operator: kinds are distinct-type ids compared
-    against each step's wanted type, not a last-wins type->step map."""
-    import time
-
+def test_stream_cep_repeated_step_types_equals_batch(spark):
+    """A pattern with a REPEATED step type (view,view,purchase): the
+    batch operator compares distinct-type ids against each step's
+    wanted type, not a last-wins type->step map, and retries an
+    anchor whose span exceeds the window."""
     from cccatalog_spark.operators.temporal import match_event_sequence
-    from cccatalog_spark.streaming.stateful import match_sequence_stream
 
     rows = [
         # (event_id, user_id, event_type, sec)
@@ -558,7 +310,7 @@ def test_stream_cep_repeated_step_types_equals_batch(spark, tmp_path):
         (2, 1, "view", 20),
         (3, 1, "purchase", 30),   # match 1: 10..30
         (4, 1, "view", 40),
-        (5, 1, "view", 52),       # spans batches
+        (5, 1, "view", 52),
         (6, 1, "purchase", 60),   # match 2: 40..60
         (7, 2, "view", 5),
         (8, 2, "purchase", 9),    # no second view -> no match
@@ -578,96 +330,4 @@ def test_stream_cep_repeated_step_types_equals_batch(spark, tmp_path):
             within=50, tiebreak_col="event_id",
         ).collect()
     }
-
-    watch = tmp_path / "in"
-    watch.mkdir()
-    now = time.time()
-    cut = 5  # first five events in batch 1, rest in batch 2
-    _write_tsv(
-        str(watch / "b1.tsv"),
-        ["\t".join(map(str, (e, u, t, s))) for e, u, t, s in rows[:cut]],
-        now - 120,
-    )
-    _write_tsv(
-        str(watch / "b2.tsv"),
-        ["\t".join(map(str, (e, u, t, s))) for e, u, t, s in rows[cut:]],
-        now - 60,
-    )
-    stream_df = (
-        spark.readStream.option("sep", "\t")
-        .option("maxFilesPerTrigger", "1")
-        .schema("event_id long, user_id long, event_type string, sec long")
-        .csv(str(watch))
-    )
-    out = match_sequence_stream(
-        stream_df, "user_id", "sec", "event_type", steps,
-        within=50, tiebreak_col="event_id",
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("cep_repeat_test")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    stream = {
-        (r.user_id, r.match_n, r.start_sec, r.end_sec)
-        for r in spark.sql("SELECT * FROM cep_repeat_test").collect()
-    }
-    assert batch, "batch operator found no matches — fixture broken"
-    assert stream == batch
-
-
-def test_lsh_bucket_claims_first_owner_across_batches(spark, tmp_path):
-    import uuid
-
-    from cccatalog_spark.streaming.stateful import lsh_bucket_claims
-
-    watch = tmp_path / "lsh_in"
-    watch.mkdir()
-    now = time.time()
-    # pre-banded rows: (doc_id, band, bsig). batch 1 claims bucket
-    # (0, "x") with doc 4 (and doc 6 same-batch race -> min id wins);
-    # batch 2's doc 1 collides on every one of its buckets, doc 3 owns
-    # a fresh bucket
-    _write_tsv(
-        str(watch / "b1.tsv"),
-        ["4\t0\tx", "6\t0\tx", "4\t1\ty"],
-        now - 120,
-    )
-    _write_tsv(
-        str(watch / "b2.tsv"),
-        ["1\t0\tx", "1\t1\ty", "3\t2\tz"],
-        now - 60,
-    )
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("doc_id long, band int, bsig string")
-        .option("maxFilesPerTrigger", "1")
-        .csv(str(watch))
-    )
-    sink = f"lsh_claims_{uuid.uuid4().hex[:8]}"
-    q = (
-        lsh_bucket_claims(stream, "doc_id")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt_lsh"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    rows = {
-        (r["doc_id"], r["band"], r["bsig"]): r
-        for r in spark.sql(f"SELECT * FROM {sink}").collect()
-    }
-    assert rows[(4, 0, "x")]["is_first"] and rows[(4, 0, "x")]["owner_id"] == 4
-    assert not rows[(6, 0, "x")]["is_first"]       # same-batch race: min id
-    assert rows[(6, 0, "x")]["owner_id"] == 4
-    assert not rows[(1, 0, "x")]["is_first"]       # later batch never owns
-    assert not rows[(1, 1, "y")]["is_first"]
-    assert rows[(3, 2, "z")]["is_first"]           # fresh bucket in batch 2
-    # doc 1 owns zero of its buckets -> near-dup candidate
-    owned = [r for (d, _, _), r in rows.items() if d == 1 and r["is_first"]]
-    assert owned == []
+    assert batch == {(1, 1, 10, 30), (1, 2, 40, 60), (3, 1, 60, 105)}

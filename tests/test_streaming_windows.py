@@ -1,58 +1,17 @@
-"""Streaming tumbling windows with watermark: end-to-end through a
-file stream into a memory sink, including late-row handling, plus the
-reingestion schedule policy."""
+"""Streaming window watermark contracts on this Spark version
+(append-mode emission, late-row drop), end-to-end through a file
+stream into a memory sink, plus the reingestion schedule policy."""
 
 from __future__ import annotations
 
 import datetime as dt
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from cccatalog_spark.plans.schedules import (
     reingestion_day_shifts,
     reingestion_schedule,
 )
-from cccatalog_spark.streaming.windows import tumbling_counts
-
-SCHEMA = T.StructType(
-    [
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("kind", T.StringType()),
-    ]
-)
-
-
-def test_tumbling_counts_stream(spark, tmp_path):
-    src = tmp_path / "src"
-    src.mkdir()
-    rows = [
-        "2024-01-01T10:05:00\ta",
-        "2024-01-01T10:55:00\ta",
-        "2024-01-01T11:05:00\tb",
-        "2024-01-01T10:10:00\ta",  # in-window duplicate hour, still on time
-    ]
-    (src / "one.tsv").write_text("\n".join(rows) + "\n")
-
-    stream = (
-        spark.readStream.option("sep", "\t").schema(SCHEMA).csv(str(src))
-    )
-    agg = tumbling_counts(stream, "ts", "kind", window="1 hour",
-                          watermark="30 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("tumbling_test")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (str(r["window_start"]), r["kind"]): r["n"]
-        for r in spark.sql("SELECT * FROM tumbling_test").collect()
-    }
-    assert got[("2024-01-01 10:00:00", "a")] == 3
-    assert got[("2024-01-01 11:00:00", "b")] == 1
 
 
 def test_reingestion_day_shifts():
@@ -186,62 +145,3 @@ def test_late_row_drop_contract(spark, tmp_path):
     # [0,300) emitted exactly once with the original n=2
     assert dropped == 1
     assert got[(0, "k")] == 2
-
-
-# ---------------------------------------------------------------------------
-# session_counts (streaming merging-session windows)
-# ---------------------------------------------------------------------------
-
-def test_session_windows_merge_across_batches(spark, tmp_path):
-    import os
-    import time
-    import uuid
-
-    from cccatalog_spark.streaming.windows import session_counts
-
-    base = str(tmp_path / "sess")
-    src = os.path.join(base, "in")
-    os.makedirs(src)
-    # batch0: user 1 @100, @1000 (one session, gap < 1800)
-    # batch1: @2800 extends it (1000+1800=2800 boundary-equal MERGES);
-    #         @99999 starts a fresh session; user 2 independent @50
-    batches = [
-        [(1, 1, 100), (2, 1, 1000), (3, 2, 50)],
-        [(4, 1, 2800), (5, 1, 99999)],
-    ]
-    now = time.time()
-    for i, rows in enumerate(batches):
-        p = os.path.join(src, f"b{i}.tsv")
-        with open(p, "w") as f:
-            for r in rows:
-                f.write("\t".join(map(str, r)) + "\n")
-        os.utime(p, (now - 300 + i * 60,) * 2)
-
-    stream = (
-        spark.readStream.option("sep", "\t")
-        .schema("event_id long, user_id long, sec long")
-        .option("maxFilesPerTrigger", "1")
-        .csv(src)
-        .select("user_id", F.timestamp_seconds(F.col("sec")).alias("ts"))
-    )
-    sink = f"sess_{uuid.uuid4().hex[:8]}"
-    q = (
-        session_counts(stream, "ts", "user_id")
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(sink)
-        .option("checkpointLocation", os.path.join(base, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    got = sorted(
-        (r["user_id"], r["session_start"].timestamp(),
-         r["session_end"].timestamp(), r["n_events"])
-        for r in spark.sql(f"SELECT * FROM {sink}").collect()
-    )
-    assert got == [
-        (1, 100.0, 4600.0, 3),      # cross-batch + boundary-equal merge
-        (1, 99999.0, 101799.0, 1),  # fresh session after the gap
-        (2, 50.0, 1850.0, 1),
-    ]

@@ -1,16 +1,12 @@
-"""TF-IDF keyword extraction, document-PMI collocations, and the
-derandomized JL random projection against brute-force Python/numpy
-models."""
+"""TF-IDF keyword extraction and document-PMI collocations against
+brute-force Python models."""
 
 from __future__ import annotations
 
 import math
-from collections import Counter, defaultdict
-
-import numpy as np
+from collections import Counter
 
 from cccatalog_spark.operators.corpus_stats import pmi_pairs
-from cccatalog_spark.operators.features import random_projection
 from cccatalog_spark.operators.retrieval import tfidf_top_terms
 
 
@@ -103,48 +99,3 @@ def test_pmi_multiplicity_ignored(spark):
         ).collect()
     }
     assert got[("a", "b")] == 2
-
-
-def _sign_matrix(in_dim, out_dim):
-    m = np.zeros((in_dim, out_dim))
-    for i in range(in_dim):
-        for j in range(out_dim):
-            m[i, j] = np.sign(((i * 31 + j * 17) % 7) - 3)
-    return m
-
-
-def test_random_projection_matches_numpy(spark):
-    rng = np.random.RandomState(7)
-    vecs = rng.randn(20, 16).round(3)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
-        "vec_id long, embedding array<double>",
-    )
-    want = vecs @ _sign_matrix(16, 4)
-    got = {}
-    for r in random_projection(df, "embedding", "vec_id", out_dim=4).collect():
-        got[(r["vec_id"], r["dim"])] = r["value"]
-    assert len(got) == 20 * 4
-    for i in range(20):
-        for j in range(4):
-            assert abs(got[(i, j)] - round(want[i, j], 6)) < 1e-9
-
-
-def test_random_projection_preserves_relative_distance(spark):
-    # JL sanity: a vector pair that is close in 64-d stays closer in
-    # the projection than a far pair (no exactness claim, just order)
-    rng = np.random.RandomState(11)
-    base = rng.randn(64)
-    near = base + 0.01 * rng.randn(64)
-    far = rng.randn(64)
-    df = spark.createDataFrame(
-        [(0, [float(x) for x in base]),
-         (1, [float(x) for x in near]),
-         (2, [float(x) for x in far])],
-        "vec_id long, embedding array<double>",
-    )
-    out = defaultdict(dict)
-    for r in random_projection(df, "embedding", "vec_id", out_dim=8).collect():
-        out[r["vec_id"]][r["dim"]] = r["value"]
-    p = {i: np.array([out[i][j] for j in range(8)]) for i in out}
-    assert np.linalg.norm(p[0] - p[1]) < np.linalg.norm(p[0] - p[2])

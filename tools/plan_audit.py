@@ -9,7 +9,6 @@ Usage: python tools/plan_audit.py [sf_dir]
 
 from __future__ import annotations
 
-import os
 import re
 import sys
 
@@ -59,8 +58,6 @@ SANCTIONED_BNLJ = {
     "q395_filter_funnel": "1-row funnel aggregate unpivoted via stack",
     "q396_cdc_dedup": "1-row doc-count broadcast onto the chunk "
     "rollup",
-    "q397_linear_cka": "<= (dx*dy)-row moment-catalog self-combines "
-    "+ 1-row n broadcast (single persisted gram pass)",
     "q400_dp_group_means": "k-row group catalog only (noise is "
     "column algebra)",
     "q401_ind_discovery": "per-candidate 1-row count x 1-row count "
@@ -68,14 +65,10 @@ SANCTIONED_BNLJ = {
     "q402_hellinger_drift": "1-row bounds + 1-row totals broadcast "
     "over the 16-bin catalog",
     "q403_mmd_shift": "1-row per-dimension moment fold",
-    "q405_class_weights": "1-row normalizer broadcast over the K-row "
-    "label catalog",
     "q406_source_kl": "1-row corpus-total + 51-bucket catalog "
     "broadcasts",
     "q411_davies_bouldin": "k-row centroid-catalog pair join (k^2 "
     "rows, corpus never pairs)",
-    "q377_heavy_hitters": "1-row corpus-total broadcast onto the "
-    "bounded MG candidate counts",
     "q383_alignment_uniformity": "1-row alignment x uniformity report "
     "fold",
     "q388_banned_phrases": "k-row phrase catalog cross (the scan-side "
@@ -92,7 +85,6 @@ SANCTIONED_BNLJ = {
     "q310_mann_kendall": "1-row S/tie scalars broadcast",
     "q312_concentration": "1-row category-total broadcast over the "
     "category catalog",
-    "q313_fleiss_kappa": "1-row P_bar x P_e fold",
     "q318_hill_tail": "1-row x_(k+1) boundary broadcast over the "
     "value catalog",
     "q319_chi2_residuals": "1-row N broadcast over the contingency "
@@ -103,17 +95,11 @@ SANCTIONED_BNLJ = {
     "catalog + 1-row argmin fold",
     "q332_jsonl_quarantine": "1-row quarantine-count fold",
     "q333_neyman_allocation": "1-row allocation totals broadcast",
-    "q338_label_noise": "L-row label catalog cross (the q206 NB "
-    "scoring shape) + 1-row folds",
-    "q339_hashing_collisions": "3-row dims grid broadcast over the "
-    "term catalog",
     "q342_data_card": "1-row report folds (top-lang, dup-count) "
     "cross-joined into the card row",
     "q335_estimator_shootout": "listed for the sketch scalar "
     "broadcasts if plans shift",
     "q336_median_ci": "listed for the rank scalars if plans shift",
-    "q341_stream_hll_distinct": "listed for the final-state rollup "
-    "if plans shift",
     "q344_next_event_latency": "1-row summary fold over the latency "
     "catalog",
     # round-6 second-wave batch: all 1-row scalar / ≤k-row catalog
@@ -172,11 +158,6 @@ SANCTIONED_BNLJ = {
     "q103_bigram_lm_nll": "1-row vocabulary-size scalar broadcast",
     "q229_kn_lm_nll": "1-row (bigram-types, vocab-size) scalar broadcast (the q103 contract with the KN constants)",
     "q115_corpus_drift": "1-row token-total scalar broadcast",
-    "q189_pca_power": "1-row L2-norm / eigenvalue scalar broadcasts per "
-    "power-iteration round (HITS normalization pattern; frames are "
-    "bounded d-row catalogs)",
-    "q190_pca_project": "same 1-row norm/eigenvalue broadcasts as q189 "
-    "plus the broadcast loadings join (d-row catalog)",
     "q192_tfidf_cosine_pairs": "1-row corpus-count broadcast feeding the "
     "smooth-idf constant (BM25 stats pattern)",
     "q117_vocab_coverage": "1-row token-total scalar broadcast",
@@ -188,9 +169,6 @@ SANCTIONED_BNLJ = {
     "q126_tfidf_top_terms": "1-row corpus-size scalar broadcast (idf)",
     "q127_pmi_pairs": "1-row doc-count scalar broadcast (PMI "
     "normalizer)",
-    "q206_nb_classifier": "L-row label catalog + 1-row vocab/doc-total "
-    "scalar cross-broadcasts (NB priors and fallbacks; every doc "
-    "scores every label by construction)",
     "q130_interleave_shuffle": "1-row source-count scalar broadcast "
     "(closed-form slot arithmetic)",
     "q265_heaps_law": "1-row token-total broadcast exploded into the "
@@ -234,23 +212,8 @@ SANCTIONED_BNLJ = {
     "q228_class_tfidf": "1-row average-class-mass scalar broadcast into the (class, term) counts",
     "q235_psi_drift": "1-row reference-bounds / totals / psi scalar broadcasts (the woe_iv contract on both sides)",
     "q236_k_anonymity": "1-row row-total scalar broadcast",
-    "q237_sif_embeddings": "1-row token-total + d-row loadings-array broadcasts plus the q189 PCA norm/eigen scalar chain",
     "q238_skipgram_pairs": "1-row token-total scalar broadcast (the subsample keep-probability denominator)",
-    "q242_krippendorff_alpha": "<=|values|-row coincidence marginals cross-combined + 1-row totals (bounded catalogs; |values| is the label alphabet, not the corpus)",
     "q245_lsh_recall_audit": "three 1-row count frames cross-combined (the evaluation summary row)",
-    # round-8: flags newly VISIBLE because the audit now captures
-    # pre-truncation per-round plans (round-7 advice) — each is the
-    # same 1-row / ≤k-row catalog cross-broadcast contract as above,
-    # sitting inside an iterative round body
-    "q207_logreg_filter": "per-round (dim+1)-row weight-frame + 1-row "
-    "learning-rate scalar cross-broadcasts (collect-free SGD round; "
-    "corpus enters only the gradient aggregate)",
-    "q240_dawid_skene": "per-round 1-row class-prior cross-broadcast "
-    "into the posterior logits + |classes|^2 confusion-catalog "
-    "broadcast join (EM round)",
-    "q249_sinkhorn_ot": "per-round 1-row mass-total cross-broadcasts "
-    "over the two <=k-row marginal catalogs (scaling update; the "
-    "cost matrix is catalog x catalog by construction)",
 }
 
 

@@ -111,10 +111,6 @@ SANCTIONED_GLOBAL_WINDOW = {
     # exact-disc p50/p90 cumsum over the DISTINCT-LATENCY catalog
     # (the corpus collapses to per-latency counts first) — temporal.next_event_latency summary in q344
     "q344_next_event_latency",
-    # split-candidate cumsums over the DISTINCT-VALUE catalog (corpus
-    # collapses to per-value counts first) —
-    # classifier.decision_stump
-    "q384_decision_stump",
     # share windows over the k x |strata| CELL catalog (one groupBy
     # collapses the corpus first) — sampling.kfold_balance_audit
     "q378_grouped_kfold",
@@ -139,13 +135,6 @@ FAMILIES = {
     "knn-shapley-broadcast-probes": (
         "q372_knn_shapley",
         {"joins": 1, "exchanges": 4},
-    ),
-    # Misra-Gries: pass 1 is a shuffle-free Arrow summary per
-    # partition; pass 2 shuffles only the bounded candidate set
-    # (topk.misra_gries_heavy_hitters)
-    "misra-gries-bounded-candidates": (
-        "q377_heavy_hitters",
-        {"joins": 2, "arrow_udf_nodes": 1, "exchanges": 7},
     ),
     # weighted Jaccard: inverted-index sort-merge self-join with the
     # length prefilter INSIDE the join condition
@@ -257,14 +246,6 @@ FAMILIES = {
         "q205_cc_scrape_router",
         {"joins": 0, "arrow_udf_nodes": 3, "exchanges": 3},
     ),
-    # logistic-GD trainer: per-round lineage truncation means the
-    # FINAL plan is iteration-count-independent — just the hashed-bow
-    # build, the broadcast weight join, and the label join; epochs can
-    # scale without plan growth (classifier.logreg_train)
-    "logreg-truncated-lineage": (
-        "q207_logreg_filter",
-        {"joins": 3, "exchanges": 6},
-    ),
     # asymmetric prefix-filtered containment: df-attach join + ONE
     # rarest-prefix × full-postings candidate join + 2 verify joins —
     # never the unguarded full-postings self-join (Σ df² candidates).
@@ -287,13 +268,6 @@ FAMILIES = {
     "glove-single-equi-join": (
         "q241_glove_cooccurrence",
         {"joins": 1, "exchanges": 3},
-    ),
-    # phrase blocklist: ONE doc-keyed window shuffle builds the whole
-    # 1..L gram ladder; the phrase dim is a broadcast hash join (the
-    # Aho-Corasick stand-in never self-joins the corpus)
-    "blocklist-one-window-one-broadcast": (
-        "q251_phrase_blocklist",
-        {"joins": 1, "exchanges": 2},
     ),
     # hard-negative mining: ONE shared postings build serves every
     # query (filter-before-explode); query dim + df stats broadcast,
@@ -323,14 +297,6 @@ FAMILIES = {
     "dbscan-grid-join-star-cc": (
         "q269_dbscan",
         {"joins": 25, "exchanges": 15},
-    ),
-    # Sinkhorn OT: every scaling round ends in a lineage cut, so the
-    # FINAL plan is a checkpoint readback — 0 exchanges, 0 joins,
-    # iteration-count-independent (operators/ot.py; the
-    # logreg-truncated-lineage contract for iterative algorithms).
-    "sinkhorn-truncated-lineage": (
-        "q249_sinkhorn_ot",
-        {"joins": 0, "exchanges": 0},
     ),
     # Salted skew join: the hot-key side explodes into SALT shards
     # pre-join, so the shuffle keys are (key, salt) — exactly ONE join
@@ -409,16 +375,6 @@ FAMILIES = {
         "q362_class_separability",
         {"joins": 0, "exchanges": 4},
     ),
-    # Streaming LSH bucket claims: the banding algebra is batch q25's
-    # unchanged (covered by minhash-lsh-banded); what this pins is the
-    # readback side — the memory-sink aggregate is ONE exchange, and
-    # the state op is keyed by (band, bsig) so state is bucket-bounded
-    # (streaming/stateful.lsh_bucket_claims; e2e semantics under the
-    # q254 oracle).
-    "stream-lsh-claims-readback": (
-        "q254_stream_lsh_neardup",
-        {"joins": 0, "exchanges": 1},
-    ),
     # CDC chunking: anchor hashes are position-independent column
     # algebra, so chunk explode is SHUFFLE-FREE; the 5 exchanges are
     # the hash-dedup aggregate + the 1-row doc-count broadcast
@@ -426,14 +382,6 @@ FAMILIES = {
     "cdc-chunking-zero-shuffle": (
         "q396_cdc_dedup",
         {"joins": 0, "exchanges": 5},
-    ),
-    # linear CKA: ONE persisted mapInPandas gram pass feeds all seven
-    # moment branches; everything downstream is catalog algebra on
-    # ≤(dx²+dx·dy+dy²)-row frames. String budget includes persisted-
-    # subtree reprints (features.linear_cka).
-    "cka-single-gram-pass": (
-        "q397_linear_cka",
-        {"joins": 6, "exchanges": 29},
     ),
     # Page-Hinkley: all three prefix windows are PARTITIONED BY the
     # series key — one shuffle total, no global sort
