@@ -4442,6 +4442,60 @@ def q134_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# q135 — distributed BPE merge learning (operators/bpe.learn_merges):
+# 6 rounds of adjacent-pair counting over the word-TYPE table (vocab
+# rows, corpus scanned once) + deterministic argmax + codegen'd fold
+# merge. Oracle: the same 6 rounds unrolled as CTE stages over a
+# unit-separator symbol encoding (replace() is greedy left-to-right
+# non-overlapping, exactly the BPE apply step).
+# ---------------------------------------------------------------------------
+def _q135_oracle(n_merges: int = 6) -> str:
+    us = "chr(31)"
+    parts = [
+        f"""
+    WITH toks AS (SELECT {_TOKS} AS t FROM documents),
+    wf AS (SELECT w AS word, count(*) AS freq
+           FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
+    w0 AS (SELECT {us} || array_to_string(string_split(word, ''), {us})
+                    || {us} AS s, freq
+           FROM wf)"""
+    ]
+    for i in range(n_merges):
+        parts.append(
+            f""",
+    p{i} AS (
+      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
+      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
+            FROM w{i}),
+           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
+      GROUP BY 1, 2
+    ),
+    t{i} AS (SELECT a, b, cnt FROM p{i}
+             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
+    w{i + 1} AS (
+      SELECT replace(w.s, {us} || t.a || {us} || t.b || {us},
+                     {us} || t.a || t.b || {us}) AS s, w.freq
+      FROM w{i} w, t{i} t
+    )"""
+        )
+    selects = [
+        f"""SELECT {i + 1} AS step, a AS "left", b AS "right",
+               a || b AS merged, CAST(cnt AS BIGINT) AS pair_count
+        FROM t{i}"""
+        for i in range(n_merges)
+    ]
+    return "".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
+
+
+@query("q135_bpe_learn", oracle=_q135_oracle(6))
+def q135_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cccatalog_spark.operators.bpe import learn_merges_df
+
+    docs = load_table(spark, sf_dir, "documents").select("text")
+    return learn_merges_df(spark, docs, TX.tokens(F.col("text")), 6)
+
+
+# ---------------------------------------------------------------------------
 # q136 — fractional-epoch corpus upsampling (operators/sampling.
 # epoch_repeat): the training mixture table ("2.4 epochs of src1, 0.25
 # of src2, 3.0 of src3, 0.5 of src4, 1.0 elsewhere") realized as
@@ -4644,6 +4698,62 @@ def q139_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("covered") / F.col("n_grams"), 6).alias("coverage"),
         )
     )
+
+
+# ---------------------------------------------------------------------------
+# q140 — BPE encode + per-source compression report (operators/bpe.
+# encode_report): learn 6 merges (q135's trainer) then APPLY them —
+# both on the word-type table; the corpus is scanned once for
+# (source, word) counts and the encode lengths re-join at vocab
+# granularity. Oracle carries the word identity through the same 6
+# unrolled replace() stages.
+# ---------------------------------------------------------------------------
+def _q140_oracle(n_merges: int = 6) -> str:
+    us = "chr(31)"
+    sql = f"""
+    WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
+    wsrc AS (SELECT source, w AS word, count(*) AS cnt
+             FROM (SELECT source, unnest(t) AS w FROM toks) GROUP BY 1, 2),
+    wf AS (SELECT word, sum(cnt) AS freq FROM wsrc GROUP BY 1),
+    w0 AS (SELECT word, {us} || array_to_string(string_split(word, ''), {us})
+                    || {us} AS s, freq
+           FROM wf)"""
+    for i in range(n_merges):
+        sql += f""",
+    p{i} AS (
+      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
+      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
+            FROM w{i}),
+           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
+      GROUP BY 1, 2
+    ),
+    t{i} AS (SELECT a, b FROM p{i}
+             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
+    w{i + 1} AS (
+      SELECT w.word,
+             replace(w.s, {us} || t.a || {us} || t.b || {us},
+                     {us} || t.a || t.b || {us}) AS s, w.freq
+      FROM w{i} w, t{i} t
+    )"""
+    sql += f"""
+    SELECT ws.source,
+           CAST(sum(ws.cnt * len(ws.word)) AS BIGINT) AS symbols_before,
+           CAST(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
+                AS BIGINT) AS symbols_after,
+           round(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
+                 / CAST(sum(ws.cnt * len(ws.word)) AS DOUBLE), 6)
+             AS compression
+    FROM wsrc ws JOIN w{n_merges} f USING (word)
+    GROUP BY 1"""
+    return sql
+
+
+@query("q140_bpe_encode_report", oracle=_q140_oracle(6))
+def q140_bpe_encode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from cccatalog_spark.operators.bpe import encode_report
+
+    docs = load_table(spark, sf_dir, "documents").select("source", "text")
+    return encode_report(docs, TX.tokens(F.col("text")), "source", 6)
 
 
 # ---------------------------------------------------------------------------

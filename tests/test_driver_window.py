@@ -47,13 +47,13 @@ def test_oracles_follow_query_order():
 def test_full_inventory_counts():
     qs = all_queries()
     oracles = all_oracles()
-    # 321 = 423 less the 40 queries of the removed graph, ml_metrics
+    # 323 = 423 less the 40 queries of the removed graph, ml_metrics
     # and preferences families (q306 TextRank among them), the 26 of
     # the removed experiments family (q287 Kaplan-Meier among them) and
-    # the 36 of the removed non-loader streaming (stateful, joins,
-    # windows) and features, classifier, labeling, bpe, ot, topk,
-    # blocklist and bloom families (q195 streaming CEP among them)
-    assert len(qs) == 321
+    # the 34 of the removed non-loader streaming (stateful, joins,
+    # windows) and features, classifier, labeling, ot, topk, blocklist
+    # and bloom families (q195 streaming CEP among them)
+    assert len(qs) == 323
     # every query is oracle-paired (q47/q50 gained literal-plane /
     # deterministic-quantizer oracles in round 3)
     assert sorted(set(qs) - set(oracles)) == []
