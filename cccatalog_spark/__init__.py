@@ -8,7 +8,9 @@ functions in ``pipelines`` (``ingest_provider_batch``,
 minutely loader in ``streaming.loader`` and the catalog queries
 (``plans.catalog.CATALOG_QUERIES``); README "Product surface" has the
 list, and ``tests/test_catalog_boundary.py`` pins the modules they
-import. The other operators and queries are not on any catalog path.
+import. ``load_and_merge`` returns the merged table materialized
+(``session.materialize``), so a refresh computes its merge once. The
+other operators and queries are not on any catalog path.
 
 Layers (see SURVEY.md §7.0):
 

@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cccatalog_spark.functions.text import shingles, tokens
+from cccatalog_spark.session import materialize
 from cccatalog_spark.sources.tables import fan_out
 
 
@@ -39,33 +40,16 @@ PRETRUNCATE_HOOK = None
 
 
 def _truncate_lineage(df: DataFrame) -> DataFrame:
-    """Materialize ``df`` and cut its logical plan to a leaf.
+    """Materialize ``df`` and cut its logical plan to a leaf
+    (``session.materialize``).
 
     Iterative algorithms MUST truncate lineage each round: ``persist``
     caches execution but the *analyzed plan* still nests the previous
     round's plan (several times per round here), so plan size — and
-    Catalyst analysis time — grows exponentially with the round count.
-    Uses reliable ``checkpoint()`` when the session has a checkpoint
-    dir (the cluster path: survives executor loss under dynamic
-    allocation), else eager ``localCheckpoint()``.
-
-    Cluster note: Spark does NOT delete reliable checkpoint files by
-    default — a long-lived session that configures a checkpoint dir
-    must also set ``spark.cleaner.referenceTracking.cleanCheckpoints=
-    true`` (a static conf, set at session build) or manage the
-    directory's lifecycle itself, else each call leaks checkpoint
-    files to storage for the life of the app.  ``get_spark`` sets it;
-    sessions built elsewhere own the trade."""
+    Catalyst analysis time — grows exponentially with the round count."""
     if PRETRUNCATE_HOOK is not None:
         PRETRUNCATE_HOOK(df)
-    sc = df.sparkSession.sparkContext
-    try:
-        has_dir = sc.getCheckpointDir() is not None
-    except Exception:
-        has_dir = False
-    if has_dir:
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    return materialize(df)
 
 
 def dedup_exact(

@@ -10,6 +10,9 @@ these instead of the Airflow DAG chain.
 
 Each stage is DataFrame→DataFrame; orchestration (cron, retries,
 sensors) stays outside, holding zero compute logic (SURVEY §7.0).
+The stages are lazy except ``load_and_merge``, which returns its merge
+materialized: the merged table is computed once and every consumer
+(the ``image`` write, popularity, a later merge) reads those rows.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from cccatalog_spark.operators.normalize import (
 )
 from cccatalog_spark.operators.popularity import build_popularity
 from cccatalog_spark.operators.provider_specs import ProviderSpec, apply_spec
+from cccatalog_spark.session import materialize
 
 
 def ingest_provider_batch(
@@ -47,12 +51,26 @@ def load_and_merge(
 ) -> DataFrame:
     """Clean rows → merged canonical image table (SURVEY §3.2 steps
     5-6: intra-batch key dedup A5, then the J1 upsert with system
-    columns). The result is a DataFrame; persisting it is the
-    caller's step."""
+    columns), computed once, materialized.
+
+    The merge runs in one job before this returns, and every consumer
+    — the caller's ``image`` write, the popularity constants and the
+    view's join back (``refresh_image_view``) — reads the same rows, so
+    ingest, normalize and the merge are not re-run per consumer, and a
+    new row's ``uuid()`` identifier is the same in all of them. A chain
+    of merges (``table2 = load_and_merge(table1, ...)``) does not
+    re-run the earlier ones either.
+
+    Scale note: the merged table is held as a ``session.materialize``
+    copy: ``localCheckpoint`` in executor storage (MEMORY_AND_DISK), or
+    a reliable ``checkpoint()`` when the session has a checkpoint dir.
+    Either copy is released when the returned frame is
+    garbage-collected (the reliable one given ``cleanCheckpoints``,
+    which ``get_spark`` sets)."""
     from cccatalog_spark.schemas import IMAGE_KEY
 
     deduped = clean_batch.dropDuplicates(IMAGE_KEY)
-    return image_merge(target, deduped, now=now)
+    return materialize(image_merge(target, deduped, now=now))
 
 
 def refresh_image_view(

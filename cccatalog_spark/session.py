@@ -18,7 +18,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -37,9 +37,9 @@ SEMANTIC_CONFS = {
     # into an inferred `size(e)>0 AND isnotnull(e)` filter, which then
     # pushes below any repartition — for explode-of-expensive-expression
     # (shingles, tokenizers) that evaluates the whole tree up to 3x, two
-    # of them at pre-fan-out parallelism (measured 0.8s -> 6s on the
-    # q91 shingle explode). The inferred filter only pays off when
-    # generator inputs are mostly empty, which none of our plans are.
+    # of them at pre-fan-out parallelism. The inferred filter only pays
+    # off when generator inputs are mostly empty, which none of our
+    # plans are.
     "spark.sql.optimizer.excludedRules": (
         "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
     ),
@@ -71,8 +71,8 @@ def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> Spa
         )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # reliable checkpoint() files (operators/dedup._truncate_lineage
-        # when a checkpoint dir is configured) are never deleted by
+        # reliable checkpoint() files (materialize when a checkpoint
+        # dir is configured) are never deleted by
         # default — opt into GC-driven cleanup so iterative operators
         # don't leak checkpoint files to storage across calls (static
         # conf: must be set at session build, not per-query)
@@ -83,3 +83,33 @@ def get_spark(app_name: str = "cccatalog_spark", cpus: int | None = None) -> Spa
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def materialize(df: DataFrame) -> DataFrame:
+    """Compute ``df`` once, now, and return a frame whose plan is a
+    leaf over the computed rows.
+
+    Every later action on the result reads those rows instead of
+    re-running ``df``'s plan, and Catalyst no longer analyzes that
+    plan again. Uses reliable ``checkpoint()`` when the session has a
+    checkpoint dir (the cluster path: survives executor loss under
+    dynamic allocation), else eager ``localCheckpoint``, which keeps
+    the rows in executor storage (MEMORY_AND_DISK) and drops their
+    lineage.
+
+    Cluster note: Spark does NOT delete reliable checkpoint files by
+    default — a long-lived session that configures a checkpoint dir
+    must also set ``spark.cleaner.referenceTracking.cleanCheckpoints=
+    true`` (a static conf, set at session build) or manage the
+    directory's lifecycle itself, else each call leaks checkpoint
+    files to storage for the life of the app.  ``get_spark`` sets it;
+    sessions built elsewhere own the trade. The local copy is released
+    once the returned frame is garbage-collected."""
+    sc = df.sparkSession.sparkContext
+    try:
+        has_dir = sc.getCheckpointDir() is not None
+    except Exception:
+        has_dir = False
+    if has_dir:
+        return df.checkpoint(eager=True)
+    return df.localCheckpoint(eager=True)

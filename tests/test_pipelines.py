@@ -101,6 +101,72 @@ def _with_system_cols(spark, df):
     )
 
 
+def _refresh_inputs(spark):
+    """A 6-row canonical table, a clean flickr batch that updates two of
+    its rows and inserts four, and the flickr metrics row."""
+    spec = flickr_spec()
+    old = spark.createDataFrame(
+        [(_flickr_record(i, views=10 * (i + 1)),) for i in range(6)],
+        "json string",
+    )
+    old_clean, _ = ingest_provider_batch(old, spec)
+    target = load_and_merge(
+        _with_system_cols(spark, old_clean.limit(0)), old_clean,
+        now=F.lit("2024-01-01 00:00:00").cast("timestamp"),
+    )
+    batch = spark.createDataFrame(
+        [(_flickr_record(i, views=1000 + i),) for i in range(4, 10)],
+        "json string",
+    )
+    clean, _ = ingest_provider_batch(batch, spec)
+    metrics = spark.createDataFrame(
+        [("flickr", "views", 0.85)],
+        "provider string, metric string, percentile double",
+    )
+    return target, clean, metrics
+
+
+def test_refresh_evaluates_each_batch_row_once(spark, tmp_path):
+    """Writing ``refresh_image_view(load_and_merge(...))`` runs the
+    batch's plan once: the popularity constants and the view's join
+    back read the merged rows instead of re-running ingest, normalize
+    and the merge."""
+    target, clean, metrics = _refresh_inputs(spark)
+    n_rows = clean.count()
+    evals = spark.sparkContext.accumulator(0)
+
+    def _count(v):
+        evals.add(1)
+        return v
+
+    counted = F.udf(_count, "string").asNondeterministic()
+    batch = clean.withColumn(
+        "foreign_identifier", counted(F.col("foreign_identifier")))
+    view = refresh_image_view(load_and_merge(target, batch), metrics)
+    view.write.parquet(str(tmp_path / "image_view"))
+    assert spark.read.parquet(str(tmp_path / "image_view")).count() == 10
+    assert evals.value == n_rows
+
+
+def test_image_and_view_agree_on_identifier(spark, tmp_path):
+    """``image`` and ``image_view`` written from one merge give every
+    row, inserted ones (``uuid()``) included, the same identifier."""
+    target, clean, metrics = _refresh_inputs(spark)
+    image = load_and_merge(target, clean)
+    image.write.parquet(str(tmp_path / "image"))
+    refresh_image_view(image, metrics).write.parquet(
+        str(tmp_path / "image_view"))
+    key = ["provider", "foreign_identifier"]
+    written = spark.read.parquet(str(tmp_path / "image")).select(
+        *key, F.col("identifier").alias("image_id"))
+    viewed = spark.read.parquet(str(tmp_path / "image_view")).select(
+        *key, F.col("identifier").alias("view_id"))
+    rows = written.join(viewed, key, "full_outer").collect()
+    assert len(rows) == 10
+    assert all(r["image_id"] is not None and r["image_id"] == r["view_id"]
+               for r in rows)
+
+
 def test_corpus_pipeline_keeps_one_canonical_per_neardup_cluster(spark):
     from cccatalog_spark.plans.queries import corpus_pipeline
 

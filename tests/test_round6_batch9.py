@@ -21,7 +21,7 @@ def _ph_ref(vals, delta):
     return phmax
 
 
-def test_stream_ph_matches_batch_recursion(spark):
+def test_page_hinkley_matches_sequential_recursion(spark):
     """The batch Page-Hinkley operator equals the sequential recursion
     and alarms only after the mean shift."""
     from cccatalog_spark.operators.temporal import page_hinkley

@@ -297,7 +297,7 @@ def test_stale_writer_loses_bucketed(spark, tmp_path):
     assert set(out) == {1} and out[1]["val"] == "old"
 
 
-def test_stream_cep_repeated_step_types_equals_batch(spark):
+def test_match_event_sequence_repeated_step_types(spark):
     """A pattern with a REPEATED step type (view,view,purchase): the
     batch operator compares distinct-type ids against each step's
     wanted type, not a last-wins type->step map, and retries an
