@@ -362,8 +362,8 @@ def cms_join_size(
     (the AMS/CMS inner-product estimator): for each hash row r,
     ``Σ_c A[r,c]·B[r,c]`` upper-bounds ``Σ_v f_A(v)·f_B(v)`` = the
     exact join cardinality; the estimate is the MIN over rows. The
-    cost-based input a join planner wants (q150's stats sibling) —
-    computed from two 1024-row sketches, never from the joined data.
+    cost-based input a join planner wants — computed from two 1024-row
+    sketches, never from the joined data.
 
     Both sketches must come from :func:`cms_counters` (same d×W and
     salt — enforced by construction since those are module constants).

@@ -101,9 +101,9 @@ def zonemap_prune_audit(
     """Zone-map (min/max file-statistics) pruning simulator — "if this
     table were laid out as these files, what fraction would a range
     predicate skip?". The decision tool behind every layout operator
-    in this module (compaction, Z-order q108, Hilbert q330, range
-    partition plan q168): run the audit on the current vs proposed
-    file assignment and read the skip rate difference directly.
+    in this module (compaction, Z-order q108, Hilbert q330): run the
+    audit on the current vs proposed file assignment and read the skip
+    rate difference directly.
 
     ``file_col`` is a Column expression assigning each row to a file
     (bucket id, partition path, Z-cell); ``[lo, hi]`` is the inclusive

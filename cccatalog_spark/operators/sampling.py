@@ -122,22 +122,6 @@ def stratified_sample(
 U_DENOM = float(16**12)
 
 
-def md5_u01(key: Column, salt: str, offset: float = 0.5) -> Column:
-    """The codebase's ONE derandomized-uniform idiom:
-    ``(conv(md5(salt‖key)[:12], 16, 10) + offset) / 2^48`` — strictly
-    inside (0, 1) for offset 0.5 (inverse-CDF draws: dp_noisy_counts,
-    poisson_bootstrap_ci), in (0, 1] for offset 1.0 (the
-    weighted-sample log key above). Keeping the conv/substring chain
-    here pins the convention its SQL-oracle twins hardcode
-    (``('0x' ‖ substring(md5(...), 1, 12))::BIGINT``)."""
-    v = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), key.cast("string"))), 1, 12),
-        16,
-        10,
-    ).cast("double")
-    return (v + F.lit(offset)) / F.lit(U_DENOM)
-
-
 def weighted_sample_key(
     id_col: Column, weight_col: Column, *, salt: str = "ws:"
 ) -> Column:

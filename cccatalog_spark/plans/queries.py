@@ -330,6 +330,11 @@ def q20_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 # language ID (extension operators; SURVEY build plan M9).
 # ---------------------------------------------------------------------------
 _TOKS = r"list_filter(string_split_regex(text, '\s+'), x -> x <> '')"
+# the GPT-2-shape BPE pre-tokenizer (functions/text.BPE_PRETOKEN_RE) as a
+# DuckDB string literal
+_BPE_RE_SQL = (
+    r"'''(?:s|d|m|t|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+'"
+)
 
 
 @query(
@@ -1342,12 +1347,12 @@ def q56_levenshtein_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 @query(
     "q57_bpe_tokens",
-    oracle=r"""
+    oracle=rf"""
     WITH t AS (
         SELECT lang,
                len(regexp_extract_all(
                    text,
-                   '''(?:s|d|m|t|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+'
+                   {_BPE_RE_SQL}
                )) AS n_bpe,
                len(list_filter(string_split_regex(text, '\s+'),
                                x -> x <> '')) AS n_ws
@@ -2181,7 +2186,7 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
 @query(
     "q77_corpus_pipeline",
-    oracle=r"""
+    oracle=rf"""
     WITH RECURSIVE w AS (
         SELECT doc_id, lang, text,
             list_filter(string_split_regex(text, '\s+'),
@@ -2242,11 +2247,11 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
             regexp_replace(
                 regexp_replace(
                     regexp_replace(k.text,
-                        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}',
+                        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{{2,}}',
                         '<EMAIL>', 'g'),
-                    '\b((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b',
+                    '\b((25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\.){{3}}(25[0-5]|2[0-4][0-9]|1[0-9][0-9]|[1-9]?[0-9])\b',
                     '<IP>', 'g'),
-                '\+?[0-9]{1,3}[-. ]\(?[0-9]{3}\)?[-. ][0-9]{3}[-. ][0-9]{4}',
+                '\+?[0-9]{{1,3}}[-. ]\(?[0-9]{{3}}\)?[-. ][0-9]{{3}}[-. ][0-9]{{4}}',
                 '<PHONE>', 'g') AS clean
         FROM kept k JOIN canon USING (doc_id))
     SELECT lang,
@@ -2254,7 +2259,7 @@ def corpus_pipeline(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
         CAST(sum(len(list_filter(string_split_regex(clean, '\s+'),
              x -> x <> ''))) AS BIGINT) AS total_ws_tokens,
         CAST(sum(len(regexp_extract_all(clean,
-             '''(?:s|d|m|t|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+')))
+             {_BPE_RE_SQL})))
              AS BIGINT) AS total_bpe_tokens
     FROM scrub GROUP BY lang
     """,
@@ -2909,49 +2914,6 @@ def q89_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q90 — exact BM25 top-k ranked retrieval (operators/retrieval.py):
-# the curation-search primitive (the reference's Elasticsearch-backed
-# API surface, engine-side). Token array filtered to the query terms
-# BEFORE the explode; corpus stats and per-term document frequencies
-# re-attach by broadcast; top-k is a rounded-score
-# TakeOrderedAndProject with doc_id tiebreak.
-# ---------------------------------------------------------------------------
-@query(
-    "q90_bm25_topk",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t),
-    e AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t),
-    tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM e
-           WHERE term IN ('dup', 'stream', 'merge') GROUP BY 1, 2, 3),
-    dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS dfc
-            FROM tf GROUP BY 1),
-    sc AS (SELECT tf.doc_id, count(*) AS n_terms,
-             round(sum(
-               ln(CAST(1.0 AS DOUBLE)
-                  + (s.n_docs - dfq.dfc + CAST(0.5 AS DOUBLE))
-                    / (dfq.dfc + CAST(0.5 AS DOUBLE)))
-               * (tf.tf * CAST(2.2 AS DOUBLE)
-                  / (tf.tf + CAST(1.2 AS DOUBLE)
-                     * (CAST(0.25 AS DOUBLE)
-                        + CAST(0.75 AS DOUBLE) * tf.dl / s.avgdl)))), 6)
-               AS score
-           FROM tf JOIN dfq ON tf.term = dfq.term, s
-           GROUP BY 1)
-    SELECT doc_id, n_terms, score
-    FROM sc ORDER BY score DESC, doc_id LIMIT 20
-    """,
-)
-def q90_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import bm25_topk
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return bm25_topk(d, "text", "doc_id", ["dup", "stream", "merge"], k=20)
-
-
-# ---------------------------------------------------------------------------
 # q92 — exact heavy hitters over the corpus token stream
 # (operators/frequent.py): per-partition Misra-Gries candidate
 # summaries (mergeable-sketch compression, O(capacity) state per task)
@@ -3173,82 +3135,6 @@ def _kmeans_oracle_sql(iterations: int = 2, n_seeds: int = 8) -> str:
 def q99_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, sf_dir, "embeddings")
     return SIM.kmeans_lloyd(e, "embedding", "vec_id", n_seeds=8, iterations=2)
-
-
-# ---------------------------------------------------------------------------
-# q100 — hybrid retrieval via reciprocal-rank fusion
-# (operators/retrieval.rrf_fuse): BM25 sparse top-50 (q90's scorer)
-# fused with exact dense cosine top-50 (q26's scorer) by
-# score(d) = Σ 1/(60 + rank). The curation-search shape a corpus
-# engine needs once it has both a term index and an embedding column;
-# no score calibration, rank-only, so the fusion itself is exact and
-# oracle-checkable end to end.
-# ---------------------------------------------------------------------------
-@query(
-    "q100_hybrid_rrf",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t),
-    e AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t),
-    tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM e
-           WHERE term IN ('dup', 'stream', 'merge') GROUP BY 1, 2, 3),
-    dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS dfc
-            FROM tf GROUP BY 1),
-    sc AS (SELECT tf.doc_id,
-             round(sum(
-               ln(CAST(1.0 AS DOUBLE)
-                  + (s.n_docs - dfq.dfc + CAST(0.5 AS DOUBLE))
-                    / (dfq.dfc + CAST(0.5 AS DOUBLE)))
-               * (tf.tf * CAST(2.2 AS DOUBLE)
-                  / (tf.tf + CAST(1.2 AS DOUBLE)
-                     * (CAST(0.25 AS DOUBLE)
-                        + CAST(0.75 AS DOUBLE) * tf.dl / s.avgdl)))), 6)
-               AS score
-           FROM tf JOIN dfq ON tf.term = dfq.term, s
-           GROUP BY 1),
-    sp AS (SELECT doc_id,
-                  row_number() OVER (ORDER BY score DESC, doc_id) AS rnk
-           FROM sc QUALIFY rnk <= 50),
-    de AS (SELECT emb.vec_id AS doc_id,
-                  round(list_cosine_similarity(emb.embedding::DOUBLE[],
-                                               q.embedding::DOUBLE[]), 6)
-                      AS cs
-           FROM embeddings emb,
-                (SELECT embedding FROM embeddings WHERE vec_id = 0) q),
-    dr AS (SELECT doc_id,
-                  row_number() OVER (ORDER BY cs DESC, doc_id) AS rnk
-           FROM de QUALIFY rnk <= 50),
-    u AS (SELECT doc_id, rnk FROM sp UNION ALL SELECT doc_id, rnk FROM dr)
-    SELECT doc_id, count(*) AS n_lists,
-           round(sum(CAST(1.0 AS DOUBLE) / (60 + rnk)), 6) AS rrf_score
-    FROM u GROUP BY doc_id
-    ORDER BY rrf_score DESC, doc_id LIMIT 20
-    """,
-)
-def q100_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import bm25_topk, rrf_fuse, with_rank
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    sparse = with_rank(
-        bm25_topk(d, "text", "doc_id", ["dup", "stream", "merge"], k=50),
-        "score",
-        "doc_id",
-    )
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = emb.where(F.col("vec_id") == 0).select(F.col("embedding").alias("_qv"))
-    dense_scored = (
-        emb.crossJoin(F.broadcast(probe))
-        .select(
-            F.col("vec_id").alias("doc_id"),
-            F.round(SIM.cosine(F.col("embedding"), F.col("_qv")), 6).alias("cs"),
-        )
-        .orderBy(F.desc("cs"), F.asc("doc_id"))
-        .limit(50)
-    )
-    dense = with_rank(dense_scored, "cs", "doc_id")
-    return rrf_fuse([sparse, dense], "doc_id", k_const=60, k=20)
 
 
 # ---------------------------------------------------------------------------
@@ -4138,40 +4024,6 @@ def q125_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q126 — TF-IDF keyword extraction (operators/retrieval.tfidf_top_terms):
-# smooth-idf (sklearn formulation) top-3 terms per document, ranked by
-# the rounded score so the cut is engine-independent. One (doc,term)
-# shuffle + dictionary-sized idf join + doc-local window.
-# ---------------------------------------------------------------------------
-@query(
-    "q126_tfidf_top_terms",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    n AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM t),
-    e AS (SELECT doc_id, unnest(toks) AS term FROM t),
-    tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-           FROM e GROUP BY 1, 2),
-    dfq AS (SELECT term, CAST(count(*) AS DOUBLE) AS dfc FROM tf GROUP BY 1),
-    sc AS (SELECT tf.doc_id, tf.term, tf.tf,
-                  round(tf.tf * (ln((CAST(1 AS DOUBLE) + n.n_docs)
-                                    / (CAST(1 AS DOUBLE) + dfq.dfc))
-                                 + CAST(1 AS DOUBLE)), 6) AS tfidf
-           FROM tf JOIN dfq USING (term), n),
-    r AS (SELECT *, row_number() OVER (
-            PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rank
-          FROM sc)
-    SELECT doc_id, term, tf, tfidf, rank FROM r WHERE rank <= 3
-    """,
-)
-def q126_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import tfidf_top_terms
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return tfidf_top_terms(d, "text", "doc_id", k=3)
-
-
-# ---------------------------------------------------------------------------
 # q127 — document-PMI collocations (operators/corpus_stats.pmi_pairs):
 # presence-based pointwise mutual information over token pairs, top-20
 # by rounded score. Per-doc distinct explode → doc-local pair join →
@@ -4396,106 +4248,6 @@ def q133_dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q134 — exact distributed quantiles by iterative histogram refinement
-# (operators/quantiles.exact_quantiles): percentile_disc parity with
-# O(fractions × bins) driver state and NO global sort — the
-# billion-row-group answer to functions/popularity.percentile_disc's
-# documented collect_list bound. tail_threshold=2000 forces multiple
-# refine rounds even at sf0.01.
-# ---------------------------------------------------------------------------
-@query(
-    "q134_exact_quantiles",
-    oracle="""
-    SELECT CAST(0.01 AS DOUBLE) AS fraction,
-           percentile_disc(0.01) WITHIN GROUP (ORDER BY l_extendedprice)
-             AS value FROM lineitem
-    UNION ALL
-    SELECT CAST(0.25 AS DOUBLE),
-           percentile_disc(0.25) WITHIN GROUP (ORDER BY l_extendedprice)
-      FROM lineitem
-    UNION ALL
-    SELECT CAST(0.5 AS DOUBLE),
-           percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice)
-      FROM lineitem
-    UNION ALL
-    SELECT CAST(0.9 AS DOUBLE),
-           percentile_disc(0.9) WITHIN GROUP (ORDER BY l_extendedprice)
-      FROM lineitem
-    UNION ALL
-    SELECT CAST(0.999 AS DOUBLE),
-           percentile_disc(0.999) WITHIN GROUP (ORDER BY l_extendedprice)
-      FROM lineitem
-    """,
-)
-def q134_exact_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.quantiles import exact_quantiles_df
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return exact_quantiles_df(
-        spark,
-        li,
-        "l_extendedprice",
-        [0.01, 0.25, 0.5, 0.9, 0.999],
-        bins=32,
-        tail_threshold=2000,
-    )
-
-
-# ---------------------------------------------------------------------------
-# q135 — distributed BPE merge learning (operators/bpe.learn_merges):
-# 6 rounds of adjacent-pair counting over the word-TYPE table (vocab
-# rows, corpus scanned once) + deterministic argmax + codegen'd fold
-# merge. Oracle: the same 6 rounds unrolled as CTE stages over a
-# unit-separator symbol encoding (replace() is greedy left-to-right
-# non-overlapping, exactly the BPE apply step).
-# ---------------------------------------------------------------------------
-def _q135_oracle(n_merges: int = 6) -> str:
-    us = "chr(31)"
-    parts = [
-        f"""
-    WITH toks AS (SELECT {_TOKS} AS t FROM documents),
-    wf AS (SELECT w AS word, count(*) AS freq
-           FROM (SELECT unnest(t) AS w FROM toks) GROUP BY 1),
-    w0 AS (SELECT {us} || array_to_string(string_split(word, ''), {us})
-                    || {us} AS s, freq
-           FROM wf)"""
-    ]
-    for i in range(n_merges):
-        parts.append(
-            f""",
-    p{i} AS (
-      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
-      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
-            FROM w{i}),
-           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
-      GROUP BY 1, 2
-    ),
-    t{i} AS (SELECT a, b, cnt FROM p{i}
-             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-    w{i + 1} AS (
-      SELECT replace(w.s, {us} || t.a || {us} || t.b || {us},
-                     {us} || t.a || t.b || {us}) AS s, w.freq
-      FROM w{i} w, t{i} t
-    )"""
-        )
-    selects = [
-        f"""SELECT {i + 1} AS step, a AS "left", b AS "right",
-               a || b AS merged, CAST(cnt AS BIGINT) AS pair_count
-        FROM t{i}"""
-        for i in range(n_merges)
-    ]
-    return "".join(parts) + "\n    " + "\n    UNION ALL ".join(selects)
-
-
-@query("q135_bpe_learn", oracle=_q135_oracle(6))
-def q135_bpe_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.bpe import learn_merges_df
-
-    docs = load_table(spark, sf_dir, "documents").select("text")
-    return learn_merges_df(spark, docs, TX.tokens(F.col("text")), 6)
-
-
-# ---------------------------------------------------------------------------
 # q136 — fractional-epoch corpus upsampling (operators/sampling.
 # epoch_repeat): the training mixture table ("2.4 epochs of src1, 0.25
 # of src2, 3.0 of src3, 0.5 of src4, 1.0 elsewhere") realized as
@@ -4701,62 +4453,6 @@ def q139_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q140 — BPE encode + per-source compression report (operators/bpe.
-# encode_report): learn 6 merges (q135's trainer) then APPLY them —
-# both on the word-type table; the corpus is scanned once for
-# (source, word) counts and the encode lengths re-join at vocab
-# granularity. Oracle carries the word identity through the same 6
-# unrolled replace() stages.
-# ---------------------------------------------------------------------------
-def _q140_oracle(n_merges: int = 6) -> str:
-    us = "chr(31)"
-    sql = f"""
-    WITH toks AS (SELECT source, {_TOKS} AS t FROM documents),
-    wsrc AS (SELECT source, w AS word, count(*) AS cnt
-             FROM (SELECT source, unnest(t) AS w FROM toks) GROUP BY 1, 2),
-    wf AS (SELECT word, sum(cnt) AS freq FROM wsrc GROUP BY 1),
-    w0 AS (SELECT word, {us} || array_to_string(string_split(word, ''), {us})
-                    || {us} AS s, freq
-           FROM wf)"""
-    for i in range(n_merges):
-        sql += f""",
-    p{i} AS (
-      SELECT l[i] AS a, l[i + 1] AS b, sum(freq) AS cnt
-      FROM (SELECT string_split(trim(s, {us}), {us}) AS l, freq
-            FROM w{i}),
-           LATERAL unnest(generate_series(1, len(l) - 1)) AS g(i)
-      GROUP BY 1, 2
-    ),
-    t{i} AS (SELECT a, b FROM p{i}
-             ORDER BY cnt DESC, a ASC, b ASC LIMIT 1),
-    w{i + 1} AS (
-      SELECT w.word,
-             replace(w.s, {us} || t.a || {us} || t.b || {us},
-                     {us} || t.a || t.b || {us}) AS s, w.freq
-      FROM w{i} w, t{i} t
-    )"""
-    sql += f"""
-    SELECT ws.source,
-           CAST(sum(ws.cnt * len(ws.word)) AS BIGINT) AS symbols_before,
-           CAST(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
-                AS BIGINT) AS symbols_after,
-           round(sum(ws.cnt * len(string_split(trim(f.s, {us}), {us})))
-                 / CAST(sum(ws.cnt * len(ws.word)) AS DOUBLE), 6)
-             AS compression
-    FROM wsrc ws JOIN w{n_merges} f USING (word)
-    GROUP BY 1"""
-    return sql
-
-
-@query("q140_bpe_encode_report", oracle=_q140_oracle(6))
-def q140_bpe_encode_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.bpe import encode_report
-
-    docs = load_table(spark, sf_dir, "documents").select("source", "text")
-    return encode_report(docs, TX.tokens(F.col("text")), "source", 6)
-
-
-# ---------------------------------------------------------------------------
 # q141 — count-min sketch frequency estimation (functions/sketches.
 # cms_counters / cms_estimate): 4×256 mergeable counters over the
 # corpus token stream, probed for the exact top-20 words — estimate
@@ -4836,81 +4532,6 @@ def q142_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return robust_outliers(d, "source", "n_chars", "doc_id", z=3.0).select(
         "doc_id", "source", "n_chars", "median", "deviation", "mad",
         "is_outlier",
-    )
-
-
-# ---------------------------------------------------------------------------
-# q144 — IR evaluation metrics (operators/retrieval.ranking_metrics):
-# recall@10 / MRR@10 / nDCG@10 of the exact dense top-10 run (q27's
-# machinery, 20 probes) against label-based qrels (relevant = same
-# label). One (query, doc) equi-join + per-query groupBy; ideal DCG is
-# a closed-form fold.
-# ---------------------------------------------------------------------------
-@query(
-    "q144_ranking_metrics",
-    oracle="""
-    WITH probes AS (SELECT vec_id AS probe_id, embedding AS pv, label
-                    FROM embeddings WHERE vec_id % 25 = 0),
-    scored AS (
-        SELECT p.probe_id, e.vec_id AS neighbor_id,
-               round(list_cosine_similarity(e.embedding::DOUBLE[],
-                                            p.pv::DOUBLE[]), 6) AS cs
-        FROM embeddings e JOIN probes p ON e.vec_id <> p.probe_id
-    ),
-    run AS (
-        SELECT probe_id, neighbor_id, rank FROM (
-            SELECT *, row_number() OVER (PARTITION BY probe_id
-                       ORDER BY cs DESC, neighbor_id ASC) AS rank
-            FROM scored)
-        WHERE rank <= 10
-    ),
-    qrels AS (
-        SELECT p.probe_id, e.vec_id AS neighbor_id
-        FROM embeddings e JOIN probes p
-          ON e.label = p.label AND e.vec_id <> p.probe_id
-    ),
-    nrel AS (SELECT probe_id, CAST(count(*) AS BIGINT) AS n_rel
-             FROM qrels GROUP BY 1),
-    hit AS (
-        SELECT r.probe_id, count(*) AS h, min(r.rank) AS fr,
-               sum(1.0 / log2(r.rank + 1)) AS dcg
-        FROM run r JOIN qrels USING (probe_id, neighbor_id)
-        GROUP BY 1
-    )
-    SELECT n.probe_id, n.n_rel,
-           CAST(coalesce(h.h, 0) AS BIGINT) AS hits_at_k,
-           round(coalesce(h.h, 0) / CAST(n.n_rel AS DOUBLE), 6)
-             AS recall_at_k,
-           round(coalesce(1.0 / h.fr, 0.0), 6) AS mrr_at_k,
-           round(coalesce(h.dcg, 0.0)
-                 / list_sum(list_transform(
-                     range(1, least(n.n_rel, 10) + 1),
-                     i -> 1.0 / log2(i + 1))), 6)
-             AS ndcg_at_k
-    FROM nrel n LEFT JOIN hit h USING (probe_id)
-    """,
-)
-def q144_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import ranking_metrics
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probes = emb.where(F.col("vec_id") % 25 == 0)
-    run = SIM.knn_join_topk(emb, probes, "embedding", "vec_id", k=10).select(
-        F.col("probe_id"), F.col("neighbor_id"), F.col("rank")
-    )
-    qrels = (
-        emb.select("vec_id", "label")
-        .join(
-            probes.select(
-                F.col("vec_id").alias("probe_id"), F.col("label").alias("pl")
-            ),
-            F.col("label") == F.col("pl"),
-        )
-        .where(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", F.col("vec_id").alias("neighbor_id"))
-    )
-    return ranking_metrics(
-        run, qrels, 10, query_col="probe_id", doc_col="neighbor_id"
     )
 
 
@@ -5085,47 +4706,6 @@ def q149_local_supplier_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
             F.count("*").alias("n_items"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q150 — ANALYZE-style column statistics (operators/stats.
-# column_stats): counts/nulls/min/max/exact-NDV in ONE multi-column
-# aggregate + exact quartiles via q134's histogram refinement — the
-# CBO stats-collection pass, engine-side.
-# ---------------------------------------------------------------------------
-_STAT_COLS = ["l_quantity", "l_extendedprice", "l_discount"]
-
-
-def _q150_oracle() -> str:
-    parts = []
-    for c in _STAT_COLS:
-        parts.append(f"""
-    SELECT '{c}' AS "column",
-           CAST(count(*) AS BIGINT) AS n_rows,
-           CAST(sum(CASE WHEN {c} IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_nulls,
-           CAST(min({c}) AS DOUBLE) AS min,
-           CAST(max({c}) AS DOUBLE) AS max,
-           CAST(count(DISTINCT {c}) AS BIGINT) AS ndv,
-           CAST(percentile_disc(0.25) WITHIN GROUP (ORDER BY {c}) AS DOUBLE)
-             AS p25,
-           CAST(percentile_disc(0.5) WITHIN GROUP (ORDER BY {c}) AS DOUBLE)
-             AS p50,
-           CAST(percentile_disc(0.75) WITHIN GROUP (ORDER BY {c}) AS DOUBLE)
-             AS p75
-    FROM lineitem""")
-    return "\n    UNION ALL".join(parts)
-
-
-@query("q150_column_stats", oracle=_q150_oracle())
-def q150_column_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import column_stats
-
-    li = load_table(spark, sf_dir, "lineitem")
-    return column_stats(
-        spark, li, _STAT_COLS,
-        quantile_kwargs={"bins": 64, "tail_threshold": 65536},
     )
 
 
@@ -5367,43 +4947,6 @@ def q154_crawl_schedule(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "host", "priority",
         F.col("rank").cast("long").alias("rank"),
         F.round("fetch_at", 6).alias("fetch_at"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# q155 — per-source token-weighted median document length
-# (operators/quantiles.weighted_median): cumulative-weight crossing
-# inside ordered windows — no collect_list, billion-row groups hold.
-# ---------------------------------------------------------------------------
-@query(
-    "q155_weighted_median",
-    oracle=f"""
-    WITH t AS (SELECT source, n_chars AS v, len({_TOKS}) AS w
-               FROM documents),
-    c AS (SELECT source, v, w,
-                 sum(w) OVER (PARTITION BY source ORDER BY v, w
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS cw,
-                 sum(w) OVER (PARTITION BY source) AS tw
-          FROM t)
-    SELECT source,
-           min(CASE WHEN cw * 2 >= tw THEN v END) AS wmedian,
-           CAST(max(tw) AS BIGINT) AS total_weight
-    FROM c GROUP BY 1
-    """,
-)
-def q155_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.quantiles import weighted_median
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "source",
-        F.col("n_chars").alias("v"),
-        F.size(TX.tokens(F.col("text"))).cast("long").alias("w"),
-    )
-    return weighted_median(d, "source", "v", "w").select(
-        "source",
-        F.col("wmedian"),
-        F.col("total_weight").cast("long").alias("total_weight"),
     )
 
 
@@ -5904,65 +5447,6 @@ def q167_rendezvous_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents").select("doc_id")
     return rendezvous_assign(d, "doc_id", _HRW_WORKERS)
-
-
-# ---------------------------------------------------------------------------
-# q168 — equi-depth range-partition plan (operators/quantiles.
-# exact_quantiles as the boundary source): 8 balanced ranges over
-# l_extendedprice; assignment = count of boundaries strictly below
-# the value — the explicit form of repartitionByRange's sampling,
-# made exact and auditable (layout sibling of q108 z-order and q112
-# compaction).
-# ---------------------------------------------------------------------------
-@query(
-    "q168_range_partition_plan",
-    oracle="""
-    WITH b AS (
-      SELECT unnest([
-        percentile_disc(0.125) WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.25)  WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.375) WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.5)   WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.625) WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.75)  WITHIN GROUP (ORDER BY l_extendedprice),
-        percentile_disc(0.875) WITHIN GROUP (ORDER BY l_extendedprice)
-      ]) AS bound
-      FROM lineitem)
-    SELECT p.bucket, CAST(count(*) AS BIGINT) AS n_rows,
-           round(min(p.v), 2) AS lo, round(max(p.v), 2) AS hi
-    FROM (
-      SELECT l.l_extendedprice AS v,
-             (SELECT count(*) FROM b WHERE b.bound < l.l_extendedprice)
-               AS bucket
-      FROM lineitem l) p
-    GROUP BY 1
-    """,
-)
-def q168_range_partition_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.quantiles import exact_quantiles
-
-    li = load_table(spark, sf_dir, "lineitem")
-    fr = [i / 8 for i in range(1, 8)]
-    bounds = [
-        v for _, v in exact_quantiles(
-            li, "l_extendedprice", fr, bins=32, tail_threshold=2000
-        )
-    ]
-    v = F.col("l_extendedprice")
-    bucket = sum(
-        (v > F.lit(b)).cast("int") for b in bounds
-    )
-    # strictly-below count: percentile_disc boundaries are actual data
-    # values, so "bound < v" in the oracle == "v > bound" here
-    return (
-        li.select(v.alias("v"), bucket.alias("bucket"))
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.round(F.min("v"), 2).alias("lo"),
-            F.round(F.max("v"), 2).alias("hi"),
-        )
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -6768,32 +6252,6 @@ def q186_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q187 — positional phrase search (operators/retrieval.
-# phrase_occurrences): per-doc count of the exact adjacent-token
-# phrase "table table" via positional postings + (doc, pos) equi-join
-# chain; overlapping occurrences count (the oracle's sliding CASE
-# does too).
-# ---------------------------------------------------------------------------
-@query(
-    "q187_phrase_search",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    c AS (SELECT doc_id,
-                 CAST(list_sum(list_transform(range(1, len(toks)), i ->
-                     CASE WHEN toks[i] = 'table' AND toks[i+1] = 'table'
-                          THEN 1 ELSE 0 END)) AS BIGINT) AS n_occurrences
-          FROM t WHERE len(toks) >= 2)
-    SELECT doc_id, n_occurrences FROM c WHERE n_occurrences >= 1
-    """,
-)
-def q187_phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import phrase_occurrences
-
-    d = load_table(spark, sf_dir, "documents")
-    return phrase_occurrences(d, "text", "doc_id", "table table")
-
-
-# ---------------------------------------------------------------------------
 # q188 — perceptual-hash media near-dup (operators/multimodal.
 # phash_neardup_pairs): decode payloads behind the Arrow mapInPandas
 # codec boundary (deterministic fake decoder: per-byte-bucket means,
@@ -6841,105 +6299,6 @@ def q188_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select(
         "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
     )
-
-
-# ---------------------------------------------------------------------------
-# q191 — mergeable histogram quantile state (operators/quantiles.
-# histogram_partials / merge_histogram_partials /
-# quantiles_from_histogram): partials built at (event_type, day)
-# grain merge to event_type by plain sum — fixed boundaries make the
-# merged estimate IDENTICAL to direct computation, which is what the
-# oracle checks (it computes per-type bins straight from raw rows).
-# p50/p90/p99 of events.value as upper-bin-edge estimates.
-# ---------------------------------------------------------------------------
-@query(
-    "q191_histogram_quantile_rollup",
-    oracle="""
-    WITH b AS (SELECT event_type,
-                      CAST(least(greatest(floor(value / 10.0), 0), 49)
-                           AS INT) AS bin,
-                      count(*) AS n
-               FROM events GROUP BY 1, 2),
-    c AS (SELECT event_type, bin, n,
-                 sum(n) OVER (PARTITION BY event_type ORDER BY bin) AS cum,
-                 sum(n) OVER (PARTITION BY event_type) AS total
-          FROM b),
-    f AS (SELECT CAST(unnest([0.5, 0.9, 0.99]) AS DOUBLE) AS fraction),
-    hit AS (SELECT c.event_type, f.fraction, c.total, min(c.bin) AS mb
-            FROM c, f WHERE c.cum >= ceil(f.fraction * c.total)
-            GROUP BY 1, 2, 3)
-    SELECT event_type, fraction, CAST(total AS BIGINT) AS total,
-           CAST((mb + 1) * 10.0 AS DOUBLE) AS q_est
-    FROM hit
-    """,
-)
-def q191_histogram_quantile_rollup(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from cccatalog_spark.operators.quantiles import (
-        histogram_partials,
-        merge_histogram_partials,
-        quantiles_from_histogram,
-    )
-
-    e = load_table(spark, sf_dir, "events").select(
-        "event_type",
-        "value",
-        (
-            (F.unix_micros(F.col("ts").cast("timestamp")) / 1_000_000)
-            .cast("long")
-            / F.lit(86400)
-        ).cast("long").alias("day"),
-    )
-    parts = histogram_partials(
-        e, ["event_type", "day"], "value", lo=0.0, hi=500.0, n_bins=50
-    )
-    merged = merge_histogram_partials(parts, ["event_type"])
-    return quantiles_from_histogram(
-        merged, ["event_type"], [0.5, 0.9, 0.99],
-        lo=0.0, hi=500.0, n_bins=50,
-    )
-
-
-# ---------------------------------------------------------------------------
-# q192 — IDF-weighted cosine near-dup pairs (operators/retrieval.
-# tfidf_cosine_pairs): the "soft" sibling of q24's Jaccard — distinct
-# shingle sets weighted by smooth-idf², so sharing a RARE shingle
-# counts for more. Threshold compares the rounded cosine in both
-# engines.
-# ---------------------------------------------------------------------------
-@query(
-    "q192_tfidf_cosine_pairs",
-    oracle=f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks FROM documents),
-    sh AS (SELECT doc_id, {_SHINGLES3} AS s FROM t),
-    shn AS (SELECT doc_id, s FROM sh WHERE len(s) > 0),
-    ex AS (SELECT doc_id, unnest(s) AS shingle FROM shn),
-    n1 AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-    dfq AS (SELECT shingle, count(*) AS df FROM ex GROUP BY 1),
-    idf AS (SELECT shingle,
-                   (ln((n + 1) / (df + 1)) + 1) * (ln((n + 1) / (df + 1)) + 1)
-                     AS w2
-            FROM dfq, n1),
-    post AS (SELECT doc_id, ex.shingle, w2 FROM ex JOIN idf USING (shingle)),
-    norms AS (SELECT doc_id, sqrt(sum(w2)) AS nrm FROM post GROUP BY 1),
-    dots AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, sum(a.w2) AS dot
-             FROM post a JOIN post b
-               ON a.shingle = b.shingle AND a.doc_id < b.doc_id
-             GROUP BY 1, 2)
-    SELECT id_a, id_b,
-           round(dot / (na.nrm * nb.nrm), 6) AS cosine
-    FROM dots
-    JOIN norms na ON dots.id_a = na.doc_id
-    JOIN norms nb ON dots.id_b = nb.doc_id
-    WHERE round(dot / (na.nrm * nb.nrm), 6) >= 0.5
-    """,
-)
-def q192_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import tfidf_cosine_pairs
-
-    d = load_table(spark, sf_dir, "documents")
-    return tfidf_cosine_pairs(d, "text", "doc_id", k=3, threshold=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -7371,45 +6730,6 @@ def q202_query_params(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("p.key").alias("key"),
             F.col("p.value").alias("value"),
         )
-    )
-
-
-# ---------------------------------------------------------------------------
-# q203 — grouped-aggregate pandas UDAF (operators/stats.
-# trimmed_mean_udaf, the §2.10 UDAF surface): per-type 10% trimmed
-# mean of events.value in ONE groupBy exchange (the expression path
-# needs rank window + re-aggregate = two). Value-order trimming makes
-# the kept multiset tie-independent, so the rank-trim oracle is exact.
-# ---------------------------------------------------------------------------
-@query(
-    "q203_trimmed_mean_udaf",
-    oracle="""
-    WITH r AS (SELECT event_type, value,
-                      row_number() OVER (PARTITION BY event_type
-                                         ORDER BY value) AS rn,
-                      count(*) OVER (PARTITION BY event_type) AS n
-               FROM events)
-    SELECT event_type, CAST(max(n) AS BIGINT) AS n_events,
-           round(avg(value), 6) AS trimmed_mean
-    FROM r
-    WHERE rn > CAST(floor(n * 0.1) AS BIGINT)
-      AND rn <= n - CAST(floor(n * 0.1) AS BIGINT)
-    GROUP BY 1
-    """,
-)
-def q203_trimmed_mean_udaf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import trimmed_mean_udaf
-
-    e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    tm = trimmed_mean_udaf(0.1)
-    # a GROUPED_AGG pandas UDF cannot share an agg with JVM aggregates
-    # (INVALID_PANDAS_UDF_PLACEMENT): counts come from a sibling
-    # aggregate over the same exchange and re-attach by broadcast
-    counts = e.groupBy("event_type").agg(F.count("*").alias("n_events"))
-    agg = e.groupBy("event_type").agg(tm(F.col("value")).alias("_tm"))
-    return agg.join(F.broadcast(counts), "event_type").select(
-        "event_type", "n_events",
-        F.round("_tm", 6).alias("trimmed_mean"),
     )
 
 
@@ -8505,36 +7825,6 @@ def q235_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q236 — k-anonymity release audit (operators/privacy.
-# k_anonymity_audit): group sizes over the (lang, source) quasi-
-# identifier pair with doc_id%97 grafted on as a pseudo-zip to create
-# genuinely risky small groups — the re-identification screen run
-# before any metadata release. One contingency aggregate; oracle
-# replays counts, the k threshold, and row shares.
-# ---------------------------------------------------------------------------
-@query(
-    "q236_k_anonymity",
-    oracle="""
-    WITH d AS (SELECT lang, source,
-                      CAST(doc_id % 97 AS BIGINT) AS zip3 FROM documents),
-    g AS (SELECT lang, source, zip3, count(*) AS n
-          FROM d GROUP BY 1, 2, 3),
-    t AS (SELECT CAST(sum(n) AS DOUBLE) AS tt FROM g)
-    SELECT lang, source, zip3, n, n < 5 AS at_risk,
-           round(n / tt, 6) AS row_share
-    FROM g, t
-    """,
-)
-def q236_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.privacy import k_anonymity_audit
-
-    d = load_table(spark, sf_dir, "documents").select(
-        "lang", "source", (F.col("doc_id") % 97).alias("zip3")
-    )
-    return k_anonymity_audit(d, ["lang", "source", "zip3"], k=5)
-
-
-# ---------------------------------------------------------------------------
 # q238 — skip-gram pair generation with frequency subsampling
 # (operators/skipgram.skipgram_pairs, Mikolov NIPS'13): (center,
 # context) pair counts over a ±2 post-subsample window, keep draw
@@ -8904,38 +8194,6 @@ def q250_mojibake_repair(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q252 — cross-provider quantile normalization (operators/quantiles.
-# quantile_normalize, Bolstad et al. 2003): per-source n_chars scores
-# mapped onto the pooled distribution at their within-source
-# percentile — one group-keyed window + one global percentile
-# aggregate broadcast as a single 101-point row. Step-function
-# (floor-of-grid) semantics replay exactly in DuckDB quantile_cont.
-# ---------------------------------------------------------------------------
-@query(
-    "q252_quantile_normalize",
-    oracle="""
-    WITH v AS (SELECT doc_id AS id, source AS grp,
-                      CAST(n_chars AS DOUBLE) AS x FROM documents),
-    p AS (SELECT id, grp, x,
-                 percent_rank() OVER (PARTITION BY grp ORDER BY x)
-                   AS pr FROM v),
-    g AS (SELECT quantile_cont(x, [0.0, 0.01, 0.02, 0.03, 0.04, 0.05, 0.06, 0.07, 0.08, 0.09, 0.1, 0.11, 0.12, 0.13, 0.14, 0.15, 0.16, 0.17, 0.18, 0.19, 0.2, 0.21, 0.22, 0.23, 0.24, 0.25, 0.26, 0.27, 0.28, 0.29, 0.3, 0.31, 0.32, 0.33, 0.34, 0.35, 0.36, 0.37, 0.38, 0.39, 0.4, 0.41, 0.42, 0.43, 0.44, 0.45, 0.46, 0.47, 0.48, 0.49, 0.5, 0.51, 0.52, 0.53, 0.54, 0.55, 0.56, 0.57, 0.58, 0.59, 0.6, 0.61, 0.62, 0.63, 0.64, 0.65, 0.66, 0.67, 0.68, 0.69, 0.7, 0.71, 0.72, 0.73, 0.74, 0.75, 0.76, 0.77, 0.78, 0.79, 0.8, 0.81, 0.82, 0.83, 0.84, 0.85, 0.86, 0.87, 0.88, 0.89, 0.9, 0.91, 0.92, 0.93, 0.94, 0.95, 0.96, 0.97, 0.98, 0.99, 1.0]) AS q FROM v)
-    SELECT id, grp AS "group", x AS value, round(pr, 6) AS pct_rank,
-           round(q[CAST(floor(pr * 100) AS INT) + 1], 6) AS normalized
-    FROM p, g
-""",
-)
-def q252_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.quantiles import quantile_normalize
-
-    d = load_table(spark, sf_dir, "documents")
-    out = quantile_normalize(d, "doc_id", "source", "n_chars", grid=100)
-    return out.select(
-        F.col("id"), F.col("group"), "value", "pct_rank", "normalized"
-    )
-
-
-# ---------------------------------------------------------------------------
 # q253 — centroid silhouette (operators/similarity.silhouette_centroid,
 # Rousseeuw'87 via the centroid approximation): cluster-quality report
 # over the embeddings against the q96 seed centroids. a/b are the two
@@ -9075,67 +8333,6 @@ def q255_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q257 — BM25 hard-negative mining (operators/retrieval.
-# hard_negatives, DPR recipe): per training query, the top-10 BM25
-# docs that are not labeled positives. One postings build serves all
-# queries (filter-before-explode), query dim + df stats broadcast,
-# per-query rank window, positives anti-joined. Same BM25 constants
-# as q90, so the oracle reuses its exact formula.
-# ---------------------------------------------------------------------------
-_HN_QUERIES = [(1, "spark"), (1, "stream"), (2, "merge"), (2, "batch"),
-               (3, "vector")]
-
-
-@query(
-    "q257_hard_negatives",
-    oracle=f"""
-    WITH q(qid, term) AS (VALUES {", ".join(f"({i}, '{t}')" for i, t in _HN_QUERIES)}),
-    pos AS (SELECT qq.qid, d.doc_id
-            FROM documents d, (SELECT DISTINCT qid FROM q) qq
-            WHERE d.doc_id % 17 = qq.qid),
-    t AS (SELECT doc_id, list_transform({_TOKS}, x -> lower(x)) AS toks
-          FROM documents),
-    s AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs,
-                 avg(CAST(len(toks) AS DOUBLE)) AS avgdl FROM t),
-    e AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t),
-    tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM e
-           WHERE term IN (SELECT DISTINCT term FROM q) GROUP BY 1, 2, 3),
-    dfq AS (SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS dfc
-            FROM tf GROUP BY 1),
-    sc AS (SELECT q.qid, tf.doc_id, count(*) AS n_terms,
-             round(sum(
-               ln(CAST(1.0 AS DOUBLE)
-                  + (s.n_docs - dfq.dfc + CAST(0.5 AS DOUBLE))
-                    / (dfq.dfc + CAST(0.5 AS DOUBLE)))
-               * (tf.tf * CAST(2.2 AS DOUBLE)
-                  / (tf.tf + CAST(1.2 AS DOUBLE)
-                     * (CAST(0.25 AS DOUBLE)
-                        + CAST(0.75 AS DOUBLE) * tf.dl / s.avgdl)))), 6)
-               AS score
-           FROM tf JOIN q ON tf.term = q.term
-           JOIN dfq ON tf.term = dfq.term, s
-           GROUP BY 1, 2),
-    neg AS (SELECT sc.* FROM sc LEFT JOIN pos
-            ON sc.qid = pos.qid AND sc.doc_id = pos.doc_id
-            WHERE pos.doc_id IS NULL),
-    r AS (SELECT *, row_number() OVER (PARTITION BY qid
-                ORDER BY score DESC, doc_id) AS rank FROM neg)
-    SELECT qid, doc_id, n_terms, score, rank FROM r WHERE rank <= 10
-    """,
-)
-def q257_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import hard_negatives
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    q = spark.createDataFrame(_HN_QUERIES, ["qid", "term"])
-    qids = sorted({i for i, _ in _HN_QUERIES})
-    pos = d.select("doc_id").crossJoin(
-        spark.createDataFrame([(i,) for i in qids], ["qid"])
-    ).where(F.col("doc_id") % 17 == F.col("qid"))
-    return hard_negatives(d, "text", "doc_id", q, pos, k=10)
-
-
-# ---------------------------------------------------------------------------
 # q258 — lexical-diversity report card (operators/corpus_stats.
 # lexical_diversity_profile, Yule 1944): per-source token mass, type
 # count, TTR, hapax share, Yule's K — the templated-text / synthetic-
@@ -9167,38 +8364,6 @@ def q258_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return lexical_diversity_profile(d, "source", "text")
-
-
-# ---------------------------------------------------------------------------
-# q259 — differentially-private histogram release (operators/privacy.
-# dp_noisy_counts, Dwork et al. 2006): per-lang doc counts + md5-
-# derandomized Laplace(1/eps) noise — the privacy-preserving data-card
-# row. The inverse-CDF draw replays exactly in DuckDB; the true count
-# never appears in the output.
-# ---------------------------------------------------------------------------
-@query(
-    "q259_dp_histogram",
-    oracle="""
-    WITH g AS (SELECT lang AS "group", CAST(count(*) AS DOUBLE) AS n
-               FROM documents GROUP BY 1),
-    u AS (SELECT "group", n,
-            (('0x' || substring(md5('dp:' || "group"), 1, 12))::BIGINT
-             + CAST(0.5 AS DOUBLE)) / CAST(281474976710656.0 AS DOUBLE)
-              AS u
-          FROM g)
-    SELECT "group",
-           round(greatest(n + (CAST(-1.0 AS DOUBLE) / CAST(0.5 AS DOUBLE))
-                 * sign(u - CAST(0.5 AS DOUBLE))
-                 * ln(1 - 2 * abs(u - CAST(0.5 AS DOUBLE))), 0.0), 6)
-             AS n_noised
-    FROM u
-    """,
-)
-def q259_dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.privacy import dp_noisy_counts
-
-    d = load_table(spark, sf_dir, "documents")
-    return dp_noisy_counts(d, "lang", epsilon=0.5)
 
 
 # ---------------------------------------------------------------------------
@@ -10642,67 +9807,6 @@ def q289_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q294 — rank-biased overlap of exact vs LSH ANN rankings
-# (operators/retrieval.rbo_overlap, Webber TOIS'10): the
-# top-weighted agreement between q26's exact top-10 and q47's
-# LSH-bucket top-10 — the recall audit (q245) generalized to WHERE in
-# the ranking the approximation diverges. All catalog work: the lists
-# are k-row frames.
-# ---------------------------------------------------------------------------
-def _q294_oracle() -> str:
-    return f"""
-    WITH ea AS (SELECT e.vec_id,
-                       round(list_cosine_similarity(e.embedding::DOUBLE[],
-                                                    q.embedding::DOUBLE[]),
-                             6) AS cosine_sim
-                FROM embeddings e,
-                     (SELECT embedding FROM embeddings WHERE vec_id = 0) q
-                ORDER BY cosine_sim DESC, e.vec_id ASC
-                LIMIT 10),
-    a AS (SELECT vec_id,
-                 row_number() OVER (ORDER BY cosine_sim DESC, vec_id)
-                     AS ra
-          FROM ea),
-    lb AS ({_q47_oracle()}),
-    b AS (SELECT vec_id,
-                 row_number() OVER (ORDER BY cosine_sim DESC, vec_id)
-                     AS rb
-          FROM lb),
-    sh AS (SELECT greatest(a.ra, b.rb) AS m
-           FROM a JOIN b USING (vec_id)),
-    xd AS (SELECT d.ra AS d, count(sh.m) AS x
-           FROM (SELECT DISTINCT ra FROM a) d
-           LEFT JOIN sh ON sh.m <= d.ra
-           GROUP BY 1),
-    kk AS (SELECT max(ra) AS k FROM a)
-    SELECT kk.k,
-           round(max(CASE WHEN xd.d = kk.k THEN xd.x END)
-                 / CAST(max(kk.k) AS DOUBLE), 6) AS overlap_at_k,
-           round(sum(0.1 * power(0.9, xd.d - 1) * xd.x / xd.d), 6)
-               AS rbo
-    FROM xd, kk GROUP BY kk.k
-    """
-
-
-@query("q294_rbo_ann_agreement", oracle=_q294_oracle())
-def q294_rbo_ann_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as _W
-
-    from cccatalog_spark.operators.retrieval import rbo_overlap
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    probe = SIM.fetch_probe(emb, "embedding", "vec_id", 0)
-    w = _W.orderBy(F.desc("cosine_sim"), F.asc("vec_id"))
-    exact = SIM.cosine_topk(
-        emb, "embedding", "vec_id", probe, k=10
-    ).withColumn("rank", F.row_number().over(w))
-    approx = SIM.lsh_cosine_topk(
-        emb, "embedding", "vec_id", probe, k=10, bits=4
-    ).withColumn("rank", F.row_number().over(w))
-    return rbo_overlap(exact, approx, "vec_id", "rank", p=0.9)
-
-
-# ---------------------------------------------------------------------------
 # q295 — IPS / SNIPS off-policy replay (Horvitz-Thompson 1952;
 # counterfactual policy evaluation): logged keep/drop decisions with
 # known propensities (md5-derandomized 0.7/0.3 logger) replayed
@@ -10769,63 +9873,6 @@ def q295_ips_offpolicy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("reward") * F.col("w")) / F.sum("w"), 6
         ).alias("snips"),
     )
-
-
-# ---------------------------------------------------------------------------
-# q300 — t-closeness audit (operators/privacy.t_closeness_audit):
-# per (lang, source) group, normalized ordered-EMD gap between the
-# group's n_chars-bucket distribution and the global one — the
-# homogeneity-attack guard beside q236's k-anonymity. Dense
-# group×catalog grid, one catalog-sized window.
-# ---------------------------------------------------------------------------
-@query(
-    "q300_t_closeness",
-    oracle="""
-    WITH b AS (SELECT lang, source,
-                      CAST(floor(n_chars / 500) AS BIGINT) AS v
-               FROM documents WHERE n_chars IS NOT NULL),
-    vals AS (SELECT v, CAST(count(*) AS DOUBLE) AS gn FROM b GROUP BY 1),
-    t AS (SELECT CAST(sum(gn) AS DOUBLE) AS nn,
-                 CAST(count(*) AS DOUBLE) AS m FROM vals),
-    pv AS (SELECT v, gn / t.nn AS p, t.m FROM vals, t),
-    g AS (SELECT lang, source, count(*) AS n FROM b GROUP BY 1, 2),
-    gv AS (SELECT lang, source, v, CAST(count(*) AS DOUBLE) AS c
-           FROM b GROUP BY 1, 2, 3),
-    grid AS (SELECT g.lang, g.source, g.n, pv.v, pv.m,
-                    coalesce(gv.c, 0) / g.n - pv.p AS d
-             FROM g CROSS JOIN pv
-             LEFT JOIN gv ON gv.lang = g.lang AND gv.source = g.source
-                          AND gv.v = pv.v),
-    c AS (SELECT lang, source, n, m,
-                 sum(d) OVER (PARTITION BY lang, source ORDER BY v
-                              ROWS BETWEEN UNBOUNDED PRECEDING
-                              AND CURRENT ROW) AS cum
-          FROM grid)
-    SELECT lang, source, n,
-           round(CASE WHEN max(m) > 1
-                      THEN sum(abs(cum)) / (max(m) - 1)
-                      ELSE 0.0 END, 6) AS t
-    FROM c GROUP BY 1, 2, 3
-    ORDER BY 4 DESC, lang, source
-    LIMIT 20
-    """,
-)
-def q300_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.privacy import t_closeness_audit
-
-    d = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("n_chars").isNotNull())
-        .select(
-            "lang",
-            "source",
-            F.floor(F.col("n_chars") / 500).cast("long").alias("bucket"),
-        )
-    )
-    out = t_closeness_audit(d, ["lang", "source"], "bucket")
-    return out.orderBy(
-        F.desc("t"), F.asc("lang"), F.asc("source")
-    ).limit(20)
 
 
 # ---------------------------------------------------------------------------
@@ -10905,54 +9952,6 @@ def q302_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = e.groupBy("t").agg(F.count("*").cast("double").alias("y"))
     out = seasonal_decompose(daily, "t", "y", period=7)
     return out.orderBy("t")
-
-
-# ---------------------------------------------------------------------------
-# q307 — winsorized + trimmed robust moments (operators/stats.
-# winsorized_stats): per-language n_chars clamped/trimmed at the
-# exact disc [p5, p95] — quantiles from the distinct-value catalog
-# (one catalog window), never a raw-row sort. Complements q203's
-# Arrow trimmed-mean UDAF with the all-codegen form.
-# ---------------------------------------------------------------------------
-@query(
-    "q307_winsorized_stats",
-    oracle="""
-    WITH b AS (SELECT lang AS grp, CAST(n_chars AS DOUBLE) AS v
-               FROM documents WHERE n_chars IS NOT NULL),
-    cat AS (SELECT grp, v, count(*) AS c FROM b GROUP BY 1, 2),
-    cum AS (SELECT grp, v,
-                   sum(c) OVER (PARTITION BY grp ORDER BY v
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS cm,
-                   sum(c) OVER (PARTITION BY grp) AS n
-            FROM cat),
-    bd AS (SELECT grp,
-                  min(CASE WHEN cm >= greatest(ceil(0.05 * n), 1)
-                           THEN v END) AS lo,
-                  min(CASE WHEN cm >= greatest(ceil(0.95 * n), 1)
-                           THEN v END) AS hi
-           FROM cum GROUP BY 1),
-    j AS (SELECT b.grp, b.v, bd.lo, bd.hi,
-                 least(greatest(b.v, bd.lo), bd.hi) AS w
-          FROM b JOIN bd USING (grp))
-    SELECT grp AS "group", CAST(count(*) AS BIGINT) AS n,
-           round(min(lo), 6) AS lo, round(min(hi), 6) AS hi,
-           round(avg(w), 6) AS mean_w,
-           round(stddev_pop(w), 6) AS std_w,
-           round(avg(CASE WHEN v BETWEEN lo AND hi THEN v END), 6)
-               AS trimmed_mean,
-           CAST(sum(CASE WHEN v < lo OR v > hi THEN 1 ELSE 0 END)
-                AS BIGINT) AS n_trimmed
-    FROM j GROUP BY 1 ORDER BY 1
-    """,
-)
-def q307_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import winsorized_stats
-
-    d = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
-    return winsorized_stats(d, "lang", "n_chars", 0.05, 0.95).orderBy(
-        "group"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -11209,63 +10208,6 @@ def q314_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return jl_distortion_audit(
         e, "embedding", "vec_id", out_dim=16, in_dim=64, eps=0.5, seed=7
     )
-
-
-# ---------------------------------------------------------------------------
-# q315 — robust outlier listing by modified z-score (operators/
-# stats.mad_outliers, Iglewicz-Hoaglin 1993): per-event-type value
-# outliers at |M| > 3.5 — median and MAD off two distinct-value-
-# catalog rounds, so the cutoff is immune to the very tail it flags.
-# Top-20 by |M|.
-# ---------------------------------------------------------------------------
-@query(
-    "q315_mad_outliers",
-    oracle="""
-    WITH b AS (SELECT event_type AS grp, CAST(value AS DOUBLE) AS v
-               FROM events WHERE value IS NOT NULL),
-    c1 AS (SELECT grp, v, count(*) AS c FROM b GROUP BY 1, 2),
-    m1 AS (SELECT grp,
-                  min(CASE WHEN cum >= greatest(ceil(0.5 * n), 1)
-                           THEN v END) AS med
-           FROM (SELECT grp, v,
-                        sum(c) OVER (PARTITION BY grp ORDER BY v
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cum,
-                        sum(c) OVER (PARTITION BY grp) AS n
-                 FROM c1)
-           GROUP BY 1),
-    d AS (SELECT b.grp, b.v, m1.med, abs(b.v - m1.med) AS dev
-          FROM b JOIN m1 USING (grp)),
-    c2 AS (SELECT grp, dev, count(*) AS c FROM d GROUP BY 1, 2),
-    m2 AS (SELECT grp,
-                  min(CASE WHEN cum >= greatest(ceil(0.5 * n), 1)
-                           THEN dev END) AS mad
-           FROM (SELECT grp, dev,
-                        sum(c) OVER (PARTITION BY grp ORDER BY dev
-                                     ROWS BETWEEN UNBOUNDED PRECEDING
-                                     AND CURRENT ROW) AS cum,
-                        sum(c) OVER (PARTITION BY grp) AS n
-                 FROM c2)
-           GROUP BY 1),
-    s AS (SELECT d.grp, d.v, d.med, m2.mad,
-                 0.6745 * (d.v - d.med) / m2.mad AS z
-          FROM d JOIN m2 USING (grp)
-          WHERE m2.mad > 0)
-    SELECT grp AS "group", round(v, 6) AS value, round(med, 6) AS med,
-           round(mad, 6) AS mad, round(z, 6) AS mod_z
-    FROM s WHERE abs(z) > 3.5
-    ORDER BY abs(round(z, 6)) DESC, "group", value
-    LIMIT 20
-    """,
-)
-def q315_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import mad_outliers
-
-    e = load_table(spark, sf_dir, "events").select("event_type", "value")
-    out = mad_outliers(e, "event_type", "value", threshold=3.5)
-    return out.orderBy(
-        F.abs(F.col("mod_z")).desc(), F.asc("group"), F.asc("value")
-    ).limit(20)
 
 
 # ---------------------------------------------------------------------------
@@ -11955,49 +10897,6 @@ def q335_estimator_shootout(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q336 — order-statistic median CI (operators/stats.median_ci,
-# Conover 1999 sign-test interval): distribution-free 95% bounds on
-# each language's median length from exact ranks — no normality
-# assumption, no bootstrap replicas, one catalog window.
-# ---------------------------------------------------------------------------
-@query(
-    "q336_median_ci",
-    oracle="""
-    WITH b AS (SELECT lang AS grp, CAST(n_chars AS DOUBLE) AS v
-               FROM documents WHERE n_chars IS NOT NULL),
-    cat AS (SELECT grp, v, count(*) AS c FROM b GROUP BY 1, 2),
-    cum AS (SELECT grp, v,
-                   sum(c) OVER (PARTITION BY grp ORDER BY v
-                                ROWS BETWEEN UNBOUNDED PRECEDING
-                                AND CURRENT ROW) AS cm,
-                   sum(c) OVER (PARTITION BY grp) AS n
-            FROM cat)
-    SELECT grp AS "group", CAST(max(n) AS BIGINT) AS n,
-           round(min(CASE WHEN cm >= greatest(
-                       ceil(0.5 * CAST(n AS DOUBLE)), 1)
-                     THEN v END), 6) AS median,
-           round(min(CASE WHEN cm >= greatest(
-                       floor((CAST(n AS DOUBLE)
-                              - CAST(1.959963984540054 AS DOUBLE)
-                                * sqrt(CAST(n AS DOUBLE))) / 2.0), 1)
-                     THEN v END), 6) AS ci_lo,
-           round(min(CASE WHEN cm >= least(
-                       ceil(1.0 + (CAST(n AS DOUBLE)
-                                   + CAST(1.959963984540054 AS DOUBLE)
-                                     * sqrt(CAST(n AS DOUBLE))) / 2.0),
-                       CAST(n AS DOUBLE))
-                     THEN v END), 6) AS ci_hi
-    FROM cum GROUP BY 1 ORDER BY 1
-    """,
-)
-def q336_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import median_ci
-
-    d = load_table(spark, sf_dir, "documents").select("lang", "n_chars")
-    return median_ci(d, "lang", "n_chars").orderBy("group")
-
-
-# ---------------------------------------------------------------------------
 # q340 — inter-arrival regularity / bot tell (operators/temporal.
 # timing_regularity): per-user coefficient of variation of event
 # gaps — metronome gaps (CV→0) are scripted clients, CV≈1 is human
@@ -12235,46 +11134,6 @@ def q344_next_event_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q345 — one-way ANOVA F-test (operators/stats.anova_oneway, Fisher
-# 1925): mean l_quantity across return-flag groups. ONE map-side-
-# combinable aggregate to k (n, sum, sumsq) rows; the F statistic
-# folds over that catalog — the same shape at 100 TB. l_quantity is
-# integer-valued so every sum is exact in both engines.
-# ---------------------------------------------------------------------------
-@query(
-    "q345_anova_f",
-    oracle="""
-    WITH g AS (SELECT l_returnflag AS g,
-                      CAST(count(l_quantity) AS DOUBLE) AS n_g,
-                      sum(l_quantity) AS s,
-                      sum(l_quantity * l_quantity) AS ss
-               FROM lineitem GROUP BY 1),
-    a AS (SELECT count(*) AS k, sum(n_g) AS n, sum(s) AS ts,
-                 sum(ss - s * (s / n_g)) AS ssw,
-                 sum(n_g * (s / n_g) * (s / n_g)) AS sb2
-          FROM g)
-    SELECT CAST(k AS BIGINT) AS k, CAST(n AS BIGINT) AS n,
-           CAST(k - 1 AS BIGINT) AS df_between,
-           CAST(n - k AS BIGINT) AS df_within,
-           round(sb2 - n * (ts / n) * (ts / n), 4) AS ss_between,
-           round(ssw, 4) AS ss_within,
-           round(CASE WHEN k > 1 AND n > k AND ssw > 0
-                      THEN ((sb2 - n * (ts / n) * (ts / n))
-                            / (k - 1)) / (ssw / (n - k)) END,
-                 6) AS f_stat
-    FROM a
-    """,
-)
-def q345_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import anova_oneway
-
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_returnflag", "l_quantity"
-    )
-    return anova_oneway(li, "l_returnflag", "l_quantity")
-
-
-# ---------------------------------------------------------------------------
 # q346 — declarative data-quality constraint suite (operators/
 # constraints.constraint_audit — the Deequ-style "unit tests for
 # data" gate; engine-side re-expression of the reference loader's
@@ -12498,48 +11357,6 @@ def q349_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cramers_v(o, "o_orderstatus", "o_orderpriority").unionByName(
         cramers_v(li, "l_returnflag", "l_linestatus")
     )
-
-
-# ---------------------------------------------------------------------------
-# q350 — categorical column profile (operators/stats.
-# categorical_profile): Shannon entropy, normalized entropy,
-# distinct count and modal share per metadata column — the
-# dataset-card distribution block. Table melts to (column, value)
-# once; folds run over the value-domain-bounded catalog.
-# ---------------------------------------------------------------------------
-@query(
-    "q350_categorical_profile",
-    oracle="""
-    WITH pairs AS (SELECT 'lang' AS col, CAST(lang AS VARCHAR) AS v
-                   FROM documents
-                   UNION ALL
-                   SELECT 'source', CAST(source AS VARCHAR)
-                   FROM documents),
-    c AS (SELECT col, v, count(*) AS c FROM pairs
-          WHERE v IS NOT NULL GROUP BY 1, 2),
-    p AS (SELECT col, sum(c) AS n, count(*) AS nd,
-                 sum(c * ln(c)) AS clogc, max(c) AS top
-          FROM c GROUP BY 1)
-    SELECT col AS "column", CAST(n AS BIGINT) AS n,
-           CAST(nd AS BIGINT) AS n_distinct,
-           round(ln(CAST(n AS DOUBLE))
-                 - clogc / CAST(n AS DOUBLE), 6) AS entropy,
-           round(CASE WHEN nd > 1
-                      THEN (ln(CAST(n AS DOUBLE))
-                            - clogc / CAST(n AS DOUBLE))
-                           / ln(CAST(nd AS DOUBLE))
-                      ELSE 0.0 END, 6) AS norm_entropy,
-           round(top / CAST(n AS DOUBLE), 6) AS top_share
-    FROM p ORDER BY 1
-    """,
-)
-def q350_categorical_profile(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    from cccatalog_spark.operators.stats import categorical_profile
-
-    d = load_table(spark, sf_dir, "documents")
-    return categorical_profile(d, ["lang", "source"])
 
 
 # ---------------------------------------------------------------------------
@@ -12979,45 +11796,6 @@ def q364_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = load_table(spark, sf_dir, "documents")
     return skew_report(d, "lang", top_k=10, target_partitions=32)
-
-
-# ---------------------------------------------------------------------------
-# q365 — l-diversity audit (operators/privacy.l_diversity_audit,
-# Machanavajjhala 2007): the attack k-anonymity (q236) misses — a
-# big quasi-identifier group whose sensitive attribute is constant
-# still leaks. Completes the k-anonymity / t-closeness / l-diversity
-# release-gate triad. Two aggregates, both map-side combinable.
-# ---------------------------------------------------------------------------
-@query(
-    "q365_l_diversity",
-    oracle="""
-    WITH j AS (SELECT c_mktsegment, c_nationkey, o_orderstatus
-               FROM orders JOIN customer ON o_custkey = c_custkey),
-    cells AS (SELECT c_mktsegment, c_nationkey, o_orderstatus,
-                     count(*) AS c
-              FROM j GROUP BY 1, 2, 3),
-    per_g AS (SELECT c_mktsegment, c_nationkey,
-                     CAST(sum(c) AS BIGINT) AS n,
-                     CAST(count(*) AS BIGINT) AS n_sensitive
-              FROM cells GROUP BY 1, 2),
-    t AS (SELECT sum(n) AS tot FROM per_g)
-    SELECT c_mktsegment, c_nationkey, n, n_sensitive,
-           n_sensitive < 3 AS at_risk,
-           round(n / CAST(t.tot AS DOUBLE), 6) AS row_share
-    FROM per_g, t
-    """,
-)
-def q365_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.privacy import l_diversity_audit
-
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    j = o.join(c, F.col("o_custkey") == F.col("c_custkey")).select(
-        "c_mktsegment", "c_nationkey", "o_orderstatus"
-    )
-    return l_diversity_audit(
-        j, ["c_mktsegment", "c_nationkey"], "o_orderstatus", l=3
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -13980,50 +12758,6 @@ def q393_friedman_lang_ranks(
 
 
 # ---------------------------------------------------------------------------
-# q394 — Dirichlet query-likelihood retrieval (operators/retrieval.
-# query_likelihood_topk, Zhai-Lafferty SIGIR'01): the LM-based ranker
-# beside q90's BM25 — zero-tf terms still score through the collection
-# background model. Same bounded explode as BM25; the scoring join is
-# |hits|·|q| rows, never |corpus|·|q|.
-# ---------------------------------------------------------------------------
-@query(
-    "q394_query_likelihood",
-    oracle=f"""
-    WITH t AS (SELECT doc_id,
-                      list_transform({_TOKS}, x -> lower(x)) AS toks
-               FROM documents),
-    s AS (SELECT CAST(sum(len(toks)) AS DOUBLE) AS c_len FROM t),
-    e AS (SELECT doc_id, len(toks) AS dl, unnest(toks) AS term FROM t),
-    tf AS (SELECT doc_id, dl, term, count(*) AS tf FROM e
-           WHERE term IN ('dup', 'stream', 'merge') GROUP BY 1, 2, 3),
-    cf AS (SELECT term, CAST(sum(tf) AS DOUBLE) AS cf FROM tf GROUP BY 1),
-    hd AS (SELECT DISTINCT doc_id, dl FROM tf),
-    q AS (SELECT unnest(['dup', 'stream', 'merge']) AS term),
-    sc AS (SELECT hd.doc_id,
-             CAST(sum(CASE WHEN coalesce(tf.tf, 0) > 0
-                      THEN 1 ELSE 0 END) AS BIGINT) AS n_terms,
-             round(sum(ln(
-               (CAST(coalesce(tf.tf, 0) AS DOUBLE)
-                + CAST(2000.0 AS DOUBLE) * cf.cf / s.c_len)
-               / (hd.dl + CAST(2000.0 AS DOUBLE)))), 6) AS score
-           FROM hd CROSS JOIN q
-           LEFT JOIN tf ON tf.doc_id = hd.doc_id AND tf.term = q.term
-           JOIN cf ON cf.term = q.term, s
-           GROUP BY 1)
-    SELECT doc_id, n_terms, score
-    FROM sc ORDER BY score DESC, doc_id LIMIT 20
-    """,
-)
-def q394_query_likelihood(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.retrieval import query_likelihood_topk
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    return query_likelihood_topk(
-        d, "text", "doc_id", ["dup", "stream", "merge"], k=20, mu=2000.0
-    )
-
-
-# ---------------------------------------------------------------------------
 # q395 — quality-filter funnel attrition (operators/quality.
 # filter_funnel): the per-stage survival scorecard a corpus-cleaning
 # pipeline publishes before committing to a filter chain — cumulative
@@ -14212,53 +12946,6 @@ def q399_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ph_max",
         "n_alarms",
         "first_alarm_ord",
-    )
-
-
-# ---------------------------------------------------------------------------
-# q400 — DP per-group mean release (operators/privacy.dp_group_means):
-# the Laplace sum/count mechanism with clipping — per-source mean
-# document length, ε split across the two noisy aggregates. Noise
-# md5-derandomized exactly like q259's histogram (distinct sub-salts
-# for sum vs count), hence SQL-replayable.
-# ---------------------------------------------------------------------------
-@query(
-    "q400_dp_group_means",
-    oracle="""
-    WITH g AS (SELECT source AS "group",
-                      CAST(count(*) AS DOUBLE) AS n,
-                      sum(least(greatest(CAST(n_chars AS DOUBLE),
-                                         CAST(0.0 AS DOUBLE)),
-                                CAST(500.0 AS DOUBLE))) AS s
-               FROM documents GROUP BY 1),
-    u AS (SELECT "group", n, s,
-            (('0x' || substring(md5('dpm:n|' || "group"), 1, 12))::BIGINT
-             + CAST(0.5 AS DOUBLE)) / CAST(281474976710656.0 AS DOUBLE)
-              AS un,
-            (('0x' || substring(md5('dpm:s|' || "group"), 1, 12))::BIGINT
-             + CAST(0.5 AS DOUBLE)) / CAST(281474976710656.0 AS DOUBLE)
-              AS us
-          FROM g),
-    r AS (SELECT "group", s,
-                 greatest(n + CAST(-2.0 AS DOUBLE)
-                     * sign(un - CAST(0.5 AS DOUBLE))
-                     * ln(1 - 2 * abs(un - CAST(0.5 AS DOUBLE))),
-                     CAST(0.0 AS DOUBLE)) AS nn,
-                 s + CAST(-1000.0 AS DOUBLE)
-                     * sign(us - CAST(0.5 AS DOUBLE))
-                     * ln(1 - 2 * abs(us - CAST(0.5 AS DOUBLE))) AS sn
-          FROM u)
-    SELECT "group", round(nn, 6) AS n_noised,
-           round(sn / greatest(nn, CAST(1.0 AS DOUBLE)), 6) AS mean_noised
-    FROM r
-    """,
-)
-def q400_dp_group_means(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.privacy import dp_group_means
-
-    d = load_table(spark, sf_dir, "documents")
-    return dp_group_means(
-        d, "source", "n_chars", clip_lo=0.0, clip_hi=500.0, epsilon=1.0
     )
 
 
@@ -14485,69 +13172,6 @@ def q406_source_kl(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kl_to_corpus(d, "text", "source", top_k=50)
 
 
-_BPE_RE_SQL = (
-    r"'''(?:s|d|m|t|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+'"
-)
-
-
-# ---------------------------------------------------------------------------
-# q407 — Borda-count rank aggregation (operators/retrieval.
-# borda_fuse): three quality rankers (chars, BPE tokens, lexical
-# distinctness) fused by linear positional points — the social-choice
-# sibling of q100's top-heavy RRF. Inputs pre-bounded to top-50
-# (TakeOrdered heaps), fusion one O(N·50) groupBy.
-# ---------------------------------------------------------------------------
-@query(
-    "q407_borda_fusion",
-    oracle=f"""
-    WITH base AS (
-        SELECT doc_id, n_chars,
-               len(regexp_extract_all(text, {_BPE_RE_SQL})) AS nb,
-               CASE WHEN len({_TOKS}) > 0
-                    THEN len(list_distinct({_TOKS})) * 1.0 / len({_TOKS})
-                    ELSE 0.0 END AS dr
-        FROM documents),
-    r1 AS (SELECT doc_id, row_number() OVER (
-               ORDER BY n_chars DESC, doc_id ASC) AS rnk FROM base),
-    r2 AS (SELECT doc_id, row_number() OVER (
-               ORDER BY nb DESC, doc_id ASC) AS rnk FROM base),
-    r3 AS (SELECT doc_id, row_number() OVER (
-               ORDER BY dr DESC, doc_id ASC) AS rnk FROM base),
-    u AS (SELECT * FROM r1 WHERE rnk <= 50
-          UNION ALL SELECT * FROM r2 WHERE rnk <= 50
-          UNION ALL SELECT * FROM r3 WHERE rnk <= 50)
-    SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lists,
-           CAST(sum(51 - rnk) AS BIGINT) AS borda_points
-    FROM u GROUP BY 1
-    ORDER BY borda_points DESC, doc_id ASC LIMIT 20
-    """,
-)
-def q407_borda_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.functions.text import bpe_token_count, tokens
-    from cccatalog_spark.operators.retrieval import borda_fuse, with_rank
-
-    d = load_table(spark, sf_dir, "documents")
-    toks = tokens(F.col("text"))
-    base = d.select(
-        "doc_id",
-        F.col("n_chars").alias("s1"),
-        bpe_token_count(F.col("text")).alias("s2"),
-        F.when(
-            F.size(toks) > 0,
-            F.size(F.array_distinct(toks)).cast("double") / F.size(toks),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("s3"),
-    )
-    rankings = [
-        with_rank(
-            base.orderBy(F.desc(c), F.asc("doc_id")).limit(50), c, "doc_id"
-        )
-        for c in ("s1", "s2", "s3")
-    ]
-    return borda_fuse(rankings, "doc_id", list_len=50, k=20)
-
-
 # ---------------------------------------------------------------------------
 # q411 — Davies-Bouldin index (operators/cluster_eval.davies_bouldin):
 # centroid-based cluster-separation scorecard beside q253's
@@ -14583,65 +13207,6 @@ def q411_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return davies_bouldin(emb, "embedding", "label")
-
-
-# ---------------------------------------------------------------------------
-# q413 — UMass topic coherence (operators/coherence.umass_coherence,
-# Mimno EMNLP'11): are each lang's top-10 frequent terms actually
-# co-used in documents? The scorecard beside q228's class-TFIDF term
-# proposals. Candidate-filtered incidence BEFORE the co-occurrence
-# self-join (broadcast semi-join on ≤ m·|groups| terms), doc-frequency
-# smoothing +1 per the original.
-# ---------------------------------------------------------------------------
-@query(
-    "q413_topic_coherence",
-    oracle=f"""
-    WITH base AS (SELECT doc_id AS doc, lang AS grp,
-                         list_transform({_TOKS}, x -> lower(x)) AS t
-                  FROM documents),
-    gt AS (SELECT grp, term, count(*) AS c FROM (
-               SELECT grp, unnest(t) AS term FROM base) GROUP BY 1, 2),
-    top AS MATERIALIZED (
-        SELECT grp, term, rnk FROM (
-            SELECT grp, term, row_number() OVER (
-                PARTITION BY grp ORDER BY c DESC, term ASC) AS rnk
-            FROM gt) WHERE rnk <= 10),
-    cand AS (SELECT DISTINCT term FROM top),
-    inc AS MATERIALIZED (
-        SELECT DISTINCT doc, term FROM (
-            SELECT doc, unnest(t) AS term FROM base)
-        WHERE term IN (SELECT term FROM cand)),
-    dfreq AS (SELECT term, CAST(count(*) AS DOUBLE) AS df
-              FROM inc GROUP BY 1),
-    cooc AS (SELECT x.term AS ta, y.term AS tb,
-                    CAST(count(*) AS DOUBLE) AS dab
-             FROM inc x JOIN inc y
-               ON x.doc = y.doc AND x.term < y.term
-             GROUP BY 1, 2),
-    pairs AS (SELECT pi.grp, pi.term AS ti, pj.term AS tj,
-                     least(pi.term, pj.term) AS ka,
-                     greatest(pi.term, pj.term) AS kb
-              FROM top pi JOIN top pj
-                ON pi.grp = pj.grp AND pi.rnk > pj.rnk),
-    sc AS (SELECT p.grp,
-                  ln((coalesce(c.dab, 0.0) + 1.0) / d.df) AS s
-           FROM pairs p
-           LEFT JOIN cooc c ON c.ta = p.ka AND c.tb = p.kb
-           JOIN dfreq d ON d.term = p.tj),
-    nt AS (SELECT grp, CAST(count(*) AS BIGINT) AS n_terms
-           FROM top GROUP BY 1)
-    SELECT nt.grp AS "group", nt.n_terms,
-           CAST(count(*) AS BIGINT) AS n_pairs,
-           round(sum(sc.s), 6) AS umass
-    FROM sc JOIN nt ON nt.grp = sc.grp
-    GROUP BY 1, 2
-    """,
-)
-def q413_topic_coherence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.coherence import umass_coherence
-
-    d = load_table(spark, sf_dir, "documents")
-    return umass_coherence(d, "text", "doc_id", "lang", top_m=10)
 
 
 # ---------------------------------------------------------------------------
@@ -14881,80 +13446,6 @@ def q420_seasonality_strength(
     return seasonality_strength(
         QUERIES["q302_seasonal_decompose"](spark, sf_dir)
     )
-
-
-# ---------------------------------------------------------------------------
-# q421 — Jarque-Bera normality test (operators/stats.jarque_bera):
-# the distribution-shape audit parametric consumers silently assume —
-# skewness/kurtosis from explicit raw sums, one map-side-combinable
-# pass.
-# ---------------------------------------------------------------------------
-@query(
-    "q421_jarque_bera",
-    oracle="""
-    WITH a AS (SELECT CAST(count(*) AS DOUBLE) AS n,
-                      sum(CAST(n_chars AS DOUBLE)) AS s1,
-                      sum(pow(CAST(n_chars AS DOUBLE), 2)) AS s2,
-                      sum(pow(CAST(n_chars AS DOUBLE), 3)) AS s3,
-                      sum(pow(CAST(n_chars AS DOUBLE), 4)) AS s4
-               FROM documents WHERE n_chars IS NOT NULL),
-    m AS (SELECT n,
-                 s2 / n - pow(s1 / n, 2) AS m2,
-                 s3 / n - 3 * (s1 / n) * s2 / n + 2 * pow(s1 / n, 3)
-                     AS m3,
-                 s4 / n - 4 * (s1 / n) * s3 / n
-                 + 6 * pow(s1 / n, 2) * s2 / n - 3 * pow(s1 / n, 4)
-                     AS m4
-          FROM a)
-    SELECT CAST(n AS BIGINT) AS n,
-           round(CASE WHEN m2 > 0 THEN m3 / pow(m2, 1.5) END, 6)
-               AS skewness,
-           round(CASE WHEN m2 > 0 THEN m4 / (m2 * m2) END, 6)
-               AS kurtosis,
-           round(n / 6.0 * (pow(m3 / pow(m2, 1.5), 2)
-                 + pow(m4 / (m2 * m2) - 3, 2) / 4.0), 6) AS jb
-    FROM m
-    """,
-)
-def q421_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import jarque_bera
-
-    d = load_table(spark, sf_dir, "documents")
-    return jarque_bera(d, "n_chars")
-
-
-# ---------------------------------------------------------------------------
-# q422 — Theil-T inequality decomposition (operators/stats.
-# theil_decomposition): how unequal is character mass across docs, and
-# how much is the lang mix vs within-lang spread — between+within is
-# an exact identity. One groupBy(lang) + 1-row reduce.
-# ---------------------------------------------------------------------------
-@query(
-    "q422_theil_inequality",
-    oracle="""
-    WITH g AS (SELECT lang, CAST(count(*) AS DOUBLE) AS ng,
-                      sum(CAST(n_chars AS DOUBLE)) AS sg,
-                      sum(CAST(n_chars AS DOUBLE)
-                          * ln(CAST(n_chars AS DOUBLE))) AS slg
-               FROM documents WHERE n_chars > 0 GROUP BY 1),
-    a AS (SELECT sum(ng) AS n, CAST(count(*) AS BIGINT) AS k,
-                 sum(sg) AS s, sum(slg) AS sl,
-                 sum(sg * ln(sg / ng)) AS sbl
-          FROM g)
-    SELECT CAST(n AS BIGINT) AS n, k,
-           round(s / n, 6) AS mean,
-           round(sl / s - ln(s / n), 6) AS theil_total,
-           round(sbl / s - ln(s / n), 6) AS theil_between,
-           round((sl / s - ln(s / n)) - (sbl / s - ln(s / n)), 6)
-               AS theil_within
-    FROM a
-    """,
-)
-def q422_theil_inequality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from cccatalog_spark.operators.stats import theil_decomposition
-
-    d = load_table(spark, sf_dir, "documents")
-    return theil_decomposition(d, "lang", "n_chars")
 
 
 # ---------------------------------------------------------------------------

@@ -11,24 +11,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-# ---------------------------------------------------------------------------
-# cc_links — Common Crawl extraction output (ExtractCCLinks.py:212-223)
-# ---------------------------------------------------------------------------
-CC_LINKS = T.StructType(
-    [
-        T.StructField("provider_domain", T.StringType()),
-        T.StructField("content_path", T.StringType()),
-        T.StructField("content_query_string", T.StringType()),
-        T.StructField("cc_domain", T.StringType()),
-        T.StructField("cc_license", T.StringType()),
-        T.StructField("warc_segment", T.StringType()),
-        T.StructField("warc_filename", T.StringType()),
-        T.StructField("content_offset", T.LongType()),
-        T.StructField("deflate_length", T.LongType()),
-        T.StructField("html_metadata", T.StringType()),  # JSON, see HTML_METADATA
-    ]
-)
-
 # html_metadata parse schema: {"Images": n, "Links": {domain: count}}
 # (ExtractCCLinks.py:181-184)
 HTML_METADATA = T.StructType(

@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 
 from cccatalog_spark.session import SEMANTIC_CONFS
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # events.parquet stores TIMESTAMP(NANOS) which Spark's vectorized reader
 # rejects; read nanos as long and floor-divide to microseconds — exactly
 # the truncation DuckDB applies when it reads the same file into its

@@ -262,8 +262,6 @@ def stage_eligible_files(
     only what was staged. ``now`` is injectable for deterministic
     tests.
     """
-    import time
-
     if now is None:
         now = time.time()
     os.makedirs(staging_dir, exist_ok=True)

@@ -6,9 +6,9 @@ advice; the bradley_terry/eigenvector_centrality discipline).
 The returned frame's own lineage-cut checkpoint legitimately stays
 registered until the caller drops it, so the pin is on GROWTH: N calls
 may leave at most N result checkpoints, never N x intermediates
-(umass_coherence used to leave 3 cached frames per call, kl_to_corpus
-and mutual_knn_pairs 2, markov_hitting_time 1 — plus the result would
-have added one more each had it been checkpointed)."""
+(kl_to_corpus and mutual_knn_pairs used to leave 2 cached frames per
+call, markov_hitting_time 1 — plus the result would have added one
+more each had it been checkpointed)."""
 
 from __future__ import annotations
 
@@ -37,16 +37,6 @@ def _assert_no_intermediate_growth(spark, run):
     # checkpoint) per call, minus whatever the ContextCleaner already
     # reclaimed
     assert _n_cached(spark) <= base + CALLS
-
-
-def test_umass_coherence_releases_intermediates(spark):
-    from cccatalog_spark.operators.coherence import umass_coherence
-
-    d = _docs(spark)
-    _assert_no_intermediate_growth(
-        spark,
-        lambda: umass_coherence(d, "text", "doc_id", "lang", top_m=5).count(),
-    )
 
 
 def test_kl_to_corpus_releases_intermediates(spark):

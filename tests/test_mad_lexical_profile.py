@@ -1,35 +1,8 @@
-"""mad_outliers (operators/stats.py) and lexical_profile
-(operators/corpus_stats.py)."""
+"""lexical_profile (operators/corpus_stats.py)."""
 
 from __future__ import annotations
 
 from cccatalog_spark.operators.corpus_stats import lexical_profile
-from cccatalog_spark.operators.stats import mad_outliers
-
-
-def test_mad_outliers_flags_only_the_spike(spark):
-    rows = [("g", float(v)) for v in [10, 11, 12, 10, 11, 12, 9, 13, 500]]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = mad_outliers(df, "grp", "v", threshold=3.5).collect()
-    assert len(out) == 1
-    r = out[0]
-    assert r["value"] == 500.0 and r["med"] == 11.0 and r["mad"] == 1.0
-    assert abs(r["mod_z"] - 0.6745 * (500 - 11) / 1.0) < 1e-4
-
-
-def test_mad_outliers_zero_mad_group_silent(spark):
-    # >half the mass on one value -> MAD 0 -> no rows even with a spike
-    rows = [("g", 5.0)] * 6 + [("g", 99.0)]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    assert mad_outliers(df, "grp", "v").count() == 0
-
-
-def test_mad_outliers_two_sided(spark):
-    rows = [("g", float(v)) for v in [100, 101, 99, 100, 102, 98, -300, 477]]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = {r["value"]: r["mod_z"] for r in mad_outliers(df, "grp", "v").collect()}
-    assert -300.0 in out and out[-300.0] < 0
-    assert 477.0 in out and out[477.0] > 0
 
 
 def test_lexical_profile_hand_computed(spark):

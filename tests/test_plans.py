@@ -181,19 +181,6 @@ def test_substring_dedup_has_no_join_or_cartesian(spark, sf_dir):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_bm25_stats_attach_by_broadcast(spark, sf_dir):
-    """q90: corpus stats + per-term dfs must re-attach by broadcast —
-    the fact side never sort-merge-joins."""
-    from cccatalog_spark.operators.retrieval import bm25_topk
-
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    plan = _plan(bm25_topk(d, "text", "doc_id", ["merge", "scan"], k=10))
-    assert "SortMergeJoin" not in plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
-    # global top-k is a heap merge, not a full sort
-    assert "TakeOrderedAndProject" in plan
-
-
 def test_heavy_hitters_rescan_is_broadcast_semi(spark, sf_dir):
     from cccatalog_spark.operators.frequent import heavy_hitters
     from cccatalog_spark.functions import text as TX

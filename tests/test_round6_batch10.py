@@ -142,73 +142,3 @@ def test_seasonality_strength_pure_noise(spark):
     dec = seasonal_decompose(df, "t", "y", period=7)
     r = seasonality_strength(dec).collect()[0]
     assert r["f_seasonal"] < 0.9  # noise never reads as a clean cycle
-
-
-# ----------------------------------------------------------------- JB test
-def test_jarque_bera_normal_vs_skewed(spark):
-    import numpy as np
-
-    from cccatalog_spark.operators.stats import jarque_bera
-
-    rng = np.random.default_rng(4)
-    norm = spark.createDataFrame(
-        [(float(v),) for v in rng.normal(0, 1, 2000)], ["x"]
-    )
-    skewed = spark.createDataFrame(
-        [(float(v),) for v in rng.exponential(1.0, 2000)], ["x"]
-    )
-    rn = jarque_bera(norm, "x").collect()[0]
-    rs = jarque_bera(skewed, "x").collect()[0]
-    assert abs(rn["skewness"]) < 0.2 and abs(rn["kurtosis"] - 3) < 0.5
-    assert rs["jb"] > 100 > rn["jb"]
-
-
-def test_jarque_bera_numpy_reference(spark):
-    import numpy as np
-
-    from cccatalog_spark.operators.stats import jarque_bera
-
-    x = np.array([1.0, 2.0, 2.0, 3.0, 7.0, 9.0])
-    df = spark.createDataFrame([(float(v),) for v in x], ["x"])
-    r = jarque_bera(df, "x").collect()[0]
-    m = x.mean()
-    m2 = ((x - m) ** 2).mean()
-    m3 = ((x - m) ** 3).mean()
-    m4 = ((x - m) ** 4).mean()
-    s, k = m3 / m2**1.5, m4 / m2**2
-    assert r["skewness"] == pytest.approx(s, abs=1e-6)
-    assert r["kurtosis"] == pytest.approx(k, abs=1e-6)
-    assert r["jb"] == pytest.approx(
-        len(x) / 6 * (s**2 + (k - 3) ** 2 / 4), abs=1e-5
-    )
-
-
-# -------------------------------------------------------------------- Theil
-def test_theil_decomposition_identity_and_reference(spark):
-    import math
-
-    from cccatalog_spark.operators.stats import theil_decomposition
-
-    rows = [("a", 1.0), ("a", 2.0), ("a", 3.0), ("b", 10.0), ("b", 14.0)]
-    df = spark.createDataFrame(rows, ["g", "x"])
-    r = theil_decomposition(df, "g", "x").collect()[0]
-    xs = [x for _, x in rows]
-    n, mu = len(xs), sum(xs) / len(xs)
-    total = sum(x / (n * mu) * math.log(x / mu) for x in xs)
-    groups = {"a": [1.0, 2.0, 3.0], "b": [10.0, 14.0]}
-    between = sum(
-        sum(v) / (n * mu) * math.log((sum(v) / len(v)) / mu)
-        for v in groups.values()
-    )
-    assert r["theil_total"] == pytest.approx(total, abs=1e-6)
-    assert r["theil_between"] == pytest.approx(between, abs=1e-6)
-    assert r["theil_within"] == pytest.approx(total - between, abs=1e-6)
-    assert r["theil_within"] >= 0 and r["theil_between"] >= 0
-
-
-def test_theil_equal_values_zero(spark):
-    from cccatalog_spark.operators.stats import theil_decomposition
-
-    df = spark.createDataFrame([("g", 5.0)] * 10, ["g", "x"])
-    r = theil_decomposition(df, "g", "x").collect()[0]
-    assert r["theil_total"] == pytest.approx(0.0, abs=1e-9)

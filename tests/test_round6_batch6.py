@@ -1,6 +1,5 @@
 """Unit tests for round-6 batch-6 operators: McNemar / Cochran-
-Armitage / Friedman, query-likelihood retrieval, filter funnel, CDC
-chunk dedup, Page-Hinkley, DP group means."""
+Armitage / Friedman, filter funnel, CDC chunk dedup, Page-Hinkley."""
 
 from __future__ import annotations
 
@@ -143,40 +142,6 @@ def test_friedman_drops_incomplete_blocks(spark):
     assert r["n_blocks"] == 2
 
 
-# ------------------------------------------------------- query likelihood
-def test_query_likelihood_reference(spark):
-    from cccatalog_spark.operators.retrieval import query_likelihood_topk
-
-    docs = [
-        (1, "cat dog cat"),
-        (2, "dog dog dog bird"),
-        (3, "fish fish fish fish"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    mu = 10.0
-    out = {
-        r["doc_id"]: (r["n_terms"], r["score"])
-        for r in query_likelihood_topk(
-            df, "text", "doc_id", ["cat", "dog"], k=10, mu=mu
-        ).collect()
-    }
-    # doc 3 matches no term -> excluded
-    assert set(out) == {1, 2}
-    c_len = 11.0
-    cf = {"cat": 2.0, "dog": 4.0}
-    for did, toks in ((1, ["cat", "dog", "cat"]), (2, ["dog"] * 3 + ["bird"])):
-        dl = len(toks)
-        score = sum(
-            math.log(
-                (toks.count(t) + mu * cf[t] / c_len) / (dl + mu)
-            )
-            for t in ("cat", "dog")
-        )
-        n_terms = sum(1 for t in ("cat", "dog") if t in toks)
-        assert out[did][0] == n_terms
-        assert out[did][1] == pytest.approx(score, abs=1e-5)
-
-
 # ------------------------------------------------------------ filter funnel
 def test_filter_funnel_counts(spark):
     from cccatalog_spark.operators.quality import filter_funnel
@@ -309,51 +274,3 @@ def test_page_hinkley_detects_mean_shift(spark):
         mn = min(mn, u)
         ph_max = max(ph_max, u - mn)
     assert r["ph_max"] == pytest.approx(ph_max, abs=1e-6)
-
-
-# ------------------------------------------------------------ DP group means
-def test_dp_group_means_deterministic_and_replayable(spark):
-    from cccatalog_spark.operators.privacy import dp_group_means
-
-    rows = [("a", float(v)) for v in range(100)] + [
-        ("b", 400.0)
-    ] * 50
-    df = spark.createDataFrame(rows, ["g", "v"])
-    out1 = {
-        r["group"]: (r["n_noised"], r["mean_noised"])
-        for r in dp_group_means(df, "g", "v", 0.0, 200.0, 1.0).collect()
-    }
-    out2 = {
-        r["group"]: (r["n_noised"], r["mean_noised"])
-        for r in dp_group_means(
-            df.repartition(7), "g", "v", 0.0, 200.0, 1.0
-        ).collect()
-    }
-    assert out1 == out2  # derandomized, repartition-stable
-
-    # python replay of the mechanism for group 'a'
-    import hashlib
-
-    def u01(salt, key):
-        h = hashlib.md5((salt + key).encode()).hexdigest()[:12]
-        return (int(h, 16) + 0.5) / float(16**12)
-
-    def lap(salt, key, scale):
-        u = u01(salt, key) - 0.5
-        return -scale * math.copysign(1.0, u) * math.log(1 - 2 * abs(u))
-
-    n_true, s_true = 100.0, sum(min(max(v, 0.0), 200.0) for v in range(100))
-    nn = max(n_true + lap("dpm:n|", "a", 2.0), 0.0)
-    sn = s_true + lap("dpm:s|", "a", 400.0)
-    assert out1["a"][0] == pytest.approx(round(nn, 6), abs=1e-9)
-    assert out1["a"][1] == pytest.approx(round(sn / max(nn, 1.0), 6), abs=1e-9)
-
-
-def test_dp_group_means_validates_args(spark):
-    from cccatalog_spark.operators.privacy import dp_group_means
-
-    df = spark.createDataFrame([("a", 1.0)], ["g", "v"])
-    with pytest.raises(ValueError):
-        dp_group_means(df, "g", "v", 0.0, 100.0, epsilon=0.0)
-    with pytest.raises(ValueError):
-        dp_group_means(df, "g", "v", 5.0, 5.0, epsilon=1.0)

@@ -1,34 +1,9 @@
-"""Unit tests for round-6 batch-8 operators: Borda fusion,
-Davies-Bouldin."""
+"""Unit tests for round-6 batch-8 operators: Davies-Bouldin."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-
-
-# ---------------------------------------------------------------- Borda
-def test_borda_fuse_points(spark):
-    from cccatalog_spark.operators.retrieval import borda_fuse
-
-    r1 = spark.createDataFrame([(1, 1), (2, 2), (3, 3)], ["id", "rnk"])
-    r2 = spark.createDataFrame([(2, 1), (1, 2)], ["id", "rnk"])
-    out = {
-        r["id"]: (r["n_lists"], r["borda_points"])
-        for r in borda_fuse([r1, r2], "id", list_len=3, k=10).collect()
-    }
-    # list_len 3 -> points = 4 - rnk
-    assert out[1] == (2, (4 - 1) + (4 - 2))
-    assert out[2] == (2, (4 - 2) + (4 - 1))
-    assert out[3] == (1, 1)
-
-
-def test_borda_total_order_and_k(spark):
-    from cccatalog_spark.operators.retrieval import borda_fuse
-
-    r1 = spark.createDataFrame([(i, i + 1) for i in range(5)], ["id", "rnk"])
-    top = borda_fuse([r1], "id", list_len=5, k=2).collect()
-    assert [r["id"] for r in top] == [0, 1]
 
 
 # --------------------------------------------------------- Davies-Bouldin

@@ -1,5 +1,5 @@
-"""Unit tests for round-6 batch-9: Page-Hinkley and UMass topic
-coherence."""
+"""Unit tests for round-6 batch-9: Page-Hinkley, character entropy
+rate and term burstiness."""
 
 from __future__ import annotations
 
@@ -35,35 +35,6 @@ def test_page_hinkley_matches_sequential_recursion(spark):
     assert b["ph_max"] == pytest.approx(_ph_ref(vals, 1.0), abs=1e-6)
     assert b["n_alarms"] > 0
     assert b["first_alarm_ord"] >= 10  # alarm only after the shift
-
-
-# ------------------------------------------------------------- coherence
-def test_umass_coherence_reference(spark):
-    from cccatalog_spark.operators.coherence import umass_coherence
-
-    docs = [
-        (1, "g", "apple banana apple"),
-        (2, "g", "apple banana"),
-        (3, "g", "apple cherry"),
-        (4, "g", "dog"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "grp", "text"])
-    r = umass_coherence(df, "text", "doc_id", "grp", top_m=2).collect()[0]
-    # top-2 by freq: apple (4), banana (2) -> ranks 1, 2
-    # pair (banana rank2, apple rank1): ln((D(apple,banana)+1)/D(apple))
-    ref = math.log((2 + 1) / 3)
-    assert r["n_terms"] == 2 and r["n_pairs"] == 1
-    assert r["umass"] == pytest.approx(ref, abs=1e-6)
-
-
-def test_umass_zero_cooccurrence_smoothed(spark):
-    from cccatalog_spark.operators.coherence import umass_coherence
-
-    docs = [(1, "g", "aaa"), (2, "g", "bbb"), (3, "g", "aaa")]
-    df = spark.createDataFrame(docs, ["doc_id", "grp", "text"])
-    r = umass_coherence(df, "text", "doc_id", "grp", top_m=2).collect()[0]
-    # terms aaa (df 2), bbb (df 1); never co-occur: ln((0+1)/D(aaa))
-    assert r["umass"] == pytest.approx(math.log(1 / 2), abs=1e-6)
 
 
 # ------------------------------------------------------------ entropy rate

@@ -216,36 +216,6 @@ def test_skew_report_hot_key_salting(spark):
     assert out[1]["key"] == "k0"  # count tie broken by key asc
 
 
-def test_l_diversity_flags_constant_groups(spark):
-    from cccatalog_spark.operators.privacy import l_diversity_audit
-
-    rows = (
-        [("A", 1, "x")] * 5          # 1 sensitive value -> at risk
-        + [("B", 1, "x"), ("B", 1, "y")]  # 2 values -> ok at l=2
-    )
-    df = spark.createDataFrame(rows, ["seg", "nat", "s"])
-    out = {
-        (r["seg"], r["nat"]): r
-        for r in l_diversity_audit(
-            df, ["seg", "nat"], "s", l=2
-        ).collect()
-    }
-    assert out[("A", 1)]["at_risk"] is True
-    assert out[("A", 1)]["n_sensitive"] == 1
-    assert out[("A", 1)]["row_share"] == pytest.approx(5 / 7)
-    assert out[("B", 1)]["at_risk"] is False
-
-
-def test_l_diversity_null_sensitive_counts_as_value(spark):
-    from cccatalog_spark.operators.privacy import l_diversity_audit
-
-    rows = [("A", "x"), ("A", None)]
-    df = spark.createDataFrame(rows, ["g", "s"])
-    out = l_diversity_audit(df, ["g"], "s", l=2).collect()[0]
-    assert out["n_sensitive"] == 2
-    assert out["at_risk"] is False
-
-
 def test_path_patterns_counts_and_order(spark):
     from cccatalog_spark.operators.temporal import path_patterns
 

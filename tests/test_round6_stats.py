@@ -1,6 +1,5 @@
-"""Unit tests for the round-6 statistics/quality additions: one-way
-ANOVA, Cramér's V, categorical profile, constraint audit, RFM
-quantile codes, ACF and the seasonal-naïve MASE
+"""Unit tests for the round-6 statistics/quality additions: Cramér's
+V, constraint audit, RFM quantile codes, ACF and the seasonal-naïve MASE
 benchmark. Each checks against an independently-computed (numpy or
 hand-folded) expectation on a small frame with known structure."""
 
@@ -12,42 +11,6 @@ import numpy as np
 import pytest
 
 pytestmark = pytest.mark.slow  # heavy sweep; excluded from the fast loop (-m "not slow")
-
-
-def test_anova_oneway_matches_numpy(spark):
-    rows = [
-        ("a", 1.0), ("a", 2.0), ("a", 3.0),
-        ("b", 2.0), ("b", 4.0), ("b", 6.0),
-        ("c", 10.0), ("c", 12.0),
-    ]
-    from cccatalog_spark.operators.stats import anova_oneway
-
-    df = spark.createDataFrame(rows, ["g", "x"])
-    out = anova_oneway(df, "g", "x").collect()[0]
-
-    groups = {}
-    for g, x in rows:
-        groups.setdefault(g, []).append(x)
-    all_x = np.array([x for _, x in rows])
-    grand = all_x.mean()
-    ssb = sum(len(v) * (np.mean(v) - grand) ** 2 for v in groups.values())
-    ssw = sum(((np.array(v) - np.mean(v)) ** 2).sum() for v in groups.values())
-    k, n = len(groups), len(rows)
-    f = (ssb / (k - 1)) / (ssw / (n - k))
-
-    assert out["k"] == k and out["n"] == n
-    assert out["df_between"] == k - 1 and out["df_within"] == n - k
-    assert out["ss_between"] == pytest.approx(ssb, abs=1e-3)
-    assert out["ss_within"] == pytest.approx(ssw, abs=1e-3)
-    assert out["f_stat"] == pytest.approx(f, abs=1e-5)
-
-
-def test_anova_degenerate_single_group(spark):
-    from cccatalog_spark.operators.stats import anova_oneway
-
-    df = spark.createDataFrame([("a", 1.0), ("a", 2.0)], ["g", "x"])
-    out = anova_oneway(df, "g", "x").collect()[0]
-    assert out["f_stat"] is None
 
 
 def test_cramers_v_perfect_association(spark):
@@ -88,33 +51,6 @@ def test_cramers_v_sparse_missing_cells(spark):
     v = math.sqrt(chi2 / (n * 1))
     assert out["chi2"] == pytest.approx(chi2, abs=1e-6)
     assert out["v"] == pytest.approx(v, abs=1e-6)
-
-
-def test_categorical_profile_entropy(spark):
-    from cccatalog_spark.operators.stats import categorical_profile
-
-    df = spark.createDataFrame(
-        [("a", "u"), ("a", "u"), ("b", "u"), ("c", None)],
-        ["p", "q"],
-    )
-    out = {
-        r["column"]: r
-        for r in categorical_profile(df, ["p", "q"]).collect()
-    }
-    # p: counts 2,1,1 over n=4
-    probs = np.array([2, 1, 1]) / 4.0
-    ent = float(-(probs * np.log(probs)).sum())
-    assert out["p"]["n"] == 4 and out["p"]["n_distinct"] == 3
-    assert out["p"]["entropy"] == pytest.approx(ent, abs=1e-6)
-    assert out["p"]["norm_entropy"] == pytest.approx(
-        ent / math.log(3), abs=1e-6
-    )
-    assert out["p"]["top_share"] == pytest.approx(0.5, abs=1e-9)
-    # q: single value, nulls excluded
-    assert out["q"]["n"] == 3 and out["q"]["n_distinct"] == 1
-    assert out["q"]["entropy"] == pytest.approx(0.0, abs=1e-9)
-    assert out["q"]["norm_entropy"] == 0.0
-    assert out["q"]["top_share"] == 1.0
 
 
 def test_constraint_audit_detects_violations(spark):

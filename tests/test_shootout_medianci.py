@@ -1,9 +1,8 @@
-"""q335's estimator composition and median_ci (operators/stats.py)."""
+"""q335's estimator composition."""
 
 from __future__ import annotations
 
 from cccatalog_spark.functions.sketches import hll_distinct, kmv_distinct
-from cccatalog_spark.operators.stats import median_ci
 
 
 def test_sketches_agree_with_exact_at_small_cardinality(spark):
@@ -14,30 +13,3 @@ def test_sketches_agree_with_exact_at_small_cardinality(spark):
     # below k the KMV is exact; HLL's linear-counting branch is close
     assert kmv["approx_distinct"] == 40.0
     assert abs(hll["hll_distinct"] - 40) < 5
-
-
-def test_median_ci_hand_computed(spark):
-    rows = [("g", float(v)) for v in range(1, 101)]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = median_ci(df, "grp", "v").collect()[0]
-    assert out["n"] == 100
-    assert out["median"] == 50.0
-    # n=100, z=1.96: lo rank = floor((100-19.6)/2) = 40;
-    # hi rank = ceil(1 + 119.6/2) = 61
-    assert out["ci_lo"] == 40.0
-    assert out["ci_hi"] == 61.0
-
-
-def test_median_ci_brackets_truth_and_degrades_small(spark):
-    rows = [("big", float(v % 50)) for v in range(1000)] + [
-        ("tiny", 3.0), ("tiny", 4.0), ("tiny", 5.0)
-    ]
-    df = spark.createDataFrame(rows, "grp string, v double")
-    out = {r["group"]: r for r in median_ci(df, "grp", "v").collect()}
-    b = out["big"]
-    assert b["ci_lo"] <= b["median"] <= b["ci_hi"]
-    # big sample: interval is tight around the median
-    assert b["ci_hi"] - b["ci_lo"] <= 4
-    t = out["tiny"]
-    # n=3: ranks clamp to the extremes
-    assert t["ci_lo"] == 3.0 and t["ci_hi"] == 5.0 and t["median"] == 4.0

@@ -1,5 +1,4 @@
-"""TF-IDF keyword extraction and document-PMI collocations against
-brute-force Python models."""
+"""Document-PMI collocations against a brute-force Python model."""
 
 from __future__ import annotations
 
@@ -7,7 +6,6 @@ import math
 from collections import Counter
 
 from cccatalog_spark.operators.corpus_stats import pmi_pairs
-from cccatalog_spark.operators.retrieval import tfidf_top_terms
 
 
 def _docs(spark, texts):
@@ -22,36 +20,6 @@ TEXTS = [
     "merge join agg filter spark spark",
     "rare unique singleton spark",
 ]
-
-
-def test_tfidf_matches_sklearn_formula(spark):
-    n = len(TEXTS)
-    tf = [Counter(t.lower().split()) for t in TEXTS]
-    df = Counter(term for c in tf for term in c)
-    want = {}
-    for i, c in enumerate(tf):
-        scored = sorted(
-            (
-                (round(cnt * (math.log((1 + n) / (1 + df[t])) + 1), 6), t, cnt)
-                for t, cnt in c.items()
-            ),
-            key=lambda x: (-x[0], x[1]),
-        )[:3]
-        for rank, (s, t, cnt) in enumerate(scored, 1):
-            want[(i, t)] = (cnt, s, rank)
-    got = {
-        (r["doc_id"], r["term"]): (r["tf"], r["tfidf"], r["rank"])
-        for r in tfidf_top_terms(_docs(spark, TEXTS), "text", "doc_id", k=3).collect()
-    }
-    assert got == want
-
-
-def test_tfidf_universal_term_gets_floor_weight(spark):
-    # 'spark' is in every doc -> idf = ln(1)+1 = 1 -> tfidf == tf
-    rows = tfidf_top_terms(_docs(spark, TEXTS), "text", "doc_id", k=10).collect()
-    for r in rows:
-        if r["term"] == "spark":
-            assert r["tfidf"] == float(r["tf"])
 
 
 def test_pmi_matches_brute_force(spark):

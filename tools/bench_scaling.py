@@ -27,11 +27,10 @@ sys.path.insert(0, ".")
 
 # the most expensive queries in BENCH_LOCAL.json (round 5) that still
 # exist, the verdict-prescribed scaling set: dedup pair generators,
-# windowed streaming, column stats, DBSCAN, salted join — every family
-# where a super-linear stage could hide
+# windowed streaming, DBSCAN, salted join — every family where a
+# super-linear stage could hide
 QUERIES = [
     "q24_ngram_jaccard",
-    "q150_column_stats",
     "q185_jaccard_prefix_join",
     "q186_sorted_neighborhood",
     "q198_containment_pairs",
@@ -46,11 +45,9 @@ QUERIES = [
     "q379_rake_keywords",
     "q386_vocab_overlap",
     # final round-6 batch: chunk explode + hash dedup, blocked
-    # reciprocal kNN, candidate-filtered co-occurrence, trigram profile
-    # scoring
+    # reciprocal kNN, trigram profile scoring
     "q396_cdc_dedup",
     "q404_mutual_knn",
-    "q413_topic_coherence",
     "q419_langid_profile_eval",
 ]
 

@@ -6,7 +6,7 @@ Times individual queries exactly the way bench.py does (min of K
 claims in OPTIMIZATION_r08.md are verifiable without running Spark.
 
 Usage:
-    python tools/opt_measure.py [--tag before|after] [--runs K] q51_provider_ingest q150_column_stats ...
+    python tools/opt_measure.py [--tag before|after] [--runs K] q51_provider_ingest q205_cc_scrape_router ...
 """
 
 from __future__ import annotations

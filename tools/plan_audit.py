@@ -44,8 +44,6 @@ SANCTIONED_BNLJ = {
     "q372_knn_shapley": "bounded probe-catalog broadcast (<=200 eval "
     "rows by construction) scored against the train scan",
     "q391_mcnemar_gates": "1-row contingency fold (conditional sums)",
-    "q394_query_likelihood": "|q|-row (3) query-term frame crossed "
-    "onto hit docs + 1-row collection-length broadcast",
     "q417_term_burstiness": "1-row doc-count broadcast onto the "
     "50-term stats catalog",
     "q418_hitting_time": "k-row state-catalog rounds (transition "
@@ -58,8 +56,6 @@ SANCTIONED_BNLJ = {
     "q395_filter_funnel": "1-row funnel aggregate unpivoted via stack",
     "q396_cdc_dedup": "1-row doc-count broadcast onto the chunk "
     "rollup",
-    "q400_dp_group_means": "k-row group catalog only (noise is "
-    "column algebra)",
     "q401_ind_discovery": "per-candidate 1-row count x 1-row count "
     "cross (distinct-key catalogs)",
     "q402_hellinger_drift": "1-row bounds + 1-row totals broadcast "
@@ -75,8 +71,6 @@ SANCTIONED_BNLJ = {
     "design) + 1-row total fold",
     "q389_clustering_agreement": "8-row seed-catalog broadcast argmin "
     "+ 1-row report fold",
-    "q300_t_closeness": "1-row totals + m-row value-catalog broadcast "
-    "grid (dense group x catalog)",
     "q420_seasonality_strength": "q302's sanctioned 1-row recentering "
     "broadcast under the one-row strength aggregate",
     "q302_seasonal_decompose": "1-row seasonal-mean recentering "
@@ -99,7 +93,6 @@ SANCTIONED_BNLJ = {
     "cross-joined into the card row",
     "q335_estimator_shootout": "listed for the sketch scalar "
     "broadcasts if plans shift",
-    "q336_median_ci": "listed for the rank scalars if plans shift",
     "q344_next_event_latency": "1-row summary fold over the latency "
     "catalog",
     # round-6 second-wave batch: all 1-row scalar / ≤k-row catalog
@@ -116,10 +109,7 @@ SANCTIONED_BNLJ = {
     "q359_burrows_delta": "groups x top-k vocab catalog grid "
     "broadcast (both bounded catalogs)",
     "q364_skew_report": "1-row total/keys scalar broadcast",
-    "q365_l_diversity": "1-row release-total scalar broadcast",
     "q367_path_patterns": "1-row window-total scalar broadcast",
-    "q350_categorical_profile": "listed for the per-column folds if "
-    "plans shift",
     "q361_embedding_health": "listed for the 1-row audit fold if "
     "plans shift",
     "q371_ridge_regression": "listed for the 1-row moment fold if "
@@ -135,9 +125,6 @@ SANCTIONED_BNLJ = {
     "q289_theil_sen": "daily-catalog pairwise-slope self-join "
     "(catalog^2, bounded; raw rows never pair-joined) + 1-row median "
     "broadcast",
-    "q294_rbo_ann_agreement": "k-row top-k list catalogs: depth-grid "
-    "non-equi join + 1-row k broadcast (plus q26/q47's probe "
-    "broadcasts upstream)",
     "q284_eb_reputation": "1-row corpus-prior scalar broadcast",
     "q285_contrastive_pairs": "1-row corpus-size scalar broadcast "
     "(the q118 negative-draw contract)",
@@ -148,25 +135,19 @@ SANCTIONED_BNLJ = {
     "q274_ccnet_mix": "1-row vocabulary-size scalar broadcast (q103 "
     "contract under the band window + md5 keep filter)",
     "q79_quantized_ann": "1 probe vector broadcast (int8 scan + re-rank)",
-    "q90_bm25_topk": "1-row corpus-stats (N, avgdl) broadcast",
     "q92_heavy_hitters": "1-row stream-total scalar broadcast",
     "q96_kmeans_assign": "≤k-row centroid catalog broadcast (assignment "
     "must compare every vector to every centroid)",
     "q99_kmeans_train": "≤k-row centroid catalog broadcast per round",
-    "q100_hybrid_rrf": "1-row corpus-stats broadcast (BM25 half of the "
-    "fusion)",
     "q103_bigram_lm_nll": "1-row vocabulary-size scalar broadcast",
     "q229_kn_lm_nll": "1-row (bigram-types, vocab-size) scalar broadcast (the q103 contract with the KN constants)",
     "q115_corpus_drift": "1-row token-total scalar broadcast",
-    "q192_tfidf_cosine_pairs": "1-row corpus-count broadcast feeding the "
-    "smooth-idf constant (BM25 stats pattern)",
     "q117_vocab_coverage": "1-row token-total scalar broadcast",
     "q118_negative_samples": "1-row corpus-size scalar broadcast",
     "q123_kmv_set_overlap": "two 1-row sketch frames cross-combined "
     "(the whole point: sketches move, sets never join)",
     "q125_semantic_dedup": "≤k-row centroid catalog broadcast "
     "(cluster assignment, the q96 contract)",
-    "q126_tfidf_top_terms": "1-row corpus-size scalar broadcast (idf)",
     "q127_pmi_pairs": "1-row doc-count scalar broadcast (PMI "
     "normalizer)",
     "q130_interleave_shuffle": "1-row source-count scalar broadcast "
@@ -182,18 +163,12 @@ SANCTIONED_BNLJ = {
     "q261_matryoshka_audit": "1-row probe vector + |dims|-row dim "
     "catalog broadcasts (every row scores every prefix dim by "
     "construction — the q26/q96 linear-scan contract)",
-    "q252_quantile_normalize": "1-row pooled-percentile-grid broadcast "
-    "(101 doubles — the whole calibration sketch)",
     "q253_silhouette": "≤k-row seed-centroid catalog broadcast plus the "
     "1-row overall-mean scalar (the q96 contract)",
     "q255_bh_fdr": "1-row doc-total / m-row hypothesis-catalog "
     "broadcasts (BH runs entirely on the 20-row catalog)",
-    "q257_hard_negatives": "1-row corpus-stats broadcast (the q90 BM25 "
-    "contract, shared across the query family)",
     "q133_dsir_resample": "1-row target-floor scalar + ≤buckets-row "
     "distribution broadcasts (DSIR model state)",
-    "q144_ranking_metrics": "1-row n-probes scalar broadcast inside "
-    "the kNN run (q27's sanctioned shape)",
     "q151_token_shards": "1-row total-tokens scalar broadcast "
     "(closed-form shard arithmetic over the prefix sum)",
     "q158_cms_join_size": "two 1-row estimate/exact frames "
@@ -211,7 +186,6 @@ SANCTIONED_BNLJ = {
     "q227_benford_audit": "1-row total and chi-square scalars cross-broadcast around the 9-row digit frame",
     "q228_class_tfidf": "1-row average-class-mass scalar broadcast into the (class, term) counts",
     "q235_psi_drift": "1-row reference-bounds / totals / psi scalar broadcasts (the woe_iv contract on both sides)",
-    "q236_k_anonymity": "1-row row-total scalar broadcast",
     "q238_skipgram_pairs": "1-row token-total scalar broadcast (the subsample keep-probability denominator)",
     "q245_lsh_recall_audit": "three 1-row count frames cross-combined (the evaluation summary row)",
 }

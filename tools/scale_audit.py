@@ -80,9 +80,6 @@ SANCTIONED_GLOBAL_WINDOW = {
     # CUSUM prefix sums / running mins over the DAILY catalog (raw
     # rows collapse to per-day means first) — temporal.cusum_changepoints
     "q288_cusum_changepoint",
-    # rank windows over the two k-row TOP-K lists (k = 10 by
-    # construction) — retrieval.rbo_overlap inputs
-    "q294_rbo_ann_agreement",
     # two-phase prefix sum: the single-partition window is the
     # ≤#partitions offsets frame (cumsum.py:63-70) inside
     # negative_samples' dense-index build — the q118 contract
@@ -268,15 +265,6 @@ FAMILIES = {
     "glove-single-equi-join": (
         "q241_glove_cooccurrence",
         {"joins": 1, "exchanges": 3},
-    ),
-    # hard-negative mining: ONE shared postings build serves every
-    # query (filter-before-explode); query dim + df stats broadcast,
-    # positives anti-join, per-query rank window — corpus touched once
-    # (11th exchange = the dropDuplicates on the tiny (qid, term)
-    # query dim — term-dedup correctness, catalog-sized)
-    "hard-negatives-shared-postings": (
-        "q257_hard_negatives",
-        {"joins": 4, "exchanges": 11},
     ),
     # skip-gram pairs: vocab-keyed subsample join + per-doc rank
     # window + (doc,rank) equi-join + pair agg. DESIGN is 3 joins /
